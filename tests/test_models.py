@@ -105,6 +105,81 @@ def test_kalman_non_dynamic_tail_tracks_observations(spark):
     assert frozen.pred_mean[160:].nunique() == 1
 
 
+def test_kalman_em_matches_numpy_scalar_reference_bitwise():
+    """The Python-float rewrite of ``_kalman_em_local_level`` must be
+    BIT-IDENTICAL to the numpy-scalar loop it replaced (same operands,
+    same operation order; only the element type of the recursions
+    changed).  Pinned against an inline replica of that loop for
+    n >= 2."""
+    from time_series_data_anomaly_detection_spark.functions.kalman import (
+        _kalman_em_local_level,
+    )
+
+    def reference(y, n_iter=30):
+        n = len(y)
+        var_y = float(np.var(y)) or 1.0
+        q, r = var_y * 0.1, var_y * 0.9
+        level0, p0 = float(y[0]), var_y
+        for _ in range(n_iter):
+            mu = np.empty(n)
+            p = np.empty(n)
+            mu_pred = np.empty(n)
+            p_pred = np.empty(n)
+            m, pp = level0, p0
+            for t in range(n):
+                mp, ppp = m, pp + q
+                mu_pred[t], p_pred[t] = mp, ppp
+                k_gain = ppp / (ppp + r)
+                m = mp + k_gain * (y[t] - mp)
+                pp = (1 - k_gain) * ppp
+                mu[t], p[t] = m, pp
+            mu_s = mu.copy()
+            p_s = p.copy()
+            for t in range(n - 2, -1, -1):
+                c = p[t] / (p[t] + q)
+                mu_s[t] = mu[t] + c * (mu_s[t + 1] - (mu[t]))
+                p_s[t] = p[t] + c * c * (p_s[t + 1] - (p[t] + q))
+            r = float(np.mean((y - mu_s) ** 2 + p_s))
+            dm = np.diff(mu_s)
+            q = float(np.mean(dm**2) + np.mean(p_s[1:] + p_s[:-1]) * 0.5)
+            q = max(q, 1e-12)
+            r = max(r, 1e-12)
+            level0 = mu_s[0]
+        return mu_pred, p_pred + r, q, r
+
+    for seed in (1, 2):
+        rng = np.random.default_rng(seed)
+        for n in (2, 37, 512):
+            y = np.round(np.cumsum(rng.normal(size=n)) + rng.standard_t(3, n), 2)
+            for series in (y, np.full(n, 5.0)):
+                ref = reference(series)
+                got = _kalman_em_local_level(series)
+                for a, b in zip(ref[:2], got[:2]):
+                    assert a.dtype == b.dtype and a.shape == b.shape
+                    assert a.tobytes() == b.tobytes(), (seed, n)
+                assert (ref[2], ref[3]) == (got[2], got[3]), (seed, n)
+
+
+def test_kalman_em_single_point_is_finite():
+    """A 1-point training slice has no differences to estimate q from:
+    EM keeps the initial (q, r) and the predictions stay finite instead
+    of NaN with a 'Mean of empty slice' warning."""
+    import warnings
+
+    from time_series_data_anomaly_detection_spark.functions.kalman import (
+        _kalman_em_local_level,
+    )
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        mu_pred, var_pred, q, r = _kalman_em_local_level(np.array([3.0]))
+    assert np.isfinite(mu_pred).all() and np.isfinite(var_pred).all()
+    assert mu_pred.tolist() == [3.0]
+    # var(y) of one point is 0, so the initial variance falls back to 1
+    assert (q, r) == (0.1, 0.9)
+    assert var_pred.tolist() == [1.0 + 0.1 + 0.9]
+
+
 def test_bsts_captures_seasonality(spark):
     rng = np.random.default_rng(9)
     t = np.arange(480)

@@ -24,4 +24,7 @@ Design principles (100 TB scale):
 
 __version__ = "0.1.0"
 
+from . import _worker_boot
 from .session import get_spark  # noqa: F401
+
+_worker_boot.install()

@@ -87,7 +87,6 @@ class NumpyLSTM:
         """dpred: (B,) dLoss/dpred -> parameter grads via BPTT."""
         p, H = self.params, self.H
         g_ = {n: np.zeros_like(v) for n, v in p.items()}
-        H = self.H
         dp = dpred[:, None]
         g_["Wy"] = h_last.T @ dp
         g_["by"] = dp.sum(axis=0)

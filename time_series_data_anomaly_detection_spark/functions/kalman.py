@@ -29,40 +29,53 @@ from pyspark.sql import functions as F
 
 def _kalman_em_local_level(y: np.ndarray, n_iter: int = 30):
     """EM estimation of (q, r) for the local-level model, then a final
-    filter pass.  Returns one-step-ahead predicted mean and variance."""
+    filter pass.  Returns one-step-ahead predicted mean and variance.
+
+    The filter and smoother recursions run on Python floats: the same
+    IEEE double operations in the same order as numpy scalars, without
+    the per-element numpy dispatch.  A training slice of fewer than 2
+    points has nothing to estimate (q) from, so it keeps the initial
+    (q, r) and returns one filter pass."""
     n = len(y)
     var_y = float(np.var(y)) or 1.0
     q, r = var_y * 0.1, var_y * 0.9
     level0, p0 = float(y[0]), var_y
+    ys = y.tolist()
     for _ in range(n_iter):
         # forward filter
-        mu = np.empty(n)
-        p = np.empty(n)
-        mu_pred = np.empty(n)
-        p_pred = np.empty(n)
+        mu, p, mu_pred, p_pred = [], [], [], []
         m, pp = level0, p0
-        for t in range(n):
+        for yt in ys:
             mp, ppp = m, pp + q
-            mu_pred[t], p_pred[t] = mp, ppp
+            mu_pred.append(mp)
+            p_pred.append(ppp)
             k_gain = ppp / (ppp + r)
-            m = mp + k_gain * (y[t] - mp)
+            m = mp + k_gain * (yt - mp)
             pp = (1 - k_gain) * ppp
-            mu[t], p[t] = m, pp
+            mu.append(m)
+            p.append(pp)
+        if n < 2:
+            break
         # RTS smoother
         mu_s = mu.copy()
         p_s = p.copy()
+        ms, ps = mu[-1], p[-1]
         for t in range(n - 2, -1, -1):
-            c = p[t] / (p[t] + q)
-            mu_s[t] = mu[t] + c * (mu_s[t + 1] - (mu[t]))
-            p_s[t] = p[t] + c * c * (p_s[t + 1] - (p[t] + q))
+            mt, pt = mu[t], p[t]
+            c = pt / (pt + q)
+            ms = mt + c * (ms - mt)
+            ps = pt + c * c * (ps - (pt + q))
+            mu_s[t], p_s[t] = ms, ps
         # M-step
+        mu_s = np.array(mu_s)
+        p_s = np.array(p_s)
         r = float(np.mean((y - mu_s) ** 2 + p_s))
         dm = np.diff(mu_s)
         q = float(np.mean(dm**2) + np.mean(p_s[1:] + p_s[:-1]) * 0.5)
         q = max(q, 1e-12)
         r = max(r, 1e-12)
         level0 = mu_s[0]
-    return mu_pred, p_pred + r, q, r
+    return np.array(mu_pred), np.array(p_pred) + r, q, r
 
 
 KALMAN_SCHEMA = (
