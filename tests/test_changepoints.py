@@ -600,6 +600,11 @@ def test_bocpd_run_matches_r13_reference_bitwise():
     )
     assert np.array_equal(ref_cp, got_cp)
     assert np.array_equal(ref_short, got_short)
-    for k in ("r", "mu", "kappa", "alpha", "beta", "run_len"):
+    for k in ("r", "mu", "beta", "run_len"):
         assert np.array_equal(np.asarray(ref_st[k], float),
                               np.asarray(got_st[k], float)), k
+    # the state carries no kappa/alpha: the replica's are exactly the
+    # prior plus the run length, so they are rebuilt from run_len
+    rl = got_st["run_len"]
+    assert np.array_equal(ref_st["kappa"], 1.0 + rl.astype(float))
+    assert np.array_equal(ref_st["alpha"], 1.0 + rl / 2.0)

@@ -188,6 +188,72 @@ def test_holt_winters_short_series_emits_nothing(spark):
 
     out = holt_winters_fixed(series_df(spark, [1.0] * 30), period=48)
     assert out.count() == 0
+    # exactly one period: the seed only, nothing left to predict
+    out = holt_winters_fixed(series_df(spark, [1.0] * 48), period=48)
+    assert out.count() == 0
+
+
+
+def test_charts_read_value_col(spark):
+    """``value_col`` names the input column of the batch charts."""
+    from time_series_data_anomaly_detection_spark.functions.holt_winters import (
+        holt_winters_fixed,
+    )
+
+    df = series_df(spark, [float(v % 7) for v in range(30)])
+    renamed = df.withColumnRenamed("value", "score")
+    for chart in (ewma_chart, cusum_chart, holt_winters_fixed):
+        kw = {"period": 6} if chart is holt_winters_fixed else {}
+        want = chart(df, **kw).orderBy("rn").toPandas()
+        got = chart(renamed, value_col="score", **kw).orderBy("rn").toPandas()
+        pd.testing.assert_frame_equal(got, want)
+
+def _bits(*arrays):
+    return [np.asarray(a, float).view("int64").tolist() for a in arrays]
+
+
+@pytest.mark.parametrize("kernel", ["ewma", "cusum", "holt_winters"])
+def test_shared_kernels_resume_bitwise(kernel):
+    """The kernels batch and stream share: a run over ``y[:k]`` resumed
+    from its returned state on ``y[k:]`` equals one run over ``y``, bit
+    for bit — the property that makes stream output equal batch output
+    on any micro-batch split.  No Spark needed."""
+    from time_series_data_anomaly_detection_spark.functions.control import (
+        cusum_run,
+        ewma_run,
+    )
+    from time_series_data_anomaly_detection_spark.functions.holt_winters import (
+        holt_winters_run,
+    )
+
+    period, n = 12, 200
+    rng = np.random.default_rng(2)
+    t = np.arange(n)
+    y = 10.0 + 3.0 * np.sin(2 * np.pi * t / period) + rng.normal(0, 1, n)
+    y[120:] += 4.0  # a level shift, so CUSUM leaves zero
+    mu, sd = float(y.mean()), float(y.std(ddof=1))
+    if kernel == "ewma":
+        run = lambda x, st: ewma_run(x, mu, sd, 0.25, 3.0, st)  # noqa: E731
+        fresh = (mu, 1.0)
+    elif kernel == "cusum":
+        run = lambda x, st: cusum_run(x, mu, sd, 0.5, st)  # noqa: E731
+        fresh = (0.0, 0.0)
+    else:
+        def run(x, st):
+            preds, st = holt_winters_run(x, st, 0.25, 0.0625, 0.25)
+            return (preds,), st
+
+        l0 = float(y[:period].mean())
+        fresh = (l0, 0.0, [v - l0 for v in y[:period].tolist()])
+        y = y[period:]
+
+    whole, st_whole = run(y, fresh)
+    for k in (1, period, len(y) - 1):
+        head, st = run(y[:k], fresh)
+        tail, st = run(y[k:], st)
+        for a, b, c in zip(whole, head, tail):
+            assert _bits(a) == _bits(np.concatenate([b, c])), k
+        assert repr(st) == repr(st_whole), k
 
 
 def test_quantile_band_flags_rate_and_edges(spark):

@@ -1072,8 +1072,9 @@ def test_streaming_sessions_native_session_window(spark, tmp_path):
 
 def test_streaming_checkpoint_restart_continuity(spark, tmp_path_factory):
     """Kill-and-resume across a checkpoint (r06 verdict item #8): run
-    the EWMA+CUSUM and SPOT stateful detectors over a prefix, stop the
-    query, land more data, restart from the SAME checkpointLocation —
+    the EWMA+CUSUM, SPOT, conformal, BOCPD and Holt-Winters stateful
+    detectors over a prefix, stop the query, land more data, restart
+    from the SAME checkpointLocation —
     the resumed query must (a) not reprocess the prefix and (b) carry
     the state store forward so every post-restart row equals a
     no-restart run that saw the files in the same micro-batch order.
@@ -1081,6 +1082,7 @@ def test_streaming_checkpoint_restart_continuity(spark, tmp_path_factory):
     from time_series_data_anomaly_detection_spark.streaming import (
         streaming_conformal,
         streaming_control_flags,
+        streaming_holt_winters,
         streaming_pot,
     )
 
@@ -1123,6 +1125,11 @@ def test_streaming_checkpoint_restart_continuity(spark, tmp_path_factory):
             # different state-store codec than the scalar detectors
             return streaming_conformal(stream, icept=25.0, slope=0.5,
                                        n_cal=100)
+        if detector == "bocpd":
+            # the run-length posterior: four array fields of state
+            return streaming_bocpd(stream, norm_mu=mu, norm_sd=sd)
+        if detector == "hw":
+            return streaming_holt_winters(stream, period=48)
         return streaming_pot(stream, n_init=200)
 
     def run_once(detector, tag):
@@ -1140,7 +1147,7 @@ def test_streaming_checkpoint_restart_continuity(spark, tmp_path_factory):
         q.awaitTermination(120)
         return out
 
-    for detector in ("ctrl", "pot", "conf"):
+    for detector in ("ctrl", "pot", "conf", "bocpd", "hw"):
         # phase 1: only the prefix exists
         for f in list(src.glob("*.parquet")):
             f.unlink()
@@ -1260,63 +1267,3 @@ def test_streaming_conformal_matches_reference_loop(spark, stream_data):
         settled = got[got["q_hat"].notna()]
         assert len(settled) == len(vals) - n_cal - 1
         assert settled["covered"].astype(float).mean() > 0.8
-
-
-def test_streaming_control_flags_tws_matches_groupstate(spark, stream_data):
-    """The transformWithStateInPandas migration prototype must emit
-    row-identical output to the applyInPandasWithState detector —
-    same math, different state plumbing (RocksDB-backed ValueState).
-    Skipped where the protobuf package (required by pyspark's
-    transformWithState state-server protocol) is absent; the gated
-    RuntimeError path is asserted instead.
-    """
-    from time_series_data_anomaly_detection_spark.streaming.detectors import (
-        streaming_control_flags,
-        streaming_control_flags_tws,
-    )
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        root, _ = stream_data
-        stream0 = spark.readStream.schema(SCHEMA).parquet(root)
-        with pytest.raises(RuntimeError, match="protobuf"):
-            streaming_control_flags_tws(stream0)
-        pytest.skip("protobuf not installed: transformWithState cannot run")
-
-    root, pdf = stream_data
-    g = pdf[pdf.series_id == "a"]
-    mu, sd = g["value"].mean(), g["value"].std(ddof=1)
-    prov = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov, None)
-    spark.conf.set(
-        prov,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(SCHEMA).parquet(root)
-        tws = _run_stream(
-            spark,
-            streaming_control_flags_tws(stream, norm_mu=mu, norm_sd=sd),
-            "ctrltws",
-        ).toPandas()
-    finally:
-        if prev is None:
-            spark.conf.unset(prov)
-        else:
-            spark.conf.set(prov, prev)
-    stream2 = spark.readStream.schema(SCHEMA).parquet(root)
-    ref = _run_stream(
-        spark,
-        streaming_control_flags(stream2, norm_mu=mu, norm_sd=sd),
-        "ctrlref",
-    ).toPandas()
-    key = ["series_id", "timestamp"]
-    tws = tws.sort_values(key).reset_index(drop=True)
-    ref = ref.sort_values(key).reset_index(drop=True)
-    assert len(tws) == len(ref) == len(pdf)
-    for col in ("ewma", "ucl", "lcl", "cusum_pos", "cusum_neg"):
-        np.testing.assert_allclose(tws[col], ref[col], rtol=0, atol=0)
-    for col in ("ewma_flag", "cusum_flag"):
-        assert (tws[col].to_numpy() == ref[col].to_numpy()).all()

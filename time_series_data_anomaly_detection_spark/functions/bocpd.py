@@ -31,15 +31,13 @@ BOCPD_SCHEMA = (
 )
 
 
-def initial_state(
-    mu0: float = 0.0, kappa0: float = 1.0, alpha0: float = 1.0, beta0: float = 1.0
-) -> dict:
-    """Fresh BOCPD state (one run-length hypothesis: 'just started')."""
+def initial_state(mu0: float = 0.0, beta0: float = 1.0) -> dict:
+    """Fresh BOCPD state (one run-length hypothesis: 'just started').
+    κ and α are not carried: they are ``kappa0 + run_len`` and
+    ``alpha0 + run_len/2`` for every hypothesis."""
     return {
         "r": np.array([1.0]),
         "mu": np.array([mu0]),
-        "kappa": np.array([kappa0]),
-        "alpha": np.array([alpha0]),
         "beta": np.array([beta0]),
         "run_len": np.array([0]),
     }
@@ -147,11 +145,7 @@ def bocpd_run(
         r = r / r.sum()
         mu, beta = mu_new[keep], beta_new[keep]
         run_len = rl_new[keep]
-    out_state = {
-        "r": r, "mu": mu, "kappa": kap_tab[run_len],
-        "alpha": grid[run_len], "beta": beta, "run_len": run_len,
-    }
-    return cp, short, out_state
+    return cp, short, {"r": r, "mu": mu, "beta": beta, "run_len": run_len}
 
 
 def bocpd_series(
@@ -180,7 +174,7 @@ def bocpd_series(
     """
     cp, short, _ = bocpd_run(
         y,
-        initial_state(mu0, kappa0, alpha0, beta0),
+        initial_state(mu0, beta0),
         hazard_lam=hazard_lam,
         mu0=mu0,
         kappa0=kappa0,

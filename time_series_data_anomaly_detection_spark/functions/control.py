@@ -28,6 +28,8 @@ count, exactly like every other sequential model here.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -49,13 +51,16 @@ CUSUM_SCHEMA = (
 )
 
 
-def _with_moments(df: DataFrame, value_col: str) -> DataFrame:
-    """Join per-series exact-decimal mean and sample std (ddof=1) as
-    ``__mu`` / ``__sd`` — the same algebra as
-    ``operators.scaling.global_zscore`` (hash-proven)."""
-    v = F.col(value_col)
-    moments = df.groupBy("series_id").agg(
-        F.count(value_col).alias("__n"),
+def _per_series(df: DataFrame, value_col: str, schema: str,
+                fit: Callable[..., pd.DataFrame]) -> DataFrame:
+    """Run ``fit(pdf, y, mu, sd)`` once per series, rows in ``rn``
+    order, with the per-series exact-decimal mean and sample std
+    (ddof=1) — the same algebra as ``operators.scaling.global_zscore``
+    (hash-proven)."""
+    v = F.col("value")
+    src = df.select("series_id", "rn", F.col(value_col).alias("value"))
+    moments = src.groupBy("series_id").agg(
+        F.count("value").alias("__n"),
         F.sum(v.cast(DEC)).cast("double").alias("__s1"),
         F.sum((v * v).cast(DEC)).cast("double").alias("__s2"),
     )
@@ -67,8 +72,55 @@ def _with_moments(df: DataFrame, value_col: str) -> DataFrame:
             F.lit(0.0),
         )
     ).alias("__sd")
-    m = moments.select("series_id", mu, sd)
-    return df.join(F.broadcast(m), "series_id")
+    src = src.join(F.broadcast(moments.select("series_id", mu, sd)), "series_id")
+
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("rn").reset_index(drop=True)
+        y = pdf["value"].to_numpy(float)
+        return fit(pdf, y, float(pdf["__mu"].iloc[0]), float(pdf["__sd"].iloc[0]))
+
+    return (
+        udf_repartition(src, "series_id")
+        .groupBy("series_id")
+        .applyInPandas(run, schema)
+    )
+
+
+def ewma_run(y: np.ndarray, mu: float, sd: float, lam: float = 0.25,
+             nsig: float = 3.0, state: tuple | None = None) -> tuple:
+    """The EWMA recursion, resumable: advance ``state = (z, w)`` over
+    ``y`` (fresh: ``(mu, 1.0)``); returns ``((ewma, half_width),
+    state)``, the limits being ``mu ± half_width``.  Shared by
+    :func:`ewma_chart` and ``streaming_control_flags``."""
+    w2 = (1.0 - lam) * (1.0 - lam)
+    ratio = lam / (2.0 - lam)
+    z, w = (mu, 1.0) if state is None else state
+    ew = np.empty(len(y))
+    hw = np.empty(len(y))
+    for t, yt in enumerate(y.tolist()):
+        z = z + lam * (yt - z)
+        w = w * w2
+        ew[t] = z
+        hw[t] = nsig * sd * np.sqrt(ratio * (1.0 - w))
+    return (ew, hw), (z, w)
+
+
+def cusum_run(y: np.ndarray, mu: float, sd: float, k: float = 0.5,
+              state: tuple | None = None) -> tuple:
+    """The two-sided CUSUM recursion, resumable: advance ``state =
+    (S⁺, S⁻)`` over ``y`` (fresh: ``(0.0, 0.0)``); returns ``((S⁺,
+    S⁻), state)``.  Shared by :func:`cusum_chart` and
+    ``streaming_control_flags``."""
+    sp, sn = (0.0, 0.0) if state is None else state
+    cp = np.empty(len(y))
+    cn = np.empty(len(y))
+    for t, yt in enumerate(y.tolist()):
+        z = (yt - mu) / (sd + EPS_SD)
+        sp = max(0.0, sp + (z - k))
+        sn = max(0.0, sn + (-z - k))
+        cp[t] = sp
+        cn[t] = sn
+    return (cp, cn), (sp, sn)
 
 
 def ewma_chart(
@@ -88,25 +140,10 @@ def ewma_chart(
 
     Returns ``series_id, rn, ewma, ucl, lcl, flag``.
     """
-    lam = float(lam)
-    w2 = (1.0 - lam) * (1.0 - lam)
-    ratio = lam / (2.0 - lam)
-    nsig = float(nsig)
+    lam, nsig = float(lam), float(nsig)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        y = pdf["value"].to_numpy(float)
-        mu = float(pdf["__mu"].iloc[0])
-        sd = float(pdf["__sd"].iloc[0])
-        n = len(y)
-        z = np.empty(n)
-        hw = np.empty(n)
-        zc, wc = mu, 1.0
-        for t in range(n):
-            zc = zc + lam * (y[t] - zc)
-            wc = wc * w2
-            z[t] = zc
-            hw[t] = nsig * sd * np.sqrt(ratio * (1.0 - wc))
+    def fit(pdf, y, mu, sd):
+        z, hw = ewma_run(y, mu, sd, lam, nsig)[0]
         ucl = mu + hw
         lcl = mu - hw
         return pd.DataFrame(
@@ -120,14 +157,7 @@ def ewma_chart(
             }
         )
 
-    src = _with_moments(
-        df.select("series_id", "rn", value_col), value_col
-    )
-    return (
-        udf_repartition(src, "series_id")
-        .groupBy("series_id")
-        .applyInPandas(run, EWMA_SCHEMA)
-    )
+    return _per_series(df, value_col, EWMA_SCHEMA, fit)
 
 
 def cusum_chart(
@@ -146,24 +176,10 @@ def cusum_chart(
 
     Returns ``series_id, rn, cusum_pos, cusum_neg, flag``.
     """
-    k = float(k)
-    h = float(h)
+    k, h = float(k), float(h)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        y = pdf["value"].to_numpy(float)
-        mu = float(pdf["__mu"].iloc[0])
-        sd = float(pdf["__sd"].iloc[0])
-        n = len(y)
-        sp = np.empty(n)
-        sn = np.empty(n)
-        spc = snc = 0.0
-        for t in range(n):
-            z = (y[t] - mu) / (sd + EPS_SD)
-            spc = max(0.0, spc + (z - k))
-            snc = max(0.0, snc + (-z - k))
-            sp[t] = spc
-            sn[t] = snc
+    def fit(pdf, y, mu, sd):
+        sp, sn = cusum_run(y, mu, sd, k)[0]
         return pd.DataFrame(
             {
                 "series_id": pdf["series_id"],
@@ -174,14 +190,7 @@ def cusum_chart(
             }
         )
 
-    src = _with_moments(
-        df.select("series_id", "rn", value_col), value_col
-    )
-    return (
-        udf_repartition(src, "series_id")
-        .groupBy("series_id")
-        .applyInPandas(run, CUSUM_SCHEMA)
-    )
+    return _per_series(df, value_col, CUSUM_SCHEMA, fit)
 
 
 CUSUM_ALARM_SCHEMA = (
@@ -208,14 +217,9 @@ def cusum_alarms(
     :func:`cusum_chart`; the reset is ``CASE alarm THEN 0`` spelled
     identically in the oracle recursion.
     """
-    k = float(k)
-    h = float(h)
+    k, h = float(k), float(h)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        y = pdf["value"].to_numpy(float)
-        mu = float(pdf["__mu"].iloc[0])
-        sd = float(pdf["__sd"].iloc[0])
+    def fit(pdf, y, mu, sd):
         rows = []
         spc = snc = 0.0
         for t in range(len(y)):
@@ -234,11 +238,4 @@ def cusum_alarms(
             rows, columns=["series_id", "rn", "direction", "stat"]
         )
 
-    src = _with_moments(
-        df.select("series_id", "rn", value_col), value_col
-    )
-    return (
-        udf_repartition(src, "series_id")
-        .groupBy("series_id")
-        .applyInPandas(run, CUSUM_ALARM_SCHEMA)
-    )
+    return _per_series(df, value_col, CUSUM_ALARM_SCHEMA, fit)

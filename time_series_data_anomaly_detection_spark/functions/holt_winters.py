@@ -25,6 +25,8 @@ grouped-map pass, O(p) state per series.
 
 from __future__ import annotations
 
+from collections import deque
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -33,9 +35,27 @@ from pyspark.sql import functions as F
 from .._exact import DEC
 from ._partition import udf_repartition
 
-HW_SCHEMA = (
-    "series_id string, rn long, pred double, resid double"
-)
+HW_SCHEMA = "series_id string, rn long, pred double, resid double"
+
+
+def holt_winters_run(y: np.ndarray, state: tuple, a: float = 0.25,
+                     bq: float = 0.0625, g: float = 0.25) -> tuple:
+    """The :func:`holt_winters_fixed` recursion with ``(a, bq, g) =
+    (α, β, γ)``, resumable: advance ``state = (l, b, seasonal terms
+    oldest first)`` over ``y``; returns the one-step-ahead predictions
+    and the new state.  Shared with ``streaming_holt_winters``."""
+    ca, cb, cg = 1.0 - a, 1.0 - bq, 1.0 - g
+    l, b, sl = state
+    sl = deque(sl)
+    preds = np.empty(len(y))
+    for i, yt in enumerate(y.tolist()):
+        sprev = sl.popleft()
+        preds[i] = (l + b) + sprev
+        l_new = a * (yt - sprev) + ca * (l + b)
+        b_new = bq * (l_new - l) + cb * b
+        sl.append(g * (yt - l_new) + cg * sprev)
+        l, b = l_new, b_new
+    return preds, (l, b, list(sl))
 
 
 def holt_winters_fixed(
@@ -57,8 +77,7 @@ def holt_winters_fixed(
     Returns ``series_id, rn, pred, resid`` for ``rn > period``.
     """
     p = int(period)
-    a, bq, g = float(alpha), float(beta), float(gamma)
-    ca, cb, cg = 1.0 - a, 1.0 - bq, 1.0 - g
+    params = float(alpha), float(beta), float(gamma)
 
     v = F.col(value_col)
     lvl0 = (
@@ -73,35 +92,16 @@ def holt_winters_fixed(
             "series_id", (F.col("__sp") / F.lit(p)).alias("__l0")
         )
     )
-    src = df.select("series_id", "rn", value_col).join(
+    src = df.select("series_id", "rn", v.alias("value")).join(
         F.broadcast(lvl0), "series_id"
     )
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("rn").reset_index(drop=True)
         y = pdf["value"].to_numpy(float)
-        n = len(y)
-        if n <= p:
-            return pd.DataFrame(
-                {
-                    "series_id": pd.Series(dtype=object),
-                    "rn": pd.Series(dtype="int64"),
-                    "pred": pd.Series(dtype=float),
-                    "resid": pd.Series(dtype=float),
-                }
-            )
-        l0 = float(pdf["__l0"].iloc[0])
-        sl = list(y[:p] - l0)
-        l, b = l0, 0.0
-        preds = np.empty(n - p)
-        for i, t in enumerate(range(p, n)):
-            sprev = sl[0]
-            preds[i] = (l + b) + sprev
-            l_new = a * (y[t] - sprev) + ca * (l + b)
-            b_new = bq * (l_new - l) + cb * b
-            s_new = g * (y[t] - l_new) + cg * sprev
-            sl = sl[1:] + [s_new]
-            l, b = l_new, b_new
+        l0 = float(pdf["__l0"].iloc[0])  # y[p:] is empty at n == p
+        st = l0, 0.0, [x - l0 for x in y[:p].tolist()]
+        preds = holt_winters_run(y[p:], st, *params)[0]
         return pd.DataFrame(
             {
                 "series_id": pdf["series_id"].iloc[p:].to_numpy(),
@@ -116,9 +116,6 @@ def holt_winters_fixed(
         .groupBy("series_id")
         .applyInPandas(run, HW_SCHEMA)
     )
-
-
-HOLT_SCHEMA = "series_id string, rn long, pred double, resid double"
 
 
 def holt_linear_fixed(
@@ -178,5 +175,5 @@ def holt_linear_fixed(
 
     src = df.select("series_id", "rn", F.col(value_col).alias("value"))
     return udf_repartition(src, "series_id").groupBy("series_id").applyInPandas(
-        run, HOLT_SCHEMA
+        run, HW_SCHEMA
     )

@@ -8,7 +8,6 @@ from .detectors import (  # noqa: F401
     streaming_bocpd,
     streaming_user_sessions,
     streaming_control_flags,
-    streaming_control_flags_tws,
     streaming_holt_winters,
     streaming_pot,
     streaming_spectral_residual,

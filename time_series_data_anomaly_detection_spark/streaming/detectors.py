@@ -1,53 +1,56 @@
 """Structured Streaming anomaly detectors (SURVEY §2.10 / §7 step 8).
 
 The reference is pure batch; this is the engine's streaming
-EXTENSION, cleanly separated from reference parity. Three shapes:
+EXTENSION, cleanly separated from reference parity.
 
-- ``streaming_window_stats``: native event-time tumbling-window agg
-  with a watermark — stateless per window, fully built-in, the
-  late-data story is Spark's own.
-- ``streaming_rolling_flags``: the W1 adaptive threshold as a
-  per-series stateful operator (``applyInPandasWithState``); state =
-  the trailing ``window−1`` raw values + rows-seen count, O(window)
-  per series. Matches the batch operator except the head rows that
-  batch BACK-fills (a batch-only luxury — the stream can't see the
-  future): the stream emits null stats until ``min_periods`` rows
-  have arrived.
-- ``streaming_bocpd``: BOCPD with run-length-truncated posterior as
-  stateful streaming — the SAME resumable core (functions.bocpd
-  ``bocpd_run``) as the batch operator, so the stream's output
-  equals the batch output row-for-row on any prefix. State is
-  O(max_run) arrays per series. The one semantic delta: the batch
-  operator z-normalizes with GLOBAL series moments; a stream has no
-  global moments, so the caller supplies (mu, sd) — or the raw
-  series is scored unnormalized.
+``streaming_window_stats`` and ``streaming_user_sessions`` are native
+event-time aggregations (tumbling and session windows) with a
+watermark — stateless per window, fully built-in, the late-data story
+is Spark's own.
 
-All three key state by ``series_id`` — the same partition axis as
+Every other detector is one ``init`` and one ``step``, run by
+``_per_series_state`` (the module's only ``applyInPandasWithState``
+call).  State is keyed by ``series_id`` — the same partition axis as
 batch, so a 1M-series stream spreads across executors with no
-hand-scheduling.
+hand-scheduling — and is a tuple in the field order of the detector's
+state DDL:
+
+- ``init() -> state``: the state of a series not seen before;
+- ``step(y, state) -> (columns, state)``: advance over one micro-batch
+  slice of a series (``y`` = its values in timestamp order) and return
+  the output columns that follow ``series_id, timestamp, value``.
+
+Where a batch operator has the same recursion, ``step`` calls that
+operator's resumable kernel, so the stream equals the batch output
+row-for-row on any prefix by construction:
+
+- ``streaming_bocpd`` → ``functions.bocpd.bocpd_run``;
+- ``streaming_control_flags`` → ``functions.control.ewma_run`` and
+  ``cusum_run``;
+- ``streaming_holt_winters`` → ``functions.holt_winters.holt_winters_run``
+  after its own warm-up.
+
+A stream has no global series moments, so these take train-time
+``(norm_mu, norm_sd)`` from the caller where the batch operator uses
+the series' own.  The rolling, Page-Hinkley, Spectral Residual, SPOT
+and conformal detectors keep their recursion in ``step``; rows a
+stream cannot score yet (before ``min_periods``, a warm-up or a
+calibration) emit nulls.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    ArrayType,
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
 from ..functions.bocpd import bocpd_run, initial_state
+from ..functions.control import cusum_run, ewma_run
+from ..functions.holt_winters import holt_winters_run
 
 
 def streaming_window_stats(
@@ -79,22 +82,44 @@ def streaming_window_stats(
     )
 
 
-_ROLL_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("timestamp", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("roll_mean", DoubleType()),
-        StructField("roll_std", DoubleType()),
-        StructField("flag", IntegerType()),
-    ]
-)
-_ROLL_STATE = StructType(
-    [
-        StructField("tail", ArrayType(DoubleType())),
-        StructField("seen", LongType()),
-    ]
-)
+def _per_series_state(
+    stream: DataFrame,
+    out_ddl: str,
+    state_ddl: str,
+    init: Callable[[], tuple],
+    step: Callable[[np.ndarray, tuple], tuple[dict, tuple]],
+) -> DataFrame:
+    """The stateful shell of every per-series detector (see the module
+    docstring): ``out_ddl`` names the columns ``step`` returns."""
+
+    def update(
+        key: tuple,
+        pdfs: Iterator[pd.DataFrame],
+        state: GroupState,
+    ) -> Iterator[pd.DataFrame]:
+        (series_id,) = key
+        st = state.get if state.exists else init()
+        for pdf in pdfs:
+            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
+            y = pdf["value"].to_numpy(float)
+            cols, st = step(y, st)
+            yield pd.DataFrame(
+                {
+                    "series_id": series_id,
+                    "timestamp": pdf["timestamp"],
+                    "value": y,
+                    **cols,
+                }
+            )
+        state.update(st)
+
+    return stream.groupBy("series_id").applyInPandasWithState(
+        update,
+        f"series_id string, timestamp timestamp, value double, {out_ddl}",
+        state_ddl,
+        "append",
+        GroupStateTimeout.NoTimeout,
+    )
 
 
 def streaming_rolling_flags(
@@ -105,81 +130,41 @@ def streaming_rolling_flags(
 ) -> DataFrame:
     """W1 adaptive threshold as a stateful stream: trailing
     ``window``-row mean/std (ddof=1) + ``|x−mean| > k·(std+1e-6)``
-    flag, state = last ``window−1`` values per series."""
+    flag, state = last ``window−1`` values per series.  Matches the
+    batch operator except the head rows that batch BACK-fills (the
+    stream can't see the future): the stream emits null stats until
+    ``min_periods`` rows have arrived."""
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (series_id,) = key
-        if state.exists:
-            tail, seen = state.get
-            tail = list(tail)
-        else:
-            tail, seen = [], 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
-            vals = pdf["value"].to_numpy(float)
-            full = np.concatenate([np.asarray(tail, float), vals])
-            off = len(tail)
-            means = np.full(len(vals), np.nan)
-            stds = np.full(len(vals), np.nan)
-            for i in range(len(vals)):
-                lo = max(0, off + i - (window - 1))
-                w = full[lo : off + i + 1]
-                if seen + i + 1 >= min_periods and len(w) >= 2:
-                    means[i] = w.mean()
-                    stds[i] = w.std(ddof=1)
-            flags = (
-                np.abs(vals - means) > k * (stds + 1e-6)
-            ).astype(float)
-            flags[np.isnan(means)] = np.nan
-            yield pd.DataFrame(
-                {
-                    "series_id": series_id,
-                    "timestamp": pdf["timestamp"],
-                    "value": vals,
-                    "roll_mean": means,
-                    "roll_std": stds,
-                    "flag": pd.array(
-                        [None if np.isnan(f) else int(f) for f in flags],
-                        dtype="Int32",
-                    ),
-                }
-            )
-            tail = [float(x) for x in full[-(window - 1):]]
-            seen += len(vals)
-        state.update((tail, int(seen)))
+    def step(y, st):
+        tail, seen = st
+        full = np.concatenate([np.asarray(tail, float), y])
+        off = len(tail)
+        means = np.full(len(y), np.nan)
+        stds = np.full(len(y), np.nan)
+        for i in range(len(y)):
+            lo = max(0, off + i - (window - 1))
+            w = full[lo : off + i + 1]
+            if seen + i + 1 >= min_periods and len(w) >= 2:
+                means[i] = w.mean()
+                stds[i] = w.std(ddof=1)
+        flags = (np.abs(y - means) > k * (stds + 1e-6)).astype(float)
+        flags[np.isnan(means)] = np.nan
+        return {
+            "roll_mean": means,
+            "roll_std": stds,
+            "flag": pd.array(flags, dtype="Int32"),
+        }, (full[-(window - 1):].tolist(), seen + len(y))
 
-    return stream.groupBy("series_id").applyInPandasWithState(
-        update,
-        _ROLL_OUT,
-        _ROLL_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _per_series_state(
+        stream,
+        "roll_mean double, roll_std double, flag int",
+        "tail array<double>, seen bigint",
+        lambda: ([], 0),
+        step,
     )
 
 
-_BOCPD_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("timestamp", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("cp_prob", DoubleType()),
-        StructField("cp_score", DoubleType()),
-    ]
-)
-_BOCPD_STATE = StructType(
-    [
-        StructField("r", ArrayType(DoubleType())),
-        StructField("mu", ArrayType(DoubleType())),
-        StructField("kappa", ArrayType(DoubleType())),
-        StructField("alpha", ArrayType(DoubleType())),
-        StructField("beta", ArrayType(DoubleType())),
-        StructField("run_len", ArrayType(DoubleType())),
-    ]
-)
+_BOCPD_KEYS = ("r", "mu", "beta", "run_len")
 
 
 def streaming_bocpd(
@@ -190,61 +175,30 @@ def streaming_bocpd(
     norm_sd: float = 1.0,
 ) -> DataFrame:
     """M6 BOCPD as a stateful stream — the batch operator's resumable
-    core with the run-length posterior carried in GroupState.
+    core with the run-length posterior carried in GroupState (O(max_run)
+    arrays per series).
 
     ``(norm_mu, norm_sd)`` standardize incoming values (the batch op
     uses global series moments; supply train-time moments here)."""
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (series_id,) = key
-        if state.exists:
-            r, mu, kappa, alpha, beta, run_len = state.get
-            st = {
-                "r": np.asarray(r, float),
-                "mu": np.asarray(mu, float),
-                "kappa": np.asarray(kappa, float),
-                "alpha": np.asarray(alpha, float),
-                "beta": np.asarray(beta, float),
-                "run_len": np.asarray(run_len, float).astype(int),
-            }
-        else:
-            st = initial_state()
-        for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
-            y = (pdf["value"].to_numpy(float) - norm_mu) / (norm_sd or 1.0)
-            cp, short, st = bocpd_run(
-                y, st, hazard_lam=hazard_lam, max_run=max_run
-            )
-            yield pd.DataFrame(
-                {
-                    "series_id": series_id,
-                    "timestamp": pdf["timestamp"],
-                    "value": pdf["value"],
-                    "cp_prob": cp,
-                    "cp_score": short,
-                }
-            )
-        state.update(
-            (
-                [float(x) for x in st["r"]],
-                [float(x) for x in st["mu"]],
-                [float(x) for x in st["kappa"]],
-                [float(x) for x in st["alpha"]],
-                [float(x) for x in st["beta"]],
-                [float(x) for x in st["run_len"]],
-            )
-        )
+    def encode(st):
+        return tuple(np.asarray(st[k], float).tolist() for k in _BOCPD_KEYS)
 
-    return stream.groupBy("series_id").applyInPandasWithState(
-        update,
-        _BOCPD_OUT,
-        _BOCPD_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    def step(y, st):
+        st = {k: np.asarray(v, float) for k, v in zip(_BOCPD_KEYS, st)}
+        st["run_len"] = st["run_len"].astype(int)
+        cp, short, st = bocpd_run(
+            (y - norm_mu) / (norm_sd or 1.0), st,
+            hazard_lam=hazard_lam, max_run=max_run,
+        )
+        return {"cp_prob": cp, "cp_score": short}, encode(st)
+
+    return _per_series_state(
+        stream,
+        "cp_prob double, cp_score double",
+        ", ".join(f"{k} array<double>" for k in _BOCPD_KEYS),
+        lambda: encode(initial_state()),
+        step,
     )
 
 
@@ -296,31 +250,6 @@ def streaming_user_sessions(
     )
 
 
-_CTRL_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("timestamp", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("ewma", DoubleType()),
-        StructField("ucl", DoubleType()),
-        StructField("lcl", DoubleType()),
-        StructField("ewma_flag", IntegerType()),
-        StructField("cusum_pos", DoubleType()),
-        StructField("cusum_neg", DoubleType()),
-        StructField("cusum_flag", IntegerType()),
-    ]
-)
-_CTRL_STATE = StructType(
-    [
-        StructField("z", DoubleType()),
-        StructField("w", DoubleType()),
-        StructField("sp", DoubleType()),
-        StructField("sn", DoubleType()),
-        StructField("started", IntegerType()),
-    ]
-)
-
-
 def streaming_control_flags(
     stream: DataFrame,
     norm_mu: float = 0.0,
@@ -341,92 +270,32 @@ def streaming_control_flags(
     Given identical moments the recursions match the batch operators
     row-for-row on any prefix (asserted by the batch-parity test).
     """
-    lam = float(lam)
-    w2 = (1.0 - lam) * (1.0 - lam)
-    ratio = lam / (2.0 - lam)
-    nsig, k, h = float(nsig), float(k), float(h)
+    lam, nsig, k, h = float(lam), float(nsig), float(k), float(h)
     mu, sd = float(norm_mu), float(norm_sd)
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (series_id,) = key
-        if state.exists:
-            z, w, sp, sn, _ = state.get
-        else:
-            z, w, sp, sn = mu, 1.0, 0.0, 0.0
-        for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
-            y = pdf["value"].to_numpy(float)
-            n = len(y)
-            ew = np.empty(n)
-            ucl = np.empty(n)
-            lcl = np.empty(n)
-            cp = np.empty(n)
-            cn = np.empty(n)
-            for i in range(n):
-                z = z + lam * (y[i] - z)
-                w = w * w2
-                hw = nsig * sd * np.sqrt(ratio * (1.0 - w))
-                ew[i] = z
-                ucl[i] = mu + hw
-                lcl[i] = mu - hw
-                zs = (y[i] - mu) / (sd + 1e-9)
-                sp = max(0.0, sp + (zs - k))
-                sn = max(0.0, sn + (-zs - k))
-                cp[i] = sp
-                cn[i] = sn
-            yield pd.DataFrame(
-                {
-                    "series_id": series_id,
-                    "timestamp": pdf["timestamp"],
-                    "value": y,
-                    "ewma": ew,
-                    "ucl": ucl,
-                    "lcl": lcl,
-                    "ewma_flag": ((ew > ucl) | (ew < lcl)).astype(
-                        "int32"
-                    ),
-                    "cusum_pos": cp,
-                    "cusum_neg": cn,
-                    "cusum_flag": ((cp > h) | (cn > h)).astype("int32"),
-                }
-            )
-        state.update(
-            (float(z), float(w), float(sp), float(sn), 1)
-        )
+    def step(y, st):
+        (ew, hw), (z, w) = ewma_run(y, mu, sd, lam, nsig, st[:2])
+        (cp, cn), (sp, sn) = cusum_run(y, mu, sd, k, st[2:])
+        ucl = mu + hw
+        lcl = mu - hw
+        return {
+            "ewma": ew,
+            "ucl": ucl,
+            "lcl": lcl,
+            "ewma_flag": ((ew > ucl) | (ew < lcl)).astype("int32"),
+            "cusum_pos": cp,
+            "cusum_neg": cn,
+            "cusum_flag": ((cp > h) | (cn > h)).astype("int32"),
+        }, (z, w, sp, sn)
 
-    return stream.groupBy("series_id").applyInPandasWithState(
-        update,
-        _CTRL_OUT,
-        _CTRL_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _per_series_state(
+        stream,
+        "ewma double, ucl double, lcl double, ewma_flag int, "
+        "cusum_pos double, cusum_neg double, cusum_flag int",
+        "z double, w double, sp double, sn double",
+        lambda: (mu, 1.0, 0.0, 0.0),
+        step,
     )
-
-
-_PH_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("timestamp", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("ph_up", DoubleType()),
-        StructField("ph_dn", DoubleType()),
-        StructField("flag_up", IntegerType()),
-        StructField("flag_dn", IntegerType()),
-    ]
-)
-
-_PH_STATE = StructType(
-    [
-        StructField("m_up", DoubleType()),
-        StructField("mn", DoubleType()),
-        StructField("m_dn", DoubleType()),
-        StructField("mx", DoubleType()),
-    ]
-)
 
 
 def streaming_page_hinkley(
@@ -449,69 +318,31 @@ def streaming_page_hinkley(
     delta = sd * float(delta_frac)
     lam = sd * float(lam_frac)
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (series_id,) = key
-        if state.exists:
-            m_up, mn, m_dn, mx = state.get
-        else:
-            m_up, mn, m_dn, mx = 0.0, np.inf, 0.0, -np.inf
-        for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
-            y = pdf["value"].to_numpy(float)
-            n = len(y)
-            up = np.empty(n)
-            dn = np.empty(n)
-            for i in range(n):
-                m_up = m_up + (y[i] - mu - delta)
-                mn = min(mn, m_up)
-                m_dn = m_dn + (y[i] - mu + delta)
-                mx = max(mx, m_dn)
-                up[i] = m_up - mn
-                dn[i] = mx - m_dn
-            yield pd.DataFrame(
-                {
-                    "series_id": series_id,
-                    "timestamp": pdf["timestamp"],
-                    "value": y,
-                    "ph_up": up,
-                    "ph_dn": dn,
-                    "flag_up": (up > lam).astype("int32"),
-                    "flag_dn": (dn > lam).astype("int32"),
-                }
-            )
-        state.update((float(m_up), float(mn), float(m_dn), float(mx)))
+    def step(y, st):
+        m_up, mn, m_dn, mx = st
+        up = np.empty(len(y))
+        dn = np.empty(len(y))
+        for i, yt in enumerate(y.tolist()):
+            m_up = m_up + (yt - mu - delta)
+            mn = min(mn, m_up)
+            m_dn = m_dn + (yt - mu + delta)
+            mx = max(mx, m_dn)
+            up[i] = m_up - mn
+            dn[i] = mx - m_dn
+        return {
+            "ph_up": up,
+            "ph_dn": dn,
+            "flag_up": (up > lam).astype("int32"),
+            "flag_dn": (dn > lam).astype("int32"),
+        }, (m_up, mn, m_dn, mx)
 
-    return stream.groupBy("series_id").applyInPandasWithState(
-        update,
-        _PH_OUT,
-        _PH_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _per_series_state(
+        stream,
+        "ph_up double, ph_dn double, flag_up int, flag_dn int",
+        "m_up double, mn double, m_dn double, mx double",
+        lambda: (0.0, np.inf, 0.0, -np.inf),
+        step,
     )
-
-
-_HW_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("timestamp", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("pred", DoubleType()),
-        StructField("resid", DoubleType()),
-    ]
-)
-_HW_STATE = StructType(
-    [
-        StructField("buf", ArrayType(DoubleType())),
-        StructField("sl", ArrayType(DoubleType())),
-        StructField("l", DoubleType()),
-        StructField("b", DoubleType()),
-        StructField("started", IntegerType()),
-    ]
-)
 
 
 def streaming_holt_winters(
@@ -531,83 +362,30 @@ def streaming_holt_winters(
     State is O(period) doubles per series.
     """
     p = int(period)
-    a, bq, g = float(alpha), float(beta), float(gamma)
-    ca, cb, cg = 1.0 - a, 1.0 - bq, 1.0 - g
+    params = float(alpha), float(beta), float(gamma)
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (series_id,) = key
-        if state.exists:
-            buf, sl, l, b, started = state.get
-            buf, sl = list(buf), list(sl)
-        else:
-            buf, sl, l, b, started = [], [], 0.0, 0.0, 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
-            y = pdf["value"].to_numpy(float)
-            preds = np.full(len(y), np.nan)
-            for i in range(len(y)):
-                if not started:
-                    buf.append(float(y[i]))
-                    if len(buf) == p:
-                        l = float(np.mean(buf))
-                        sl = [v - l for v in buf]
-                        b = 0.0
-                        started = 1
-                    continue
-                sprev = sl[0]
-                preds[i] = (l + b) + sprev
-                l_new = a * (y[i] - sprev) + ca * (l + b)
-                b_new = bq * (l_new - l) + cb * b
-                s_new = g * (y[i] - l_new) + cg * sprev
-                sl = sl[1:] + [s_new]
-                l, b = l_new, b_new
-            yield pd.DataFrame(
-                {
-                    "series_id": series_id,
-                    "timestamp": pdf["timestamp"],
-                    "value": y,
-                    "pred": preds,
-                    "resid": y - preds,
-                }
-            )
-        state.update(
-            (
-                [float(x) for x in buf],
-                [float(x) for x in sl],
-                float(l),
-                float(b),
-                int(started),
-            )
-        )
+    def step(y, st):
+        buf, sl, l, b, started = st
+        buf = list(buf)
+        i = 0
+        if not started:
+            i = min(p - len(buf), len(y))
+            buf += y[:i].tolist()
+            if len(buf) == p:
+                l = float(np.mean(buf))
+                sl, b, started = [v - l for v in buf], 0.0, 1
+        preds = np.full(len(y), np.nan)
+        if started:
+            preds[i:], (l, b, sl) = holt_winters_run(y[i:], (l, b, sl), *params)
+        return {"pred": preds, "resid": y - preds}, (buf, sl, l, b, started)
 
-    return stream.groupBy("series_id").applyInPandasWithState(
-        update,
-        _HW_OUT,
-        _HW_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _per_series_state(
+        stream,
+        "pred double, resid double",
+        "buf array<double>, sl array<double>, l double, b double, started int",
+        lambda: ([], [], 0.0, 0.0, 0),
+        step,
     )
-
-
-_SR_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("timestamp", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("sr_score", DoubleType()),
-        StructField("flag", IntegerType()),
-    ]
-)
-_SR_STATE = StructType(
-    [
-        StructField("tail", ArrayType(DoubleType())),
-        StructField("seen", LongType()),
-    ]
-)
 
 
 def streaming_spectral_residual(
@@ -631,77 +409,27 @@ def streaming_spectral_residual(
     """
     from ..functions.spectral import estimate_tail, spectral_residual_saliency
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (series_id,) = key
-        if state.exists:
-            tail, seen = state.get
-            buf = list(tail)
-        else:
-            buf, seen = [], 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
-            vals = pdf["value"].to_numpy(float)
-            scores = np.full(len(vals), np.nan)
-            for i, v in enumerate(vals):
-                buf.append(float(v))
-                if len(buf) > history:
-                    buf = buf[-history:]
-                if len(buf) >= min_history:
-                    ext = estimate_tail(np.asarray(buf), m=5)
-                    _, s = spectral_residual_saliency(ext)
-                    scores[i] = s[len(buf) - 1]
-            flags = pd.array(
-                [None if np.isnan(s) else int(s > tau) for s in scores],
-                dtype="Int32",
-            )
-            yield pd.DataFrame(
-                {
-                    "series_id": series_id,
-                    "timestamp": pdf["timestamp"],
-                    "value": vals,
-                    "sr_score": scores,
-                    "flag": flags,
-                }
-            )
-            seen += len(vals)
-        state.update(([float(x) for x in buf], int(seen)))
+    def step(y, st):
+        buf = list(st[0])
+        scores = np.full(len(y), np.nan)
+        for i, v in enumerate(y.tolist()):
+            buf.append(v)
+            if len(buf) > history:
+                buf = buf[-history:]
+            if len(buf) >= min_history:
+                ext = estimate_tail(np.asarray(buf), m=5)
+                _, s = spectral_residual_saliency(ext)
+                scores[i] = s[len(buf) - 1]
+        flags = np.where(np.isnan(scores), np.nan, scores > tau)
+        return {"sr_score": scores, "flag": pd.array(flags, dtype="Int32")}, (buf,)
 
-    return stream.groupBy("series_id").applyInPandasWithState(
-        update,
-        _SR_OUT,
-        _SR_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _per_series_state(
+        stream,
+        "sr_score double, flag int",
+        "tail array<double>",
+        lambda: ([],),
+        step,
     )
-
-
-_POT_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("timestamp", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("u", DoubleType()),
-        StructField("z_q", DoubleType()),
-        StructField("in_tail", IntegerType()),
-        StructField("is_anomaly", IntegerType()),
-    ]
-)
-_POT_STATE = StructType(
-    [
-        StructField("buf", ArrayType(DoubleType())),
-        StructField("u", DoubleType()),
-        StructField("s1", DoubleType()),
-        StructField("s2", DoubleType()),
-        StructField("zq", DoubleType()),
-        StructField("n", LongType()),
-        StructField("n_tail", LongType()),
-        StructField("started", IntegerType()),
-    ]
-)
 
 
 def _gpd_mom_threshold(
@@ -750,128 +478,78 @@ def streaming_pot(
     q_level = float(q_level)
     target_p = float(target_p)
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (series_id,) = key
-        if state.exists:
-            buf_l, u, s1, s2, zq, n, n_tail, started = state.get
-            buf = list(buf_l) if buf_l is not None else []
-        else:
-            buf, u, s1, s2, zq, n, n_tail, started = [], 0.0, 0.0, 0.0, 0.0, 0, 0, 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
-            y = pdf["value"].to_numpy(float)
-            m_ = len(y)
-            out_u = np.full(m_, np.nan)
-            out_z = np.full(m_, np.nan)
-            out_tail = np.zeros(m_, dtype="int32")
-            out_an = np.zeros(m_, dtype="int32")
-            for i in range(m_):
-                x = y[i]
-                if not started:
-                    buf.append(x)
-                    if len(buf) >= n_init:
-                        arr = np.asarray(buf)
-                        u = float(np.quantile(arr, q_level, method="linear"))
-                        exc = arr[arr > u] - u
-                        n = len(arr)
-                        n_tail = len(exc)
-                        s1 = float(exc.sum())
-                        s2 = float((exc * exc).sum())
-                        # Degenerate calibration (constant data, or the
-                        # quantile ties with the max): no excesses to
-                        # fit a GPD on.  Fall back to z_q = u; the
-                        # first exceedance bootstraps the tail below.
-                        zq = (
-                            _gpd_mom_threshold(u, n, n_tail, s1, s2, target_p)
-                            if n_tail > 0
-                            else u
-                        )
-                        buf = []
-                        started = 1
-                    continue
-                out_u[i] = u
-                out_z[i] = zq
-                if x > zq and n_tail == 0:
-                    # Bootstrapping a degenerate calibration: with no
-                    # tail sample yet, z_q == u is not a fitted model —
-                    # admit the first exceedance as a tail observation
-                    # (refitting z_q) instead of alarming forever.
-                    out_tail[i] = 1
-                    n += 1
-                    n_tail += 1
-                    e = x - u
-                    s1 += e
-                    s2 += e * e
-                    zq = _gpd_mom_threshold(u, n, n_tail, s1, s2, target_p)
-                elif x > zq:
-                    out_an[i] = 1
-                elif x > u:
-                    out_tail[i] = 1
-                    n += 1
-                    n_tail += 1
-                    e = x - u
-                    s1 += e
-                    s2 += e * e
-                    zq = _gpd_mom_threshold(u, n, n_tail, s1, s2, target_p)
-                else:
-                    n += 1
-            yield pd.DataFrame(
-                {
-                    "series_id": series_id,
-                    "timestamp": pdf["timestamp"],
-                    "value": y,
-                    "u": out_u,
-                    "z_q": out_z,
-                    "in_tail": out_tail,
-                    "is_anomaly": out_an,
-                }
-            )
-        state.update(
-            (
-                [float(b) for b in buf],
-                float(u),
-                float(s1),
-                float(s2),
-                float(zq),
-                int(n),
-                int(n_tail),
-                int(started),
-            )
-        )
+    def step(y, st):
+        buf, u, s1, s2, zq, n, n_tail, started = st
+        buf = list(buf) if buf is not None else []
+        m_ = len(y)
+        out_u = np.full(m_, np.nan)
+        out_z = np.full(m_, np.nan)
+        out_tail = np.zeros(m_, dtype="int32")
+        out_an = np.zeros(m_, dtype="int32")
+        for i, x in enumerate(y.tolist()):
+            if not started:
+                buf.append(x)
+                if len(buf) >= n_init:
+                    arr = np.asarray(buf)
+                    u = float(np.quantile(arr, q_level, method="linear"))
+                    exc = arr[arr > u] - u
+                    n = len(arr)
+                    n_tail = len(exc)
+                    s1 = float(exc.sum())
+                    s2 = float((exc * exc).sum())
+                    # Degenerate calibration (constant data, or the
+                    # quantile ties with the max): no excesses to
+                    # fit a GPD on.  Fall back to z_q = u; the
+                    # first exceedance bootstraps the tail below.
+                    zq = (
+                        _gpd_mom_threshold(u, n, n_tail, s1, s2, target_p)
+                        if n_tail > 0
+                        else u
+                    )
+                    buf = []
+                    started = 1
+                continue
+            out_u[i] = u
+            out_z[i] = zq
+            if x > zq and n_tail == 0:
+                # Bootstrapping a degenerate calibration: with no
+                # tail sample yet, z_q == u is not a fitted model —
+                # admit the first exceedance as a tail observation
+                # (refitting z_q) instead of alarming forever.
+                out_tail[i] = 1
+                n += 1
+                n_tail += 1
+                e = x - u
+                s1 += e
+                s2 += e * e
+                zq = _gpd_mom_threshold(u, n, n_tail, s1, s2, target_p)
+            elif x > zq:
+                out_an[i] = 1
+            elif x > u:
+                out_tail[i] = 1
+                n += 1
+                n_tail += 1
+                e = x - u
+                s1 += e
+                s2 += e * e
+                zq = _gpd_mom_threshold(u, n, n_tail, s1, s2, target_p)
+            else:
+                n += 1
+        return {
+            "u": out_u,
+            "z_q": out_z,
+            "in_tail": out_tail,
+            "is_anomaly": out_an,
+        }, (buf, u, s1, s2, zq, n, n_tail, started)
 
-    return stream.groupBy("series_id").applyInPandasWithState(
-        update,
-        _POT_OUT,
-        _POT_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
+    return _per_series_state(
+        stream,
+        "u double, z_q double, in_tail int, is_anomaly int",
+        "buf array<double>, u double, s1 double, s2 double, zq double, "
+        "n bigint, n_tail bigint, started int",
+        lambda: ([], 0.0, 0.0, 0.0, 0.0, 0, 0, 0),
+        step,
     )
-
-
-_CONF_OUT = StructType(
-    [
-        StructField("series_id", StringType()),
-        StructField("timestamp", TimestampType()),
-        StructField("value", DoubleType()),
-        StructField("pred", DoubleType()),
-        StructField("q_hat", DoubleType()),
-        StructField("lo", DoubleType()),
-        StructField("hi", DoubleType()),
-        StructField("covered", IntegerType()),
-    ]
-)
-
-_CONF_STATE = StructType(
-    [
-        StructField("buf", ArrayType(DoubleType())),
-        StructField("prev", DoubleType()),
-        StructField("n_seen", LongType()),
-    ]
-)
 
 
 def streaming_conformal(
@@ -902,182 +580,40 @@ def streaming_conformal(
     a_, b_ = float(icept), float(slope)
     k_rank = min(int(np.ceil((n_cal + 1) * (1.0 - alpha))), n_cal)
 
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        (series_id,) = key
-        if state.exists:
-            buf_l, prev, n_seen = state.get
-            buf = list(buf_l)
-        else:
-            buf, prev, n_seen = [], None, 0
-        for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
-            y = pdf["value"].to_numpy(float)
-            n = len(y)
-            pred = np.full(n, np.nan)
-            qh = np.full(n, np.nan)
-            for i in range(n):
-                if prev is not None:
-                    pred[i] = a_ + b_ * prev
-                    if len(buf) >= n_cal:
-                        qh[i] = np.partition(
-                            np.asarray(buf, float), k_rank - 1
-                        )[k_rank - 1]
-                    buf.append(abs(y[i] - pred[i]))
-                    if len(buf) > n_cal:
-                        buf.pop(0)
-                prev = y[i]
-                n_seen += 1
-            lo = pred - qh
-            hi = pred + qh
-            cov = np.where(
-                np.isnan(qh),
-                np.nan,
-                ((y >= lo) & (y <= hi)).astype(float),
-            )
-            yield pd.DataFrame(
-                {
-                    "series_id": series_id,
-                    "timestamp": pdf["timestamp"],
-                    "value": y,
-                    "pred": pred,
-                    "q_hat": qh,
-                    "lo": lo,
-                    "hi": hi,
-                    "covered": pd.Series(cov).astype("Int32"),
-                }
-            )
-        state.update(
-            ([float(v) for v in buf], float(prev), int(n_seen))
+    def step(y, st):
+        buf, prev = list(st[0]), st[1]
+        pred = np.full(len(y), np.nan)
+        qh = np.full(len(y), np.nan)
+        for i, yt in enumerate(y.tolist()):
+            if prev is not None:
+                pred[i] = fc = a_ + b_ * prev
+                if len(buf) >= n_cal:
+                    qh[i] = np.partition(
+                        np.asarray(buf, float), k_rank - 1
+                    )[k_rank - 1]
+                buf.append(abs(yt - fc))
+                if len(buf) > n_cal:
+                    buf.pop(0)
+            prev = yt
+        lo = pred - qh
+        hi = pred + qh
+        cov = np.where(
+            np.isnan(qh),
+            np.nan,
+            ((y >= lo) & (y <= hi)).astype(float),
         )
+        return {
+            "pred": pred,
+            "q_hat": qh,
+            "lo": lo,
+            "hi": hi,
+            "covered": pd.array(cov, dtype="Int32"),
+        }, (buf, prev)
 
-    return stream.groupBy("series_id").applyInPandasWithState(
-        update,
-        _CONF_OUT,
-        _CONF_STATE,
-        "append",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_control_flags_tws(
-    stream: DataFrame,
-    norm_mu: float = 0.0,
-    norm_sd: float = 1.0,
-    lam: float = 0.25,
-    nsig: float = 3.0,
-    k: float = 0.5,
-    h: float = 5.0,
-) -> DataFrame:
-    """``streaming_control_flags`` on the Spark 4 ``transformWithState
-    InPandas`` API — the designated migration path off the
-    soft-deprecated ``applyInPandasWithState`` (SPARK-49564).  Same
-    EWMA+CUSUM math and output schema, identical per-row values
-    (asserted by tests/test_streaming.py); what changes is the state
-    plumbing:
-
-    - state lives in a named ``ValueState`` slot managed per key by
-      the RocksDB state-store provider (transformWithState requires
-      it: set ``spark.sql.streaming.stateStore.providerClass`` to
-      ``...state.RocksDBStateStoreProvider`` on the session),
-    - the processor object carries init/close lifecycle hooks and
-      (unused here) timers and TTL, which the old API lacked,
-    - schema evolution of the state type is supported natively —
-      the operational reason to migrate long-lived checkpoints.
-
-    Kept BESIDE the GroupState detectors rather than replacing them:
-    the stable API remains the default until the fleet baseline is
-    Spark 4 everywhere; scripts/stream_bench_r10.py measures both
-    plumbing variants at identical math.
-
-    Environment requirement: the transformWithState driver protocol
-    talks protobuf to a JVM-side state server, so the ``protobuf``
-    Python package must be installed (it is NOT bundled with pyspark).
-    Checked eagerly here — without the check the failure surfaces as
-    an opaque 'driver worker exited unexpectedly (crashed)' at stream
-    start."""
-    try:
-        from google.protobuf import descriptor as _descriptor  # noqa: F401
-    except ImportError as exc:  # pragma: no cover - env dependent
-        raise RuntimeError(
-            "streaming_control_flags_tws needs the 'protobuf' package: "
-            "pyspark's transformWithStateInPandas state-server protocol "
-            "imports google.protobuf at stream start.  Install protobuf "
-            "or use streaming_control_flags (applyInPandasWithState), "
-            "which is functionally identical."
-        ) from exc
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    lam = float(lam)
-    w2 = (1.0 - lam) * (1.0 - lam)
-    ratio = lam / (2.0 - lam)
-    nsig, k, h = float(nsig), float(k), float(h)
-    mu, sd = float(norm_mu), float(norm_sd)
-
-    class _CtrlProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "ctrl", "z double, w double, sp double, sn double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (series_id,) = key
-            got = self._state.get()
-            if got is not None:
-                z, w, sp, sn = got
-            else:
-                z, w, sp, sn = mu, 1.0, 0.0, 0.0
-            for pdf in rows:
-                pdf = pdf.sort_values("timestamp").reset_index(drop=True)
-                y = pdf["value"].to_numpy(float)
-                n = len(y)
-                ew = np.empty(n)
-                ucl = np.empty(n)
-                lcl = np.empty(n)
-                cp = np.empty(n)
-                cn = np.empty(n)
-                for i in range(n):
-                    z = z + lam * (y[i] - z)
-                    w = w * w2
-                    hw = nsig * sd * np.sqrt(ratio * (1.0 - w))
-                    ew[i] = z
-                    ucl[i] = mu + hw
-                    lcl[i] = mu - hw
-                    zs = (y[i] - mu) / (sd + 1e-9)
-                    sp = max(0.0, sp + (zs - k))
-                    sn = max(0.0, sn + (-zs - k))
-                    cp[i] = sp
-                    cn[i] = sn
-                yield pd.DataFrame(
-                    {
-                        "series_id": series_id,
-                        "timestamp": pdf["timestamp"],
-                        "value": y,
-                        "ewma": ew,
-                        "ucl": ucl,
-                        "lcl": lcl,
-                        "ewma_flag": ((ew > ucl) | (ew < lcl)).astype(
-                            "int32"
-                        ),
-                        "cusum_pos": cp,
-                        "cusum_neg": cn,
-                        "cusum_flag": ((cp > h) | (cn > h)).astype("int32"),
-                    }
-                )
-            self._state.update((float(z), float(w), float(sp), float(sn)))
-
-        def close(self) -> None:
-            pass
-
-    return stream.groupBy("series_id").transformWithStateInPandas(
-        statefulProcessor=_CtrlProcessor(),
-        outputStructType=_CTRL_OUT,
-        outputMode="Append",
-        timeMode="None",
+    return _per_series_state(
+        stream,
+        "pred double, q_hat double, lo double, hi double, covered int",
+        "buf array<double>, prev double",
+        lambda: ([], None),
+        step,
     )
