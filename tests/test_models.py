@@ -6,11 +6,18 @@ import pytest
 
 from conftest import series_df
 from time_series_data_anomaly_detection_spark.functions import (
+    ar,
     ar_forecast,
+    bocpd,
     bocpd_changepoints,
     bsts_forecast,
     gp_forecast,
+    harmonic,
+    kalman,
     kalman_local_level,
+    shesd,
+    spectral,
+    stl,
     stl_decompose,
 )
 from time_series_data_anomaly_detection_spark.functions.ar import ar1_forecast_native
@@ -750,3 +757,97 @@ def test_lstm_numpy_matches_r13_reference_bitwise():
     for n in new.params:
         assert np.array_equal(new.params[n], ref.params[n]), f"trained {n}"
     assert np.array_equal(new.predict(X), ref.predict(X))
+
+
+def _shuffled_fleet(frac_col=None):
+    """Three seeded seasonal series of different lengths, as one frame
+    whose rows are in random order (``frac_col``: each series twice,
+    at two train fractions)."""
+    import pandas as pd
+
+    rng = np.random.default_rng(17)
+    frames = []
+    for sid, n in (("a", 150), ("b", 97), ("c", 203)):
+        t = np.arange(n)
+        y = 10 + 3 * np.sin(2 * np.pi * t / 24) + rng.normal(0, 1, n)
+        y[n // 2] += 8
+        frames.append(
+            pd.DataFrame(
+                {
+                    "series_id": sid,
+                    "timestamp": pd.date_range("2024-01-01", periods=n, freq="30min"),
+                    "value": y,
+                    "rn": t + 1,
+                }
+            )
+        )
+    pdf = pd.concat(frames, ignore_index=True)
+    if frac_col:
+        pdf = pd.concat(
+            [pdf.assign(**{frac_col: f}) for f in (0.5, 0.8)], ignore_index=True
+        )
+    return pdf.sample(frac=1, random_state=3).reset_index(drop=True)
+
+
+def _assert_frames_bitwise(got, want):
+    assert list(got.columns) == list(want.columns)
+    assert len(got) == len(want)
+    for c in got.columns:
+        a, b = got[c].to_numpy(), want[c].to_numpy()
+        if a.dtype.kind == "f" or b.dtype.kind == "f":
+            a, b = a.astype(float), b.astype(float)
+            nan = np.isnan(a)
+            assert np.array_equal(nan, np.isnan(b)), c
+            assert np.array_equal(a[~nan].view(np.int64), b[~nan].view(np.int64)), c
+        else:
+            assert [str(v) for v in a] == [str(v) for v in b], c
+
+
+SHELL_CASES = [
+    pytest.param(kalman.kalman_local_level, kalman.kalman_local_level_kernel,
+                 dict(train_frac=0.8, dynamic=False), id="kalman_local_level"),
+    pytest.param(kalman.kalman_fixed, kalman.kalman_fixed_kernel, {},
+                 id="kalman_fixed"),
+    pytest.param(kalman.bsts_fixed, kalman.bsts_fixed_kernel, {}, id="bsts_fixed"),
+    pytest.param(kalman.bsts_forecast, kalman.bsts_forecast_kernel, {},
+                 id="bsts_forecast"),
+    pytest.param(bocpd.bocpd_changepoints, bocpd.bocpd_changepoints_kernel, {},
+                 id="bocpd"),
+    pytest.param(stl.stl_decompose, stl.stl_decompose_kernel,
+                 dict(score_col="z"), id="stl_score"),
+    pytest.param(ar.ar_forecast, ar.ar_forecast_kernel,
+                 dict(p=4, score_col="z"), id="ar_score"),
+    pytest.param(ar.ar_forecast, ar.ar_forecast_kernel,
+                 dict(p=4, frac_col="frac"), id="ar_frac"),
+    pytest.param(harmonic.harmonic_forecast, harmonic.harmonic_forecast_kernel,
+                 dict(period=24), id="harmonic"),
+    pytest.param(spectral.spectral_residual_scores,
+                 spectral.spectral_residual_kernel, {}, id="spectral_residual"),
+    pytest.param(shesd.shesd_flags, shesd.shesd_kernel, dict(period=24),
+                 id="shesd"),
+]
+
+
+@pytest.mark.parametrize("wrapper, kernel, kw", SHELL_CASES)
+def test_shell_wrapper_equals_kernel_bitwise(spark, wrapper, kernel, kw):
+    """Each row-aligned model wrapper is its module-level kernel run by
+    the grouped-map shell: on a shuffled three-series frame, the Spark
+    output equals, bit for bit, the kernel called in process on each
+    ``rn``-sorted group."""
+    import pandas as pd
+
+    def in_process(g):
+        g = g.reset_index(drop=True)
+        return g.assign(**kernel(g, **kw))
+
+    pdf = _shuffled_fleet(kw.get("frac_col"))
+    keys = ["series_id"] + ([kw["frac_col"]] if "frac_col" in kw else [])
+    got = wrapper(spark.createDataFrame(pdf), **kw).toPandas()
+    want = pd.concat(
+        in_process(g) for _, g in pdf.sort_values("rn").groupby(keys)
+    )[list(got.columns)]
+    order = keys + ["rn"]
+    _assert_frames_bitwise(
+        got.sort_values(order).reset_index(drop=True),
+        want.sort_values(order).reset_index(drop=True),
+    )

@@ -10,6 +10,11 @@ import pandas as pd
 import pytest
 
 from conftest import series_df
+from time_series_data_anomaly_detection_spark.functions import (
+    ar, bocpd, control, croston, dtw, gp, harmonic, holt_winters, kalman,
+    lstm, matrix_profile, pelt, shesd, spectral, stl, theta,
+)
+from time_series_data_anomaly_detection_spark.operators import acf, robust, trend
 
 
 def _plan(df) -> str:
@@ -745,3 +750,92 @@ def test_widened_twins_plans_are_scale_safe(spark):
     # SR-512: both nfft-row twiddle joins ride broadcasts
     plan = _plan(Reg.queries()["spectral_residual_fixed_512"](spark, sf))
     assert _count(plan, ") BroadcastHashJoin") >= 2
+
+
+def _grouped_map_exchanges(plan: str) -> list[str]:
+    """For each FlatMapGroupsInPandas of a formatted plan, the
+    ``Arguments`` of the first Exchange beneath it, expression ids
+    and plan ids dropped."""
+    import re
+
+    tree = plan.split("\n\n")[0].splitlines()
+    out = []
+    for i, line in enumerate(tree):
+        if "FlatMapGroupsInPandas (" not in line:
+            continue
+        node = next(
+            re.search(r" Exchange \((\d+)\)", below).group(1)
+            for below in tree[i + 1 :]
+            if re.search(r" Exchange \(\d+\)", below)
+        )
+        args = re.search(
+            rf"\n\({node}\) Exchange\n(?:.*\n)*?Arguments: (.*)", plan
+        ).group(1)
+        out.append(re.sub(r"#\d+L?|, \[plan_id=\d+\]", "", args))
+    return out
+
+
+def _ar_frac(df, **kw):
+    from pyspark.sql import functions as F
+
+    return ar.ar_forecast(df.withColumn("frac", F.lit(0.5)), frac_col="frac", **kw)
+
+
+_S, _SB = ("series_id",), ("series_id", "__bucket")
+# caller -> (function, kwargs, grouping keys of each of its grouped-maps)
+SHELL_CALLERS = {
+    "kalman_local_level": (kalman.kalman_local_level, {}, [_S]),
+    "kalman_fixed": (kalman.kalman_fixed, {}, [_S]),
+    "bsts_fixed": (kalman.bsts_fixed, {}, [_S]),
+    "bsts_forecast": (kalman.bsts_forecast, {}, [_S]),
+    "bocpd": (bocpd.bocpd_changepoints, {}, [_S]),
+    "stl": (stl.stl_decompose, dict(score_col="z"), [_S]),
+    "ar": (ar.ar_forecast, dict(score_col="z"), [_S]),
+    "ar_frac": (_ar_frac, {}, [("series_id", "frac")]),
+    "lstm": (lstm.lstm_forecast, dict(epochs=1), [_S]),
+    "gp": (gp.gp_forecast, {}, [_SB]),
+    "gp_optimize": (gp.gp_forecast, dict(optimize=True), [_SB, _S]),
+    "ewma": (control.ewma_chart, {}, [_S]),
+    "cusum": (control.cusum_chart, {}, [_S]),
+    "cusum_alarms": (control.cusum_alarms, {}, [_S]),
+    "croston": (croston.croston_forecast, {}, [_S]),
+    "harmonic": (harmonic.harmonic_forecast, {}, [_S]),
+    "holt_winters": (holt_winters.holt_winters_fixed, {}, [_S]),
+    "holt_linear": (holt_winters.holt_linear_fixed, {}, [_S]),
+    "pelt": (pelt.pelt_segments, {}, [_S]),
+    "theta": (theta.theta_forecast, {}, [_S]),
+    "spectral_residual": (spectral.spectral_residual_scores, {}, [_S]),
+    "shesd": (shesd.shesd_flags, {}, [_S]),
+    "matrix_profile": (matrix_profile.matrix_profile_scores, {}, [_S]),
+    "matrix_profile_tiled": (
+        matrix_profile.matrix_profile_tiled, {}, [("series_id", "pair_id"), _S]
+    ),
+    "dtw": (dtw.dtw_distance, {}, [("pair",)]),
+    "acf_fft": (acf.acf_fft, {}, [_S]),
+    "mann_kendall": (trend.mann_kendall_frame, {}, [_S]),
+    "seasonal_mann_kendall": (trend.seasonal_mann_kendall_frame, {}, [_S]),
+    "rolling_quantile": (robust.rolling_quantile_flags_grouped, {}, [_S]),
+}
+
+
+@pytest.mark.parametrize("caller", list(SHELL_CALLERS))
+def test_grouped_map_partitioning_follows_task_slots(spark, caller):
+    """Every batch per-series grouped-map runs on exactly one hash
+    exchange by its group keys into ``defaultParallelism`` partitions
+    — whatever the shuffle-partition setting, which AQE would
+    otherwise coalesce by bytes."""
+    fn, kw, keys = SHELL_CALLERS[caller]
+    slots = spark.sparkContext.defaultParallelism
+    y = np.sin(np.arange(200) / 4.0)
+    df = series_df(spark, y).unionByName(series_df(spark, y, series_id="s2"))
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(slots + 1))
+    try:
+        plan = _plan(fn(df, **kw))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+    want = [
+        f"hashpartitioning({', '.join(k)}, {slots}), REPARTITION_BY_NUM"
+        for k in keys
+    ]
+    assert sorted(_grouped_map_exchanges(plan)) == sorted(want)

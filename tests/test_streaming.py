@@ -1070,6 +1070,43 @@ def test_streaming_sessions_native_session_window(spark, tmp_path):
     ) == pd.Timedelta(minutes=40)
 
 
+def test_streaming_holt_winters_state_drops_warmup_buffer(
+    spark, stream_data, tmp_path
+):
+    """Once a series has warmed up, its Holt-Winters state keeps the
+    seasonal vector but not the warm-up buffer it was seeded from."""
+    from time_series_data_anomaly_detection_spark.streaming import (
+        streaming_holt_winters,
+    )
+
+    root, _ = stream_data
+    ck = str(tmp_path / "ck")
+    q = (
+        streaming_holt_winters(
+            spark.readStream.schema(SCHEMA).parquet(root), period=48
+        )
+        .writeStream.format("noop")
+        .option("checkpointLocation", ck)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    st = (
+        spark.read.format("statestore")
+        .load(ck)
+        .select(
+            F.col("value.groupState.started").alias("started"),
+            F.size("value.groupState.buf").alias("n_buf"),
+            F.size("value.groupState.sl").alias("n_sl"),
+        )
+        .toPandas()
+    )
+    assert len(st) == 2 and (st["started"] == 1).all()
+    assert (st["n_buf"] == 0).all()
+    assert (st["n_sl"] == 48).all()
+
+
 def test_streaming_checkpoint_restart_continuity(spark, tmp_path_factory):
     """Kill-and-resume across a checkpoint (r06 verdict item #8): run
     the EWMA+CUSUM, SPOT, conformal, BOCPD and Holt-Winters stateful

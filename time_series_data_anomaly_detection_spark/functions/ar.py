@@ -13,15 +13,20 @@ environment; the engine provides:
 Spark shape: for AR(1) the ENTIRE model is native SQL algebra (fit =
 one aggregate of covariances, predict = column arithmetic) — no UDF,
 no per-series loop, scales to any series count in two shuffles.  For
-p>1, a numpy lstsq inside ``applyInPandas``.
+p>1, a numpy lstsq per series in the grouped-map shell.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ._partition import per_series
+from ._score import mad_z
 
 
 def ar1_forecast_native(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -69,6 +74,29 @@ AR_SCHEMA = (
 )
 
 
+def ar_forecast_kernel(g: pd.DataFrame, p: int = 24, train_frac: float = 1.0,
+                       frac_col: str | None = None,
+                       score_col: str | None = None) -> dict:
+    """:func:`ar_forecast` on one group ``g`` in ``rn`` order."""
+    tf = float(g[frac_col].iloc[0]) if frac_col else train_frac
+    y = g["value"].to_numpy(float)
+    n = len(y)
+    pp = min(p, max(n // 4, 1))
+    n_train = max(int(n * tf), pp + 2)
+    X = np.column_stack(
+        [np.ones(n - pp)] + [y[pp - k - 1 : n - k - 1] for k in range(pp)]
+    )
+    X_tr = X[: max(n_train - pp, 1)]
+    y_tr = y[pp:n_train]
+    coef, *_ = np.linalg.lstsq(X_tr, y_tr[: len(X_tr)], rcond=None)
+    pred = np.full(n, np.nan)
+    pred[pp:] = X @ coef
+    out = {"pred_mean": pred, "resid": y - pred}
+    if score_col:
+        out[score_col] = mad_z(out["resid"])
+    return out
+
+
 def ar_forecast(
     df: DataFrame,
     p: int = 24,
@@ -90,45 +118,16 @@ def ar_forecast(
     ``(series_id, frac_col)`` — one shuffle for all folds instead of
     one full fit DAG per fold.
     """
-
-    out_cols = ["series_id", "timestamp", "value", "rn", "pred_mean", "resid"]
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        tf = float(pdf[frac_col].iloc[0]) if frac_col else train_frac
-        y = pdf["value"].to_numpy(float)
-        n = len(y)
-        pp = min(p, max(n // 4, 1))
-        n_train = max(int(n * tf), pp + 2)
-        X = np.column_stack(
-            [np.ones(n - pp)] + [y[pp - k - 1 : n - k - 1] for k in range(pp)]
-        )
-        X_tr = X[: max(n_train - pp, 1)]
-        y_tr = y[pp:n_train]
-        coef, *_ = np.linalg.lstsq(X_tr, y_tr[: len(X_tr)], rcond=None)
-        pred = np.full(n, np.nan)
-        pred[pp:] = X @ coef
-        pdf["pred_mean"] = pred
-        pdf["resid"] = y - pred
-        cols = out_cols + ([frac_col] if frac_col else [])
-        if score_col:
-            from ._score import mad_z
-
-            pdf[score_col] = mad_z(pdf["resid"].to_numpy(float))
-            cols = cols + [score_col]
-        return pdf[cols]
-
-    from ._partition import udf_repartition
-
     keys = ("series_id", frac_col) if frac_col else ("series_id",)
     schema = AR_SCHEMA + (f", {frac_col} double" if frac_col else "")
     if score_col:
         schema += f", {score_col} double"
-    sel = list(out_cols[:4]) + ([frac_col] if frac_col else [])
-    return (
-        udf_repartition(df.select(*sel), *keys)
-        .groupBy(*keys)
-        .applyInPandas(fit, schema)
+    return per_series(
+        df.select("series_id", "timestamp", "value", "rn", *keys[1:]),
+        schema,
+        partial(ar_forecast_kernel, p=p, train_frac=train_frac,
+                frac_col=frac_col, score_col=score_col),
+        keys,
     )
 
 

@@ -13,17 +13,21 @@ reference's full T×T matrix is O(T²) memory; SURVEY §7 flags
 truncation as the scale fix, and it is also what the streaming mode
 needs).
 
-Spark shape: inherently sequential per series → ``applyInPandas`` in
-batch (streaming variant: streaming.detectors.streaming_bocpd).
+Spark shape: inherently sequential per series → one kernel call per
+series in the grouped-map shell in batch (streaming variant:
+streaming.detectors.streaming_bocpd).
 """
 
 from __future__ import annotations
 
+from functools import partial
 from math import lgamma, pi
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._partition import per_series
 
 BOCPD_SCHEMA = (
     "series_id string, timestamp timestamp, value double, rn long, "
@@ -187,6 +191,16 @@ def bocpd_series(
     return cp, short
 
 
+def bocpd_changepoints_kernel(g: pd.DataFrame, hazard_lam: float = 100.0,
+                              max_run: int = 500) -> dict:
+    """:func:`bocpd_changepoints` on one series ``g`` in ``rn`` order."""
+    y = g["value"].to_numpy(float)
+    sd = y.std() or 1.0
+    z = (y - y.mean()) / sd
+    cp, short = bocpd_series(z, hazard_lam=hazard_lam, max_run=max_run)
+    return {"cp_prob": cp, "cp_score": short}
+
+
 def bocpd_changepoints(
     df: DataFrame,
     hazard_lam: float = 100.0,
@@ -197,21 +211,9 @@ def bocpd_changepoints(
     The input series is z-normalized first (reference
     ``src/changepoint.py:89-92``).
     """
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        y = pdf["value"].to_numpy(float)
-        sd = y.std() or 1.0
-        z = (y - y.mean()) / sd
-        cp, short = bocpd_series(z, hazard_lam=hazard_lam, max_run=max_run)
-        pdf["cp_prob"] = cp
-        pdf["cp_score"] = short
-        return pdf[["series_id", "timestamp", "value", "rn", "cp_prob", "cp_score"]]
-
-    from ._partition import udf_repartition
-
-    return (
-        udf_repartition(df.select("series_id", "timestamp", "value", "rn"), "series_id")
-        .groupBy("series_id")
-        .applyInPandas(score, BOCPD_SCHEMA)
+    return per_series(
+        df.select("series_id", "timestamp", "value", "rn"),
+        BOCPD_SCHEMA,
+        partial(bocpd_changepoints_kernel, hazard_lam=hazard_lam,
+                max_run=max_run),
     )

@@ -28,7 +28,7 @@ count, exactly like every other sequential model here.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .._exact import DEC
-from ._partition import udf_repartition
+from ._partition import per_series
 
 EPS_SD = 1e-9
 
@@ -51,12 +51,10 @@ CUSUM_SCHEMA = (
 )
 
 
-def _per_series(df: DataFrame, value_col: str, schema: str,
-                fit: Callable[..., pd.DataFrame]) -> DataFrame:
-    """Run ``fit(pdf, y, mu, sd)`` once per series, rows in ``rn``
-    order, with the per-series exact-decimal mean and sample std
-    (ddof=1) — the same algebra as ``operators.scaling.global_zscore``
-    (hash-proven)."""
+def _with_moments(df: DataFrame, value_col: str) -> DataFrame:
+    """``series_id, rn, value`` with the per-series exact-decimal mean
+    ``__mu`` and sample std ``__sd`` (ddof=1) joined on — the same
+    algebra as ``operators.scaling.global_zscore`` (hash-proven)."""
     v = F.col("value")
     src = df.select("series_id", "rn", F.col(value_col).alias("value"))
     moments = src.groupBy("series_id").agg(
@@ -72,17 +70,15 @@ def _per_series(df: DataFrame, value_col: str, schema: str,
             F.lit(0.0),
         )
     ).alias("__sd")
-    src = src.join(F.broadcast(moments.select("series_id", mu, sd)), "series_id")
+    return src.join(F.broadcast(moments.select("series_id", mu, sd)), "series_id")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        y = pdf["value"].to_numpy(float)
-        return fit(pdf, y, float(pdf["__mu"].iloc[0]), float(pdf["__sd"].iloc[0]))
 
+def _series(g: pd.DataFrame) -> tuple[np.ndarray, float, float]:
+    """``y`` of one group of :func:`_with_moments` and its moments."""
     return (
-        udf_repartition(src, "series_id")
-        .groupBy("series_id")
-        .applyInPandas(run, schema)
+        g["value"].to_numpy(float),
+        float(g["__mu"].iloc[0]),
+        float(g["__sd"].iloc[0]),
     )
 
 
@@ -123,6 +119,21 @@ def cusum_run(y: np.ndarray, mu: float, sd: float, k: float = 0.5,
     return (cp, cn), (sp, sn)
 
 
+def ewma_chart_kernel(g: pd.DataFrame, lam: float = 0.25,
+                      nsig: float = 3.0) -> dict:
+    """:func:`ewma_chart` on one group of :func:`_with_moments`."""
+    y, mu, sd = _series(g)
+    z, hw = ewma_run(y, mu, sd, float(lam), float(nsig))[0]
+    ucl = mu + hw
+    lcl = mu - hw
+    return {
+        "ewma": z,
+        "ucl": ucl,
+        "lcl": lcl,
+        "flag": ((z > ucl) | (z < lcl)).astype("int32"),
+    }
+
+
 def ewma_chart(
     df: DataFrame,
     value_col: str = "value",
@@ -140,24 +151,23 @@ def ewma_chart(
 
     Returns ``series_id, rn, ewma, ucl, lcl, flag``.
     """
-    lam, nsig = float(lam), float(nsig)
+    return per_series(
+        _with_moments(df, value_col), EWMA_SCHEMA,
+        partial(ewma_chart_kernel, lam=lam, nsig=nsig),
+    )
 
-    def fit(pdf, y, mu, sd):
-        z, hw = ewma_run(y, mu, sd, lam, nsig)[0]
-        ucl = mu + hw
-        lcl = mu - hw
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"],
-                "rn": pdf["rn"],
-                "ewma": z,
-                "ucl": ucl,
-                "lcl": lcl,
-                "flag": ((z > ucl) | (z < lcl)).astype("int32"),
-            }
-        )
 
-    return _per_series(df, value_col, EWMA_SCHEMA, fit)
+def cusum_chart_kernel(g: pd.DataFrame, k: float = 0.5,
+                       h: float = 5.0) -> dict:
+    """:func:`cusum_chart` on one group of :func:`_with_moments`."""
+    y, mu, sd = _series(g)
+    h = float(h)
+    sp, sn = cusum_run(y, mu, sd, float(k))[0]
+    return {
+        "cusum_pos": sp,
+        "cusum_neg": sn,
+        "flag": ((sp > h) | (sn > h)).astype("int32"),
+    }
 
 
 def cusum_chart(
@@ -176,26 +186,36 @@ def cusum_chart(
 
     Returns ``series_id, rn, cusum_pos, cusum_neg, flag``.
     """
-    k, h = float(k), float(h)
-
-    def fit(pdf, y, mu, sd):
-        sp, sn = cusum_run(y, mu, sd, k)[0]
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"],
-                "rn": pdf["rn"],
-                "cusum_pos": sp,
-                "cusum_neg": sn,
-                "flag": ((sp > h) | (sn > h)).astype("int32"),
-            }
-        )
-
-    return _per_series(df, value_col, CUSUM_SCHEMA, fit)
+    return per_series(
+        _with_moments(df, value_col), CUSUM_SCHEMA,
+        partial(cusum_chart_kernel, k=k, h=h),
+    )
 
 
 CUSUM_ALARM_SCHEMA = (
     "series_id string, rn long, direction string, stat double"
 )
+
+
+def cusum_alarms_kernel(g: pd.DataFrame, k: float = 0.5,
+                        h: float = 5.0) -> pd.DataFrame:
+    """:func:`cusum_alarms` on one group of :func:`_with_moments`: one
+    row per alarm."""
+    y, mu, sd = _series(g)
+    k, h = float(k), float(h)
+    rows = []
+    spc = snc = 0.0
+    for t in range(len(y)):
+        z = (y[t] - mu) / (sd + EPS_SD)
+        spc = max(0.0, spc + (z - k))
+        snc = max(0.0, snc + (-z - k))
+        if spc > h:
+            rows.append((g["series_id"].iloc[t], int(g["rn"].iloc[t]), "up", spc))
+            spc = 0.0
+        if snc > h:
+            rows.append((g["series_id"].iloc[t], int(g["rn"].iloc[t]), "down", snc))
+            snc = 0.0
+    return pd.DataFrame(rows, columns=["series_id", "rn", "direction", "stat"])
 
 
 def cusum_alarms(
@@ -217,25 +237,7 @@ def cusum_alarms(
     :func:`cusum_chart`; the reset is ``CASE alarm THEN 0`` spelled
     identically in the oracle recursion.
     """
-    k, h = float(k), float(h)
-
-    def fit(pdf, y, mu, sd):
-        rows = []
-        spc = snc = 0.0
-        for t in range(len(y)):
-            z = (y[t] - mu) / (sd + EPS_SD)
-            spc = max(0.0, spc + (z - k))
-            snc = max(0.0, snc + (-z - k))
-            if spc > h:
-                rows.append((pdf["series_id"].iloc[t],
-                             int(pdf["rn"].iloc[t]), "up", spc))
-                spc = 0.0
-            if snc > h:
-                rows.append((pdf["series_id"].iloc[t],
-                             int(pdf["rn"].iloc[t]), "down", snc))
-                snc = 0.0
-        return pd.DataFrame(
-            rows, columns=["series_id", "rn", "direction", "stat"]
-        )
-
-    return _per_series(df, value_col, CUSUM_ALARM_SCHEMA, fit)
+    return per_series(
+        _with_moments(df, value_col), CUSUM_ALARM_SCHEMA,
+        partial(cusum_alarms_kernel, k=k, h=h),
+    )

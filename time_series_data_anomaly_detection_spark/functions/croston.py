@@ -26,17 +26,38 @@ the 100 TB axis is series count.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._partition import udf_repartition
+from ._partition import per_series
 
 CROSTON_SCHEMA = (
     "series_id string, rn long, demand double, z double, p double, "
     "croston double"
 )
+
+
+def croston_kernel(g: pd.DataFrame, alpha: float = 0.25) -> dict:
+    """The Croston recursion of :func:`croston_forecast` over one
+    series' demand points ``g`` in ``rn`` order."""
+    a = float(alpha)
+    d = g["demand"].to_numpy(float)
+    rn = g["rn"].to_numpy(np.int64)
+    n = len(d)
+    z = np.empty(n)
+    p = np.empty(n)
+    zc = d[0]
+    pc = float(rn[0])
+    z[0], p[0] = zc, pc
+    for k in range(1, n):
+        zc = zc + a * (d[k] - zc)
+        pc = pc + a * (float(rn[k] - rn[k - 1]) - pc)
+        z[k], p[k] = zc, pc
+    return {"z": z, "p": p, "croston": z / p}
 
 
 def croston_forecast(
@@ -62,36 +83,7 @@ def croston_forecast(
     pts = base.filter(F.col("demand") > 0).select(
         "series_id", "rn", "demand"
     )
-    a = float(alpha)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        d = pdf["demand"].to_numpy(float)
-        rn = pdf["rn"].to_numpy(np.int64)
-        n = len(d)
-        z = np.empty(n)
-        p = np.empty(n)
-        zc = d[0]
-        pc = float(rn[0])
-        z[0], p[0] = zc, pc
-        for k in range(1, n):
-            zc = zc + a * (d[k] - zc)
-            pc = pc + a * (float(rn[k] - rn[k - 1]) - pc)
-            z[k], p[k] = zc, pc
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"],
-                "rn": rn,
-                "demand": d,
-                "z": z,
-                "p": p,
-                "croston": z / p,
-            }
-        )
-
-    fitted = udf_repartition(pts, "series_id").groupBy("series_id").applyInPandas(
-        run, CROSTON_SCHEMA
-    )
+    fitted = per_series(pts, CROSTON_SCHEMA, partial(croston_kernel, alpha=alpha))
     w = (
         Window.partitionBy("series_id")
         .orderBy("rn")

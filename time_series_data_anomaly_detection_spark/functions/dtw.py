@@ -27,12 +27,14 @@ expression); declared in tests/test_gate_coverage.py ROWS_ONLY.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._partition import udf_repartition
+from ._partition import per_series
 
 
 def dtw_banded(x: np.ndarray, y: np.ndarray, band: int) -> float:
@@ -100,6 +102,26 @@ def _prep(vals: np.ndarray, seg_len: int) -> np.ndarray:
     return out
 
 
+def dtw_pair_kernel(g: pd.DataFrame, band: int = 12,
+                    seg_len: int = 4) -> pd.DataFrame:
+    """:func:`dtw_distance` on one ``pair`` group ``g`` (the rows of
+    both series, in ``rn`` order): one row."""
+    a, b = g["pair"].iloc[0].split("\x00")
+    xa = g.loc[g["series_id"] == a, "value"].to_numpy(float)
+    xb = g.loc[g["series_id"] == b, "value"].to_numpy(float)
+    b_, s_ = int(band), int(seg_len)
+    return pd.DataFrame(
+        {
+            "series_a": [a],
+            "series_b": [b],
+            "n_a": [len(xa)],
+            "n_b": [len(xb)],
+            "band": [b_],
+            "dtw": [dtw_banded(_prep(xa, s_), _prep(xb, s_), b_)],
+        }
+    )
+
+
 def dtw_distance(
     df: DataFrame,
     value_col: str = "value",
@@ -130,32 +152,10 @@ def dtw_distance(
         [(p, s) for p, a, b in pairs for s in (a, b)],
         "pair string, series_id string",
     )
-    tagged = df.select("series_id", "rn", value_col).join(
+    tagged = df.select("series_id", "rn", F.col(value_col).alias("value")).join(
         F.broadcast(pt), "series_id"
     )
-    b_, s_ = int(band), int(seg_len)
-
-    def one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pair = pdf["pair"].iloc[0]
-        a, b = pair.split("\x00")
-        pa = pdf[pdf["series_id"] == a].sort_values("rn")
-        pb = pdf[pdf["series_id"] == b].sort_values("rn")
-        xa = pa[value_col].to_numpy(float)
-        xb = pb[value_col].to_numpy(float)
-        d = dtw_banded(_prep(xa, s_), _prep(xb, s_), b_)
-        return pd.DataFrame(
-            {
-                "series_a": [a],
-                "series_b": [b],
-                "n_a": [len(xa)],
-                "n_b": [len(xb)],
-                "band": [b_],
-                "dtw": [d],
-            }
-        )
-
-    return (
-        udf_repartition(tagged, "pair")
-        .groupBy("pair")
-        .applyInPandas(one, DTW_SCHEMA)
+    return per_series(
+        tagged, DTW_SCHEMA, partial(dtw_pair_kernel, band=band, seg_len=seg_len),
+        ("pair",),
     )

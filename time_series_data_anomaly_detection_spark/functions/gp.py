@@ -27,10 +27,14 @@ every bucket.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ._partition import per_series
 
 GP_SCHEMA = (
     "series_id string, timestamp timestamp, value double, rn long, "
@@ -135,6 +139,59 @@ def train_subsample(
     )
 
 
+def gp_select_hp_kernel(g: pd.DataFrame, period: float = 24.0,
+                        period2: float | None = None,
+                        length_scale: float = 50.0,
+                        noise: float = 0.1) -> pd.DataFrame:
+    """The ``optimize`` step of :func:`gp_forecast` on one series' train
+    slice ``g`` in ``rn`` order: one row ``series_id, __ls, __n2``."""
+    y = g["value"].to_numpy(float)
+    x = g["__pos"].to_numpy(float)
+    mu, sd = float(y.mean()), float(y.std()) or 1.0
+    ls_fit, noise2 = _select_hyperparams(
+        x, (y - mu) / sd, period, period2, length_scale, noise
+    )
+    return pd.DataFrame(
+        {"series_id": [g["series_id"].iloc[0]], "__ls": [ls_fit], "__n2": [noise2]}
+    )
+
+
+def gp_forecast_kernel(g: pd.DataFrame, period: float = 24.0,
+                       length_scale: float = 50.0, noise: float = 0.1,
+                       period2: float | None = None,
+                       optimize: bool = False) -> pd.DataFrame:
+    """:func:`gp_forecast` on one ``(series_id, __bucket)`` group ``g``
+    in ``rn`` order: fit on its train copies (``__role`` 1), predict
+    its own rows (``__role`` 0)."""
+    tr = g[g["__role"] == 1]
+    pr = g[g["__role"] == 0].reset_index(drop=True)
+    x_tr = tr["__pos"].to_numpy(float)
+    y_tr = tr["value"].to_numpy(float)
+    mu, sd = float(y_tr.mean()), float(y_tr.std()) or 1.0
+    yn = (y_tr - mu) / sd
+    amp2, pamp2, pls = 1.0, 1.0, 1.0
+    pamp2_2 = 1.0 if period2 else 0.0
+    if optimize:
+        # pre-selected per series by gp_select_hp_kernel, constant
+        # within every bucket of the series
+        ls_fit, noise2 = float(g["__ls"].iloc[0]), float(g["__n2"].iloc[0])
+    else:
+        ls_fit, noise2 = length_scale, noise**2
+    K = _kernel(x_tr, x_tr, amp2, ls_fit, period, pamp2, pls, period2)
+    K[np.diag_indices_from(K)] += noise2
+    x_star = pr["__pos"].to_numpy(float)
+    Ks = _kernel(x_star, x_tr, amp2, ls_fit, period, pamp2, pls, period2)
+    # one LU factorization serves both the mean (K⁻¹y) and the
+    # variance (K⁻¹Ksᵀ) — ~2× fewer flops than inv() + dense GEMM
+    sol = np.linalg.solve(K, np.column_stack([yn, Ks.T]))
+    mean = Ks @ sol[:, 0]
+    var = (amp2 + pamp2 + pamp2_2 + noise2) - np.einsum(
+        "ij,ji->i", Ks, sol[:, 1:]
+    )
+    var = np.maximum(var, 1e-12)
+    return pr.assign(pred_mean=mean * sd + mu, pred_std=np.sqrt(var) * sd)
+
+
 def gp_forecast(
     df: DataFrame,
     train_frac: float = 0.5,
@@ -205,73 +262,22 @@ def gp_forecast(
         # group (~15% of gp_forecast wall-clock at 10 buckets/series)
         tr_only = pts.filter((pos >= lo) & (pos < n_train)).select(
             "series_id",
+            "rn",
             (F.col("rn") - F.col("__rn0")).cast("long").alias("__pos"),
             "value",
         )
-
-        def select_hp(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("__pos")
-            y = pdf["value"].to_numpy(float)
-            x = pdf["__pos"].to_numpy(float)
-            mu, sd = float(y.mean()), float(y.std()) or 1.0
-            ls_fit, noise2 = _select_hyperparams(
-                x, (y - mu) / sd, period, period2, length_scale, noise
-            )
-            return pd.DataFrame(
-                {
-                    "series_id": [pdf["series_id"].iloc[0]],
-                    "__ls": [ls_fit],
-                    "__n2": [noise2],
-                }
-            )
-
-        hp = tr_only.groupBy("series_id").applyInPandas(
-            select_hp, "series_id string, __ls double, __n2 double"
+        hp = per_series(
+            tr_only,
+            "series_id string, __ls double, __n2 double",
+            partial(gp_select_hp_kernel, period=period, period2=period2,
+                    length_scale=length_scale, noise=noise),
         )
         both = both.join(F.broadcast(hp), "series_id")
 
-    def fit_score(pdf: pd.DataFrame) -> pd.DataFrame:
-        tr = pdf[pdf["__role"] == 1].sort_values("__pos")
-        pr = pdf[pdf["__role"] == 0].sort_values("__pos").reset_index(drop=True)
-        if len(pr) == 0:
-            return pr.iloc[0:0][
-                ["series_id", "timestamp", "value", "rn", "pred_mean", "pred_std"]
-            ]
-        x_tr = tr["__pos"].to_numpy(float)
-        y_tr = tr["value"].to_numpy(float)
-        mu, sd = float(y_tr.mean()), float(y_tr.std()) or 1.0
-        yn = (y_tr - mu) / sd
-        amp2, pamp2, pls = 1.0, 1.0, 1.0
-        pamp2_2 = 1.0 if period2 else 0.0
-        if optimize:
-            # pre-selected per series (see select_hp above), constant
-            # within every bucket of the series
-            ls_fit, noise2 = float(pdf["__ls"].iloc[0]), float(pdf["__n2"].iloc[0])
-        else:
-            ls_fit, noise2 = length_scale, noise**2
-        K = _kernel(x_tr, x_tr, amp2, ls_fit, period, pamp2, pls,
-                    period2)
-        K[np.diag_indices_from(K)] += noise2
-        x_star = pr["__pos"].to_numpy(float)
-        Ks = _kernel(x_star, x_tr, amp2, ls_fit, period, pamp2, pls,
-                     period2)
-        # one LU factorization serves both the mean (K⁻¹y) and the
-        # variance (K⁻¹Ksᵀ) — ~2× fewer flops than inv() + dense GEMM
-        sol = np.linalg.solve(K, np.column_stack([yn, Ks.T]))
-        mean = Ks @ sol[:, 0]
-        var = (amp2 + pamp2 + pamp2_2 + noise2) - np.einsum(
-            "ij,ji->i", Ks, sol[:, 1:]
-        )
-        var = np.maximum(var, 1e-12)
-        out = pr[["series_id", "timestamp", "value", "rn"]].copy()
-        out["pred_mean"] = mean * sd + mu
-        out["pred_std"] = np.sqrt(var) * sd
-        return out
-
-    from ._partition import udf_repartition
-
-    return (
-        udf_repartition(both, "series_id", "__bucket")
-        .groupBy("series_id", "__bucket")
-        .applyInPandas(fit_score, GP_SCHEMA)
+    return per_series(
+        both,
+        GP_SCHEMA,
+        partial(gp_forecast_kernel, period=period, length_scale=length_scale,
+                noise=noise, period2=period2, optimize=optimize),
+        ("series_id", "__bucket"),
     )

@@ -22,16 +22,43 @@ Parallelism axis: series count, like every model operator here.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._partition import udf_repartition
+from ._partition import per_series
 
 HARMONIC_SCHEMA = (
     "series_id string, rn long, split string, pred double, resid double"
 )
+
+
+def harmonic_forecast_kernel(g: pd.DataFrame, period: int = 48,
+                             n_harmonics: int = 3,
+                             train_frac: float = 0.7) -> dict:
+    """:func:`harmonic_forecast` on one series ``g`` in ``rn`` order."""
+    p = float(period)
+    y = g["value"].to_numpy(float)
+    n = len(y)
+    t = np.arange(1, n + 1, dtype=float)
+    cols = [np.ones(n), t]
+    for k in range(1, int(n_harmonics) + 1):
+        w = 2.0 * np.pi * k * t / p
+        cols += [np.sin(w), np.cos(w)]
+    X = np.column_stack(cols)
+    n_tr = int(n * float(train_frac))
+    if n_tr < X.shape[1]:
+        n_tr = min(n, X.shape[1])
+    beta, *_ = np.linalg.lstsq(X[:n_tr], y[:n_tr], rcond=None)
+    pred = X @ beta
+    return {
+        "split": np.where(np.arange(n) < n_tr, "Train", "Test"),
+        "pred": pred,
+        "resid": y - pred,
+    }
 
 
 def harmonic_forecast(
@@ -46,38 +73,10 @@ def harmonic_forecast(
 
     Returns ``series_id, rn, split ('Train'/'Test'), pred, resid``.
     """
-    p = float(period)
-    k_max = int(n_harmonics)
-    frac = float(train_frac)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        y = pdf["value"].to_numpy(float)
-        n = len(y)
-        t = np.arange(1, n + 1, dtype=float)
-        cols = [np.ones(n), t]
-        for k in range(1, k_max + 1):
-            w = 2.0 * np.pi * k * t / p
-            cols += [np.sin(w), np.cos(w)]
-        X = np.column_stack(cols)
-        n_tr = int(n * frac)
-        if n_tr < X.shape[1]:
-            n_tr = min(n, X.shape[1])
-        beta, *_ = np.linalg.lstsq(X[:n_tr], y[:n_tr], rcond=None)
-        pred = X @ beta
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"],
-                "rn": pdf["rn"],
-                "split": np.where(
-                    np.arange(n) < n_tr, "Train", "Test"
-                ),
-                "pred": pred,
-                "resid": y - pred,
-            }
-        )
-
     src = df.select("series_id", "rn", F.col(value_col).alias("value"))
-    return udf_repartition(src, "series_id").groupBy("series_id").applyInPandas(
-        run, HARMONIC_SCHEMA
+    return per_series(
+        src,
+        HARMONIC_SCHEMA,
+        partial(harmonic_forecast_kernel, period=period,
+                n_harmonics=n_harmonics, train_frac=train_frac),
     )

@@ -26,6 +26,7 @@ grouped-map pass, O(p) state per series.
 from __future__ import annotations
 
 from collections import deque
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -33,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .._exact import DEC
-from ._partition import udf_repartition
+from ._partition import per_series
 
 HW_SCHEMA = "series_id string, rn long, pred double, resid double"
 
@@ -58,6 +59,26 @@ def holt_winters_run(y: np.ndarray, state: tuple, a: float = 0.25,
     return preds, (l, b, list(sl))
 
 
+def holt_winters_fixed_kernel(g: pd.DataFrame, period: int = 48,
+                               alpha: float = 0.25, beta: float = 0.0625,
+                               gamma: float = 0.25) -> pd.DataFrame:
+    """:func:`holt_winters_fixed` on one series ``g`` in ``rn`` order,
+    ``g["__l0"]`` its initial level: the rows after the first period."""
+    p = int(period)
+    y = g["value"].to_numpy(float)
+    l0 = float(g["__l0"].iloc[0])  # y[p:] is empty at n == p
+    st = l0, 0.0, [x - l0 for x in y[:p].tolist()]
+    preds = holt_winters_run(y[p:], st, float(alpha), float(beta), float(gamma))[0]
+    return pd.DataFrame(
+        {
+            "series_id": g["series_id"].iloc[p:].to_numpy(),
+            "rn": g["rn"].iloc[p:].to_numpy(),
+            "pred": preds,
+            "resid": y[p:] - preds,
+        }
+    )
+
+
 def holt_winters_fixed(
     df: DataFrame,
     period: int = 48,
@@ -77,8 +98,6 @@ def holt_winters_fixed(
     Returns ``series_id, rn, pred, resid`` for ``rn > period``.
     """
     p = int(period)
-    params = float(alpha), float(beta), float(gamma)
-
     v = F.col(value_col)
     lvl0 = (
         df.filter(F.col("rn") <= p)
@@ -96,25 +115,40 @@ def holt_winters_fixed(
         F.broadcast(lvl0), "series_id"
     )
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        y = pdf["value"].to_numpy(float)
-        l0 = float(pdf["__l0"].iloc[0])  # y[p:] is empty at n == p
-        st = l0, 0.0, [x - l0 for x in y[:p].tolist()]
-        preds = holt_winters_run(y[p:], st, *params)[0]
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"].iloc[p:].to_numpy(),
-                "rn": pdf["rn"].iloc[p:].to_numpy(),
-                "pred": preds,
-                "resid": y[p:] - preds,
-            }
-        )
+    return per_series(
+        src, HW_SCHEMA,
+        partial(holt_winters_fixed_kernel, period=p, alpha=alpha, beta=beta,
+                gamma=gamma),
+    )
 
-    return (
-        udf_repartition(src, "series_id")
-        .groupBy("series_id")
-        .applyInPandas(run, HW_SCHEMA)
+
+def holt_linear_fixed_kernel(g: pd.DataFrame, alpha: float = 0.25,
+                             beta: float = 0.0625) -> pd.DataFrame:
+    """:func:`holt_linear_fixed` on one series ``g`` in ``rn`` order:
+    the rows from the third on."""
+    a, bq = float(alpha), float(beta)
+    y = g["value"].to_numpy(float)
+    n = len(y)
+    if n < 3:
+        return pd.DataFrame({"series_id": [], "rn": [], "pred": [], "resid": []})
+    lvl = y[0]
+    tr = y[1] - y[0]
+    # consume y[2:] one step at a time: predict, then update
+    preds = np.empty(n - 2)
+    for i in range(2, n):
+        # state entering step i reflects data through y[i-1]
+        if i > 2:
+            prev = lvl
+            lvl = a * y[i - 1] + (1.0 - a) * (lvl + tr)
+            tr = bq * (lvl - prev) + (1.0 - bq) * tr
+        preds[i - 2] = lvl + tr
+    return pd.DataFrame(
+        {
+            "series_id": g["series_id"].iloc[2:].to_numpy(),
+            "rn": g["rn"].iloc[2:].to_numpy(),
+            "pred": preds,
+            "resid": y[2:] - preds,
+        }
     )
 
 
@@ -143,37 +177,7 @@ def holt_linear_fixed(
     Scale shape: one grouped-map pass, O(1) state per series; no
     moment pre-aggregate needed (the init is positional).
     """
-    a, bq = float(alpha), float(beta)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        y = pdf["value"].to_numpy(float)
-        n = len(y)
-        if n < 3:
-            return pd.DataFrame(
-                {"series_id": [], "rn": [], "pred": [], "resid": []}
-            )
-        lvl = y[0]
-        tr = y[1] - y[0]
-        # consume y[2:] one step at a time: predict, then update
-        preds = np.empty(n - 2)
-        for i in range(2, n):
-            # state entering step i reflects data through y[i-1]
-            if i > 2:
-                prev = lvl
-                lvl = a * y[i - 1] + (1.0 - a) * (lvl + tr)
-                tr = bq * (lvl - prev) + (1.0 - bq) * tr
-            preds[i - 2] = lvl + tr
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"].iloc[2:].to_numpy(),
-                "rn": pdf["rn"].iloc[2:].to_numpy(),
-                "pred": preds,
-                "resid": y[2:] - preds,
-            }
-        )
-
     src = df.select("series_id", "rn", F.col(value_col).alias("value"))
-    return udf_repartition(src, "series_id").groupBy("series_id").applyInPandas(
-        run, HW_SCHEMA
+    return per_series(
+        src, HW_SCHEMA, partial(holt_linear_fixed_kernel, alpha=alpha, beta=beta)
     )

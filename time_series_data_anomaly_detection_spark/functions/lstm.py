@@ -18,9 +18,13 @@ changes results and is therefore an explicit, documented knob).
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._partition import per_series
 
 try:  # pragma: no cover - torch absent in this environment
     import torch
@@ -34,6 +38,59 @@ LSTM_SCHEMA = (
     "series_id string, timestamp timestamp, value double, rn long, "
     "pred_mean double, resid double"
 )
+
+
+def lstm_forecast_kernel(g: pd.DataFrame, seq_len: int = 48, hidden: int = 64,
+                         epochs: int = 10, train_frac: float = 1.0,
+                         seed: int = 0, max_train_windows: int | None = None,
+                         use_torch: bool = False, batch: int = 64,
+                         lr: float = 1e-3) -> dict:
+    """:func:`lstm_forecast` on one series ``g`` in ``rn`` order."""
+    y = g["value"].to_numpy(np.float64)
+    n = len(y)
+    if n <= seq_len:
+        # shorter than one window: the reference NaN-pads the whole
+        # series; without this guard sliding_window_view raises and
+        # kills every series in the query
+        return {"pred_mean": np.nan, "resid": np.nan}
+    mu, sd = float(y.mean()), float(y.std()) or 1.0
+    z = (y - mu) / sd
+    n_train = max(int(n * train_frac), seq_len + 2)
+    X = np.lib.stride_tricks.sliding_window_view(z, seq_len)[:-1]
+    t = z[seq_len:]
+    lo = 0
+    hi = n_train - seq_len
+    if max_train_windows is not None:
+        lo = max(hi - max_train_windows, 0)
+    X_tr, y_tr = X[lo:hi, :, None], t[lo:hi]
+    if use_torch:  # pragma: no cover
+        torch.manual_seed(seed)
+        lstm = nn.LSTM(1, hidden, batch_first=True)
+        head = nn.Linear(hidden, 1)
+        opt = torch.optim.Adam(
+            list(lstm.parameters()) + list(head.parameters()), lr=lr
+        )
+        loss_fn = nn.MSELoss()
+        Xt = torch.tensor(X_tr, dtype=torch.float32)
+        yt = torch.tensor(y_tr[:, None], dtype=torch.float32)
+        for _ in range(epochs):
+            opt.zero_grad()
+            out, _ = lstm(Xt)
+            loss = loss_fn(head(out[:, -1]), yt)
+            loss.backward()
+            opt.step()
+        with torch.no_grad():
+            out, _ = lstm(torch.tensor(X[:, :, None], dtype=torch.float32))
+            preds = head(out[:, -1]).numpy().ravel().astype(np.float64)
+    else:
+        from ._lstm_numpy import NumpyLSTM
+
+        model = NumpyLSTM(hidden, seed=seed)
+        model.fit(X_tr, y_tr, epochs=epochs, batch=batch, seed=seed, lr=lr)
+        preds = model.predict(X[:, :, None])
+    full = np.full(n, np.nan)
+    full[seq_len:] = preds * sd + mu
+    return {"pred_mean": full, "resid": y - full}
 
 
 def lstm_forecast(
@@ -59,65 +116,11 @@ def lstm_forecast(
     use_torch = backend == "torch" or (backend == "auto" and HAS_TORCH)
     if backend == "torch" and not HAS_TORCH:
         raise NotImplementedError("torch backend requested but not installed")
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        y = pdf["value"].to_numpy(np.float64)
-        n = len(y)
-        if n <= seq_len:
-            # shorter than one window: the reference NaN-pads the whole
-            # series; without this guard sliding_window_view raises and
-            # kills every series in the query
-            pdf["pred_mean"] = np.nan
-            pdf["resid"] = np.nan
-            return pdf[
-                ["series_id", "timestamp", "value", "rn", "pred_mean", "resid"]
-            ]
-        mu, sd = float(y.mean()), float(y.std()) or 1.0
-        z = (y - mu) / sd
-        n_train = max(int(n * train_frac), seq_len + 2)
-        X = np.lib.stride_tricks.sliding_window_view(z, seq_len)[:-1]
-        t = z[seq_len:]
-        lo = 0
-        hi = n_train - seq_len
-        if max_train_windows is not None:
-            lo = max(hi - max_train_windows, 0)
-        X_tr, y_tr = X[lo:hi, :, None], t[lo:hi]
-        if use_torch:  # pragma: no cover
-            torch.manual_seed(seed)
-            lstm = nn.LSTM(1, hidden, batch_first=True)
-            head = nn.Linear(hidden, 1)
-            opt = torch.optim.Adam(
-                list(lstm.parameters()) + list(head.parameters()), lr=lr
-            )
-            loss_fn = nn.MSELoss()
-            Xt = torch.tensor(X_tr, dtype=torch.float32)
-            yt = torch.tensor(y_tr[:, None], dtype=torch.float32)
-            for _ in range(epochs):
-                opt.zero_grad()
-                out, _ = lstm(Xt)
-                loss = loss_fn(head(out[:, -1]), yt)
-                loss.backward()
-                opt.step()
-            with torch.no_grad():
-                out, _ = lstm(torch.tensor(X[:, :, None], dtype=torch.float32))
-                preds = head(out[:, -1]).numpy().ravel().astype(np.float64)
-        else:
-            from ._lstm_numpy import NumpyLSTM
-
-            model = NumpyLSTM(hidden, seed=seed)
-            model.fit(X_tr, y_tr, epochs=epochs, batch=batch, seed=seed, lr=lr)
-            preds = model.predict(X[:, :, None])
-        full = np.full(n, np.nan)
-        full[seq_len:] = preds * sd + mu
-        pdf["pred_mean"] = full
-        pdf["resid"] = pdf["value"] - pdf["pred_mean"]
-        return pdf[["series_id", "timestamp", "value", "rn", "pred_mean", "resid"]]
-
-    from ._partition import udf_repartition
-
-    return (
-        udf_repartition(df.select("series_id", "timestamp", "value", "rn"), "series_id")
-        .groupBy("series_id")
-        .applyInPandas(fit, LSTM_SCHEMA)
+    return per_series(
+        df.select("series_id", "timestamp", "value", "rn"),
+        LSTM_SCHEMA,
+        partial(lstm_forecast_kernel, seq_len=seq_len, hidden=hidden,
+                epochs=epochs, train_frac=train_frac, seed=seed,
+                max_train_windows=max_train_windows, use_torch=use_torch,
+                batch=batch, lr=lr),
     )

@@ -7,7 +7,7 @@ from window ``i`` to its nearest non-trivial neighbor window.  High MP
 shape-anomaly notion that pointwise detectors (z-score/MAD/SR) miss:
 a normal-valued but wrong-SHAPED day scores high here and nowhere else.
 
-Implementation per series (one ``applyInPandas`` task) — STOMP:
+Implementation per series (one grouped-map kernel call) — STOMP:
 
 - Row 0's sliding dot products by direct correlation (O(n·m), m is
   small), then each subsequent row from the previous via the O(k)
@@ -39,10 +39,14 @@ cross-checks the profile against a naive O(n²·m) reference.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ._partition import per_series
 
 MP_SCHEMA = (
     "series_id string, rn long, mp double, nn_idx long, is_discord int"
@@ -99,53 +103,61 @@ def matrix_profile_one(x: np.ndarray, m: int) -> tuple[np.ndarray, np.ndarray]:
     return mp, nn
 
 
+def _top_discords(mp: np.ndarray, m: int, top_discords: int) -> np.ndarray:
+    """``is_discord``: the ``top_discords`` highest finite profile
+    values, greedy, with an m-wide exclusion between picks."""
+    k = len(mp)
+    discord = np.zeros(k, dtype=np.int32)
+    masked = mp.copy()
+    masked[~np.isfinite(masked)] = -np.inf
+    for _ in range(top_discords):
+        i = int(np.argmax(masked))
+        if not np.isfinite(masked[i]) or masked[i] < 0:
+            break
+        discord[i] = 1
+        lo, hi = max(0, i - m), min(k, i + m + 1)
+        masked[lo:hi] = -np.inf
+    return discord
+
+
+def matrix_profile_kernel(g: pd.DataFrame, m: int = 24,
+                          top_discords: int = 3) -> pd.DataFrame:
+    """:func:`matrix_profile_scores` on one series ``g`` in ``rn``
+    order: one row per window start (none below ``2m`` points)."""
+    x = g["value"].to_numpy(dtype=np.float64)
+    n = len(x)
+    if n < 2 * m:
+        return pd.DataFrame(
+            columns=["series_id", "rn", "mp", "nn_idx", "is_discord"]
+        ).astype(
+            {
+                "series_id": "object", "rn": "int64", "mp": "float64",
+                "nn_idx": "int64", "is_discord": "int32",
+            }
+        )
+    mp, nn = matrix_profile_one(x, m)
+    k = len(mp)
+    return pd.DataFrame(
+        {
+            "series_id": g["series_id"].to_numpy()[:k],
+            "rn": g["rn"].to_numpy()[:k],
+            "mp": np.where(np.isfinite(mp), mp, -1.0),
+            "nn_idx": nn + 1,  # report as 1-based rn of the neighbor
+            "is_discord": _top_discords(mp, m, top_discords),
+        }
+    )
+
+
 def matrix_profile_scores(
     df: DataFrame, m: int = 24, top_discords: int = 3
 ) -> DataFrame:
     """Per-series matrix profile over ``(series_id, rn, value)``;
     ``is_discord`` marks the ``top_discords`` highest-profile windows
     (greedy, with an m-wide exclusion between picks)."""
-
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn")
-        x = pdf["value"].to_numpy(dtype=np.float64)
-        n = len(x)
-        if n < 2 * m:
-            return pd.DataFrame(
-                columns=["series_id", "rn", "mp", "nn_idx", "is_discord"]
-            ).astype(
-                {
-                    "series_id": "object", "rn": "int64", "mp": "float64",
-                    "nn_idx": "int64", "is_discord": "int32",
-                }
-            )
-        mp, nn = matrix_profile_one(x, m)
-        k = len(mp)
-        discord = np.zeros(k, dtype=np.int32)
-        masked = mp.copy()
-        masked[~np.isfinite(masked)] = -np.inf
-        for _ in range(top_discords):
-            i = int(np.argmax(masked))
-            if not np.isfinite(masked[i]) or masked[i] < 0:
-                break
-            discord[i] = 1
-            lo, hi = max(0, i - m), min(k, i + m + 1)
-            masked[lo:hi] = -np.inf
-        rn = pdf["rn"].to_numpy()[:k]
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"].to_numpy()[:k],
-                "rn": rn,
-                "mp": np.where(np.isfinite(mp), mp, -1.0),
-                "nn_idx": nn + 1,  # report as 1-based rn of the neighbor
-                "is_discord": discord,
-            }
-        )
-
-    return (
-        df.select("series_id", "rn", "value")
-        .groupBy("series_id")
-        .applyInPandas(_one, MP_SCHEMA)
+    return per_series(
+        df.select("series_id", "rn", "value"),
+        MP_SCHEMA,
+        partial(matrix_profile_kernel, m=m, top_discords=top_discords),
     )
 
 
@@ -232,6 +244,60 @@ def _cross_tile_kernel(
     return (a_best, a_arg), (b_best, b_arg)
 
 
+def mp_tile_pair_kernel(g: pd.DataFrame, m: int = 24) -> pd.DataFrame:
+    """One ``(series_id, pair_id)`` group of :func:`matrix_profile_tiled`
+    in ``rn`` order: the AB-join of its two tiles (``role`` A and B; a
+    self pair has only A), as per-window partial minima
+    ``series_id, rn, mp_part, nn_part``."""
+    sid = g["series_id"].iloc[0]
+    ta = int(g["ta"].iloc[0])
+    tb = int(g["tb"].iloc[0])
+    k = int(g["__k"].iloc[0])
+    tw = int(g["__tile"].iloc[0])  # per-series effective tile
+    xa = g.loc[g["role"] == "A", "value"].to_numpy(np.float64)
+    a0 = ta * tw
+    ka = min(tw, k - a0)
+    if ta == tb:
+        xb, b0, kb = xa, a0, ka
+    else:
+        xb = g.loc[g["role"] == "B", "value"].to_numpy(np.float64)
+        b0 = tb * tw
+        kb = min(tw, k - b0)
+    (a_best, a_nn), (b_best, b_nn) = _cross_tile_kernel(xa, xb, a0, b0, ka, kb, m)
+    rows = {"series_id": [], "rn": [], "mp_part": [], "nn_part": []}
+
+    def emit(start, best, nn_abs, always):
+        fin = np.isfinite(best)
+        keep = fin | always
+        idx = np.nonzero(keep)[0]
+        rows["series_id"].extend([sid] * len(idx))
+        rows["rn"].extend((start + idx + 1).tolist())
+        rows["mp_part"].extend(np.where(fin[idx], best[idx], np.inf).tolist())
+        rows["nn_part"].extend(nn_abs[idx].tolist())
+
+    # self pair emits EVERY window (the fallback contribution for
+    # all-excluded windows); cross pairs emit only finite mins
+    emit(a0, a_best, a_nn, always=(ta == tb))
+    if ta != tb:
+        emit(b0, b_best, b_nn, always=False)
+    return pd.DataFrame(rows)
+
+
+def mp_merge_kernel(g: pd.DataFrame, m: int = 24, top_discords: int = 3) -> dict:
+    """The last step of :func:`matrix_profile_tiled` on one series'
+    min-merged squared profile ``g["__mp"]``/``g["__nn"]`` in ``rn``
+    order."""
+    mp = g["__mp"].to_numpy(np.float64)
+    nn = g["__nn"].to_numpy(np.int64)
+    fin = np.isfinite(mp)
+    mp = np.where(fin, np.sqrt(np.maximum(mp, 0.0)), np.inf)
+    return {
+        "mp": np.where(np.isfinite(mp), mp, -1.0),
+        "nn_idx": np.where(fin, nn + 1, 1),
+        "is_discord": _top_discords(mp, m, top_discords),
+    }
+
+
 def matrix_profile_tiled(
     df: DataFrame, m: int = 24, tile: int = 512, top_discords: int = 3
 ) -> DataFrame:
@@ -254,8 +320,6 @@ def matrix_profile_tiled(
     explode → ONE exchange keyed by (series, pair) for the kernels →
     min-merge aggregate → profile-sized greedy discord pass.
     """
-    from ._partition import udf_repartition
-
     m_, tile_, td_ = int(m), int(tile), int(top_discords)
     if tile_ < m_:
         raise ValueError("tile must be >= m")
@@ -339,92 +403,16 @@ def matrix_profile_tiled(
     )
     tagged = member.join(roles, ["series_id", "tile"])
 
-    PART_SCHEMA = "series_id string, rn long, mp_part double, nn_part long"
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        sid = pdf["series_id"].iloc[0]
-        ta = int(pdf["ta"].iloc[0])
-        tb = int(pdf["tb"].iloc[0])
-        k = int(pdf["__k"].iloc[0])
-        tw = int(pdf["__tile"].iloc[0])  # per-series effective tile
-        a = pdf[pdf["role"] == "A"].sort_values("rn")
-        xa = a["value"].to_numpy(np.float64)
-        a0 = ta * tw
-        ka = min(tw, k - a0)
-        if ta == tb:
-            xb, b0, kb = xa, a0, ka
-        else:
-            b = pdf[pdf["role"] == "B"].sort_values("rn")
-            xb = b["value"].to_numpy(np.float64)
-            b0 = tb * tw
-            kb = min(tw, k - b0)
-        (a_best, a_nn), (b_best, b_nn) = _cross_tile_kernel(
-            xa, xb, a0, b0, ka, kb, m_
-        )
-        rows = {
-            "series_id": [],
-            "rn": [],
-            "mp_part": [],
-            "nn_part": [],
-        }
-
-        def emit(start, best, nn_abs, always):
-            fin = np.isfinite(best)
-            keep = fin | always
-            idx = np.nonzero(keep)[0]
-            rows["series_id"].extend([sid] * len(idx))
-            rows["rn"].extend((start + idx + 1).tolist())
-            rows["mp_part"].extend(
-                np.where(fin[idx], best[idx], np.inf).tolist()
-            )
-            rows["nn_part"].extend(nn_abs[idx].tolist())
-
-        # self pair emits EVERY window (the fallback contribution for
-        # all-excluded windows); cross pairs emit only finite mins
-        emit(a0, a_best, a_nn, always=(ta == tb))
-        if ta != tb:
-            emit(b0, b_best, b_nn, always=False)
-        return pd.DataFrame(rows)
-
-    parts = (
-        udf_repartition(tagged, "series_id", "pair_id")
-        .groupBy("series_id", "pair_id")
-        .applyInPandas(kernel, PART_SCHEMA)
+    parts = per_series(
+        tagged,
+        "series_id string, rn long, mp_part double, nn_part long",
+        partial(mp_tile_pair_kernel, m=m_),
+        ("series_id", "pair_id"),
     )
     merged = parts.groupBy("series_id", "rn").agg(
         F.min("mp_part").alias("__mp"),
         F.min_by("nn_part", F.struct("mp_part", "nn_part")).alias("__nn"),
     )
-
-    def finish(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        mp = pdf["__mp"].to_numpy(np.float64)
-        nn = pdf["__nn"].to_numpy(np.int64)
-        fin = np.isfinite(mp)
-        mp = np.where(fin, np.sqrt(np.maximum(mp, 0.0)), np.inf)
-        k = len(mp)
-        discord = np.zeros(k, dtype=np.int32)
-        masked = mp.copy()
-        masked[~np.isfinite(masked)] = -np.inf
-        for _ in range(td_):
-            i = int(np.argmax(masked))
-            if not np.isfinite(masked[i]) or masked[i] < 0:
-                break
-            discord[i] = 1
-            lo, hi = max(0, i - m_), min(k, i + m_ + 1)
-            masked[lo:hi] = -np.inf
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"],
-                "rn": pdf["rn"],
-                "mp": np.where(np.isfinite(mp), mp, -1.0),
-                "nn_idx": np.where(fin, nn + 1, 1),
-                "is_discord": discord,
-            }
-        )
-
-    return (
-        udf_repartition(merged, "series_id")
-        .groupBy("series_id")
-        .applyInPandas(finish, MP_SCHEMA)
+    return per_series(
+        merged, MP_SCHEMA, partial(mp_merge_kernel, m=m_, top_discords=td_)
     )

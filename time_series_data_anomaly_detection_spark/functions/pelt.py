@@ -14,9 +14,9 @@ expected-linear.  PELT is EXACT: it returns the same optimum as the
 O(n^2) optimal-partitioning DP, which is precisely what the parity
 test pins (``tests/test_changepoints.py``).
 
-Spark shape: per-series ``applyInPandas`` (one exchange keyed by
-series; cumulative-sum arrays make each cost O(1)).  Per-series state
-must fit a worker — the same contract as matrix_profile/BOCPD; the
+Spark shape: one kernel call per series in the grouped-map shell (one
+exchange keyed by series; cumulative-sum arrays make each cost O(1)).
+Per-series state must fit a worker — the same contract as matrix_profile/BOCPD; the
 documented 100 TB path is the same too: tile long series into bounded
 windows and stitch (a changepoint is a local object, tiling loses only
 boundary-straddling detections, and SCALING.md carries the note).
@@ -28,9 +28,14 @@ planted-shift unit test.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from ._partition import per_series
 
 
 def _l2_cost_arrays(x: np.ndarray):
@@ -107,6 +112,28 @@ PELT_SCHEMA = (
 )
 
 
+def pelt_segments_kernel(g: pd.DataFrame, beta: float | None = None) -> pd.DataFrame:
+    """:func:`pelt_segments` on one series ``g`` in ``rn`` order: one
+    row per segment (a single segment below 3 points)."""
+    x = g["value"].to_numpy(float)
+    n = len(x)
+    bounds = [0, n]
+    if n >= 3:
+        b = beta if beta is not None else 2.0 * float(x.var()) * np.log(n)
+        bounds = [0] + pelt_l2(x, b) + [n]
+    rn = g["rn"].to_numpy()
+    return pd.DataFrame(
+        {
+            "series_id": g["series_id"].iloc[0],
+            "seg": np.arange(len(bounds) - 1),
+            "start_rn": rn[bounds[:-1]],
+            "end_rn": rn[np.array(bounds[1:]) - 1],
+            "n": np.diff(bounds),
+            "seg_mean": [float(x[s:t].mean()) for s, t in zip(bounds, bounds[1:])],
+        }
+    )
+
+
 def pelt_segments(
     df: DataFrame,
     value_col: str = "value",
@@ -116,52 +143,8 @@ def pelt_segments(
     end_rn, n, seg_mean)``.  ``beta=None`` uses the standard BIC
     penalty ``2 * var(x) * log(n)`` (ruptures' default scaling for
     the L2 model)."""
-    from ._partition import udf_repartition
-
-    def one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        x = pdf[value_col].to_numpy(float)
-        n = len(x)
-        if n < 3:
-            if n == 0:
-                return pd.DataFrame(
-                    columns=[
-                        "series_id", "seg", "start_rn", "end_rn", "n",
-                        "seg_mean",
-                    ]
-                )
-            return pd.DataFrame(
-                {
-                    "series_id": [pdf["series_id"].iloc[0]],
-                    "seg": [0],
-                    "start_rn": [int(pdf["rn"].iloc[0])],
-                    "end_rn": [int(pdf["rn"].iloc[-1])],
-                    "n": [n],
-                    "seg_mean": [float(x.mean())],
-                }
-            )
-        b = beta if beta is not None else 2.0 * float(x.var()) * np.log(n)
-        cps = pelt_l2(x, b)
-        bounds = [0] + cps + [n]
-        rows = []
-        for i in range(len(bounds) - 1):
-            s, t = bounds[i], bounds[i + 1]
-            rows.append(
-                {
-                    "series_id": pdf["series_id"].iloc[0],
-                    "seg": i,
-                    "start_rn": int(pdf["rn"].iloc[s]),
-                    "end_rn": int(pdf["rn"].iloc[t - 1]),
-                    "n": t - s,
-                    "seg_mean": float(x[s:t].mean()),
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return (
-        udf_repartition(
-            df.select("series_id", "rn", value_col), "series_id"
-        )
-        .groupBy("series_id")
-        .applyInPandas(one, PELT_SCHEMA)
+    return per_series(
+        df.select("series_id", "rn", F.col(value_col).alias("value")),
+        PELT_SCHEMA,
+        partial(pelt_segments_kernel, beta=beta),
     )

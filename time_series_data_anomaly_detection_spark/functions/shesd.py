@@ -23,7 +23,7 @@ normal PPF — scipy-free, same convention as ``operators/diagnostics``.
 
 Max anomaly fraction defaults to the paper's 2 %; α = 0.05.
 
-Sequential/iterative per series → ``applyInPandas``, rows-only gate;
+Sequential/iterative per series → the grouped-map shell, rows-only gate;
 unit tests cross-check the ESD core against a naive reference and
 assert planted anomalies (and ONLY those) are found on a clean
 seasonal signal.
@@ -34,9 +34,14 @@ model fit here); the ESD loop is O(k·n) on a capped k = 2 % of n.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._partition import per_series
+from .stl import stl_series
 
 SHESD_SCHEMA = "series_id string, rn long, value double, resid double, anomaly int"
 
@@ -116,6 +121,24 @@ def esd_test(resid: np.ndarray, max_anoms: int, alpha: float = 0.05) -> list[int
     return candidates[:n_detected]
 
 
+def shesd_kernel(g: pd.DataFrame, period: int = 24,
+                 max_anoms_frac: float = 0.02, alpha: float = 0.05) -> dict:
+    """:func:`shesd_flags` on one series ``g`` in ``rn`` order."""
+    x = g["value"].to_numpy(dtype=np.float64)
+    n = len(x)
+    if n < 2 * period:
+        resid = x - np.median(x)
+    else:
+        phase = (g["rn"].to_numpy() - 1) % period
+        _, seasonal, _ = stl_series(x, phase, period)
+        resid = x - seasonal - np.median(x)
+    max_anoms = max(1, int(np.floor(n * max_anoms_frac)))
+    hits = esd_test(resid, max_anoms, alpha)
+    anom = np.zeros(n, dtype=np.int32)
+    anom[hits] = 1
+    return {"resid": resid, "anomaly": anom}
+
+
 def shesd_flags(
     df: DataFrame,
     period: int = 24,
@@ -123,34 +146,9 @@ def shesd_flags(
     alpha: float = 0.05,
 ) -> DataFrame:
     """S-H-ESD per series over ``(series_id, rn, value)``."""
-    from .stl import stl_series
-
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn")
-        x = pdf["value"].to_numpy(dtype=np.float64)
-        n = len(x)
-        if n < 2 * period:
-            resid = x - np.median(x)
-        else:
-            phase = (pdf["rn"].to_numpy() - 1) % period
-            _, seasonal, _ = stl_series(x, phase, period)
-            resid = x - seasonal - np.median(x)
-        max_anoms = max(1, int(np.floor(n * max_anoms_frac)))
-        hits = esd_test(resid, max_anoms, alpha)
-        anom = np.zeros(n, dtype=np.int32)
-        anom[hits] = 1
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"].to_numpy(),
-                "rn": pdf["rn"].to_numpy(),
-                "value": x,
-                "resid": resid,
-                "anomaly": anom,
-            }
-        )
-
-    return (
-        df.select("series_id", "rn", "value")
-        .groupBy("series_id")
-        .applyInPandas(_one, SHESD_SCHEMA)
+    return per_series(
+        df.select("series_id", "rn", "value"),
+        SHESD_SCHEMA,
+        partial(shesd_kernel, period=period, max_anoms_frac=max_anoms_frac,
+                alpha=alpha),
     )

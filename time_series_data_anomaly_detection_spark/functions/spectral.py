@@ -9,7 +9,7 @@ unsupervised detector on NAB-style point anomalies and complements the
 engine's forecast-residual family (AR1/Kalman/GP flag what models
 mis-predict; SR flags what "looks different" with no model at all).
 
-Pipeline per series (one ``applyInPandas`` task, O(n log n) FFT):
+Pipeline per series (one grouped-map kernel call, O(n log n) FFT):
 
 1. ``A = |FFT(x)|``, ``P = phase(FFT(x))``
 2. ``L = log(A + eps)``; ``AL = moving-average(L, q)`` (spectrum-side)
@@ -30,9 +30,13 @@ into the same helper — ``estimate_tail`` below implements it.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._partition import per_series
 
 SR_SCHEMA = (
     "series_id string, rn long, value double, saliency double, "
@@ -81,32 +85,26 @@ def estimate_tail(x: np.ndarray, m: int = 5, look: int = 20) -> np.ndarray:
     return np.concatenate([x, np.full(m, est)])
 
 
+def spectral_residual_kernel(g: pd.DataFrame, q: int = 3,
+                             score_window: int = 40, tau: float = 3.0) -> dict:
+    """:func:`spectral_residual_scores` on one series ``g`` in ``rn``
+    order (all-zero scores below 8 points)."""
+    x = g["value"].to_numpy(dtype=np.float64)
+    if len(x) < 8:
+        sal = np.zeros_like(x)
+        score = np.zeros_like(x)
+    else:
+        sal, score = spectral_residual_saliency(x, q=q, score_window=score_window)
+    return {"saliency": sal, "sr_score": score, "flag": (score > tau).astype("int32")}
+
+
 def spectral_residual_scores(
     df: DataFrame, q: int = 3, score_window: int = 40, tau: float = 3.0
 ) -> DataFrame:
     """Per-series SR saliency + flags over ``(series_id, rn, value)``."""
-
-    def _one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn")
-        x = pdf["value"].to_numpy(dtype=np.float64)
-        if len(x) < 8:
-            sal = np.zeros_like(x)
-            score = np.zeros_like(x)
-        else:
-            sal, score = spectral_residual_saliency(x, q=q, score_window=score_window)
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"].to_numpy(),
-                "rn": pdf["rn"].to_numpy(),
-                "value": x,
-                "saliency": sal,
-                "sr_score": score,
-                "flag": (score > tau).astype("int32"),
-            }
-        )
-
-    return (
-        df.select("series_id", "rn", "value")
-        .groupBy("series_id")
-        .applyInPandas(_one, SR_SCHEMA)
+    return per_series(
+        df.select("series_id", "rn", "value"),
+        SR_SCHEMA,
+        partial(spectral_residual_kernel, q=q, score_window=score_window,
+                tau=tau),
     )

@@ -20,14 +20,20 @@ robust spike-resistance the reference relies on for anomaly scoring
 (metric-level parity, SURVEY §5).  The non-robust single pass equals
 ``operators.decompose.classical_decompose``, which IS oracle-checked.
 
-Spark shape: per-series ``applyInPandas``; O(T · n_outer) per series.
+Spark shape: one kernel call per series in the grouped-map shell;
+O(T · n_outer) per series.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from ._partition import per_series
+from ._score import mad_z
 
 STL_SCHEMA = (
     "series_id string, timestamp timestamp, value double, rn long, "
@@ -92,6 +98,19 @@ def stl_series(
     return trend, seasonal, resid
 
 
+def stl_decompose_kernel(g: pd.DataFrame, period: int = 24, n_outer: int = 3,
+                         phase_col: str | None = None,
+                         score_col: str | None = None) -> dict:
+    """:func:`stl_decompose` on one series ``g`` in ``rn`` order."""
+    y = g["value"].to_numpy(float)
+    phase = g[phase_col].to_numpy() if phase_col else (g["rn"].to_numpy() % period)
+    trend, seasonal, resid = stl_series(y, phase, period, n_outer)
+    out = {"trend": trend, "seasonal": seasonal, "resid": resid}
+    if score_col:
+        out[score_col] = mad_z(resid)
+    return out
+
+
 def stl_decompose(
     df: DataFrame,
     period: int = 24,
@@ -107,33 +126,13 @@ def stl_decompose(
     (exact ``mad_scores`` math) inside the same pass — zero extra
     stages versus 4 aggregate/join waves for the operator form.
     """
-
-    def fit(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        y = pdf["value"].to_numpy(float)
-        phase = (
-            pdf[phase_col].to_numpy()
-            if phase_col
-            else (pdf["rn"].to_numpy() % period)
-        )
-        trend, seasonal, resid = stl_series(y, phase, period, n_outer)
-        pdf["trend"], pdf["seasonal"], pdf["resid"] = trend, seasonal, resid
-        out = ["series_id", "timestamp", "value", "rn", "trend", "seasonal", "resid"]
-        if score_col:
-            from ._score import mad_z
-
-            pdf[score_col] = mad_z(resid)
-            out = out + [score_col]
-        return pdf[out]
-
     cols = ["series_id", "timestamp", "value", "rn"] + (
         [phase_col] if phase_col else []
     )
-    from ._partition import udf_repartition
-
     schema = STL_SCHEMA + (f", {score_col} double" if score_col else "")
-    return (
-        udf_repartition(df.select(*cols), "series_id")
-        .groupBy("series_id")
-        .applyInPandas(fit, schema)
+    return per_series(
+        df.select(*cols),
+        schema,
+        partial(stl_decompose_kernel, period=period, n_outer=n_outer,
+                phase_col=phase_col, score_col=score_col),
     )

@@ -13,8 +13,8 @@ drift).  Public algorithm, fixed-parameter variant:
 
 Execution: the trend fit and the θ=2 line are pure column algebra
 (exact decimal sums, broadcast per-series coefficients); only the SES
-recursion runs per series in ``applyInPandas``, returning ONE row per
-series (s_T).  Test-region predictions are then native again.  The
+recursion runs per series in the grouped-map shell, returning ONE row
+per series (s_T).  Test-region predictions are then native again.  The
 DuckDB oracle replays the recursion as a recursive CTE over the
 IDENTICAL ℓ values, so the whole forecaster is hash-gated.
 
@@ -30,8 +30,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._exact import DEC
+from ._partition import per_series
 
 ALPHA = 0.25  # dyadic — exact in binary AND decimal
+
+
+def theta_ses_kernel(g: pd.DataFrame) -> pd.DataFrame:
+    """The SES recursion of :func:`theta_forecast` over one series'
+    θ=2 line ``g["__l"]`` in ``rn`` order: one row ``series_id, s_T``."""
+    l = g["__l"].to_numpy(np.float64)
+    s = l[0]
+    for i in range(1, len(l)):
+        s = s + ALPHA * (l[i] - s)
+    return pd.DataFrame({"series_id": [g["series_id"].iloc[0]], "s_T": [float(s)]})
 
 
 def theta_forecast(
@@ -72,20 +83,10 @@ def theta_forecast(
         - (F.col("a") + F.col("b") * F.col("rn").cast("double")),
     )
 
-    def _ses(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn")
-        l = pdf["__l"].to_numpy(np.float64)
-        s = l[0]
-        for i in range(1, len(l)):
-            s = s + ALPHA * (l[i] - s)
-        return pd.DataFrame(
-            {"series_id": [pdf["series_id"].iloc[0]], "s_T": [float(s)]}
-        )
-
-    ses = (
-        lined.select("series_id", "rn", "__l")
-        .groupBy("series_id")
-        .applyInPandas(_ses, "series_id string, s_T double")
+    ses = per_series(
+        lined.select("series_id", "rn", "__l"),
+        "series_id string, s_T double",
+        theta_ses_kernel,
     )
 
     test = base.where(F.col("rn") > F.col("__T"))

@@ -8,16 +8,20 @@ Spark-first shape: explode a literal lag grid against the frame, shift
 with ``lag(value, k)`` per (series, lag) window, aggregate ``corr``.
 One shuffle keyed by (series_id, lag); the lag grid multiplies rows
 max_lag-fold but only through a projection — at scale, prefer the
-per-series ``applyInPandas`` FFT variant once max_lag is large.
+per-series FFT variant (:func:`acf_fft`) once max_lag is large.
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._exact import DEC
+from ..functions._partition import per_series
 
 
 def acf(df: DataFrame, max_lag: int = 10, value_col: str = "value") -> DataFrame:
@@ -186,6 +190,31 @@ def acf_statsmodels(
     )
 
 
+def acf_fft_kernel(g: pd.DataFrame, max_lag: int = 10) -> pd.DataFrame:
+    """:func:`acf_fft` on one series ``g`` in ``rn`` order: one row per
+    lag (none below 2 points)."""
+    x = g["value"].to_numpy(float)
+    n = len(x)
+    k = min(max_lag, n - 1)
+    if n < 2 or k < 1:
+        return pd.DataFrame(
+            {"series_id": pd.Series([], dtype=str),
+             "lag": pd.Series([], dtype="int32"),
+             "acf": pd.Series([], dtype=float)}
+        )
+    xc = x - x.mean()
+    nfft = 1 << int(np.ceil(np.log2(2 * n)))
+    f = np.fft.rfft(xc, nfft)
+    acov = np.fft.irfft(f * np.conj(f), nfft)[: k + 1]
+    return pd.DataFrame(
+        {
+            "series_id": g["series_id"].iloc[0],
+            "lag": np.arange(1, k + 1, dtype="int32"),
+            "acf": acov[1 : k + 1] / acov[0],
+        }
+    )
+
+
 def acf_fft(
     df: DataFrame, max_lag: int = 10, value_col: str = "value"
 ) -> DataFrame:
@@ -203,7 +232,7 @@ def acf_fft(
 
         r_k = sum_{t<=n-k} (x_t - mu)(x_{t+k} - mu) / sum_t (x_t - mu)^2
 
-    One shuffle keyed by series (Arrow-batched ``applyInPandas``); the
+    One shuffle keyed by series (the grouped-map shell); the
     parallelism axis is series count and each series must fit a
     worker, the standard trade for per-series signal processing here
     (same contract as ``matrix_profile`` / ``spectral_residual``).
@@ -211,34 +240,11 @@ def acf_fft(
     with the stack plan at max_lag=10 to 1e-9 (float vs exact-decimal
     sums differ below that).
     """
-    out_schema = "series_id string, lag int, acf double"
-
-    def _fft_acf(pdf):
-        import pandas as pd
-
-        pdf = pdf.sort_values("rn")
-        x = pdf[value_col].to_numpy(float)
-        n = len(x)
-        k = min(max_lag, n - 1)
-        if n < 2 or k < 1:
-            return pd.DataFrame(
-                {"series_id": pd.Series([], dtype=str),
-                 "lag": pd.Series([], dtype="int32"),
-                 "acf": pd.Series([], dtype=float)}
-            )
-        xc = x - x.mean()
-        nfft = 1 << int(np.ceil(np.log2(2 * n)))
-        f = np.fft.rfft(xc, nfft)
-        acov = np.fft.irfft(f * np.conj(f), nfft)[: k + 1]
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"].iloc[0],
-                "lag": np.arange(1, k + 1, dtype="int32"),
-                "acf": acov[1 : k + 1] / acov[0],
-            }
-        )
-
-    return df.groupBy("series_id").applyInPandas(_fft_acf, out_schema)
+    return per_series(
+        df.select("series_id", "rn", F.col(value_col).alias("value")),
+        "series_id string, lag int, acf double",
+        partial(acf_fft_kernel, max_lag=max_lag),
+    )
 
 
 def _guard_pair_explosion(

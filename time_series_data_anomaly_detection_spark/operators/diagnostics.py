@@ -23,7 +23,7 @@ Two text conventions make that hold:
   arithmetic (DuckDB would otherwise promote through DECIMAL).
 
 The normal PPF is Acklam's rational approximation (|err| < 1.15e-9;
-the same algebra as ``functions.kalman._norm_ppf``) — scipy is not
+the same algebra as ``functions.shesd._norm_ppf``) — scipy is not
 available in either engine, and a closed form keeps the whole query
 inside whole-stage codegen instead of a Python UDF.
 

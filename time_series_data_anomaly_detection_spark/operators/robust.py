@@ -25,8 +25,14 @@ average as ``(lo+hi)/2.0`` which is exact when they coincide.
 
 from __future__ import annotations
 
+from functools import partial
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..functions._partition import per_series
 
 MAD_K = 1.4826  # src/utils.py:38 — shared with operators.scaling
 EPS_SCALE = 1e-9
@@ -274,6 +280,46 @@ ROLLING_Q_SCHEMA = (
 )
 
 
+def rolling_quantile_kernel(g: pd.DataFrame, window: int = 48,
+                            lo_q: float = 0.02, hi_q: float = 0.98,
+                            min_periods: int = 12) -> dict:
+    """:func:`rolling_quantile_flags_grouped` on one series ``g`` in
+    ``rn`` order."""
+    w_, lo_, hi_, mp_ = int(window), float(lo_q), float(hi_q), int(min_periods)
+    x = g["value"].to_numpy(np.float64)
+    n = len(x)
+    lo = np.full(n, np.nan)
+    hi = np.full(n, np.nan)
+
+    def interp(arr_sorted, m: int, q: float):
+        # identical association to the native expression:
+        # pos = 1.0 + q * double(m-1); frac = pos - floor(pos)
+        pos = 1.0 + q * float(m - 1)
+        i0 = int(np.floor(pos))
+        frac = pos - np.floor(pos)
+        a_lo = arr_sorted[..., i0 - 1]
+        a_hi = arr_sorted[..., min(i0 + 1, m) - 1]
+        return a_lo + frac * (a_hi - a_lo)
+
+    # expanding prefix: row i's frame is x[0:i] (≤ window-1 rows)
+    for i in range(min(mp_, n), min(w_, n)):
+        arr = np.sort(x[:i])
+        lo[i] = interp(arr, i, lo_)
+        hi[i] = interp(arr, i, hi_)
+    # full windows, all at once: row i's frame is x[i-w : i]
+    if n > w_:
+        sw = np.lib.stride_tricks.sliding_window_view(x, w_)[: n - w_]
+        ws = np.sort(sw, axis=1)
+        lo[w_:] = interp(ws, w_, lo_)
+        hi[w_:] = interp(ws, w_, hi_)
+    flag = np.where(np.isnan(lo), np.nan, ((x < lo) | (x > hi)).astype(np.float64))
+    return {
+        "band_lo": lo,
+        "band_hi": hi,
+        "rq_flag": pd.Series(flag).astype("Int32"),
+    }
+
+
 def rolling_quantile_flags_grouped(
     df: DataFrame,
     value_col: str = "value",
@@ -302,59 +348,9 @@ def rolling_quantile_flags_grouped(
     ``(series_id, rn, value, band_lo, band_hi, rq_flag)`` frame
     (join back on (series_id, rn) if callers need more columns).
     """
-    import numpy as np
-    import pandas as pd
-
-    from ..functions._partition import udf_repartition
-
-    w_, lo_, hi_, mp_ = int(window), float(lo_q), float(hi_q), int(min_periods)
-    vcol = value_col
-
-    def one(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("rn").reset_index(drop=True)
-        x = pdf[vcol].to_numpy(np.float64)
-        n = len(x)
-        lo = np.full(n, np.nan)
-        hi = np.full(n, np.nan)
-
-        def interp(arr_sorted, m: int, q: float):
-            # identical association to the native expression:
-            # pos = 1.0 + q * double(m-1); frac = pos - floor(pos)
-            pos = 1.0 + q * float(m - 1)
-            i0 = int(np.floor(pos))
-            frac = pos - np.floor(pos)
-            a_lo = arr_sorted[..., i0 - 1]
-            a_hi = arr_sorted[..., min(i0 + 1, m) - 1]
-            return a_lo + frac * (a_hi - a_lo)
-
-        # expanding prefix: row i's frame is x[0:i] (≤ window-1 rows)
-        for i in range(min(mp_, n), min(w_, n)):
-            arr = np.sort(x[:i])
-            lo[i] = interp(arr, i, lo_)
-            hi[i] = interp(arr, i, hi_)
-        # full windows, all at once: row i's frame is x[i-w : i]
-        if n > w_:
-            sw = np.lib.stride_tricks.sliding_window_view(x, w_)[: n - w_]
-            ws = np.sort(sw, axis=1)
-            lo[w_:] = interp(ws, w_, lo_)
-            hi[w_:] = interp(ws, w_, hi_)
-        flag = np.where(
-            np.isnan(lo), np.nan, ((x < lo) | (x > hi)).astype(np.float64)
-        )
-        return pd.DataFrame(
-            {
-                "series_id": pdf["series_id"],
-                "rn": pdf["rn"],
-                "value": x,
-                "band_lo": lo,
-                "band_hi": hi,
-                "rq_flag": pd.Series(flag).astype("Int32"),
-            }
-        )
-
-    slim = df.select("series_id", "rn", vcol)
-    return (
-        udf_repartition(slim, "series_id")
-        .groupBy("series_id")
-        .applyInPandas(one, ROLLING_Q_SCHEMA)
+    return per_series(
+        df.select("series_id", "rn", F.col(value_col).alias("value")),
+        ROLLING_Q_SCHEMA,
+        partial(rolling_quantile_kernel, window=window, lo_q=lo_q, hi_q=hi_q,
+                min_periods=min_periods),
     )

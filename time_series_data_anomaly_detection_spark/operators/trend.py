@@ -11,7 +11,7 @@ trend decision.  This operator adds the standard nonparametric pair:
 - **Theil-Sen slope**: the median of all pairwise slopes
   ``(x_j - x_i) / (j - i)`` — the robust trend-rate estimate.
 
-Execution model — one ``applyInPandas`` task per series:
+Execution model — one grouped-map kernel call per series:
 
 - ``S`` is EXACT at every n via the Kendall inversion identity
   ``S = n(n-1)/2 - T - 2·Q`` (T = tied pairs, Q = strict inversions),
@@ -39,9 +39,13 @@ bit for bit (a+b then one exact scale by 2).
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..functions._partition import per_series
 
 MK_SCHEMA = (
     "series_id string, n long, s_stat long, tau double, "
@@ -97,7 +101,7 @@ def _sen_slopes(x: np.ndarray, max_pairs: int) -> np.ndarray:
 
 
 def _mann_kendall_one(pdf: pd.DataFrame) -> pd.DataFrame:
-    pdf = pdf.sort_values("rn")
+    """:func:`mann_kendall_frame` on one series in ``rn`` order."""
     x = pdf["value"].to_numpy(dtype=np.float64)
     n = len(x)
     if n < 2:
@@ -153,10 +157,8 @@ def mann_kendall_frame(df: DataFrame) -> DataFrame:
 
     Input: ``(series_id, rn, value)``; output one row per series.
     """
-    return (
-        df.select("series_id", "rn", "value")
-        .groupBy("series_id")
-        .applyInPandas(_mann_kendall_one, MK_SCHEMA)
+    return per_series(
+        df.select("series_id", "rn", "value"), MK_SCHEMA, _mann_kendall_one
     )
 
 
@@ -169,7 +171,8 @@ SMK_SCHEMA = (
 def _seasonal_mk_one(
     pdf: pd.DataFrame, period: int, max_pairs: int
 ) -> pd.DataFrame:
-    pdf = pdf.sort_values("rn")
+    """:func:`seasonal_mann_kendall_frame` on one series in ``rn``
+    order."""
     x = pdf["value"].to_numpy(dtype=np.float64)
     r = pdf["rn"].to_numpy(dtype=np.int64)
     n = len(x)
@@ -272,13 +275,8 @@ def seasonal_mann_kendall_frame(
     grouped-map task per series; same ``max_pairs`` budget with a
     documented strided fallback for extreme lengths.
     """
-    p_, b_ = int(period), int(max_pairs)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _seasonal_mk_one(pdf, p_, b_)
-
-    return (
-        df.select("series_id", "rn", "value")
-        .groupBy("series_id")
-        .applyInPandas(run, SMK_SCHEMA)
+    return per_series(
+        df.select("series_id", "rn", "value"),
+        SMK_SCHEMA,
+        partial(_seasonal_mk_one, period=int(period), max_pairs=int(max_pairs)),
     )

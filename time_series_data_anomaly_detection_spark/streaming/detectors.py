@@ -359,7 +359,8 @@ def streaming_holt_winters(
     null ``pred``, matching the batch operator which emits nothing for
     them); the level seeds at their mean and the seasonal vector at
     their deviations, then the recursion matches batch row-for-row.
-    State is O(period) doubles per series.
+    State is O(period) doubles per series: the warm-up buffer until it
+    fills, then the seasonal vector.
     """
     p = int(period)
     params = float(alpha), float(beta), float(gamma)
@@ -377,7 +378,10 @@ def streaming_holt_winters(
         preds = np.full(len(y), np.nan)
         if started:
             preds[i:], (l, b, sl) = holt_winters_run(y[i:], (l, b, sl), *params)
-        return {"pred": preds, "resid": y - preds}, (buf, sl, l, b, started)
+        # the warm-up buffer is dead once started: store it empty
+        return {"pred": preds, "resid": y - preds}, (
+            [] if started else buf, sl, l, b, started
+        )
 
     return _per_series_state(
         stream,
