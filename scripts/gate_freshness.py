@@ -1,9 +1,9 @@
-"""Per-query driver-verification freshness: parse every committed
-CORRECTNESS_r{N}.json and report, for each registry query, the latest
-round the driver checked it and with what result.  This is the input
-the gate ordering in plans/registry.py should be rebuilt from each
-round: never-checked and oldest-checked queries belong in the prime
-slots (the r06 verdict's item #1 was exactly this rotation slipping).
+"""Per-query driver-verification freshness: for each registry query,
+the latest round the driver checked it (from the committed
+CORRECTNESS_r{N}.json) and with what result, printed in the driver's
+gate order as computed by ``__spark_entry__.queries()``.  Queries whose
+source changed since the committed impl snapshot are tagged; the
+script exits non-zero if any query's latest check FAILED.
 
 Usage:
     python scripts/gate_freshness.py            # full table
@@ -12,50 +12,13 @@ Usage:
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def load_history(repo: str) -> tuple[dict[str, tuple[int, str]], int]:
-    """{query: (last_round, status)} and the latest round seen.
-
-    status: 'green' (rows+schema+hash ok), 'rows_only' (no_oracle),
-    'FAIL' (any mismatch recorded in its latest check).
-    """
-    latest: dict[str, tuple[int, str]] = {}
-    max_round = 0
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        m = re.search(r"r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        max_round = max(max_round, rnd)
-        try:
-            data = json.load(open(path))
-        except Exception:
-            continue
-        for name, row in data.items():
-            if not isinstance(row, dict):
-                continue
-            if row.get("err") == "no_oracle":
-                status = "rows_only"
-            elif (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            ):
-                status = "green"
-            else:
-                status = "FAIL"
-            prev = latest.get(name)
-            if prev is None or rnd >= prev[0]:
-                latest[name] = (rnd, status)
-    return latest, max_round
+import __spark_entry__ as entrymod  # noqa: E402
 
 
 def main() -> None:
@@ -64,17 +27,15 @@ def main() -> None:
         stale_cut = int(sys.argv[sys.argv.index("--stale") + 1])
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest, max_round = load_history(repo)
+    latest, max_round = entrymod.load_history(repo)
 
-    import __spark_entry__ as entrymod
-
-    qs = list(entrymod.queries())
+    qs = list(entrymod.queries())  # gate order
     oracled = set(entrymod.oracle_sql())
 
     # implementation drift vs the committed snapshot (r07 ADVICE): a
     # query whose code changed after its last driver check is
-    # effectively UNVERIFIED whatever its last-check round says — sort
-    # those first so they land in the prime gate slots.
+    # effectively UNVERIFIED whatever its last-check round says, so
+    # --stale counts it as never checked.
     changed: set[str] = set()
     suspect: dict[str, str] = {}  # name -> NEW / UNHASHABLE
     try:
@@ -86,7 +47,7 @@ def main() -> None:
             # snapshot-missing and 'unhashable' fingerprints are NOT
             # "unchanged" (r08 ADVICE): a new query, or one whose
             # source became un-inspectable, has no verified snapshot —
-            # flag it into the prime slots explicitly
+            # tag it explicitly
             if n not in snap:
                 suspect[n] = "NEW"
             elif v == "unhashable":
@@ -96,18 +57,13 @@ def main() -> None:
     except Exception:
         pass
 
-    rows = []
+    shown = 0
     for name in qs:
         rnd, status = latest.get(name, (0, "NEVER"))
         eff = 0 if (name in changed or name in suspect) else rnd
-        rows.append((eff, rnd, name, status, name in oracled))
-    rows.sort()
-
-    shown = 0
-    for eff, rnd, name, status, has_oracle in rows:
         if stale_cut is not None and eff > max_round - stale_cut:
             continue
-        tag = "oracled" if has_oracle else "rows-only-decl"
+        tag = "oracled" if name in oracled else "rows-only-decl"
         drift = (
             "  CHANGED-since-snapshot"
             if name in changed
@@ -119,7 +75,7 @@ def main() -> None:
         f"# {shown} shown / {len(qs)} queries; latest driver round r{max_round}",
         file=sys.stderr,
     )
-    fails = [n for _, r, n, s, _ in rows if s == "FAIL"]
+    fails = [n for n in qs if latest.get(n, (0, "NEVER"))[1] == "FAIL"]
     if fails:
         print(f"# FAILING latest check: {fails}", file=sys.stderr)
         sys.exit(1)

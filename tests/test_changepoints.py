@@ -608,3 +608,52 @@ def test_bocpd_run_matches_r13_reference_bitwise():
     rl = got_st["run_len"]
     assert np.array_equal(ref_st["kappa"], 1.0 + rl.astype(float))
     assert np.array_equal(ref_st["alpha"], 1.0 + rl / 2.0)
+
+
+def test_bocpd_run_split_resume_bitwise_at_non_default_priors():
+    """Resuming ``bocpd_run`` from the state it returned must equal one
+    call over the whole series, bit for bit, also at priors whose
+    κ/α steps do not accumulate exactly (kappa0=0.7, alpha0=0.3): the
+    state rebuilds κ and α from ``run_len`` on both paths."""
+    import numpy as np
+
+    from time_series_data_anomaly_detection_spark.functions.bocpd import (
+        bocpd_run,
+        initial_state,
+    )
+
+    prior = dict(mu0=0.5, kappa0=0.7, alpha0=0.3, beta0=2.0)
+    rng = np.random.default_rng(11)
+    y = np.concatenate([
+        rng.normal(0.0, 1.0, 150),
+        rng.normal(3.0, 0.7, 100),
+        rng.normal(-1.0, 2.0, 100),
+    ])
+    st0 = initial_state(prior["mu0"], prior["beta0"])
+    whole_cp, whole_short, whole_st = bocpd_run(y, st0, max_run=120, **prior)
+    for k in (1, 137, 349):
+        cp_a, short_a, st = bocpd_run(y[:k], st0, max_run=120, **prior)
+        cp_b, short_b, st = bocpd_run(y[k:], st, max_run=120, **prior)
+        assert np.array_equal(np.r_[cp_a, cp_b], whole_cp), k
+        assert np.array_equal(np.r_[short_a, short_b], whole_short), k
+        for key in ("r", "mu", "beta", "run_len"):
+            assert np.array_equal(st[key], whole_st[key]), (k, key)
+
+
+def test_bocpd_run_rejects_state_from_another_prior():
+    """A state built for one prior cannot be resumed under another: its
+    run-length-0 hypothesis carries the wrong (mu0, beta0)."""
+    import numpy as np
+    import pytest
+
+    from time_series_data_anomaly_detection_spark.functions.bocpd import (
+        bocpd_run,
+        initial_state,
+    )
+
+    y = np.linspace(-1.0, 1.0, 20)
+    _, _, st = bocpd_run(y, initial_state(), max_run=50)
+    with pytest.raises(ValueError, match="mu0"):
+        bocpd_run(y, st, mu0=0.5, max_run=50)
+    with pytest.raises(ValueError, match="beta0"):
+        bocpd_run(y, initial_state(), beta0=2.0, max_run=50)

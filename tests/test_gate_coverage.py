@@ -84,14 +84,10 @@ def test_no_query_failing_its_latest_driver_check():
     recent check FAILED — a fail means either a regression or an
     oracle drift, and both block the round."""
     import os
-    import sys
 
-    sys.path.insert(
-        0,
-        os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"),
-    )
+    from __spark_entry__ import load_history
+
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    from gate_freshness import load_history
 
     latest, max_round = load_history(repo)
     assert max_round >= 6
@@ -129,7 +125,11 @@ def test_materialize_ctes_transform():
     """_materialize_ctes must mark exactly the non-self-referencing
     CTEs of recursive oracles, leave recursive members and WINDOW
     clauses untouched, and pass non-recursive SQL through unchanged."""
+    from time_series_data_anomaly_detection_spark.plans import (
+        registry_datapipe,
+    )
     from time_series_data_anomaly_detection_spark.plans.registry import (
+        ORACLES,
         _materialize_ctes,
         oracle_sql,
     )
@@ -156,10 +156,65 @@ SELECT * FROM dp
     plain = "WITH a AS (SELECT 1)\nSELECT * FROM a"
     assert _materialize_ctes(plain) == plain
     # every shipped recursive oracle got the treatment; every
-    # non-recursive oracle is untouched
+    # non-recursive oracle keeps exactly the MATERIALIZED marks written
+    # in its raw SQL (some materialize a CTE by hand)
+    raw = {**ORACLES, **registry_datapipe.ORACLES}
     for name, osql in oracle_sql().items():
         if "WITH RECURSIVE" in osql:
             assert "AS MATERIALIZED (" in osql, name
-        elif "bpe_merges_fixed" != name:
-            # (bpe_merges_fixed materializes its unroll chain by hand)
-            assert "_materialize marker never added" or True
+        else:
+            assert osql.count("AS MATERIALIZED") == raw[name].count(
+                "AS MATERIALIZED"
+            ), name
+
+
+def test_queries_are_collected_by_q_prefix(monkeypatch):
+    """Registration is by convention: a module-level ``q_<name>``
+    function of the registry is a query named ``<name>``, with no
+    other edit, and every key unwraps to its ``q_`` function."""
+    import inspect
+
+    import __spark_entry__ as entrymod
+    from time_series_data_anomaly_detection_spark.plans import registry
+
+    def q_probe_tmp(spark, sf_dir):
+        return spark.range(1)
+
+    monkeypatch.setattr(registry, "q_probe_tmp", q_probe_tmp, raising=False)
+    qs = registry.queries()
+    assert inspect.unwrap(qs["probe_tmp"]) is q_probe_tmp
+    assert "probe_tmp" in entrymod.queries()
+    for name, fn in qs.items():
+        assert inspect.unwrap(fn).__name__ == f"q_{name}", name
+
+
+def test_gate_order_follows_committed_history():
+    """The driver's gate order re-verifies the stalest oracled queries
+    first and puts the rows-only queries last."""
+    import __spark_entry__ as entrymod
+
+    names = list(entrymod.queries())
+    oracled = set(entrymod.oracle_sql())
+    latest, _ = entrymod.load_history(entrymod._REPO)
+
+    assert len(ROWS_ONLY) == 24
+    assert set(names[-len(ROWS_ONLY):]) == set(ROWS_ONLY)
+    prefix = names[: -len(ROWS_ONLY)]
+    assert set(prefix) == oracled
+    rounds = [latest.get(n, (0, "NEVER"))[0] for n in prefix]
+    assert rounds == sorted(rounds)
+
+
+def test_gate_order_without_history(monkeypatch, tmp_path):
+    """With no committed history every query counts as never checked:
+    oracled queries by name, then rows-only queries by name."""
+    import __spark_entry__ as entrymod
+
+    load = entrymod.load_history
+    monkeypatch.setattr(
+        entrymod, "load_history", lambda repo: load(str(tmp_path))
+    )
+    oracled = set(entrymod.oracle_sql())
+    names = list(entrymod.queries())
+    assert names == sorted(oracled) + sorted(set(names) - oracled)
+    assert set(names) - oracled == set(ROWS_ONLY)

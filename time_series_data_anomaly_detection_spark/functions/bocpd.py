@@ -65,7 +65,20 @@ def bocpd_run(
     stateful detector (streaming.detectors.streaming_bocpd) —
     identical math, so
     stream output == batch output on the same prefix.
+
+    The state carries no κ or α: they are rebuilt from ``run_len`` as
+    ``kappa0 + run_len`` and ``alpha0 + run_len/2``, so a state must come
+    from ``initial_state`` or an earlier call with the same
+    ``(mu0, kappa0, alpha0, beta0)``.  A state whose run-length-0
+    hypothesis (always index 0) does not hold ``(mu0, beta0)`` raises
+    ``ValueError``.
     """
+    if state["mu"][0] != mu0 or state["beta"][0] != beta0:
+        raise ValueError(
+            f"BOCPD state prior (mu0={state['mu'][0]}, "
+            f"beta0={state['beta'][0]}) does not match the call's "
+            f"(mu0={mu0}, beta0={beta0})"
+        )
     n = len(y)
     h = 1.0 / hazard_lam
     r = state["r"]
@@ -84,8 +97,11 @@ def bocpd_run(
     # removes one vector log, one lgamma-difference and four vector
     # mult/adds per step; with the concatenate→preallocated-buffer
     # rewrite below it cut bocpd_series from ~1.7 s to ~0.8 s per 20k-row
-    # series (r14 A/B).  All gathered values are bit-identical to the
-    # old per-step recomputation (same operands, same op order).
+    # series (r14 A/B).  The gathered values are bit-identical to the
+    # old per-step recomputation (same operands, same op order) for
+    # priors whose +1 / +0.5 steps accumulate exactly, such as the
+    # defaults; for others (kappa0=0.7) the table's kappa0 + k may
+    # differ from k repeated additions in the last ulp.
     rl_cap = int(run_len.max()) + n + 2
     ar = np.arange(rl_cap)
     grid = alpha0 + ar / 2.0

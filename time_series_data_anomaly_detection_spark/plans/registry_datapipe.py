@@ -3794,87 +3794,6 @@ FROM sc GROUP BY 1
 """
 
 
-def queries():
-    return {
-        "importance_select": q_importance_select,
-        "bpe_pair_counts": q_bpe_pair_counts,
-        "bpe_merges": q_bpe_merges,
-        "bpe_encode": q_bpe_encode,
-        "bpe_encode_fixed": q_bpe_encode_fixed,
-        "bpe_merges_fixed": q_bpe_merges_fixed,
-        "corpus_to_batches_bpe_fixed": q_corpus_to_batches_bpe_fixed,
-        "mixture_schedule": q_mixture_schedule,
-        "jsonl_ingest": q_jsonl_ingest,
-        "text_ingest": q_text_ingest,
-        "minhash_lsh_banded": q_minhash_lsh_banded,
-        "minhash_recall_banded": q_minhash_recall_banded,
-        "doc_stats": q_doc_stats,
-        "lang_id": q_lang_id,
-        "fingerprint": q_fingerprint,
-        "winnow_fingerprints": q_winnow_fingerprints,
-        "vocab_stats": q_vocab_stats,
-        "bigram_surprise": q_bigram_surprise,
-        "winnow_near_dup": q_winnow_near_dup,
-        "distinctive_terms": q_distinctive_terms,
-        "doc_novelty": q_doc_novelty,
-        "compression_ratio": q_compression_ratio,
-        "source_concentration": q_source_concentration,
-        "exact_dedup": q_exact_dedup,
-        "ngram_jaccard": q_ngram_jaccard,
-        "minhash_lsh": q_minhash_lsh,
-        "dedup_clusters": q_dedup_clusters,
-        "dedup_clusters_best": q_dedup_clusters_best,
-        "simhash": q_simhash,
-        "embedding_near_dup": q_embedding_near_dup,
-        "cosine_topk": q_cosine_topk,
-        "doc_embed_topk": q_doc_embed_topk,
-        "ann_topk": q_ann_topk,
-        "ivf_topk": q_ivf_topk,
-        "knn_label_agreement": q_knn_label_agreement,
-        "ann_recall": q_ann_recall,
-        "event_rollup": q_event_rollup,
-        "session_funnel": q_session_funnel,
-        "stratified_sample": q_stratified_sample,
-        "quality_deciles": q_quality_deciles,
-        "source_mix": q_source_mix,
-        "pack_chunks": q_pack_chunks,
-        "incremental_dedup": q_incremental_dedup,
-        "corpus_to_batches": q_corpus_to_batches,
-        # token-exact (learned-BPE) packing twin — rows-only
-        "corpus_to_batches_bpe": q_corpus_to_batches_bpe,
-        "user_sessions": q_user_sessions,
-        "props_stats": q_props_stats,
-        "multimodal_features": q_multimodal_features,
-        "multimodal_sampled": q_multimodal_sampled,
-        "top_ngrams": q_top_ngrams,
-        "corpus_filter": q_corpus_filter,
-        "corpus_prep": q_corpus_prep,
-        "source_stats": q_source_stats,
-        "decontaminate": q_decontaminate,
-        "repetition_stats": q_repetition_stats,
-        "pii_scan": q_pii_scan,
-        "semantic_dedup": q_semantic_dedup,
-        "training_order": q_training_order,
-        "curation_pipeline": q_curation_pipeline,
-        "corpus_drift": q_corpus_drift,
-        "pq_topk": q_pq_topk,
-        "pq_topk_prod": q_pq_topk_prod,
-        "pq_recall": q_pq_recall,
-        "incremental_semantic_dedup": q_incremental_semantic_dedup,
-        "chunk_documents": q_chunk_documents,
-        "retention_cohorts": q_retention_cohorts,
-        "embedding_density": q_embedding_density,
-        "minhash_recall": q_minhash_recall,
-        "dup_source_matrix": q_dup_source_matrix,
-        "pq_rerank": q_pq_rerank,
-        "pq_rerank_prod": q_pq_rerank_prod,
-        "containment_pairs": q_containment_pairs,
-        "vocab_coverage": q_vocab_coverage,
-        "quality_classifier": q_quality_classifier,
-        "length_buckets": q_length_buckets,
-    }
-
-
 ORACLES["importance_select"] = f"""
 WITH {{SQL_TOKS}},
 tgt AS (
@@ -4039,7 +3958,3 @@ rk AS (
 SELECT source, term_rank, token, tf, df, round(score, {R}) AS score
 FROM rk WHERE term_rank <= 10
 """
-
-
-def oracle_sql():
-    return dict(ORACLES)

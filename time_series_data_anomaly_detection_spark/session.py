@@ -90,26 +90,7 @@ def get_spark(
         # floor never binds.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or int(cpus)))
-        # Join-strategy preference: MEASURED BOTH WAYS in r13 and kept
-        # at the Spark defaults.  Flipping preferSortMergeJoin=false
-        # (+ AQE SMJ→SHJ rewrite at 64m) won 1-2 s on a few sf0.1
-        # queries (minhash_recall 8.5→6.2 s, business_metrics
-        # 4.6→3.4 s) but REGRESSED the 100× corpus (minhash_lsh warm
-        # 54.4 → 82.5 s: the verification joins' build sides grow with
-        # the corpus, exactly the case sort-merge handles and a local
-        # hash build does not) — a local[32]-only win, rejected per the
-        # optimization-round rules.  The AQE-only variant measured
-        # mixed (first 80.4→74.9, warm 54.4→61.4 at 100×), so it also
-        # stays off.  Env knobs preserved for deployments whose join
-        # profile differs; numbers in OPTIMIZATION_r13.md #5.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
-        .config(
-            "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-            os.environ.get("SPARK_GRAFT_SHJ_LOCALMAP", "0"),
-        )
+        # the r13 A/B kept Spark's join defaults (OPTIMIZATION_r13.md #5)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "100000")
         .config("spark.sql.session.timeZone", "UTC")
