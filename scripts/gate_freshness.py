@@ -1,9 +1,8 @@
 """Per-query driver-verification freshness: for each registry query,
 the latest round the driver checked it (from the committed
 CORRECTNESS_r{N}.json) and with what result, printed in the driver's
-gate order as computed by ``__spark_entry__.queries()``.  Queries whose
-source changed since the committed impl snapshot are tagged; the
-script exits non-zero if any query's latest check FAILED.
+gate order as computed by ``__spark_entry__.queries()``.  The script
+exits non-zero if any query's latest check FAILED.
 
 Usage:
     python scripts/gate_freshness.py            # full table
@@ -12,7 +11,6 @@ Usage:
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
@@ -32,44 +30,13 @@ def main() -> None:
     qs = list(entrymod.queries())  # gate order
     oracled = set(entrymod.oracle_sql())
 
-    # implementation drift vs the committed snapshot (r07 ADVICE): a
-    # query whose code changed after its last driver check is
-    # effectively UNVERIFIED whatever its last-check round says, so
-    # --stale counts it as never checked.
-    changed: set[str] = set()
-    suspect: dict[str, str] = {}  # name -> NEW / UNHASHABLE
-    try:
-        from impl_snapshot import SNAPSHOT, fingerprints
-
-        snap = json.load(open(SNAPSHOT))
-        cur = fingerprints()
-        for n, v in cur.items():
-            # snapshot-missing and 'unhashable' fingerprints are NOT
-            # "unchanged" (r08 ADVICE): a new query, or one whose
-            # source became un-inspectable, has no verified snapshot —
-            # tag it explicitly
-            if n not in snap:
-                suspect[n] = "NEW"
-            elif v == "unhashable":
-                suspect[n] = "UNHASHABLE"
-            elif snap[n] != v:
-                changed.add(n)
-    except Exception:
-        pass
-
     shown = 0
     for name in qs:
         rnd, status = latest.get(name, (0, "NEVER"))
-        eff = 0 if (name in changed or name in suspect) else rnd
-        if stale_cut is not None and eff > max_round - stale_cut:
+        if stale_cut is not None and rnd > max_round - stale_cut:
             continue
         tag = "oracled" if name in oracled else "rows-only-decl"
-        drift = (
-            "  CHANGED-since-snapshot"
-            if name in changed
-            else f"  {suspect[name]}-fingerprint" if name in suspect else ""
-        )
-        print(f"r{rnd:02d}  {status:9s}  {tag:14s}  {name}{drift}")
+        print(f"r{rnd:02d}  {status:9s}  {tag:14s}  {name}")
         shown += 1
     print(
         f"# {shown} shown / {len(qs)} queries; latest driver round r{max_round}",

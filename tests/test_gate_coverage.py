@@ -218,3 +218,24 @@ def test_gate_order_without_history(monkeypatch, tmp_path):
     names = list(entrymod.queries())
     assert names == sorted(oracled) + sorted(set(names) - oracled)
     assert set(names) - oracled == set(ROWS_ONLY)
+
+
+def test_pipelines_import_does_not_load_registry():
+    """The production path (``score_model``, ``run_benchmark``) must
+    not pay for building the gate registry's oracle strings."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys\n"
+        "import time_series_data_anomaly_detection_spark.plans.pipelines\n"
+        "pkg = 'time_series_data_anomaly_detection_spark.plans.'\n"
+        "print(sorted(m for m in sys.modules if m.startswith(pkg + 'registry')))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=repo, capture_output=True, text=True, check=True,
+    )
+    assert out.stdout.strip() == "[]", out.stdout

@@ -264,20 +264,6 @@ def test_stl_separates_components(spark):
     )
 
 
-def test_lstm_torch_backend_gate(spark):
-    """Explicitly requesting the torch backend without torch installed
-    must raise; the default backend falls through to the numpy BPTT
-    implementation (tested below)."""
-    from time_series_data_anomaly_detection_spark.functions.lstm import (
-        HAS_TORCH,
-        lstm_forecast,
-    )
-    if HAS_TORCH:
-        pytest.skip("torch present")
-    with pytest.raises(NotImplementedError):
-        lstm_forecast(series_df(spark, [1.0, 2.0]), backend="torch")
-
-
 def test_bsts_multiseasonal_beats_single(spark):
     """Trigonometric [24, 168] multi-seasonality (the reference's
     freq_seasonal branch, src/bsts_model.py:26-35) captures a weekly

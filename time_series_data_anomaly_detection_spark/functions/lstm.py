@@ -1,15 +1,14 @@
 """LSTM forecaster (SURVEY §2.9 M5).
 
 Reference: per-series 1→64-hidden ``nn.LSTM`` + Linear head trained on
-48-step sliding windows (``src/lstm_model.py:32-91``).  Two backends:
+48-step sliding windows (``src/lstm_model.py:32-91``), built here as a
+from-scratch numpy LSTM with full BPTT + Adam
+(``functions/_lstm_numpy.py``) implementing the SAME architecture,
+loss, optimizer, and window semantics — M5 is a real model, not a
+stand-in, and its output does not depend on which optional packages
+happen to be installed.
 
-- torch (when installed): mirrors the reference's stack directly.
-- numpy (this environment): from-scratch LSTM with full BPTT + Adam
-  (``functions/_lstm_numpy.py``) implementing the SAME architecture,
-  loss, optimizer, and window semantics — M5 is a real model here, not
-  a stand-in.
-
-Both are seeded per call; training is stochastic-by-seed, so parity is
+Training is seeded per call and stochastic-by-seed, so parity is
 metric-level (SURVEY §5), and the query stays rows-only in the gate.
 ``max_train_windows`` caps the training set at the tail of the train
 region (cost control in the spirit of the GP's P5 subsample — it
@@ -24,15 +23,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ._lstm_numpy import NumpyLSTM
 from ._partition import per_series
-
-try:  # pragma: no cover - torch absent in this environment
-    import torch
-    from torch import nn
-
-    HAS_TORCH = True
-except ImportError:
-    HAS_TORCH = False
 
 LSTM_SCHEMA = (
     "series_id string, timestamp timestamp, value double, rn long, "
@@ -43,8 +35,7 @@ LSTM_SCHEMA = (
 def lstm_forecast_kernel(g: pd.DataFrame, seq_len: int = 48, hidden: int = 64,
                          epochs: int = 10, train_frac: float = 1.0,
                          seed: int = 0, max_train_windows: int | None = None,
-                         use_torch: bool = False, batch: int = 64,
-                         lr: float = 1e-3) -> dict:
+                         batch: int = 64, lr: float = 1e-3) -> dict:
     """:func:`lstm_forecast` on one series ``g`` in ``rn`` order."""
     y = g["value"].to_numpy(np.float64)
     n = len(y)
@@ -63,31 +54,9 @@ def lstm_forecast_kernel(g: pd.DataFrame, seq_len: int = 48, hidden: int = 64,
     if max_train_windows is not None:
         lo = max(hi - max_train_windows, 0)
     X_tr, y_tr = X[lo:hi, :, None], t[lo:hi]
-    if use_torch:  # pragma: no cover
-        torch.manual_seed(seed)
-        lstm = nn.LSTM(1, hidden, batch_first=True)
-        head = nn.Linear(hidden, 1)
-        opt = torch.optim.Adam(
-            list(lstm.parameters()) + list(head.parameters()), lr=lr
-        )
-        loss_fn = nn.MSELoss()
-        Xt = torch.tensor(X_tr, dtype=torch.float32)
-        yt = torch.tensor(y_tr[:, None], dtype=torch.float32)
-        for _ in range(epochs):
-            opt.zero_grad()
-            out, _ = lstm(Xt)
-            loss = loss_fn(head(out[:, -1]), yt)
-            loss.backward()
-            opt.step()
-        with torch.no_grad():
-            out, _ = lstm(torch.tensor(X[:, :, None], dtype=torch.float32))
-            preds = head(out[:, -1]).numpy().ravel().astype(np.float64)
-    else:
-        from ._lstm_numpy import NumpyLSTM
-
-        model = NumpyLSTM(hidden, seed=seed)
-        model.fit(X_tr, y_tr, epochs=epochs, batch=batch, seed=seed, lr=lr)
-        preds = model.predict(X[:, :, None])
+    model = NumpyLSTM(hidden, seed=seed)
+    model.fit(X_tr, y_tr, epochs=epochs, batch=batch, seed=seed, lr=lr)
+    preds = model.predict(X[:, :, None])
     full = np.full(n, np.nan)
     full[seq_len:] = preds * sd + mu
     return {"pred_mean": full, "resid": y - full}
@@ -101,7 +70,6 @@ def lstm_forecast(
     train_frac: float = 1.0,
     seed: int = 0,
     max_train_windows: int | None = None,
-    backend: str = "auto",
     batch: int = 64,
     lr: float = 1e-3,
 ) -> DataFrame:
@@ -113,14 +81,11 @@ def lstm_forecast(
     z-normalized with train moments and predictions inverse-transformed
     (``src/run_lstm.py:36-39,74``).  Training is seeded per series.
     """
-    use_torch = backend == "torch" or (backend == "auto" and HAS_TORCH)
-    if backend == "torch" and not HAS_TORCH:
-        raise NotImplementedError("torch backend requested but not installed")
     return per_series(
         df.select("series_id", "timestamp", "value", "rn"),
         LSTM_SCHEMA,
         partial(lstm_forecast_kernel, seq_len=seq_len, hidden=hidden,
                 epochs=epochs, train_frac=train_frac, seed=seed,
-                max_train_windows=max_train_windows, use_torch=use_torch,
-                batch=batch, lr=lr),
+                max_train_windows=max_train_windows, batch=batch,
+                lr=lr),
     )

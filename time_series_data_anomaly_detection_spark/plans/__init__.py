@@ -1,1 +1,3 @@
-from .registry import queries, oracle_sql  # noqa: F401
+"""Query plans: ``pipelines`` (the production flows) and the gate
+registry (``registry``, ``registry_datapipe``).  The registry is not
+imported here, so importing a pipeline does not build the oracles."""

@@ -50,7 +50,7 @@ from ..operators.sweep import (
     k_grid,
 )
 from ..operators.decompose import resample, classical_decompose
-from .._exact import DEC as DEC_T, r6 as _r6col
+from .._exact import DEC as DEC_T, dsum as _dsum, r6 as _r6col
 
 R = 6  # output rounding decimals
 
@@ -98,6 +98,56 @@ def tieproof_round_sql(sql: str) -> str:
 
 def _series(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_row_index(events_as_series(spark, sf_dir))
+
+
+# ---------------------------------------------------------------------------
+# Shared pieces of the hash-gated fixed twins (Spark side)
+# ---------------------------------------------------------------------------
+
+
+def _last_w(
+    spark: SparkSession, sf_dir: str, cap: int, min_n: int
+) -> DataFrame:
+    """Every series with at least ``min_n`` points, cut to its last
+    ``w = least(n, cap)`` points: columns ``series_id, rn, value, n,
+    w`` and the 0-based tail index ``j``.  A twin at ``cap == min_n``
+    sees exactly ``cap`` points of every series it keeps."""
+    s = _series(spark, sf_dir).select("series_id", "rn", "value")
+    cnt = (
+        s.groupBy("series_id")
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") >= min_n)
+        .withColumn("w", F.least(F.col("n"), F.lit(cap)))
+    )
+    return (
+        s.join(F.broadcast(cnt), "series_id")
+        .filter(F.col("rn") > F.col("n") - F.col("w"))
+        .withColumn("j", F.col("rn") - (F.col("n") - F.col("w")) - F.lit(1))
+    )
+
+
+def _el(arr, i):
+    """``arr[i]`` for a 0-based integer Column ``i``."""
+    return F.element_at(arr, (i + F.lit(1)).cast("int"))
+
+
+def _q8(c):
+    """8-decimal floor quantizer for the one transcendental of a twin
+    step: libm results agree far beyond 1e-8, so after it both engines
+    hold identical doubles."""
+    return F.floor(c * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
+
+
+def _let(val, body):
+    """Evaluate-once binding for Catalyst expressions: Catalyst does
+    NO common-subexpression elimination inside higher-order-function
+    lambdas, so referencing an expression twice re-evaluates its whole
+    subtree (the O(w²) folds below would otherwise re-run their pdf /
+    cost scans up to ~20× per step).  Wrapping the value as the sole
+    element of an array and binding it through a ``transform`` lambda
+    makes it a NamedLambdaVariable — evaluated exactly once per step —
+    at the cost of one single-element array allocation."""
+    return F.element_at(F.transform(F.array(val), body), 1)
 
 
 # ---------------------------------------------------------------------------
@@ -678,28 +728,11 @@ def _acf_fft_fixed_plan(spark, sf_dir, n_win, nfft, max_lag):
     tw = spark.createDataFrame(
         _dft_twiddles(NF), "r int, c double, sn double"
     )
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= N)
-    )
-    tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - N)
-        .select(
-            "series_id",
-            (F.col("rn") - (F.col("n") - F.lit(N)) - F.lit(1))
-            .cast("int")
-            .alias("t"),
-            "value",
-        )
+    tail = _last_w(spark, sf_dir, N, N).select(
+        "series_id", F.col("j").cast("int").alias("t"), "value"
     )
     mu = tail.groupBy("series_id").agg(
-        (
-            F.sum(F.col("value").cast(DEC_T)).cast("double")
-            / F.lit(float(N))
-        ).alias("mu")
+        (_dsum(F.col("value")) / F.lit(float(N))).alias("mu")
     )
     xc = tail.join(F.broadcast(mu), "series_id").select(
         "series_id", "t", (F.col("value") - F.col("mu")).alias("xc")
@@ -727,12 +760,8 @@ def _acf_fft_fixed_plan(spark, sf_dir, n_win, nfft, max_lag):
         .join(F.broadcast(tw), "r")
     )
     spec = terms.groupBy("series_id", "k").agg(
-        F.sum((F.col("xc") * F.col("c")).cast(DEC_T))
-        .cast("double")
-        .alias("re"),
-        F.sum((F.col("xc") * F.col("sn")).cast(DEC_T))
-        .cast("double")
-        .alias("im"),
+        _dsum(F.col("xc") * F.col("c")).alias("re"),
+        _dsum(F.col("xc") * F.col("sn")).alias("im"),
     )
     power = spec.select(
         "series_id",
@@ -3480,30 +3509,12 @@ def _sr_fixed_plan(spark, sf_dir, nfft):
     ``spectral_residual`` (numpy rFFT per series).
     """
     trig_rows, _ = _sr_trig_table(nfft)
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
     trig = spark.createDataFrame(
         trig_rows, "m long, cs double, sn double"
     )
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= nfft)
+    tail = _last_w(spark, sf_dir, nfft, nfft).select(
+        "series_id", "rn", "value", "j"
     )
-    tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - nfft)
-        .select(
-            "series_id",
-            "rn",
-            "value",
-            (F.col("rn") - (F.col("n") - F.lit(nfft)) - F.lit(1)).alias(
-                "j"
-            ),
-        )
-    )
-
-    def dsum(expr):
-        return F.sum(expr.cast(DEC_T)).cast("double")
 
     # forward DFT: the half-spectrum mirror trick that pays off in the
     # acf twins (where the power spectrum collapses the phase) was
@@ -3523,8 +3534,8 @@ def _sr_fixed_plan(spark, sf_dir, nfft):
         .join(F.broadcast(trig), "m")
         .groupBy("series_id", "k")
         .agg(
-            dsum(F.col("value") * F.col("cs")).alias("re"),
-            dsum(-(F.col("value") * F.col("sn"))).alias("im"),
+            _dsum(F.col("value") * F.col("cs")).alias("re"),
+            _dsum(-(F.col("value") * F.col("sn"))).alias("im"),
         )
     )
     amp = F.sqrt(F.col("re") * F.col("re") + F.col("im") * F.col("im"))
@@ -3535,9 +3546,7 @@ def _sr_fixed_plan(spark, sf_dir, nfft):
     prv = F.coalesce(F.lag("ap").over(wk), F.col("ap"))
     nxt = F.coalesce(F.lead("ap").over(wk), F.col("ap"))
     mag_raw = F.col("ap") / F.cbrt((prv * F.col("ap")) * nxt)
-    mag = F.floor(mag_raw * F.lit(100000000.0) + F.lit(0.5)) / F.lit(
-        100000000.0
-    )
+    mag = _q8(mag_raw)
     den = F.when(F.col("amp") > F.lit(1e-8), F.col("amp")).otherwise(
         F.lit(1e-8)
     )
@@ -3559,12 +3568,12 @@ def _sr_fixed_plan(spark, sf_dir, nfft):
         .join(F.broadcast(trig), "m")
         .groupBy("series_id", "j")
         .agg(
-            dsum(F.col("gre") * F.col("cs") - F.col("gim") * F.col("sn")).alias(
-                "sre"
-            ),
-            dsum(F.col("gre") * F.col("sn") + F.col("gim") * F.col("cs")).alias(
-                "sim"
-            ),
+            _dsum(
+                F.col("gre") * F.col("cs") - F.col("gim") * F.col("sn")
+            ).alias("sre"),
+            _dsum(
+                F.col("gre") * F.col("sn") + F.col("gim") * F.col("cs")
+            ).alias("sim"),
         )
     )
     sal = (
@@ -3872,287 +3881,22 @@ def q_matrix_profile(spark, sf_dir):
     )
 
 
-def q_matrix_profile_fixed(spark, sf_dir):
-    """Hash-gated fixed twin of the matrix profile: the exact
-    z-normalized nearest-neighbor window distance over each series'
-    LAST 128 points at m=8 — at this window the profile needs no FFT
-    at all.  QT dot products come from per-DIAGONAL prefix sums
-    (``qt(i, i+d) = Σ x·x_lag_d`` over the window, one exact-decimal
-    cumsum per lag d), window moments from the same prefix-sum trick,
-    and the mutual min over neighbors is a keyed ``min(struct)`` —
-    every step is fixed-order double algebra on decimal sums, so
-    DuckDB mirrors it bit-for-bit.  Same distance identity, constant-
-    window conventions and m/2 exclusion as
-    ``functions/matrix_profile.py`` (parity test at rtol 1e-6);
-    discord marking stays with the full operator (greedy selection is
-    sequential), the twin gates the PROFILE.
-
-    Scale shape: per-series state is the 128-point tail; the pair
-    frame is k²/2 ≈ 7k rows per series of pure column algebra —
-    bounded regardless of series length."""
-    W, M = 128, 8
-    EXCL = max(1, M // 2)
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= W)
-    )
-    tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - W)
-        .select(
-            "series_id",
-            "rn",
-            "value",
-            (F.col("rn") - (F.col("n") - F.lit(W)) - F.lit(1)).alias("j"),
-        )
-    )
-    wj = (
-        Window.partitionBy("series_id")
-        .orderBy("j")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    # window moments from exact-decimal prefix sums (frame diff via
-    # lag is exact in decimal space — the SQL_ROLL recipe)
-    cum = tail.select(
-        "series_id",
-        "j",
-        "rn",
-        F.sum(F.col("value").cast(DEC_T)).over(wj).alias("c1"),
-        F.sum((F.col("value") * F.col("value")).cast(DEC_T))
-        .over(wj)
-        .alias("c2"),
-    )
-    wl = Window.partitionBy("series_id").orderBy("j")
-    zero = F.lit(0).cast(DEC_T)
-    s1 = (
-        F.lead("c1", M - 1).over(wl) - F.coalesce(F.lag("c1").over(wl), zero)
-    ).cast("double")
-    s2 = (
-        F.lead("c2", M - 1).over(wl) - F.coalesce(F.lag("c2").over(wl), zero)
-    ).cast("double")
-    mu = F.col("s1") / F.lit(float(M))
-    var = F.greatest(
-        F.col("s2") / F.lit(float(M)) - mu * mu, F.lit(0.0)
-    )
-    sig = F.sqrt(var)
-    stats = (
-        cum.select("series_id", "j", "rn", s1.alias("s1"), s2.alias("s2"))
-        .filter(F.col("j") <= F.lit(W - M))
-        .select(
-            "series_id",
-            F.col("j").alias("i"),
-            "rn",
-            mu.alias("mu"),
-            sig.alias("sig"),
-            (
-                sig
-                <= F.lit(1e-7) * F.greatest(F.lit(1.0), F.abs(mu))
-            ).alias("is_const"),
-        )
-    )
-    # per-diagonal lagged products -> prefix sums -> QT
-    t2 = tail.select(
-        "series_id", F.col("j").alias("jb"), F.col("value").alias("vb")
-    )
-    prods = (
-        tail.join(t2, "series_id")
-        .filter(
-            (F.col("jb") - F.col("j") > F.lit(EXCL))
-            & (F.col("jb") - F.col("j") <= F.lit(W - M))
-        )
-        .select(
-            "series_id",
-            (F.col("jb") - F.col("j")).alias("d"),
-            "j",
-            (F.col("value") * F.col("vb")).alias("p"),
-        )
-    )
-    wd = (
-        Window.partitionBy("series_id", "d")
-        .orderBy("j")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    wdl = Window.partitionBy("series_id", "d").orderBy("j")
-    pc = prods.select(
-        "series_id",
-        "d",
-        "j",
-        F.sum(F.col("p").cast(DEC_T)).over(wd).alias("cp"),
-    )
-    qt = (
-        pc.select(
-            "series_id",
-            "d",
-            "j",
-            (
-                F.lead("cp", M - 1).over(wdl)
-                - F.coalesce(F.lag("cp").over(wdl), zero)
-            ).cast("double").alias("qt"),
-        )
-        .filter(
-            F.col("qt").isNotNull()
-            & (F.col("j") + F.col("d") <= F.lit(W - M))
-        )
-        .select("series_id", F.col("j").alias("i"), "d", "qt")
-    )
-    sa = stats.select(
-        "series_id", "i", F.col("rn").alias("rn_a"),
-        F.col("mu").alias("mu_a"), F.col("sig").alias("sig_a"),
-        F.col("is_const").alias("ca"),
-    )
-    sb = stats.select(
-        "series_id", F.col("i").alias("ib"), F.col("rn").alias("rn_b"),
-        F.col("mu").alias("mu_b"), F.col("sig").alias("sig_b"),
-        F.col("is_const").alias("cb"),
-    )
-    pr = (
-        qt.withColumn("ib", F.col("i") + F.col("d"))
-        .join(sa, ["series_id", "i"])
-        .join(sb, ["series_id", "ib"])
-    )
-    mm = F.lit(float(M))
-    ssafe_a = F.when(F.col("ca"), F.lit(1.0)).otherwise(F.col("sig_a"))
-    ssafe_b = F.when(F.col("cb"), F.lit(1.0)).otherwise(F.col("sig_b"))
-    d2 = (
-        F.when(F.col("ca") & F.col("cb"), F.lit(0.0))
-        .when(F.col("ca") | F.col("cb"), F.lit(2.0) * mm)
-        .otherwise(
-            F.lit(2.0)
-            * mm
-            * (
-                F.lit(1.0)
-                - (F.col("qt") - mm * F.col("mu_a") * F.col("mu_b"))
-                / (mm * ssafe_a * ssafe_b)
-            )
-        )
-    )
-    both = pr.select(
-        "series_id",
-        F.col("i").alias("w"),
-        F.col("rn_a").alias("rn"),
-        d2.alias("d2"),
-        F.col("ib").alias("nn"),
-    ).unionByName(
-        pr.select(
-            "series_id",
-            F.col("ib").alias("w"),
-            F.col("rn_b").alias("rn"),
-            d2.alias("d2"),
-            F.col("i").alias("nn"),
-        )
-    )
-    best = both.groupBy("series_id", "w", "rn").agg(
-        F.min(F.struct("d2", "nn")).alias("b")
-    )
-    return best.select(
-        "series_id",
-        "rn",
-        _rnd(
-            F.sqrt(F.greatest(F.col("b.d2"), F.lit(0.0))), R
-        ).alias("mp"),
-        (F.col("b.nn") + F.lit(1)).cast("long").alias("nn_idx"),
-    )
-
-
-ORACLES["matrix_profile_fixed"] = f"""
-WITH {SQL_S},
-cnt AS (
-  SELECT series_id, count(*) AS n FROM s GROUP BY 1
-  HAVING count(*) >= 128),
-tl AS (
-  SELECT s.series_id, s.rn, s.value, s.rn - (c.n - 128) - 1 AS j
-  FROM s JOIN cnt c USING (series_id)
-  WHERE s.rn > c.n - 128),
-cum AS (
-  SELECT series_id, j, rn,
-         sum(CAST(value AS DECIMAL(38,12))) OVER wj AS c1,
-         sum(CAST(value * value AS DECIMAL(38,12))) OVER wj AS c2
-  FROM tl
-  WINDOW wj AS (PARTITION BY series_id ORDER BY j
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-segs AS (
-  SELECT series_id, j, rn,
-         CAST(lead(c1, 7) OVER wl
-              - coalesce(lag(c1) OVER wl, CAST(0 AS DECIMAL(38,12)))
-              AS DOUBLE) AS s1,
-         CAST(lead(c2, 7) OVER wl
-              - coalesce(lag(c2) OVER wl, CAST(0 AS DECIMAL(38,12)))
-              AS DOUBLE) AS s2
-  FROM cum
-  WINDOW wl AS (PARTITION BY series_id ORDER BY j)),
-stats AS (
-  SELECT series_id, j AS i, rn,
-         s1 / 8.0 AS mu,
-         sqrt(greatest(s2 / 8.0 - (s1 / 8.0) * (s1 / 8.0), 0.0)) AS sig,
-         sqrt(greatest(s2 / 8.0 - (s1 / 8.0) * (s1 / 8.0), 0.0))
-           <= 1e-7 * greatest(1.0, abs(s1 / 8.0)) AS is_const
-  FROM segs WHERE j <= 120),
-prods AS (
-  SELECT a.series_id, b.j - a.j AS d, a.j,
-         a.value * b.value AS p
-  FROM tl a JOIN tl b ON b.series_id = a.series_id
-  WHERE b.j - a.j > 4 AND b.j - a.j <= 120),
-pc AS (
-  SELECT series_id, d, j,
-         sum(CAST(p AS DECIMAL(38,12))) OVER wd AS cp
-  FROM prods
-  WINDOW wd AS (PARTITION BY series_id, d ORDER BY j
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-qt AS (
-  SELECT series_id, j AS i, d,
-         CAST(lead(cp, 7) OVER wdl
-              - coalesce(lag(cp) OVER wdl, CAST(0 AS DECIMAL(38,12)))
-              AS DOUBLE) AS qt
-  FROM pc
-  WINDOW wdl AS (PARTITION BY series_id, d ORDER BY j)),
-pr AS (
-  SELECT q.series_id, q.i, q.i + q.d AS ib, q.qt,
-         a.rn AS rn_a, a.mu AS mu_a, a.sig AS sig_a, a.is_const AS ca,
-         b.rn AS rn_b, b.mu AS mu_b, b.sig AS sig_b, b.is_const AS cb
-  FROM qt q
-  JOIN stats a ON a.series_id = q.series_id AND a.i = q.i
-  JOIN stats b ON b.series_id = q.series_id AND b.i = q.i + q.d
-  WHERE q.qt IS NOT NULL AND q.i + q.d <= 120),
-dd AS (
-  SELECT series_id, i, ib, rn_a, rn_b,
-         CASE WHEN ca AND cb THEN 0.0
-              WHEN ca OR cb THEN 2.0 * 8.0
-              ELSE 2.0 * 8.0 * (1.0 - (qt - 8.0 * mu_a * mu_b)
-                   / (8.0 * (CASE WHEN ca THEN 1.0 ELSE sig_a END)
-                          * (CASE WHEN cb THEN 1.0 ELSE sig_b END)))
-         END AS d2
-  FROM pr),
-bth AS (
-  SELECT series_id, i AS w, rn_a AS rn, d2, ib AS nn FROM dd
-  UNION ALL
-  SELECT series_id, ib AS w, rn_b AS rn, d2, i AS nn FROM dd),
-best AS (
-  SELECT series_id, w, rn,
-         min({{'d2': d2, 'nn': nn}}) AS b
-  FROM bth GROUP BY 1, 2, 3)
-SELECT series_id, rn,
-       round(sqrt(greatest(b.d2, 0.0)), {R}) AS mp,
-       CAST(b.nn + 1 AS BIGINT) AS nn_idx
-FROM best
-"""
-
-
-def q_matrix_profile_fixed_full(spark, sf_dir):
-    """FULL-EXTENT hash-gated matrix-profile twin (r08 verdict item
-    #1): same exact per-diagonal prefix-sum QT algebra as
-    ``matrix_profile_fixed``, but over each series' last
-    ``w = least(n, 2048)`` points at m=8 — at the gate SF (sf0.01,
-    ~2000-point series) that is the ENTIRE series, so the hash gate
-    covers the same data extent the rows-only ``matrix_profile``
-    operator processes, not a 128-point tail.  At larger SFs the
-    2048-point cap bounds the O(w²) pair frame (~2M rows/series of
-    pure column algebra) so the query stays benchable; the uncapped
+def _mp_fixed_plan(spark, sf_dir, cap, min_n):
+    """Shared builder for the hash-gated matrix-profile twins: the
+    exact z-normalized nearest-neighbor window distance at m=8 over
+    each series' last ``w = least(n, cap)`` points (series with
+    ``n >= min_n``) — at this window the profile needs no FFT.  Window
+    moments come from rolling exact-decimal frame sums, QT dot
+    products from exact decimal chains, and the mutual min over
+    neighbors is a keyed ``min(struct)`` — every step is fixed-order
+    double algebra on decimal sums, so DuckDB mirrors it bit-for-bit.
+    Same distance identity, constant-window conventions and m/2
+    exclusion as ``functions/matrix_profile.py`` (parity tests in
+    tests/test_mp_shesd.py); discord marking stays with the full
+    operator (greedy selection is sequential), the twin gates the
+    PROFILE.  The cap bounds the
+    O(w²) pair frame (~2M rows per series at w=2048); the uncapped
     scale path is ``matrix_profile_tiled``.
-
-    Parity: ``tests/test_changepoints.py`` pins this twin against
-    ``functions/matrix_profile.py`` scores at m=8 on the same tail.
 
     Input-magnitude bound (r10 ADVICE): the QT products are cast to
     decimal(30,12) — 18 integer digits — so a per-term |a·b| ≥ 1e18
@@ -4162,35 +3906,19 @@ def q_matrix_profile_fixed_full(spark, sf_dir):
     this twin (the production ``matrix_profile`` z-normalizes in
     float and has no such bound)."""
     M = 8
-    W_CAP = 2048
     EXCL = max(1, M // 2)
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 64)
-        .withColumn("w", F.least(F.col("n"), F.lit(W_CAP)))
-    )
     guarded_value = F.when(
         F.abs(F.col("value")) < F.lit(1e9), F.col("value")
     ).otherwise(
         F.raise_error(
             F.lit(
-                "matrix_profile_fixed_full: |value| >= 1e9 overflows the"
+                "matrix_profile_fixed: |value| >= 1e9 overflows the"
                 " decimal(30,12) QT chain — rescale the series first"
             )
         )
     )
-    tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - F.col("w"))
-        .select(
-            "series_id",
-            "rn",
-            guarded_value.alias("value"),
-            (F.col("rn") - (F.col("n") - F.col("w")) - F.lit(1)).alias("j"),
-            "w",
-        )
+    tail = _last_w(spark, sf_dir, cap, min_n).select(
+        "series_id", "rn", guarded_value.alias("value"), "j", "w"
     )
     # window moments and QT both come from ROLLING exact-decimal frame
     # sums (ROWS current..+7): decimal addition is exact, so the
@@ -4365,6 +4093,107 @@ def q_matrix_profile_fixed_full(spark, sf_dir):
     )
 
 
+def q_matrix_profile_fixed(spark, sf_dir):
+    """Hash-gated fixed twin of the matrix profile over each series'
+    last 128 points at m=8 (see ``_mp_fixed_plan``): the pair frame
+    is k²/2 ≈ 7k rows per series, bounded regardless of series
+    length."""
+    return _mp_fixed_plan(spark, sf_dir, 128, 128)
+
+
+ORACLES["matrix_profile_fixed"] = f"""
+WITH {SQL_S},
+cnt AS (
+  SELECT series_id, count(*) AS n FROM s GROUP BY 1
+  HAVING count(*) >= 128),
+tl AS (
+  SELECT s.series_id, s.rn, s.value, s.rn - (c.n - 128) - 1 AS j
+  FROM s JOIN cnt c USING (series_id)
+  WHERE s.rn > c.n - 128),
+cum AS (
+  SELECT series_id, j, rn,
+         sum(CAST(value AS DECIMAL(38,12))) OVER wj AS c1,
+         sum(CAST(value * value AS DECIMAL(38,12))) OVER wj AS c2
+  FROM tl
+  WINDOW wj AS (PARTITION BY series_id ORDER BY j
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+segs AS (
+  SELECT series_id, j, rn,
+         CAST(lead(c1, 7) OVER wl
+              - coalesce(lag(c1) OVER wl, CAST(0 AS DECIMAL(38,12)))
+              AS DOUBLE) AS s1,
+         CAST(lead(c2, 7) OVER wl
+              - coalesce(lag(c2) OVER wl, CAST(0 AS DECIMAL(38,12)))
+              AS DOUBLE) AS s2
+  FROM cum
+  WINDOW wl AS (PARTITION BY series_id ORDER BY j)),
+stats AS (
+  SELECT series_id, j AS i, rn,
+         s1 / 8.0 AS mu,
+         sqrt(greatest(s2 / 8.0 - (s1 / 8.0) * (s1 / 8.0), 0.0)) AS sig,
+         sqrt(greatest(s2 / 8.0 - (s1 / 8.0) * (s1 / 8.0), 0.0))
+           <= 1e-7 * greatest(1.0, abs(s1 / 8.0)) AS is_const
+  FROM segs WHERE j <= 120),
+prods AS (
+  SELECT a.series_id, b.j - a.j AS d, a.j,
+         a.value * b.value AS p
+  FROM tl a JOIN tl b ON b.series_id = a.series_id
+  WHERE b.j - a.j > 4 AND b.j - a.j <= 120),
+pc AS (
+  SELECT series_id, d, j,
+         sum(CAST(p AS DECIMAL(38,12))) OVER wd AS cp
+  FROM prods
+  WINDOW wd AS (PARTITION BY series_id, d ORDER BY j
+                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
+qt AS (
+  SELECT series_id, j AS i, d,
+         CAST(lead(cp, 7) OVER wdl
+              - coalesce(lag(cp) OVER wdl, CAST(0 AS DECIMAL(38,12)))
+              AS DOUBLE) AS qt
+  FROM pc
+  WINDOW wdl AS (PARTITION BY series_id, d ORDER BY j)),
+pr AS (
+  SELECT q.series_id, q.i, q.i + q.d AS ib, q.qt,
+         a.rn AS rn_a, a.mu AS mu_a, a.sig AS sig_a, a.is_const AS ca,
+         b.rn AS rn_b, b.mu AS mu_b, b.sig AS sig_b, b.is_const AS cb
+  FROM qt q
+  JOIN stats a ON a.series_id = q.series_id AND a.i = q.i
+  JOIN stats b ON b.series_id = q.series_id AND b.i = q.i + q.d
+  WHERE q.qt IS NOT NULL AND q.i + q.d <= 120),
+dd AS (
+  SELECT series_id, i, ib, rn_a, rn_b,
+         CASE WHEN ca AND cb THEN 0.0
+              WHEN ca OR cb THEN 2.0 * 8.0
+              ELSE 2.0 * 8.0 * (1.0 - (qt - 8.0 * mu_a * mu_b)
+                   / (8.0 * (CASE WHEN ca THEN 1.0 ELSE sig_a END)
+                          * (CASE WHEN cb THEN 1.0 ELSE sig_b END)))
+         END AS d2
+  FROM pr),
+bth AS (
+  SELECT series_id, i AS w, rn_a AS rn, d2, ib AS nn FROM dd
+  UNION ALL
+  SELECT series_id, ib AS w, rn_b AS rn, d2, i AS nn FROM dd),
+best AS (
+  SELECT series_id, w, rn,
+         min({{'d2': d2, 'nn': nn}}) AS b
+  FROM bth GROUP BY 1, 2, 3)
+SELECT series_id, rn,
+       round(sqrt(greatest(b.d2, 0.0)), {R}) AS mp,
+       CAST(b.nn + 1 AS BIGINT) AS nn_idx
+FROM best
+"""
+
+
+def q_matrix_profile_fixed_full(spark, sf_dir):
+    """FULL-EXTENT hash-gated matrix-profile twin (r08 verdict item
+    #1): the matrix-profile twin over each series' last
+    ``w = least(n, 2048)`` points at m=8 — at the gate SF (sf0.01,
+    ~2000-point series) the ENTIRE series, so the hash gate covers the
+    extent the rows-only ``matrix_profile`` operator processes.  See
+    ``_mp_fixed_plan``."""
+    return _mp_fixed_plan(spark, sf_dir, 2048, 64)
+
+
 ORACLES["matrix_profile_fixed_full"] = f"""
 WITH {SQL_S},
 cnt AS (
@@ -4492,39 +4321,42 @@ def _shesd_lams(n: int = 128, alpha: float = 0.05, k: int = 6):
 _SHESD_LAMS = _shesd_lams()
 
 
-def q_shesd_fixed(spark, sf_dir):
-    """Hash-gated fixed twin of S-H-ESD: each series' LAST 128 points,
+# λ critical values for EVERY test-set size an S-H-ESD twin can see
+# (w = least(n, 2048), n >= 128) — one shared literal table, so
+# the t-quantile transcendental chain never runs inside either engine
+# (the literal-table recipe that made harmonic_forecast_fixed exact)
+_SHESD_LAM_TABLE = [
+    (w, *_shesd_lams(w)) for w in range(128, 2049)
+]
+
+
+def _shesd_fixed_plan(spark, sf_dir, cap, min_n):
+    """Shared builder for the hash-gated S-H-ESD twins: each series'
+    last ``w = least(n, cap)`` points (series with ``n >= min_n``),
     period-24 seasonal medians + overall-median centering (exact
     percentiles — engine-identical), then K=6 generalized-ESD rounds
-    with robust median/MAD scores against λ literals precomputed from
-    the engine's own t-quantile (``_shesd_lams``).
+    with robust median/MAD scores.
 
     The iterative remove-the-max loop UNROLLS: K is fixed, so each
     round is a block of deterministic column algebra over the
     remaining-values array (sorted-array medians with the midpoint
     rule, strict-> argmax fold keeping the first max like np.argmax,
-    λ_i literal compare, list_filter removal) — Spark chains six
-    withColumn blocks, DuckDB chains six CTE blocks, no recursion
-    needed.  Every op is fixed-order double algebra on exact-median /
-    raw-double inputs, so the gate is exact.  The anomaly count is the
-    largest i whose test statistic exceeded λ_i (the paper's rule);
-    flags mark the first n_det removed points."""
-    W, PERIOD, K = 128, 24, 6
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= W)
-    )
+    λ_i compare, list_filter removal) — Spark chains six withColumn
+    blocks, DuckDB chains six CTE blocks, no recursion needed.  The
+    ESD critical values λ_i depend on the test-set size, so the twin
+    joins the shared literal table ``_SHESD_LAM_TABLE`` (λ_1..λ_6 for
+    every w in [128, 2048], precomputed from the engine's own
+    t-quantile and rounded to 12 decimals) as a broadcast frame; the
+    128-point oracle bakes the same w=128 row in as literals, the
+    full-extent one joins the table as a VALUES list.  Every op is
+    fixed-order double algebra on exact-median / raw-double inputs,
+    so the gate is exact.  The anomaly count is the largest i whose
+    test statistic exceeded λ_i (the paper's rule); flags mark the
+    first n_det removed points."""
+    PERIOD, K = 24, 6
     tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - W)
-        .select(
-            "series_id",
-            "rn",
-            "value",
-            (F.col("rn") - (F.col("n") - F.lit(W)) - F.lit(1)).alias("j"),
-        )
+        _last_w(spark, sf_dir, cap, min_n)
+        .select("series_id", "rn", "value", "j", "w")
         .withColumn("pos", (F.col("j") % F.lit(PERIOD)).cast("int"))
     )
     seas = tail.groupBy("series_id", "pos").agg(
@@ -4539,15 +4371,30 @@ def q_shesd_fixed(spark, sf_dir):
     rz = detr.join(F.broadcast(medall), "series_id").withColumn(
         "resid", F.col("detr") - F.col("med_all")
     )
-    ser = rz.groupBy("series_id").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("j").cast("int").alias("idx"), F.col("resid").alias("v")))
-            ),
-            lambda t: F.struct(t["v"].alias("v"), t["idx"].alias("idx")),
-        ).alias("st0"),
-    ).withColumn("cands0", F.array().cast("array<int>")).withColumn(
-        "ndet0", F.lit(0)
+    lam_df = spark.createDataFrame(
+        _SHESD_LAM_TABLE,
+        "w int, lam1 double, lam2 double, lam3 double, "
+        "lam4 double, lam5 double, lam6 double",
+    )
+    ser = (
+        rz.groupBy("series_id")
+        .agg(
+            F.transform(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(
+                            F.col("j").cast("int").alias("idx"),
+                            F.col("resid").alias("v"),
+                        )
+                    )
+                ),
+                lambda t: F.struct(t["v"].alias("v"), t["idx"].alias("idx")),
+            ).alias("st0"),
+            F.max("w").cast("int").alias("w"),
+        )
+        .withColumn("cands0", F.array().cast("array<int>"))
+        .withColumn("ndet0", F.lit(0))
+        .join(F.broadcast(lam_df), "w")
     )
 
     def arr_median(ls):
@@ -4608,7 +4455,7 @@ def q_shesd_fixed(spark, sf_dir):
             .withColumn(
                 f"ndet{i}",
                 F.when(
-                    ok & (bi["score"] > F.lit(_SHESD_LAMS[i - 1])),
+                    ok & (bi["score"] > F.col(f"lam{i}")),
                     F.lit(i),
                 ).otherwise(F.col(f"ndet{i - 1}")),
             )
@@ -4627,6 +4474,12 @@ def q_shesd_fixed(spark, sf_dir):
             F.col("anoms"), F.col("j").cast("int")
         ).cast("int").alias("anomaly"),
     )
+
+
+def q_shesd_fixed(spark, sf_dir):
+    """Hash-gated fixed twin of S-H-ESD over each series' last 128
+    points (see ``_shesd_fixed_plan``)."""
+    return _shesd_fixed_plan(spark, sf_dir, 128, 128)
 
 
 def _shesd_fixed_sql() -> str:
@@ -4730,165 +4583,13 @@ ORACLES["acf_fft_fixed"] = _acf_fft_fixed_sql()
 ORACLES["acf_fft_fixed_512"] = _acf_fft_fixed_sql(512, 1024, 16)
 
 
-# λ critical values for EVERY test-set size the full-extent twin can
-# see (w = least(n, 2048), n >= 128) — one shared literal table, so
-# the t-quantile transcendental chain never runs inside either engine
-# (the literal-table recipe that made harmonic_forecast_fixed exact)
-_SHESD_LAM_TABLE = [
-    (w, *_shesd_lams(w)) for w in range(128, 2049)
-]
-
-
 def q_shesd_fixed_full(spark, sf_dir):
     """FULL-EXTENT hash-gated S-H-ESD twin (r08 verdict item #1): the
-    same unrolled K=6 generalized-ESD rounds as ``shesd_fixed``, but
-    over each series' last ``w = least(n, 2048)`` points — the ENTIRE
-    series at the gate SF (sf0.01, ~2000 points), so the hash gate
-    covers the extent the rows-only ``shesd_flags`` operator processes.
-
-    The ESD critical values λ_i depend on the test-set size, so the
-    twin joins a shared literal table (``_SHESD_LAM_TABLE``: λ_1..λ_6
-    for every w in [128, 2048], precomputed from the engine's own
-    t-quantile and rounded to 12 decimals) instead of baking a single
-    n=128 constant — Spark gets it as a broadcast frame, DuckDB as a
-    VALUES list, both parsing the identical decimal literals."""
-    W_CAP, PERIOD, K = 2048, 24, 6
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 128)
-        .withColumn("w", F.least(F.col("n"), F.lit(W_CAP)))
-    )
-    tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - F.col("w"))
-        .select(
-            "series_id",
-            "rn",
-            "value",
-            (F.col("rn") - (F.col("n") - F.col("w")) - F.lit(1)).alias("j"),
-        )
-        .withColumn("pos", (F.col("j") % F.lit(PERIOD)).cast("int"))
-    )
-    seas = tail.groupBy("series_id", "pos").agg(
-        F.percentile(F.col("value"), F.lit(0.5)).alias("seasonal")
-    )
-    detr = tail.join(F.broadcast(seas), ["series_id", "pos"]).withColumn(
-        "detr", F.col("value") - F.col("seasonal")
-    )
-    medall = detr.groupBy("series_id").agg(
-        F.percentile(F.col("detr"), F.lit(0.5)).alias("med_all")
-    )
-    rz = detr.join(F.broadcast(medall), "series_id").withColumn(
-        "resid", F.col("detr") - F.col("med_all")
-    )
-    lam_df = spark.createDataFrame(
-        _SHESD_LAM_TABLE,
-        "w int, lam1 double, lam2 double, lam3 double, "
-        "lam4 double, lam5 double, lam6 double",
-    )
-    ser = (
-        rz.groupBy("series_id")
-        .agg(
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.struct(
-                            F.col("j").cast("int").alias("idx"),
-                            F.col("resid").alias("v"),
-                        )
-                    )
-                ),
-                lambda t: F.struct(t["v"].alias("v"), t["idx"].alias("idx")),
-            ).alias("st0"),
-        )
-        .withColumn("cands0", F.array().cast("array<int>"))
-        .withColumn("ndet0", F.lit(0))
-        .join(
-            F.broadcast(cnt.select("series_id", F.col("w").cast("int").alias("w"))),
-            "series_id",
-        )
-        .join(F.broadcast(lam_df), "w")
-    )
-
-    def arr_median(ls):
-        m = F.size(ls)
-        half = (m / F.lit(2)).cast("int")
-        return F.when(
-            m % 2 == 1,
-            F.element_at(ls, ((m + F.lit(1)) / F.lit(2)).cast("int")),
-        ).otherwise(
-            (F.element_at(ls, half) + F.element_at(ls, half + F.lit(1)))
-            / F.lit(2.0)
-        )
-
-    for i in range(1, K + 1):
-        p = f"st{i - 1}"
-        av_sorted = F.array_sort(F.transform(F.col(p), lambda t: t["v"]))
-        ser = ser.withColumn(f"med{i}", arr_median(av_sorted))
-        ad_sorted = F.array_sort(
-            F.transform(F.col(p), lambda t: F.abs(t["v"] - F.col(f"med{i}")))
-        )
-        ser = ser.withColumn(
-            f"mad{i}", F.lit(1.4826) * arr_median(ad_sorted)
-        )
-        med_i, mad_i = F.col(f"med{i}"), F.col(f"mad{i}")
-        best = F.aggregate(
-            F.col(p),
-            F.struct(
-                F.lit(float("-inf")).alias("score"), F.lit(-1).alias("idx")
-            ),
-            lambda a, t: F.when(
-                F.abs(t["v"] - med_i) / mad_i > a["score"],
-                F.struct(
-                    (F.abs(t["v"] - med_i) / mad_i).alias("score"),
-                    t["idx"].alias("idx"),
-                ),
-            ).otherwise(a),
-        )
-        ser = ser.withColumn(f"best{i}", best)
-        ok = mad_i >= F.lit(1e-12)
-        bi = F.col(f"best{i}")
-        ser = (
-            ser.withColumn(
-                f"st{i}",
-                F.when(
-                    ok,
-                    F.filter(F.col(p), lambda t: t["idx"] != bi["idx"]),
-                ).otherwise(F.col(p)),
-            )
-            .withColumn(
-                f"cands{i}",
-                F.when(
-                    ok,
-                    F.concat(
-                        F.col(f"cands{i - 1}"), F.array(bi["idx"])
-                    ),
-                ).otherwise(F.col(f"cands{i - 1}")),
-            )
-            .withColumn(
-                f"ndet{i}",
-                F.when(
-                    ok & (bi["score"] > F.col(f"lam{i}")),
-                    F.lit(i),
-                ).otherwise(F.col(f"ndet{i - 1}")),
-            )
-        )
-    anoms = ser.select(
-        "series_id",
-        F.slice(F.col(f"cands{K}"), 1, F.col(f"ndet{K}")).alias("anoms"),
-    )
-    out = rz.join(F.broadcast(anoms), "series_id")
-    return out.select(
-        "series_id",
-        "rn",
-        _rnd("value", R).alias("value"),
-        _rnd("resid", R).alias("resid"),
-        F.array_contains(
-            F.col("anoms"), F.col("j").cast("int")
-        ).cast("int").alias("anomaly"),
-    )
+    S-H-ESD twin over each series' last ``w = least(n, 2048)`` points
+    — the ENTIRE series at the gate SF (sf0.01, ~2000 points), so the
+    hash gate covers the extent the rows-only ``shesd_flags``
+    operator processes.  See ``_shesd_fixed_plan``."""
+    return _shesd_fixed_plan(spark, sf_dir, 2048, 128)
 
 
 def _shesd_fixed_full_sql() -> str:
@@ -5491,7 +5192,6 @@ def q_ensemble_forecast(spark, sf_dir):
     from ..functions.ar import ar1_forecast_native
     from ..functions.theta import theta_forecast
     from ..operators.evaluate import forecast_accuracy
-    from .._exact import dsum
 
     s = _series(spark, sf_dir)
     nn = s.groupBy("series_id").agg(
@@ -5517,7 +5217,7 @@ def q_ensemble_forecast(spark, sf_dir):
     )
     ens = long.groupBy("series_id", "rn").agg(
         F.max("value").alias("value"),
-        (dsum("pred_mean") / F.count("*")).alias("pred_mean"),
+        (_dsum("pred_mean") / F.count("*")).alias("pred_mean"),
     )
     eacc = forecast_accuracy(ens, keys=("series_id",))
     sacc = forecast_accuracy(long, keys=("model", "series_id"))
@@ -5607,7 +5307,6 @@ def q_changepoint_segments(spark, sf_dir):
     running sum over the series exchange every window already pays,
     and the profile is one grouped aggregate."""
     from ..functions.control import cusum_alarms
-    from .._exact import dsum
 
     s = _series(spark, sf_dir)
     al = (
@@ -5633,11 +5332,11 @@ def q_changepoint_segments(spark, sf_dir):
         F.count("*").cast("long").alias("n"),
         F.min("rn").alias("start_rn"),
         F.max("rn").alias("end_rn"),
-        dsum(v).alias("__sy"),
-        dsum(v * v).alias("__syy"),
-        dsum(rd).alias("__st"),
-        dsum(rd * rd).alias("__stt"),
-        dsum(rd * v).alias("__sty"),
+        _dsum(v).alias("__sy"),
+        _dsum(v * v).alias("__syy"),
+        _dsum(rd).alias("__st"),
+        _dsum(rd * rd).alias("__stt"),
+        _dsum(rd * v).alias("__sty"),
     )
     n = F.col("n")
     mean = F.col("__sy") / n
@@ -6328,21 +6027,18 @@ def q_granger_screen(spark, sf_dir):
         & (F.col("series_x") != F.col("series_y")),
     ).where(F.col("a").isNotNull() & F.col("b").isNotNull())
 
-    def dsum(expr, name):
-        return F.sum(expr.cast(DEC_T)).cast("double").alias(name)
-
     y, a, b = F.col("y"), F.col("a"), F.col("b")
     g = j.groupBy("series_x", "series_y").agg(
         F.count("*").alias("n"),
-        dsum(a, "sa"),
-        dsum(b, "sb"),
-        dsum(y, "sy"),
-        dsum(a * a, "saa"),
-        dsum(b * b, "sbb"),
-        dsum(y * y, "syy"),
-        dsum(a * b, "sab"),
-        dsum(a * y, "say"),
-        dsum(b * y, "sby"),
+        _dsum(a).alias("sa"),
+        _dsum(b).alias("sb"),
+        _dsum(y).alias("sy"),
+        _dsum(a * a).alias("saa"),
+        _dsum(b * b).alias("sbb"),
+        _dsum(y * y).alias("syy"),
+        _dsum(a * b).alias("sab"),
+        _dsum(a * y).alias("say"),
+        _dsum(b * y).alias("sby"),
     )
     n = F.col("n").cast("double")
     sa, sb, sy = F.col("sa"), F.col("sb"), F.col("sy")
@@ -6819,9 +6515,6 @@ def _dtw_fixed_plan(spark, sf_dir, L, W, name):
     s = _series(spark, sf_dir).select("series_id", "rn", "value")
     s = _guard_pair_explosion(s, None, 64, False, name)
 
-    def dsum(expr):
-        return F.sum(expr.cast(DEC_T)).cast("double")
-
     cnt = (
         s.groupBy("series_id")
         .agg(F.count("*").alias("n"))
@@ -6831,13 +6524,13 @@ def _dtw_fixed_plan(spark, sf_dir, L, W, name):
         "g", F.expr(f"CAST(((rn - 1) * {L}) DIV n AS INT)")
     )
     paa = binned.groupBy("series_id", "g").agg(
-        (dsum(F.col("value")) / F.count("*")).alias("pa"),
+        (_dsum(F.col("value")) / F.count("*")).alias("pa"),
         F.max("n").alias("n"),
     )
     mo = paa.groupBy("series_id").agg(
         F.count("*").alias("c32"),
-        dsum(F.col("pa")).alias("s1"),
-        dsum(F.col("pa") * F.col("pa")).alias("s2"),
+        _dsum(F.col("pa")).alias("s1"),
+        _dsum(F.col("pa") * F.col("pa")).alias("s2"),
         F.max("n").alias("n"),
     )
     mu = F.col("s1") / F.col("c32")
@@ -6875,9 +6568,6 @@ def _dtw_fixed_plan(spark, sf_dir, L, W, name):
 
     INF = F.lit(1e18)
 
-    def el(arr, i):  # diagonal slot i lives at 1-based position i+1
-        return F.element_at(arr, (i + F.lit(1)).cast("int"))
-
     init = F.struct(
         F.transform(
             F.sequence(F.lit(0), F.lit(L)),
@@ -6895,7 +6585,7 @@ def _dtw_fixed_plan(spark, sf_dir, L, W, name):
                 F.col("xb"), j.cast("int")
             )
             best = F.least(
-                el(acc["pm1"], i - 1), el(acc["pm1"], i), el(acc["pm2"], i - 1)
+                _el(acc["pm1"], i - 1), _el(acc["pm1"], i), _el(acc["pm2"], i - 1)
             )
             return F.when(
                 (i < 1) | (j < 1) | (j > L) | (F.abs(2 * i - d) > W), INF
@@ -7178,10 +6868,11 @@ _LN128 = "4.852030263920"
 _TWO_PI = "6.283185307180"
 
 
-def q_bocpd_changepoints_fixed(spark, sf_dir):
-    """Hash-gated fixed twin of BOCPD (Adams & MacKay 2007): known-
-    variance Gaussian predictive with a conjugate-Normal mean (prior
-    N(0,1), κ₀=1) over each series' z-normalized LAST 64 points,
+def _bocpd_fixed_plan(spark, sf_dir, cap, min_n):
+    """Shared builder for the hash-gated BOCPD twins (Adams & MacKay
+    2007): known-variance Gaussian predictive with a conjugate-Normal
+    mean (prior N(0,1), κ₀=1) over each series' z-normalized last
+    ``w = least(n, cap)`` points (series with ``n >= min_n``),
     constant hazard h=1/50.  The run-length posterior recursion —
     growth = R(r)·π_r·(1−h), changepoint mass = Σ R(r)·π_r·h,
     renormalize — carries ONLY the probability vector as state: the
@@ -7190,41 +6881,26 @@ def q_bocpd_changepoints_fixed(spark, sf_dir):
     stored (the known-variance collapse of functions/bocpd.py's NIG
     recursion).  The one transcendental per cell (exp of the Gaussian
     exponent) is quantized to 8 decimals, after which every engine
-    computes identical doubles: Spark folds the 64 steps with
+    computes identical doubles: Spark folds the w steps with
     ``F.aggregate`` over the probability list; DuckDB replays the
     identical recursion as a recursive CTE over list state.
 
-    Outputs mirror the full operator: ``cp_prob`` (= h analytically
-    under constant hazard — kept as the formal quantity) and
-    ``cp_score``, the run-length-≤5 posterior mass whose spike IS the
-    detection signal.  Parity test replays the same math in numpy and
-    asserts bit-equality plus a planted-shift spike."""
-    W = 64
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= W)
-    )
-    tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - W)
-        .select(
-            "series_id",
-            "n",
-            (F.col("rn") - (F.col("n") - F.lit(W)) - F.lit(1)).alias("j"),
-            "value",
-        )
-    )
-
-    def dsum(expr):
-        return F.sum(expr.cast(DEC_T)).cast("double")
-
+    The O(w²) recursion stages its per-step intermediates (rp, rn_,
+    tot, norm) through ``_let`` bindings so each is computed once per
+    step (Catalyst HOF lambdas get no CSE); the full-extent oracle
+    stages the same values through nested subqueries.  Outputs mirror
+    the full operator: ``cp_prob`` (= h analytically under constant
+    hazard — kept as the formal quantity) and ``cp_score``, the
+    run-length-≤5 posterior mass whose spike IS the detection signal.
+    Parity tests replay the same math in numpy and assert
+    bit-equality plus a planted-shift spike."""
+    tail = _last_w(spark, sf_dir, cap, min_n)
     mo = tail.groupBy("series_id").agg(
-        dsum(F.col("value")).alias("s1"),
-        dsum(F.col("value") * F.col("value")).alias("s2"),
+        _dsum(F.col("value")).alias("s1"),
+        _dsum(F.col("value") * F.col("value")).alias("s2"),
+        F.max("w").alias("wm"),
     )
-    wn = F.lit(float(W))
+    wn = F.col("wm").cast("double")
     mu_g = F.col("s1") / wn
     sd_g = F.sqrt(
         F.greatest(
@@ -7236,6 +6912,7 @@ def q_bocpd_changepoints_fixed(spark, sf_dir):
     zed = tail.join(F.broadcast(mo), "series_id").select(
         "series_id",
         "n",
+        "w",
         "j",
         ((F.col("value") - mu_g) / (sd_g + F.lit(1e-9))).alias("z"),
     )
@@ -7249,6 +6926,7 @@ def q_bocpd_changepoints_fixed(spark, sf_dir):
     )
     ser = cum.groupBy("series_id").agg(
         F.max("n").alias("n"),
+        F.max("w").alias("w"),
         F.transform(
             F.array_sort(F.collect_list(F.struct("j", "z"))),
             lambda t: t["z"],
@@ -7266,12 +6944,6 @@ def q_bocpd_changepoints_fixed(spark, sf_dir):
     GM = F.lit(0.98)
     TWO_PI = F.lit(float(_TWO_PI))
 
-    def el(arr, i):
-        return F.element_at(arr, (i + F.lit(1)).cast("int"))
-
-    def q8(c):
-        return F.floor(c * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
-
     init = F.struct(
         F.array(F.lit(1.0)).alias("rv"),
         F.array().cast("array<double>").alias("cps"),
@@ -7282,52 +6954,88 @@ def q_bocpd_changepoints_fixed(spark, sf_dir):
         def pdf(r):
             rr = r.cast("double")
             v = F.lit(1.0) + F.lit(1.0) / (F.lit(1.0) + rr)
-            mu = (el(F.col("l1"), t) - el(F.col("l1"), t - r)) / (
+            mu = (_el(F.col("l1"), t) - _el(F.col("l1"), t - r)) / (
                 F.lit(1.0) + rr
             )
-            d = el(F.col("zv"), t) - mu
-            return q8(
+            d = _el(F.col("zv"), t) - mu
+            return _q8(
                 F.exp(-(d * d) / (F.lit(2.0) * v)) / F.sqrt(TWO_PI * v)
             )
 
         ps = F.transform(F.sequence(F.lit(0), t), pdf)
-        rp = F.zip_with(acc["rv"], ps, lambda a, b: a * b)
-        growth = F.transform(rp, lambda q: q * GM)
-        cp0 = F.aggregate(
-            F.transform(rp, lambda q: q * H), F.lit(0.0), lambda a, b: a + b
-        )
-        rn_ = F.concat(F.array(cp0), growth)
-        tot = F.aggregate(rn_, F.lit(0.0), lambda a, b: a + b)
-        norm = F.when(
-            tot > 0, F.transform(rn_, lambda v2: v2 / tot)
-        ).otherwise(
-            F.concat(
-                F.array(F.lit(1.0)),
-                F.transform(growth, lambda _: F.lit(0.0)),
-            )
-        )
-        short = F.aggregate(
-            F.slice(norm, 1, 6), F.lit(0.0), lambda a, b: a + b
-        )
-        return F.struct(
-            norm.alias("rv"),
-            F.concat(acc["cps"], F.array(el(norm, F.lit(0)))).alias("cps"),
-            F.concat(acc["sh"], F.array(short)).alias("sh"),
-        )
+        rp_expr = F.zip_with(acc["rv"], ps, lambda a, b: a * b)
 
-    res = F.aggregate(F.sequence(F.lit(0), F.lit(W - 1)), init, step)
+        def with_rp(rp):
+            cp0 = F.aggregate(
+                F.transform(rp, lambda q: q * H),
+                F.lit(0.0),
+                lambda a, b: a + b,
+            )
+            growth = F.transform(rp, lambda q: q * GM)
+            rn_expr = F.concat(F.array(cp0), growth)
+
+            def with_rn(rn_):
+                tot_expr = F.aggregate(rn_, F.lit(0.0), lambda a, b: a + b)
+
+                def with_tot(tot):
+                    # all-zero mass: restart at run length 0
+                    norm_expr = F.when(
+                        tot > 0, F.transform(rn_, lambda v2: v2 / tot)
+                    ).otherwise(
+                        F.transform(
+                            rn_,
+                            lambda _, i: F.when(
+                                i == 0, F.lit(1.0)
+                            ).otherwise(F.lit(0.0)),
+                        )
+                    )
+
+                    def with_norm(norm):
+                        short = F.aggregate(
+                            F.slice(norm, 1, 6),
+                            F.lit(0.0),
+                            lambda a, b: a + b,
+                        )
+                        return F.struct(
+                            norm.alias("rv"),
+                            F.concat(
+                                acc["cps"], F.array(_el(norm, F.lit(0)))
+                            ).alias("cps"),
+                            F.concat(acc["sh"], F.array(short)).alias("sh"),
+                        )
+
+                    return _let(norm_expr, with_norm)
+
+                return _let(tot_expr, with_tot)
+
+            return _let(rn_expr, with_rn)
+
+        return _let(rp_expr, with_rp)
+
+    res = F.aggregate(
+        F.sequence(F.lit(0), (F.col("w") - F.lit(1)).cast("int")),
+        init,
+        step,
+    )
     ser = ser.withColumn("cps", res["cps"]).withColumn("sh", res["sh"])
     out = ser.select(
         "series_id",
         "n",
+        "w",
         F.posexplode(F.arrays_zip("cps", "sh")).alias("t", "pair"),
     )
     return out.select(
         "series_id",
-        (F.col("n") - F.lit(W) + F.col("t") + 1).cast("long").alias("rn"),
+        (F.col("n") - F.col("w") + F.col("t") + 1).cast("long").alias("rn"),
         _rnd(F.col("pair.cps"), R).alias("cp_prob"),
         _rnd(F.col("pair.sh"), R).alias("cp_score"),
     )
+
+
+def q_bocpd_changepoints_fixed(spark, sf_dir):
+    """Hash-gated fixed twin of BOCPD over each series' last 64 points
+    (see ``_bocpd_fixed_plan``)."""
+    return _bocpd_fixed_plan(spark, sf_dir, 64, 64)
 
 
 def _bocpd_fixed_sql() -> str:
@@ -7415,37 +7123,25 @@ FROM ex
 ORACLES["bocpd_changepoints_fixed"] = _bocpd_fixed_sql()
 
 
-def q_pelt_changepoints_fixed(spark, sf_dir):
-    """Hash-gated fixed twin of PELT: the exact optimal-partitioning
-    DP (which PELT's pruning provably equals) over each series' LAST
-    128 points, L2 mean-shift cost, BIC penalty ``2·var·ln(128)``
-    with ln(128) a shared literal.  F(t) = min_s F(s) + sse(s+1..t)
-    + β is a fold over t carrying (F-values, argmin backpointers) as
-    array state with a nested argmin fold per step; the changepoint
-    set comes from a second backtracking fold — Spark runs both with
-    ``F.aggregate``, DuckDB replays them as recursive CTEs over list
-    state (the dtw_distance_fixed recipe extended to argmin-DP +
-    backtrack).  Segment costs come from exact-decimal prefix sums;
-    ties in the argmin break to the smallest s in both engines
-    (strict-< fold).  Output: the same segment schema as
+def _pelt_fixed_plan(spark, sf_dir, cap, min_n, ln_w):
+    """Shared builder for the hash-gated PELT twins: the exact optimal
+    partitioning (Killick et al. 2012) over each series' last
+    ``w = least(n, cap)`` points (series with ``n >= min_n``), L2
+    mean-shift cost, BIC penalty ``β = 2·var·ln_w``.  ``ln_w`` is the
+    Column that stands for ln(w): the 128-point twin's oracle pins
+    the 12-decimal literal ``_LN128``, the full-extent one the
+    8-decimal quantized ``ln(w)`` (libm lns agree far beyond 1e-8).
+
+    F(t) = min_s F(s) + sse(s+1..t) + β is a fold over t carrying
+    (F-values, argmin backpointers, surviving candidates) as array
+    state; the changepoint set comes from a second backtracking fold
+    — Spark runs both with ``F.aggregate``, DuckDB replays them as
+    recursive CTEs over list state (the dtw_distance_fixed recipe
+    extended to argmin-DP + backtrack).  Segment costs come from
+    exact-decimal prefix sums; ties in the argmin break to the
+    smallest s in both engines.  Output: the same segment schema as
     pelt_changepoints, over the tail window."""
-    W = 128
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= W)
-    )
-    tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - W)
-        .select(
-            "series_id",
-            "n",
-            (F.col("rn") - (F.col("n") - F.lit(W)) - F.lit(1)).alias("j"),
-            "value",
-        )
-    )
+    tail = _last_w(spark, sf_dir, cap, min_n)
     wj = (
         Window.partitionBy("series_id")
         .orderBy("j")
@@ -7454,6 +7150,7 @@ def q_pelt_changepoints_fixed(spark, sf_dir):
     cum = tail.select(
         "series_id",
         "n",
+        "w",
         "j",
         F.sum(F.col("value").cast(DEC_T)).over(wj).cast("double").alias("c1"),
         F.sum((F.col("value") * F.col("value")).cast(DEC_T))
@@ -7463,6 +7160,7 @@ def q_pelt_changepoints_fixed(spark, sf_dir):
     )
     ser = cum.groupBy("series_id").agg(
         F.max("n").alias("n"),
+        F.max("w").alias("w"),
         F.concat(
             F.array(F.lit(0.0)),
             F.transform(
@@ -7478,56 +7176,68 @@ def q_pelt_changepoints_fixed(spark, sf_dir):
             ),
         ).alias("l2"),
     )
-    s1t = F.element_at("l1", W + 1)
-    s2t = F.element_at("l2", W + 1)
+    wd = F.col("w").cast("double")
+    s1t = _el(F.col("l1"), F.col("w"))
+    s2t = _el(F.col("l2"), F.col("w"))
     var = F.greatest(
-        s2t / F.lit(float(W))
-        - (s1t / F.lit(float(W))) * (s1t / F.lit(float(W))),
+        s2t / wd - (s1t / wd) * (s1t / wd),
         F.lit(0.0),
     )
-    ser = ser.withColumn(
-        "beta", F.lit(2.0) * var * F.lit(float(_LN128))
-    )
-
-    INF = F.lit(float("inf"))
-
-    def el(arr, i):  # arr[i], 0-based
-        return F.element_at(arr, (i + F.lit(1)).cast("int"))
+    ser = ser.withColumn("beta", F.lit(2.0) * var * ln_w)
 
     init = F.struct(
         F.array(F.lit(-1.0) * F.col("beta")).alias("fs"),
         F.array(F.lit(0)).alias("cps"),
+        F.array(F.lit(0)).alias("cand"),
     )
 
     def step(acc, t):
-        def cand(a2, sx):
+        # TRUE PELT: the argmin scans only the surviving candidate
+        # set, and s is pruned once F(s)+C(s+1..t) > F(t) — for the L2
+        # cost the pruned s is STRICTLY worse at every future t'
+        # (Killick et al. 2012, Thm 3.1), so values, argmins and the
+        # first-min tie-break are identical to the full O(w²) scan
+        # while the candidate list stays ~O(1) on changepoint-sparse
+        # data.  Both engines replay the same pruning on bit-identical
+        # doubles, so the kept sets never diverge.  Costs are staged
+        # ONCE through _let bindings (Catalyst HOF lambdas get no CSE).
+        def cost(sx):
             m = (t - sx).cast("double")
-            d1 = el(F.col("l1"), t) - el(F.col("l1"), sx)
-            d2 = el(F.col("l2"), t) - el(F.col("l2"), sx)
-            val = el(acc["fs"], sx) + (
+            d1 = _el(F.col("l1"), t) - _el(F.col("l1"), sx)
+            d2 = _el(F.col("l2"), t) - _el(F.col("l2"), sx)
+            return _el(acc["fs"], sx) + (
                 (d2 - (d1 * d1) / m) + F.col("beta")
             )
-            return F.when(
-                val < a2["v"],
-                F.struct(val.alias("v"), sx.cast("int").alias("s")),
-            ).otherwise(a2)
 
-        best = F.aggregate(
-            F.sequence(F.lit(0), t - 1),
-            F.struct(INF.alias("v"), F.lit(-1).alias("s")),
-            cand,
-        )
-        return F.struct(
-            F.concat(acc["fs"], F.array(best["v"])).alias("fs"),
-            F.concat(acc["cps"], F.array(best["s"])).alias("cps"),
-        )
+        vals_expr = F.transform(acc["cand"], lambda sx: cost(sx))
 
-    dp = F.aggregate(F.sequence(F.lit(1), F.lit(W)), init, step)
+        def with_vals(vals):
+            def with_v(v):
+                sstar = F.element_at(
+                    acc["cand"], F.array_position(vals, v).cast("int")
+                )
+                kept = F.filter(
+                    acc["cand"],
+                    lambda sx, i: _el(vals, i) - F.col("beta") <= v,
+                )
+                return F.struct(
+                    F.concat(acc["fs"], F.array(v)).alias("fs"),
+                    F.concat(acc["cps"], F.array(sstar)).alias("cps"),
+                    F.concat(kept, F.array(t.cast("int"))).alias("cand"),
+                )
+
+            return _let(F.array_min(vals), with_v)
+
+        return _let(vals_expr, with_vals)
+
+    dp = F.aggregate(
+        F.sequence(F.lit(1), F.col("w").cast("int")), init, step
+    )
     ser = ser.withColumn("cps", dp["cps"])
 
     def back(acc, _):
         cur = acc["cur"]
-        nxt = F.element_at(F.col("cps"), (cur + 1).cast("int"))
+        nxt = _el(F.col("cps"), cur)
         return F.when(
             cur > 0,
             F.struct(
@@ -7537,10 +7247,10 @@ def q_pelt_changepoints_fixed(spark, sf_dir):
         ).otherwise(acc)
 
     bt = F.aggregate(
-        F.sequence(F.lit(1), F.lit(W)),
+        F.sequence(F.lit(1), F.col("w").cast("int")),
         F.struct(
-            F.lit(W).cast("int").alias("cur"),
-            F.array(F.lit(W).cast("int")).alias("bs"),
+            F.col("w").cast("int").alias("cur"),
+            F.array(F.col("w").cast("int")).alias("bs"),
         ),
         back,
     )
@@ -7550,6 +7260,7 @@ def q_pelt_changepoints_fixed(spark, sf_dir):
     seg = ser.select(
         "series_id",
         "n",
+        "w",
         "l1",
         "bounds",
         F.explode(
@@ -7559,8 +7270,8 @@ def q_pelt_changepoints_fixed(spark, sf_dir):
     b1 = F.element_at("bounds", F.col("i"))
     b2 = F.element_at("bounds", F.col("i") + 1)
     segn = (b2 - b1).cast("long")
-    mean = (el(F.col("l1"), b2) - el(F.col("l1"), b1)) / segn.cast("double")
-    base = F.col("n") - F.lit(W)
+    mean = (_el(F.col("l1"), b2) - _el(F.col("l1"), b1)) / segn.cast("double")
+    base = F.col("n") - F.col("w")
     return seg.select(
         "series_id",
         (F.col("i") - 1).cast("int").alias("seg"),
@@ -7569,6 +7280,14 @@ def q_pelt_changepoints_fixed(spark, sf_dir):
         segn.alias("n"),
         _rnd(mean, R).alias("seg_mean"),
     )
+
+
+def q_pelt_changepoints_fixed(spark, sf_dir):
+    """Hash-gated fixed twin of PELT over each series' last 128
+    points, penalty ``2·var·ln(128)`` with ln(128) the shared literal
+    ``_LN128`` (see ``_pelt_fixed_plan``).  Its oracle runs the
+    unpruned O(w²) argmin scan, which the pruned fold must equal."""
+    return _pelt_fixed_plan(spark, sf_dir, 128, 128, F.lit(float(_LN128)))
 
 
 ORACLES["pelt_changepoints_fixed"] = f"""
@@ -7653,203 +7372,18 @@ FROM segs
 """
 
 
-def _let(val, body):
-    """Evaluate-once binding for Catalyst expressions: Catalyst does
-    NO common-subexpression elimination inside higher-order-function
-    lambdas, so referencing an expression twice re-evaluates its whole
-    subtree (the O(w²) folds below would otherwise re-run their pdf /
-    cost scans up to ~20× per step).  Wrapping the value as the sole
-    element of an array and binding it through a ``transform`` lambda
-    makes it a NamedLambdaVariable — evaluated exactly once per step —
-    at the cost of one single-element array allocation."""
-    return F.element_at(F.transform(F.array(val), body), 1)
-
-
 def q_bocpd_changepoints_fixed_full(spark, sf_dir):
-    """FULL-EXTENT hash-gated BOCPD twin (r09 verdict item #1, the
-    matrix-profile treatment): identical known-variance Gaussian
-    run-length recursion as ``bocpd_changepoints_fixed``, but over
-    each series' last ``w = least(n, 2048)`` points — at the gate SF
-    (sf0.01, ~2000-point series) that is the ENTIRE series, so the
-    hash gate covers the same extent the rows-only ``bocpd_changepoints``
-    operator processes, not a 64-point tail.  The O(w²) posterior
-    recursion stays a single ``F.aggregate`` fold per series (the
-    run-length probability vector is the only state); DuckDB replays
-    it as a recursive CTE whose per-step intermediates (rp, rn_, tot,
-    norm) are STAGED through nested subqueries so each is computed
-    once per step — the naive single-expression splice of the 64-pt
-    twin re-evaluates the pdf list ~18× per step, which is harmless
-    at w=64 and a ~30× slowdown at w=2048.  The Spark fold stages the
-    same intermediates through ``_let`` lambda bindings for the same
-    reason (Catalyst HOF lambdas get no CSE).  At larger SFs the cap
-    bounds the quadratic work; the uncapped scale path remains the
-    applyInPandas ``bocpd_changepoints``."""
-    W_CAP = 2048
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 64)
-        .withColumn("w", F.least(F.col("n"), F.lit(W_CAP)))
-    )
-    tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - F.col("w"))
-        .select(
-            "series_id",
-            "n",
-            "w",
-            (F.col("rn") - (F.col("n") - F.col("w")) - F.lit(1)).alias("j"),
-            "value",
-        )
-    )
-
-    def dsum(expr):
-        return F.sum(expr.cast(DEC_T)).cast("double")
-
-    mo = tail.groupBy("series_id").agg(
-        dsum(F.col("value")).alias("s1"),
-        dsum(F.col("value") * F.col("value")).alias("s2"),
-        F.max("w").alias("wm"),
-    )
-    wn = F.col("wm").cast("double")
-    mu_g = F.col("s1") / wn
-    sd_g = F.sqrt(
-        F.greatest(
-            (F.col("s2") - F.col("s1") * F.col("s1") / wn)
-            / (wn - F.lit(1.0)),
-            F.lit(0.0),
-        )
-    )
-    zed = tail.join(F.broadcast(mo), "series_id").select(
-        "series_id",
-        "n",
-        "w",
-        "j",
-        ((F.col("value") - mu_g) / (sd_g + F.lit(1e-9))).alias("z"),
-    )
-    wj = (
-        Window.partitionBy("series_id")
-        .orderBy("j")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = zed.withColumn(
-        "c1", F.sum(F.col("z").cast(DEC_T)).over(wj).cast("double")
-    )
-    ser = cum.groupBy("series_id").agg(
-        F.max("n").alias("n"),
-        F.max("w").alias("w"),
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("j", "z"))),
-            lambda t: t["z"],
-        ).alias("zv"),
-        F.concat(
-            F.array(F.lit(0.0)),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "c1"))),
-                lambda t: t["c1"],
-            ),
-        ).alias("l1"),
-    )
-
-    H = F.lit(0.02)
-    GM = F.lit(0.98)
-    TWO_PI = F.lit(float(_TWO_PI))
-
-    def el(arr, i):
-        return F.element_at(arr, (i + F.lit(1)).cast("int"))
-
-    def q8(c):
-        return F.floor(c * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
-
-    init = F.struct(
-        F.array(F.lit(1.0)).alias("rv"),
-        F.array().cast("array<double>").alias("cps"),
-        F.array().cast("array<double>").alias("sh"),
-    )
-
-    def step(acc, t):
-        def pdf(r):
-            rr = r.cast("double")
-            v = F.lit(1.0) + F.lit(1.0) / (F.lit(1.0) + rr)
-            mu = (el(F.col("l1"), t) - el(F.col("l1"), t - r)) / (
-                F.lit(1.0) + rr
-            )
-            d = el(F.col("zv"), t) - mu
-            return q8(
-                F.exp(-(d * d) / (F.lit(2.0) * v)) / F.sqrt(TWO_PI * v)
-            )
-
-        ps = F.transform(F.sequence(F.lit(0), t), pdf)
-        rp_expr = F.zip_with(acc["rv"], ps, lambda a, b: a * b)
-
-        def with_rp(rp):
-            cp0 = F.aggregate(
-                F.transform(rp, lambda q: q * H),
-                F.lit(0.0),
-                lambda a, b: a + b,
-            )
-            growth = F.transform(rp, lambda q: q * GM)
-            rn_expr = F.concat(F.array(cp0), growth)
-
-            def with_rn(rn_):
-                tot_expr = F.aggregate(rn_, F.lit(0.0), lambda a, b: a + b)
-
-                def with_tot(tot):
-                    # ELSE arm: [1, 0, 0, ...] of len(rn_) — built by
-                    # an indexed transform (values identical to the
-                    # prepend-zeros form of the 64-pt twin)
-                    norm_expr = F.when(
-                        tot > 0, F.transform(rn_, lambda v2: v2 / tot)
-                    ).otherwise(
-                        F.transform(
-                            rn_,
-                            lambda _, i: F.when(
-                                i == 0, F.lit(1.0)
-                            ).otherwise(F.lit(0.0)),
-                        )
-                    )
-
-                    def with_norm(norm):
-                        short = F.aggregate(
-                            F.slice(norm, 1, 6),
-                            F.lit(0.0),
-                            lambda a, b: a + b,
-                        )
-                        return F.struct(
-                            norm.alias("rv"),
-                            F.concat(
-                                acc["cps"], F.array(el(norm, F.lit(0)))
-                            ).alias("cps"),
-                            F.concat(acc["sh"], F.array(short)).alias("sh"),
-                        )
-
-                    return _let(norm_expr, with_norm)
-
-                return _let(tot_expr, with_tot)
-
-            return _let(rn_expr, with_rn)
-
-        return _let(rp_expr, with_rp)
-
-    res = F.aggregate(
-        F.sequence(F.lit(0), (F.col("w") - F.lit(1)).cast("int")),
-        init,
-        step,
-    )
-    ser = ser.withColumn("cps", res["cps"]).withColumn("sh", res["sh"])
-    out = ser.select(
-        "series_id",
-        "n",
-        "w",
-        F.posexplode(F.arrays_zip("cps", "sh")).alias("t", "pair"),
-    )
-    return out.select(
-        "series_id",
-        (F.col("n") - F.col("w") + F.col("t") + 1).cast("long").alias("rn"),
-        _rnd(F.col("pair.cps"), R).alias("cp_prob"),
-        _rnd(F.col("pair.sh"), R).alias("cp_score"),
-    )
+    """FULL-EXTENT hash-gated BOCPD twin (r09 verdict item #1): the
+    BOCPD twin over each series' last ``w = least(n, 2048)`` points —
+    at the gate SF (sf0.01, ~2000-point series) the ENTIRE series, so
+    the hash gate covers the extent the rows-only ``bocpd_changepoints``
+    operator processes.  Its oracle stages the per-step intermediates
+    through nested subqueries (the 64-point oracle's single-expression
+    splice re-evaluates the pdf list ~18× per step: harmless at w=64,
+    ~30× slower at w=2048).  The cap bounds the quadratic work at
+    larger SFs; the uncapped scale path remains the applyInPandas
+    ``bocpd_changepoints``.  See ``_bocpd_fixed_plan``."""
+    return _bocpd_fixed_plan(spark, sf_dir, 2048, 64)
 
 
 def _bocpd_fixed_full_sql() -> str:
@@ -7958,180 +7492,15 @@ ORACLES["bocpd_changepoints_fixed_full"] = _bocpd_fixed_full_sql()
 
 def q_pelt_changepoints_fixed_full(spark, sf_dir):
     """FULL-EXTENT hash-gated PELT twin (r09 verdict item #1): the
-    exact optimal-partitioning DP of ``pelt_changepoints_fixed`` over
-    each series' last ``w = least(n, 2048)`` points — the entire
-    series at the gate SF — instead of a 128-point tail.  The BIC
-    penalty generalizes from the pinned ln(128) literal to
-    ``2·var·q8(ln(w))``: ln is the one transcendental, so it is
-    quantized to 8 decimals with the same floor-quantizer on both
-    engines (libm lns agree far beyond 1e-8, so the quantized values
-    are identical; the bocpd exp-quantization recipe).  The DuckDB
-    recursion stages the argmin ONCE per step through a nested
-    subquery — the 128-pt twin's splice evaluates the candidate scan
-    twice (once for .v, once for .s), which doubles the dominant
-    O(w²) term at full extent."""
-    W_CAP = 2048
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 64)
-        .withColumn("w", F.least(F.col("n"), F.lit(W_CAP)))
-    )
-    tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - F.col("w"))
-        .select(
-            "series_id",
-            "n",
-            "w",
-            (F.col("rn") - (F.col("n") - F.col("w")) - F.lit(1)).alias("j"),
-            "value",
-        )
-    )
-    wj = (
-        Window.partitionBy("series_id")
-        .orderBy("j")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = tail.select(
-        "series_id",
-        "n",
-        "w",
-        "j",
-        F.sum(F.col("value").cast(DEC_T)).over(wj).cast("double").alias("c1"),
-        F.sum((F.col("value") * F.col("value")).cast(DEC_T))
-        .over(wj)
-        .cast("double")
-        .alias("c2"),
-    )
-    ser = cum.groupBy("series_id").agg(
-        F.max("n").alias("n"),
-        F.max("w").alias("w"),
-        F.concat(
-            F.array(F.lit(0.0)),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "c1"))),
-                lambda t: t["c1"],
-            ),
-        ).alias("l1"),
-        F.concat(
-            F.array(F.lit(0.0)),
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("j", "c2"))),
-                lambda t: t["c2"],
-            ),
-        ).alias("l2"),
-    )
-    wd = F.col("w").cast("double")
-    s1t = F.element_at("l1", (F.col("w") + F.lit(1)).cast("int"))
-    s2t = F.element_at("l2", (F.col("w") + F.lit(1)).cast("int"))
-    var = F.greatest(
-        s2t / wd - (s1t / wd) * (s1t / wd),
-        F.lit(0.0),
-    )
-    lnw = F.floor(F.log(wd) * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
-    ser = ser.withColumn("beta", F.lit(2.0) * var * lnw)
-
-    def el(arr, i):  # arr[i], 0-based
-        return F.element_at(arr, (i + F.lit(1)).cast("int"))
-
-    init = F.struct(
-        F.array(F.lit(-1.0) * F.col("beta")).alias("fs"),
-        F.array(F.lit(0)).alias("cps"),
-        F.array(F.lit(0)).alias("cand"),
-    )
-
-    def step(acc, t):
-        # TRUE PELT: the argmin scans only the surviving candidate
-        # set, and s is pruned once F(s)+C(s+1..t) > F(t) — for the L2
-        # cost the pruned s is STRICTLY worse at every future t'
-        # (Killick et al. 2012, Thm 3.1), so values, argmins and the
-        # first-min tie-break are identical to the full O(w²) scan
-        # while the candidate list stays ~O(1) on changepoint-sparse
-        # data.  Both engines replay the same pruning on bit-identical
-        # doubles, so the kept sets never diverge.  Costs are staged
-        # ONCE through _let bindings (Catalyst HOF lambdas get no CSE).
-        def cost(sx):
-            m = (t - sx).cast("double")
-            d1 = el(F.col("l1"), t) - el(F.col("l1"), sx)
-            d2 = el(F.col("l2"), t) - el(F.col("l2"), sx)
-            return el(acc["fs"], sx) + (
-                (d2 - (d1 * d1) / m) + F.col("beta")
-            )
-
-        vals_expr = F.transform(acc["cand"], lambda sx: cost(sx))
-
-        def with_vals(vals):
-            def with_v(v):
-                sstar = F.element_at(
-                    acc["cand"], F.array_position(vals, v).cast("int")
-                )
-                kept = F.filter(
-                    acc["cand"],
-                    lambda sx, i: F.element_at(vals, (i + F.lit(1)).cast("int"))
-                    - F.col("beta")
-                    <= v,
-                )
-                return F.struct(
-                    F.concat(acc["fs"], F.array(v)).alias("fs"),
-                    F.concat(acc["cps"], F.array(sstar)).alias("cps"),
-                    F.concat(kept, F.array(t.cast("int"))).alias("cand"),
-                )
-
-            return _let(F.array_min(vals), with_v)
-
-        return _let(vals_expr, with_vals)
-
-    dp = F.aggregate(
-        F.sequence(F.lit(1), F.col("w").cast("int")), init, step
-    )
-    ser = ser.withColumn("cps", dp["cps"])
-
-    def back(acc, _):
-        cur = acc["cur"]
-        nxt = F.element_at(F.col("cps"), (cur + 1).cast("int"))
-        return F.when(
-            cur > 0,
-            F.struct(
-                nxt.alias("cur"),
-                F.concat(acc["bs"], F.array(nxt)).alias("bs"),
-            ),
-        ).otherwise(acc)
-
-    bt = F.aggregate(
-        F.sequence(F.lit(1), F.col("w").cast("int")),
-        F.struct(
-            F.col("w").cast("int").alias("cur"),
-            F.array(F.col("w").cast("int")).alias("bs"),
-        ),
-        back,
-    )
-    ser = ser.withColumn(
-        "bounds", F.reverse(F.array_distinct(bt["bs"]))
-    )
-    seg = ser.select(
-        "series_id",
-        "n",
-        "w",
-        "l1",
-        "bounds",
-        F.explode(
-            F.sequence(F.lit(1), F.size("bounds") - 1)
-        ).alias("i"),
-    )
-    b1 = F.element_at("bounds", F.col("i"))
-    b2 = F.element_at("bounds", F.col("i") + 1)
-    segn = (b2 - b1).cast("long")
-    mean = (el(F.col("l1"), b2) - el(F.col("l1"), b1)) / segn.cast("double")
-    base = F.col("n") - F.col("w")
-    return seg.select(
-        "series_id",
-        (F.col("i") - 1).cast("int").alias("seg"),
-        (base + b1 + 1).cast("long").alias("start_rn"),
-        (base + b2).cast("long").alias("end_rn"),
-        segn.alias("n"),
-        _rnd(mean, R).alias("seg_mean"),
+    PELT twin over each series' last ``w = least(n, 2048)`` points —
+    the entire series at the gate SF.  The penalty generalizes the
+    pinned ln(128) literal to ``2·var·q8(ln(w))``.  Its oracle stages
+    the argmin once per step through a nested subquery (the 128-point
+    oracle's splice evaluates the candidate scan twice, once for .v
+    and once for .s, which doubles the dominant O(w²) term at full
+    extent).  See ``_pelt_fixed_plan``."""
+    return _pelt_fixed_plan(
+        spark, sf_dir, 2048, 64, _q8(F.log(F.col("w").cast("double")))
     )
 
 
@@ -8250,29 +7619,10 @@ _GP_TR = 64  # fixed train-window size (tail of the train fraction)
 _GP_N2 = 0.01  # fixed noise variance (production noise=0.1 squared)
 
 
-def q_gp_forecast_fixed(spark, sf_dir):
-    """Hash-gated fixed twin of the GP forecaster (r09 verdict item
-    #5 — the last M-family with no hash-anchored core): posterior MEAN
-    of a GP with the production kernel family (RBF ls=50 + daily
-    ExpSineSquared period=24, amp²=1, noise²=0.01 —
-    functions/gp.py:42/_kernel, reference src/run_gp.py:26-44) trained
-    on the last 64 rows of the 0.5 train fraction, predicting every
-    row.  The train slice is CONTIGUOUS in the row index, so the
-    kernel matrix entry K[i,j] depends only on i−j: the whole fit
-    reduces to ``kq(i−j)`` lookups with the sin² factor read from the
-    shared 24-entry literal table and only exp evaluated at runtime
-    (8-dp-quantized, the bocpd recipe — after quantization both
-    engines hold identical doubles and everything downstream is
-    rational algebra).
-
-    The solve α = (K+σ²I)⁻¹·yn is Gaussian elimination WITHOUT
-    pivoting (valid: K is SPD) as two folds over flat array state —
-    forward elimination (m−1 steps over the m×(m+1) augmented matrix)
-    then back-substitution — and DuckDB replays the identical
-    recursions as recursive CTEs over list state.  Predictions are a
-    per-row m-term quantized-kernel dot with α.  pred_mean only: the
-    posterior std needs an O(m²) solve per prediction row, which is
-    the production operator's job (``gp_forecast``, rows-only)."""
+def _gp_train(spark, sf_dir):
+    """The GP twins' rows: ``base`` is every row of each series with
+    n >= 128 (``pos = rn - 1``), ``tr`` its train window — the last
+    ``_GP_TR`` rows of the 0.5 train fraction."""
     s = _series(spark, sf_dir).select("series_id", "rn", "value")
     cnt = (
         s.groupBy("series_id")
@@ -8286,16 +7636,52 @@ def q_gp_forecast_fixed(spark, sf_dir):
         F.floor(F.col("n") * F.lit(0.5)).cast("long"), F.lit(2)
     )
     lo = F.greatest(n_train - F.lit(_GP_TR), F.lit(0))
-    tr = base.filter((F.col("pos") >= lo) & (F.col("pos") < n_train))
+    return base, base.filter((F.col("pos") >= lo) & (F.col("pos") < n_train))
 
-    def dsum(expr):
-        return F.sum(expr.cast(DEC_T)).cast("double")
 
+def _gp_kq(d):
+    """The GP twins' quantized kernel at the integer lag column ``d``:
+    RBF ls=50 plus ExpSineSquared period 24, sin² read from
+    ``_GP_SIN2``, only exp evaluated at runtime."""
+    dd = d.cast("double")
+    e1 = F.exp(-(dd * dd) / F.lit(5000.0))  # 2·ls² = 2·50²
+    sin2 = F.array(*[F.lit(v) for v in _GP_SIN2])
+    e2 = F.exp(
+        F.lit(-2.0)
+        * F.element_at(sin2, (F.abs(d) % F.lit(24) + F.lit(1)).cast("int"))
+    )
+    return _q8(e1 + e2)
+
+
+def q_gp_forecast_fixed(spark, sf_dir):
+    """Hash-gated fixed twin of the GP forecaster (r09 verdict item
+    #5 — the last M-family with no hash-anchored core): posterior MEAN
+    of a GP with the production kernel family (RBF ls=50 + daily
+    ExpSineSquared period=24, amp²=1, noise²=0.01 —
+    functions/gp.py:42/_kernel, reference src/run_gp.py:26-44) trained
+    on the last 64 rows of the 0.5 train fraction, predicting every
+    row.  The train slice is CONTIGUOUS in the row index, so the
+    kernel matrix entry K[i,j] depends only on i−j: the whole fit
+    reduces to ``_gp_kq(i−j)`` lookups with the sin² factor read from the
+    shared 24-entry literal table and only exp evaluated at runtime
+    (8-dp-quantized, the bocpd recipe — after quantization both
+    engines hold identical doubles and everything downstream is
+    rational algebra).
+
+    The solve α = (K+σ²I)⁻¹·yn is Gaussian elimination WITHOUT
+    pivoting (valid: K is SPD) as two folds over flat array state —
+    forward elimination (m−1 steps over the m×(m+1) augmented matrix)
+    then back-substitution — and DuckDB replays the identical
+    recursions as recursive CTEs over list state.  Predictions are a
+    per-row m-term quantized-kernel dot with α.  pred_mean only: the
+    posterior std needs an O(m²) solve per prediction row, which is
+    the production operator's job (``gp_forecast``, rows-only)."""
+    base, tr = _gp_train(spark, sf_dir)
     ser = tr.groupBy("series_id").agg(
         F.count("*").alias("m"),
         F.min("pos").alias("lo"),
-        dsum(F.col("value")).alias("s1"),
-        dsum(F.col("value") * F.col("value")).alias("s2"),
+        _dsum(F.col("value")).alias("s1"),
+        _dsum(F.col("value") * F.col("value")).alias("s2"),
         F.transform(
             F.array_sort(F.collect_list(F.struct("pos", "value"))),
             lambda t: t["value"],
@@ -8317,21 +7703,6 @@ def q_gp_forecast_fixed(spark, sf_dir):
         .drop("s1", "s2", "ys")
     )
 
-    S2 = F.array(*[F.lit(v) for v in _GP_SIN2])
-
-    def q8(c):
-        return F.floor(c * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
-
-    def kq(d):
-        # d: integer lag column
-        dd = d.cast("double")
-        e1 = F.exp(-(dd * dd) / F.lit(5000.0))  # 2·ls² = 2·50²
-        e2 = F.exp(
-            F.lit(-2.0)
-            * F.element_at(S2, (F.abs(d) % F.lit(24) + F.lit(1)).cast("int"))
-        )
-        return q8(e1 + e2)
-
     mp1 = (F.col("m") + F.lit(1)).cast("int")
     mi = F.col("m").cast("int")
 
@@ -8339,7 +7710,7 @@ def q_gp_forecast_fixed(spark, sf_dir):
         j = idx % mp1
         i = ((idx - j) / mp1).cast("int")
         jj = F.least(j, mi - 1)  # clamp for the y-column branch
-        kv = kq(i - jj) + F.when(i == jj, F.lit(_GP_N2)).otherwise(
+        kv = _gp_kq(i - jj) + F.when(i == jj, F.lit(_GP_N2)).otherwise(
             F.lit(0.0)
         )
         return F.when(
@@ -8428,7 +7799,7 @@ def q_gp_forecast_fixed(spark, sf_dir):
     pred = F.col("mu") + F.col("sd") * F.aggregate(
         F.transform(
             F.sequence(F.lit(0), mi - 1),
-            lambda j: kq(F.col("pos") - F.col("lo") - j)
+            lambda j: _gp_kq(F.col("pos") - F.col("lo") - j)
             * F.element_at(F.col("alpha"), (j + F.lit(1)).cast("int")),
         ),
         F.lit(0.0),
@@ -8588,29 +7959,12 @@ def q_gp_forecast_fixed_std(spark, sf_dir):
     per-series work.  Per row: ks hoisted once via ``_let`` (Catalyst
     HOF lambdas get no CSE), then the O(m²) quadratic form; the
     DuckDB oracle replays the identical recursion and sum order."""
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 128)
-    )
-    base = s.join(F.broadcast(cnt), "series_id").select(
-        "series_id", "rn", "value", "n", (F.col("rn") - F.lit(1)).alias("pos")
-    )
-    n_train = F.greatest(
-        F.floor(F.col("n") * F.lit(0.5)).cast("long"), F.lit(2)
-    )
-    lo = F.greatest(n_train - F.lit(_GP_TR), F.lit(0))
-    tr = base.filter((F.col("pos") >= lo) & (F.col("pos") < n_train))
-
-    def dsum(expr):
-        return F.sum(expr.cast(DEC_T)).cast("double")
-
+    base, tr = _gp_train(spark, sf_dir)
     ser = tr.groupBy("series_id").agg(
         F.count("*").alias("m"),
         F.min("pos").alias("lo"),
-        dsum(F.col("value")).alias("s1"),
-        dsum(F.col("value") * F.col("value")).alias("s2"),
+        _dsum(F.col("value")).alias("s1"),
+        _dsum(F.col("value") * F.col("value")).alias("s2"),
     )
     md = F.col("m").cast("double")
     mu = F.col("s1") / md
@@ -8619,20 +7973,6 @@ def q_gp_forecast_fixed_std(spark, sf_dir):
         "sd", F.when(sd0 == 0, F.lit(1.0)).otherwise(sd0)
     ).drop("s1", "s2")
 
-    S2 = F.array(*[F.lit(v) for v in _GP_SIN2])
-
-    def q8(c):
-        return F.floor(c * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
-
-    def kq(d):
-        dd = d.cast("double")
-        e1 = F.exp(-(dd * dd) / F.lit(5000.0))
-        e2 = F.exp(
-            F.lit(-2.0)
-            * F.element_at(S2, (F.abs(d) % F.lit(24) + F.lit(1)).cast("int"))
-        )
-        return q8(e1 + e2)
-
     mi = F.col("m").cast("int")
     m2 = (F.col("m") * 2).cast("int")
 
@@ -8640,7 +7980,7 @@ def q_gp_forecast_fixed_std(spark, sf_dir):
     def build_aug(idx):
         j = idx % m2
         i = ((idx - j) / m2).cast("int")
-        kv = kq(i - j) + F.when(i == j, F.lit(_GP_N2)).otherwise(F.lit(0.0))
+        kv = _gp_kq(i - j) + F.when(i == j, F.lit(_GP_N2)).otherwise(F.lit(0.0))
         return F.when(j < mi, kv).otherwise(
             F.when(j - mi == i, F.lit(1.0)).otherwise(F.lit(0.0))
         )
@@ -8704,7 +8044,7 @@ def q_gp_forecast_fixed_std(spark, sf_dir):
         .join(F.broadcast(cm), "m")
     )
     d = F.col("pos") - F.col("lo")
-    ks = F.transform(F.sequence(F.lit(0), mi - 1), lambda j: kq(d - j))
+    ks = F.transform(F.sequence(F.lit(0), mi - 1), lambda j: _gp_kq(d - j))
 
     def with_ks(KS):
         def inner(i):
@@ -8729,7 +8069,7 @@ def q_gp_forecast_fixed_std(spark, sf_dir):
             F.lit(0.0),
             lambda x, y: x + y,
         )
-        kss = kq(F.lit(0)) + F.lit(_GP_N2)
+        kss = _gp_kq(F.lit(0)) + F.lit(_GP_N2)
         return F.col("sd") * F.sqrt(F.greatest(kss - quad, F.lit(0.0)))
 
     std = _let(ks, with_ks)
@@ -8890,32 +8230,10 @@ def q_lstm_forecast_fixed(spark, sf_dir):
     (Catalyst HOF lambdas get no CSE), nested subqueries inside the
     DuckDB recursion.  Training stays rows-only (``lstm_forecast``,
     golden NAB parity): SGD is not gate material, inference is."""
-    W_CAP = 2048
-    s = _series(spark, sf_dir).select("series_id", "rn", "value")
-    cnt = (
-        s.groupBy("series_id")
-        .agg(F.count("*").alias("n"))
-        .filter(F.col("n") >= 64)
-        .withColumn("w", F.least(F.col("n"), F.lit(W_CAP)))
-    )
-    tail = (
-        s.join(F.broadcast(cnt), "series_id")
-        .filter(F.col("rn") > F.col("n") - F.col("w"))
-        .select(
-            "series_id",
-            "n",
-            "w",
-            (F.col("rn") - (F.col("n") - F.col("w")) - F.lit(1)).alias("j"),
-            "value",
-        )
-    )
-
-    def dsum(expr):
-        return F.sum(expr.cast(DEC_T)).cast("double")
-
+    tail = _last_w(spark, sf_dir, 2048, 64)
     mo = tail.groupBy("series_id").agg(
-        dsum(F.col("value")).alias("s1"),
-        dsum(F.col("value") * F.col("value")).alias("s2"),
+        _dsum(F.col("value")).alias("s1"),
+        _dsum(F.col("value") * F.col("value")).alias("s2"),
         F.max("w").alias("wm"),
     )
     wn = F.col("wm").cast("double")
@@ -8953,18 +8271,12 @@ def q_lstm_forecast_fixed(spark, sf_dir):
     WY = _LSTM_WY
     H = 4
 
-    def q8(c):
-        return F.floor(c * F.lit(1e8) + F.lit(0.5)) / F.lit(1e8)
-
     def sig(x):
-        return q8(F.lit(1.0) / (F.lit(1.0) + F.exp(-x)))
+        return _q8(F.lit(1.0) / (F.lit(1.0) + F.exp(-x)))
 
     def tanhx(x):
         e2 = F.exp(F.lit(2.0) * x)
-        return q8((e2 - F.lit(1.0)) / (e2 + F.lit(1.0)))
-
-    def el(arr, i):  # 1-based element_at with int cast
-        return F.element_at(arr, i.cast("int"))
+        return _q8((e2 - F.lit(1.0)) / (e2 + F.lit(1.0)))
 
     init = F.struct(
         F.transform(F.sequence(F.lit(1), F.lit(H)), lambda _: F.lit(0.0)).alias("h"),
@@ -8973,32 +8285,33 @@ def q_lstm_forecast_fixed(spark, sf_dir):
     )
 
     def step(acc, t):
-        x = el(F.col("zv"), t)
+        x = F.element_at(F.col("zv"), t)
         z16_expr = F.transform(
             F.sequence(F.lit(1), F.lit(4 * H)),
-            lambda k: x * el(WX, k)
-            + F.element_at(acc["h"], 1) * el(WH[0], k)
-            + F.element_at(acc["h"], 2) * el(WH[1], k)
-            + F.element_at(acc["h"], 3) * el(WH[2], k)
-            + F.element_at(acc["h"], 4) * el(WH[3], k)
-            + el(B, k),
+            lambda k: x * F.element_at(WX, k)
+            + F.element_at(acc["h"], 1) * F.element_at(WH[0], k)
+            + F.element_at(acc["h"], 2) * F.element_at(WH[1], k)
+            + F.element_at(acc["h"], 3) * F.element_at(WH[2], k)
+            + F.element_at(acc["h"], 4) * F.element_at(WH[3], k)
+            + F.element_at(B, k),
         )
 
         def with_z(z16):
             gi = F.transform(
-                F.sequence(F.lit(1), F.lit(H)), lambda j: sig(el(z16, j))
+                F.sequence(F.lit(1), F.lit(H)),
+                lambda j: sig(F.element_at(z16, j)),
             )
             gf = F.transform(
                 F.sequence(F.lit(1), F.lit(H)),
-                lambda j: sig(el(z16, j + F.lit(H))),
+                lambda j: sig(F.element_at(z16, j + F.lit(H))),
             )
             gg = F.transform(
                 F.sequence(F.lit(1), F.lit(H)),
-                lambda j: tanhx(el(z16, j + F.lit(2 * H))),
+                lambda j: tanhx(F.element_at(z16, j + F.lit(2 * H))),
             )
             go = F.transform(
                 F.sequence(F.lit(1), F.lit(H)),
-                lambda j: sig(el(z16, j + F.lit(3 * H))),
+                lambda j: sig(F.element_at(z16, j + F.lit(3 * H))),
             )
 
             def with_i(i4):
@@ -9007,16 +8320,16 @@ def q_lstm_forecast_fixed(spark, sf_dir):
                         def with_o(o4):
                             c_expr = F.transform(
                                 F.sequence(F.lit(1), F.lit(H)),
-                                lambda j: el(f4, j)
+                                lambda j: F.element_at(f4, j)
                                 * F.element_at(acc["c"], j.cast("int"))
-                                + el(i4, j) * el(g4, j),
+                                + F.element_at(i4, j) * F.element_at(g4, j),
                             )
 
                             def with_c(c_new):
                                 h_expr = F.transform(
                                     F.sequence(F.lit(1), F.lit(H)),
-                                    lambda j: el(o4, j)
-                                    * tanhx(el(c_new, j)),
+                                    lambda j: F.element_at(o4, j)
+                                    * tanhx(F.element_at(c_new, j)),
                                 )
 
                                 def with_h(h_new):
@@ -9856,18 +9169,15 @@ def q_harmonic_forecast_fixed(spark, sf_dir):
     )
     v = F.col("value")
 
-    def dsum(expr):
-        return F.sum(expr.cast(DEC_T)).cast("double")
-
     tr = (
         j.filter(F.col("rn") <= F.col("n_tr"))
         .groupBy("series_id")
         .agg(
-            dsum(v).alias("sy"),
-            dsum(v * F.col("c1")).alias("syc1"),
-            dsum(v * F.col("s1")).alias("sys1"),
-            dsum(v * F.col("c2")).alias("syc2"),
-            dsum(v * F.col("s2")).alias("sys2"),
+            _dsum(v).alias("sy"),
+            _dsum(v * F.col("c1")).alias("syc1"),
+            _dsum(v * F.col("s1")).alias("sys1"),
+            _dsum(v * F.col("c2")).alias("syc2"),
+            _dsum(v * F.col("s2")).alias("sys2"),
         )
     )
     co = tr.join(cnt.select("series_id", "n_tr"), "series_id").select(
@@ -10434,8 +9744,7 @@ def _scoped(fn):
     """Release the PREVIOUS query's tracked caches at each query
     boundary, so a sequential multi-query session (driver gate, bench)
     never holds more than one query's cached frames.  ``wraps`` keeps
-    ``inspect.unwrap`` reaching the real query body, whose source the
-    impl fingerprints (scripts/impl_snapshot.py) hash."""
+    ``inspect.unwrap`` reaching the real query body."""
 
     @functools.wraps(fn)
     def wrapped(spark, sf_dir):
