@@ -1,6 +1,8 @@
 """Model UDFs (SURVEY §2.9): behavioral checks on synthetic series with
 known structure — metric-level parity, not row equality (SURVEY §5)."""
 
+from functools import partial
+
 import numpy as np
 import pytest
 
@@ -11,10 +13,14 @@ from time_series_data_anomaly_detection_spark.functions import (
     bocpd,
     bocpd_changepoints,
     bsts_forecast,
+    control,
+    dtw,
     gp_forecast,
     harmonic,
     kalman,
     kalman_local_level,
+    lstm,
+    pelt,
     shesd,
     spectral,
     stl,
@@ -797,6 +803,13 @@ SHELL_CASES = [
     pytest.param(kalman.bsts_fixed, kalman.bsts_fixed_kernel, {}, id="bsts_fixed"),
     pytest.param(kalman.bsts_forecast, kalman.bsts_forecast_kernel, {},
                  id="bsts_forecast"),
+    pytest.param(kalman.kalman_local_level, kalman.kalman_local_level_kernel,
+                 dict(score_col="z"), id="kalman_score"),
+    pytest.param(kalman.bsts_forecast, kalman.bsts_forecast_kernel,
+                 dict(score_col="z"), id="bsts_score"),
+    pytest.param(lstm.lstm_forecast, lstm.lstm_forecast_kernel,
+                 dict(seq_len=12, hidden=4, epochs=1, score_col="z"),
+                 id="lstm_score"),
     pytest.param(bocpd.bocpd_changepoints, bocpd.bocpd_changepoints_kernel, {},
                  id="bocpd"),
     pytest.param(stl.stl_decompose, stl.stl_decompose_kernel,
@@ -833,6 +846,108 @@ def test_shell_wrapper_equals_kernel_bitwise(spark, wrapper, kernel, kw):
         in_process(g) for _, g in pdf.sort_values("rn").groupby(keys)
     )[list(got.columns)]
     order = keys + ["rn"]
+    _assert_frames_bitwise(
+        got.sort_values(order).reset_index(drop=True),
+        want.sort_values(order).reset_index(drop=True),
+    )
+
+
+def _edge_fleet():
+    """The shuffled fleet plus a NULL-``series_id`` series of 60 points
+    and a one-row series."""
+    import pandas as pd
+
+    pdf = _shuffled_fleet()
+    extra = pd.DataFrame(
+        {
+            "series_id": [None] * 60 + ["d"],
+            "timestamp": pd.date_range("2024-02-01", periods=61, freq="30min"),
+            "value": np.cos(np.arange(61) / 3.0) * 5,
+            "rn": list(range(1, 61)) + [1],
+        }
+    )
+    return pd.concat([pdf, extra], ignore_index=True).sample(frac=1, random_state=4)
+
+
+def _pair_frame():
+    """The rows of ``dtw_distance``'s grouped-map: every series of the
+    fleet tagged with each pair it belongs to."""
+    import pandas as pd
+
+    pdf = _shuffled_fleet()[["series_id", "rn", "value"]]
+    pairs = [("a", "b"), ("a", "c"), ("b", "c")]
+    return pd.concat(
+        [pdf[pdf.series_id.isin(p)].assign(pair="\x00".join(p)) for p in pairs],
+        ignore_index=True,
+    )
+
+
+def _moments_frame():
+    """``control._with_moments``' output shape, moments from pandas."""
+    pdf = _shuffled_fleet()[["series_id", "rn", "value"]]
+    g = pdf.groupby("series_id")["value"]
+    return pdf.assign(__mu=g.transform("mean"), __sd=g.transform("std"))
+
+
+SHELL_EDGE_CASES = {
+    # (source frame, out DDL, kernel, keys, sort order of the output)
+    "row_aligned": (_edge_fleet, kalman.KALMAN_SCHEMA, kalman.kalman_fixed_kernel,
+                    ("series_id",), ["series_id", "rn"]),
+    "pelt_segments": (_edge_fleet, pelt.PELT_SCHEMA, pelt.pelt_segments_kernel,
+                      ("series_id",), ["series_id", "seg"]),
+    "cusum_alarms": (_moments_frame, control.CUSUM_ALARM_SCHEMA,
+                     partial(control.cusum_alarms_kernel, h=2.0), ("series_id",),
+                     ["series_id", "rn", "direction"]),
+    "series_frac": (lambda: _shuffled_fleet("frac"),
+                    ar.AR_SCHEMA + ", frac double",
+                    partial(ar.ar_forecast_kernel, p=4, frac_col="frac"),
+                    ("series_id", "frac"), ["series_id", "frac", "rn"]),
+    "pair": (_pair_frame, dtw.DTW_SCHEMA, dtw.dtw_pair_kernel, ("pair",),
+             ["series_a", "series_b"]),
+    "null_group_only": (lambda: _edge_fleet().query("series_id.isnull()"),
+                        kalman.KALMAN_SCHEMA, kalman.kalman_fixed_kernel,
+                        ("series_id",), ["rn"]),
+}
+
+
+@pytest.mark.parametrize("batch_rows", [None, 7])
+@pytest.mark.parametrize("case", list(SHELL_EDGE_CASES))
+def test_shell_edges_equal_kernel_bitwise(spark, case, batch_rows):
+    """``per_series`` on the shapes its batch walk must get right — a
+    group cut across Arrow batches (``batch_rows`` rows per batch), a
+    NULL key, a one-row group, empty partitions (``null_group_only``:
+    one group on ``defaultParallelism`` > 1 partitions), whole-frame
+    kernels, two-column and pair keys — equals the kernel run in
+    process on each ``rn``-sorted group, bit for bit."""
+    import pandas as pd
+
+    from time_series_data_anomaly_detection_spark.functions._partition import (
+        per_series,
+    )
+
+    make, ddl, kernel, keys, order = SHELL_EDGE_CASES[case]
+    pdf = make()
+    names = [f.split()[0] for f in ddl.split(", ")]
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    if batch_rows:
+        spark.conf.set(conf, str(batch_rows))
+    try:
+        got = per_series(spark.createDataFrame(pdf), ddl, kernel, keys).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    # grouped by Python equality: pandas' hash grouping truncates
+    # strings at NUL, which would merge the "a\x00b" and "a\x00c" pairs
+    groups = {}
+    for i, key in enumerate(zip(*(pdf[k] for k in keys))):
+        groups.setdefault(key, []).append(i)
+    outs = []
+    for rows in groups.values():
+        g = pdf.iloc[rows].sort_values("rn").reset_index(drop=True)
+        out = kernel(g)
+        outs.append(out if isinstance(out, pd.DataFrame) else g.assign(**out))
+    want = pd.concat(outs, ignore_index=True)[names]
+    assert spark.sparkContext.defaultParallelism > 1
     _assert_frames_bitwise(
         got.sort_values(order).reset_index(drop=True),
         want.sort_values(order).reset_index(drop=True),

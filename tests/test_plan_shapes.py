@@ -398,8 +398,8 @@ def test_quantile_band_broadcasts_band_table(spark):
 
 def test_control_charts_broadcast_moments(spark):
     """EWMA/CUSUM seed moments are a one-row-per-series aggregate —
-    broadcast back, never a sort-merge; exactly one grouped-map
-    Python stage (the recursion)."""
+    broadcast back, never a sort-merge; exactly one Python stage (the
+    recursion)."""
     from time_series_data_anomaly_detection_spark.functions.control import (
         cusum_chart,
     )
@@ -408,7 +408,7 @@ def test_control_charts_broadcast_moments(spark):
     plan = _plan(cusum_chart(series_df(spark, y)))
     assert _count(plan, "BroadcastHashJoin") >= 1
     assert "SortMergeJoin" not in plan
-    assert _count(plan, ") FlatMapGroupsInPandas") == 1
+    assert _count(plan, ") MapInPandas") == 1
 
 
 def test_asof_join_single_exchange_no_range_join(spark):
@@ -675,9 +675,9 @@ def test_demand_classification_broadcasts_threshold(spark):
 def test_fixed_twins_plans_are_scale_safe(spark):
     """The r08 hash-gated twins (SR / matrix-profile / PELT / BOCPD /
     DTW fixed) must stay native column algebra: no Python UDF stages
-    (ArrowEvalPython / FlatMapGroupsInPandas / BatchEvalPython), no
-    CartesianProduct, and the literal twiddle/series-dimension tables
-    ride broadcast joins."""
+    (ArrowEvalPython / FlatMapGroupsInPandas / MapInPandas /
+    BatchEvalPython), no CartesianProduct, and the literal
+    twiddle/series-dimension tables ride broadcast joins."""
     from time_series_data_anomaly_detection_spark.plans import registry as Reg
 
     sf = "/root/testdata/sf0.001"
@@ -692,6 +692,7 @@ def test_fixed_twins_plans_are_scale_safe(spark):
         plan = _plan(df)
         assert _count(plan, "ArrowEvalPython") == 0, name
         assert _count(plan, "FlatMapGroupsInPandas") == 0, name
+        assert _count(plan, "MapInPandas") == 0, name
         assert _count(plan, "BatchEvalPython") == 0, name
         assert _count(plan, "CartesianProduct") == 0, name
     # the SR twin's two 64-row twiddle joins must be broadcasts
@@ -727,6 +728,7 @@ def test_widened_twins_plans_are_scale_safe(spark):
         plan = _plan(df)
         assert _count(plan, "ArrowEvalPython") == 0, name
         assert _count(plan, "FlatMapGroupsInPandas") == 0, name
+        assert _count(plan, "MapInPandas") == 0, name
         assert _count(plan, "BatchEvalPython") == 0, name
         assert _count(plan, "CartesianProduct") == 0, name
     # the full-extent matrix profile's O(w²) pair frame must stay a
@@ -752,26 +754,38 @@ def test_widened_twins_plans_are_scale_safe(spark):
     assert _count(plan, ") BroadcastHashJoin") >= 2
 
 
-def _grouped_map_exchanges(plan: str) -> list[str]:
-    """For each FlatMapGroupsInPandas of a formatted plan, the
-    ``Arguments`` of the first Exchange beneath it, expression ids
-    and plan ids dropped."""
+def _node_args(plan: str, node: str, name: str) -> str:
+    """The ``Arguments`` of node ``(node) name`` of a formatted plan,
+    expression ids and plan ids dropped."""
+    import re
+
+    args = re.search(
+        rf"\n\({node}\) {name}\n(?:.*\n)*?Arguments: (.*)", plan
+    ).group(1)
+    return re.sub(r"#\d+L?|, \[plan_id=\d+\]", "", args)
+
+
+def _shell_inputs(plan: str) -> list[tuple[str, str]]:
+    """For each MapInPandas of a formatted plan, the ``Arguments`` of
+    the first Sort beneath it and of the first Exchange beneath that
+    Sort."""
     import re
 
     tree = plan.split("\n\n")[0].splitlines()
     out = []
     for i, line in enumerate(tree):
-        if "FlatMapGroupsInPandas (" not in line:
+        if " MapInPandas (" not in line:
             continue
-        node = next(
-            re.search(r" Exchange \((\d+)\)", below).group(1)
-            for below in tree[i + 1 :]
-            if re.search(r" Exchange \(\d+\)", below)
+        below = [
+            m.groups()
+            for m in (re.search(r" (Sort|Exchange) \((\d+)\)", b) for b in tree[i + 1 :])
+            if m
+        ]
+        j = next(j for j, (name, _) in enumerate(below) if name == "Sort")
+        exchange = next(node for name, node in below[j:] if name == "Exchange")
+        out.append(
+            (_node_args(plan, below[j][1], "Sort"), _node_args(plan, exchange, "Exchange"))
         )
-        args = re.search(
-            rf"\n\({node}\) Exchange\n(?:.*\n)*?Arguments: (.*)", plan
-        ).group(1)
-        out.append(re.sub(r"#\d+L?|, \[plan_id=\d+\]", "", args))
     return out
 
 
@@ -820,10 +834,11 @@ SHELL_CALLERS = {
 
 @pytest.mark.parametrize("caller", list(SHELL_CALLERS))
 def test_grouped_map_partitioning_follows_task_slots(spark, caller):
-    """Every batch per-series grouped-map runs on exactly one hash
+    """Every batch per-series Python pass runs on exactly one hash
     exchange by its group keys into ``defaultParallelism`` partitions
     — whatever the shuffle-partition setting, which AQE would
-    otherwise coalesce by bytes."""
+    otherwise coalesce by bytes — sorted within each partition by
+    ``(keys, rn)``."""
     fn, kw, keys = SHELL_CALLERS[caller]
     slots = spark.sparkContext.defaultParallelism
     y = np.sin(np.arange(200) / 4.0)
@@ -835,7 +850,26 @@ def test_grouped_map_partitioning_follows_task_slots(spark, caller):
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
     want = [
-        f"hashpartitioning({', '.join(k)}, {slots}), REPARTITION_BY_NUM"
+        (
+            "[" + ", ".join(f"{c} ASC NULLS FIRST" for c in (*k, "rn")) + "], false, 0",
+            f"hashpartitioning({', '.join(k)}, {slots}), REPARTITION_BY_NUM",
+        )
         for k in keys
     ]
-    assert sorted(_grouped_map_exchanges(plan)) == sorted(want)
+    assert sorted(_shell_inputs(plan)) == sorted(want)
+    assert _count(plan, "FlatMapGroupsInPandas") == 0
+
+
+@pytest.mark.parametrize("model", ["kalman", "bsts", "lstm"])
+def test_rolling_sigma_score_rides_the_model_pass(spark, model):
+    """``score_model``'s rolling-σ score is computed in the model's own
+    Python pass: no Exchange, Sort or Window sits above it."""
+    from time_series_data_anomaly_detection_spark.plans.pipelines import score_model
+
+    kw = dict(epochs=1, hidden=4) if model == "lstm" else {}
+    y = np.sin(np.arange(200) / 4.0)
+    tree = _plan(score_model(series_df(spark, y), model, **kw)).split("\n\n")[0]
+    above = tree.split(" MapInPandas (")[0]
+    assert tree.count(" MapInPandas (") == 1
+    for node in ("Exchange", "Sort", "Window"):
+        assert f" {node} (" not in above, node

@@ -16,9 +16,9 @@ Design principles (100 TB scale):
   ``Window.partitionBy("series_id").orderBy("timestamp")`` — the
   parallelism axis is *many series*; no operator ever needs a global
   sort or a single-partition window.
-- Model fits (Kalman, GP, BOCPD, ...) are Arrow-batched grouped-map
-  pandas UDFs (``applyInPandas``) — one fit per series, fanned out
-  across executors.
+- Model fits (Kalman, GP, BOCPD, ...) are Arrow-batched pandas UDFs
+  (one ``mapInPandas`` pass per task, ``functions._partition``) — one
+  fit per series, fanned out across executors.
 - Small sides (labels, event tables, threshold grids) are broadcast.
 """
 

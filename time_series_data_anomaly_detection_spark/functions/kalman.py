@@ -14,7 +14,7 @@ reference's L-BFGS MLE — parity is at the metric level, not row level
 (SURVEY §5 determinism note).
 
 Spark shape: each model is a module-level kernel over one series, run
-by the package's one grouped-map shell (``_partition.per_series``),
+by the package's one per-series shell (``_partition.per_series``),
 fanned out across executors.  State per group is O(state_dim²) — tiny.
 At 100 TB the constraint is rows-per-series, not series count; the
 filter is O(T) per series.
@@ -29,6 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ._partition import per_series
+from ._score import rolling_sigma_z
 from .shesd import _norm_ppf
 
 
@@ -104,8 +105,8 @@ def _band(y: np.ndarray, mean: np.ndarray, var: np.ndarray,
 
 
 def kalman_local_level_kernel(g: pd.DataFrame, train_frac: float = 1.0,
-                              alpha: float = 0.05,
-                              dynamic: bool = True) -> dict:
+                              alpha: float = 0.05, dynamic: bool = True,
+                              score_col: str | None = None) -> dict:
     """:func:`kalman_local_level` on one series ``g`` in ``rn`` order."""
     y = g["value"].to_numpy(float)
     n = len(y)
@@ -134,7 +135,10 @@ def kalman_local_level_kernel(g: pd.DataFrame, train_frac: float = 1.0,
                 pp = (1 - kg) * pv
         mu_pred = np.concatenate([mu_pred, fc_mean])
         var_pred = np.concatenate([var_pred, fc_var])
-    return _band(y, mu_pred, var_pred, alpha)
+    out = _band(y, mu_pred, var_pred, alpha)
+    if score_col:
+        out[score_col] = rolling_sigma_z(out["resid"])
+    return out
 
 
 def kalman_local_level(
@@ -142,6 +146,7 @@ def kalman_local_level(
     train_frac: float = 1.0,
     alpha: float = 0.05,
     dynamic: bool = True,
+    score_col: str | None = None,
 ) -> DataFrame:
     """M2: per-series local-level Kalman one-step-ahead prediction.
 
@@ -158,12 +163,16 @@ def kalman_local_level(
     - ``dynamic=False``: one-step-ahead filtering continues through the
       tail with the train-fit ``(q, r)`` — the state updates on each
       observed test value but the hyperparameters never see test data.
+
+    ``score_col`` additionally emits the rolling-σ z-score of the
+    residuals (``functions._score.rolling_sigma_z``) inside the same
+    pass.
     """
     return per_series(
         df.select("series_id", "timestamp", "value", "rn"),
-        KALMAN_SCHEMA,
+        KALMAN_SCHEMA + (f", {score_col} double" if score_col else ""),
         partial(kalman_local_level_kernel, train_frac=train_frac,
-                alpha=alpha, dynamic=dynamic),
+                alpha=alpha, dynamic=dynamic, score_col=score_col),
     )
 
 
@@ -298,7 +307,8 @@ BSTS_SCHEMA = KALMAN_SCHEMA
 
 def bsts_forecast_kernel(g: pd.DataFrame, period: int = 24,
                          train_frac: float = 0.5, alpha: float = 0.05,
-                         seasonal_periods: list[int] | None = None) -> dict:
+                         seasonal_periods: list[int] | None = None,
+                         score_col: str | None = None) -> dict:
     """:func:`bsts_forecast` on one series ``g`` in ``rn`` order."""
     y = g["value"].to_numpy(float)
     n = len(y)
@@ -364,7 +374,10 @@ def bsts_forecast_kernel(g: pd.DataFrame, period: int = 24,
             P = P_pred - np.outer(K, K) * f_var
         else:
             a, P = a_pred, P_pred
-    return _band(y, pred_mean, pred_var, alpha)
+    out = _band(y, pred_mean, pred_var, alpha)
+    if score_col:
+        out[score_col] = rolling_sigma_z(out["resid"])
+    return out
 
 
 def bsts_forecast(
@@ -373,6 +386,7 @@ def bsts_forecast(
     train_frac: float = 0.5,
     alpha: float = 0.05,
     seasonal_periods: list[int] | None = None,
+    score_col: str | None = None,
 ) -> DataFrame:
     """M3: local-linear-trend + seasonal state space, numpy Kalman.
 
@@ -390,11 +404,13 @@ def bsts_forecast(
     Fixed variance ratios (deterministic in lieu of MLE).  Fits on the
     train fraction, dynamic multi-step forecast over the tail with
     growing variance, as the reference's ``predict_bsts(dynamic=True)``
-    (``src/bsts_model.py:52-71``).
+    (``src/bsts_model.py:52-71``).  ``score_col`` additionally emits
+    the rolling-σ z-score of the residuals in the same pass.
     """
     return per_series(
         df.select("series_id", "timestamp", "value", "rn"),
-        BSTS_SCHEMA,
+        BSTS_SCHEMA + (f", {score_col} double" if score_col else ""),
         partial(bsts_forecast_kernel, period=period, train_frac=train_frac,
-                alpha=alpha, seasonal_periods=seasonal_periods),
+                alpha=alpha, seasonal_periods=seasonal_periods,
+                score_col=score_col),
     )

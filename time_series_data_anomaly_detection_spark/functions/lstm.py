@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 
 from ._lstm_numpy import NumpyLSTM
 from ._partition import per_series
+from ._score import rolling_sigma_z
 
 LSTM_SCHEMA = (
     "series_id string, timestamp timestamp, value double, rn long, "
@@ -35,15 +36,29 @@ LSTM_SCHEMA = (
 def lstm_forecast_kernel(g: pd.DataFrame, seq_len: int = 48, hidden: int = 64,
                          epochs: int = 10, train_frac: float = 1.0,
                          seed: int = 0, max_train_windows: int | None = None,
-                         batch: int = 64, lr: float = 1e-3) -> dict:
+                         batch: int = 64, lr: float = 1e-3,
+                         score_col: str | None = None) -> dict:
     """:func:`lstm_forecast` on one series ``g`` in ``rn`` order."""
     y = g["value"].to_numpy(np.float64)
     n = len(y)
-    if n <= seq_len:
-        # shorter than one window: the reference NaN-pads the whole
-        # series; without this guard sliding_window_view raises and
-        # kills every series in the query
-        return {"pred_mean": np.nan, "resid": np.nan}
+    full = np.full(n, np.nan)
+    # shorter than one window: the reference NaN-pads the whole series;
+    # without this guard sliding_window_view raises and kills every
+    # series in the query
+    if n > seq_len:
+        full[seq_len:] = _predict(y, seq_len, hidden, epochs, train_frac,
+                                  seed, max_train_windows, batch, lr)
+    out = {"pred_mean": full, "resid": y - full}
+    if score_col:
+        out[score_col] = rolling_sigma_z(out["resid"])
+    return out
+
+
+def _predict(y: np.ndarray, seq_len: int, hidden: int, epochs: int,
+             train_frac: float, seed: int, max_train_windows: int | None,
+             batch: int, lr: float) -> np.ndarray:
+    """Train on ``y``'s windows and predict ``y[seq_len:]``."""
+    n = len(y)
     mu, sd = float(y.mean()), float(y.std()) or 1.0
     z = (y - mu) / sd
     n_train = max(int(n * train_frac), seq_len + 2)
@@ -56,10 +71,7 @@ def lstm_forecast_kernel(g: pd.DataFrame, seq_len: int = 48, hidden: int = 64,
     X_tr, y_tr = X[lo:hi, :, None], t[lo:hi]
     model = NumpyLSTM(hidden, seed=seed)
     model.fit(X_tr, y_tr, epochs=epochs, batch=batch, seed=seed, lr=lr)
-    preds = model.predict(X[:, :, None])
-    full = np.full(n, np.nan)
-    full[seq_len:] = preds * sd + mu
-    return {"pred_mean": full, "resid": y - full}
+    return model.predict(X[:, :, None]) * sd + mu
 
 
 def lstm_forecast(
@@ -72,6 +84,7 @@ def lstm_forecast(
     max_train_windows: int | None = None,
     batch: int = 64,
     lr: float = 1e-3,
+    score_col: str | None = None,
 ) -> DataFrame:
     """Per-series LSTM one-step-ahead prediction.
 
@@ -80,12 +93,14 @@ def lstm_forecast(
     predictions (NaN-padding, ``src/run_lstm.py:69-71``); values are
     z-normalized with train moments and predictions inverse-transformed
     (``src/run_lstm.py:36-39,74``).  Training is seeded per series.
+    ``score_col`` additionally emits the rolling-σ z-score of the
+    residuals in the same pass.
     """
     return per_series(
         df.select("series_id", "timestamp", "value", "rn"),
-        LSTM_SCHEMA,
+        LSTM_SCHEMA + (f", {score_col} double" if score_col else ""),
         partial(lstm_forecast_kernel, seq_len=seq_len, hidden=hidden,
                 epochs=epochs, train_frac=train_frac, seed=seed,
                 max_train_windows=max_train_windows, batch=batch,
-                lr=lr),
+                lr=lr, score_col=score_col),
     )

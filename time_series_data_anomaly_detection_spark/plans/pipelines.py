@@ -40,19 +40,23 @@ NATIVE_SQL_MODELS = frozenset({"ar1"})
 def score_model(df: DataFrame, model: str = "kalman", **kw) -> DataFrame:
     """Attach ``resid`` + ``score`` columns for one model family.
 
-    score = |resid| / rolling_std(resid, 48) — the reference's residual
-    z-scoring (``src/run_bsts.py:105-106``); MAD variant for 'stl'
-    (``src/run_hybrid.py:41-42``).
+    score = |resid| / (rolling_std(resid, 48) + 1e-6) — the reference's
+    residual z-scoring (``src/run_bsts.py:105-106``) — for 'kalman',
+    'bsts' and 'lstm'; MAD variant for 'stl' and 'ar'
+    (``src/run_hybrid.py:41-42``).  Both are computed inside the
+    model's own Python pass (``functions._score``), over each series in
+    ``rn`` order, bit-identical to the ``rolling_stats`` /
+    ``mad_scores`` operator forms with none of their stages.
     """
     if model == "kalman":
         from ..functions import kalman_local_level
 
-        scored = kalman_local_level(df, **kw)
-    elif model == "bsts":
+        return kalman_local_level(df, score_col="score", **kw)
+    if model == "bsts":
         from ..functions import bsts_forecast
 
-        scored = bsts_forecast(df, **kw)
-    elif model == "gp":
+        return bsts_forecast(df, score_col="score", **kw)
+    if model == "gp":
         from ..functions import gp_forecast
 
         scored = gp_forecast(df, **kw)
@@ -61,11 +65,11 @@ def score_model(df: DataFrame, model: str = "kalman", **kw) -> DataFrame:
             F.abs(F.col("value") - F.col("pred_mean"))
             / (F.col("pred_std") + F.lit(1e-9)),
         )
-    elif model == "lstm":
+    if model == "lstm":
         from ..functions.lstm import lstm_forecast
 
-        scored = lstm_forecast(df, **kw)
-    elif model == "ar1":
+        return lstm_forecast(df, score_col="score", **kw)
+    if model == "ar1":
         # fully native SQL-algebra family: closed-form AR(1) fit + MAD
         # z-score of residuals — zero Python, and every step has an
         # exact DuckDB mirror (the oracle-checkable member of the AR
@@ -75,27 +79,20 @@ def score_model(df: DataFrame, model: str = "kalman", **kw) -> DataFrame:
         return mad_scores(
             ar1_forecast_native(df), value_col="resid", out_col="score"
         )
-    elif model == "ar":
+    if model == "ar":
         from ..functions import ar_forecast
 
         kw.setdefault("p", kw.pop("period", 24))
         # robust sigma: a burst inflates the trailing rolling std enough
         # to hide itself (score ~6 instead of ~26); MAD doesn't move.
-        # Scored in-UDF (functions._score) — exact mad_scores math,
-        # none of its stage waves; null-resid head rows keep null
-        # scores (they were filtered out before, and null > k is false
-        # either way)
+        # Null-resid head rows keep null scores (they were filtered out
+        # before, and null > k is false either way)
         return ar_forecast(df, score_col="score", **kw)
-    elif model == "stl":
+    if model == "stl":
         from ..functions import stl_decompose
 
         return stl_decompose(df, score_col="score", **kw)
-    else:
-        raise ValueError(f"unknown model {model!r}")
-    scored = rolling_stats(scored, value_col="resid", out_prefix="rs")
-    return scored.withColumn(
-        "score", F.abs(F.col("resid")) / (F.col("rs_std") + F.lit(1e-6))
-    ).drop("rs_mean", "rs_std")
+    raise ValueError(f"unknown model {model!r}")
 
 
 def detection_pipeline(
@@ -204,26 +201,16 @@ def _score_branch(series: DataFrame, name: str, period: int) -> DataFrame:
         # reference's z_bsts column
         from ..functions import bsts_forecast
 
-        return rolling_stats(
-            bsts_forecast(series, period=period, train_frac=0.5),
-            value_col="resid", out_prefix="rs",
-        ).select(
-            "series_id", "rn", F.lit("bsts").alias("tag"),
-            (F.abs(F.col("resid")) / (F.col("rs_std") + F.lit(1e-6))).alias("z"),
-        )
+        return bsts_forecast(
+            series, period=period, train_frac=0.5, score_col="z"
+        ).select("series_id", "rn", F.lit("bsts").alias("tag"), "z")
     if name == "lstm":
         from ..functions.lstm import lstm_forecast
 
-        return rolling_stats(
-            lstm_forecast(
-                series, seq_len=period, hidden=24, epochs=6, batch=96,
-                train_frac=0.5, max_train_windows=1500,
-            ),
-            value_col="resid", out_prefix="rs",
-        ).select(
-            "series_id", "rn", F.lit("lstm").alias("tag"),
-            (F.abs(F.col("resid")) / (F.col("rs_std") + F.lit(1e-6))).alias("z"),
-        )
+        return lstm_forecast(
+            series, seq_len=period, hidden=24, epochs=6, batch=96,
+            train_frac=0.5, max_train_windows=1500, score_col="z",
+        ).select("series_id", "rn", F.lit("lstm").alias("tag"), "z")
     if name == "ar1":
         return mad_scores(
             ar1_forecast_native(series), value_col="resid", out_col="z"
