@@ -17,6 +17,33 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def ledger_key(sf: float) -> str:
+    """Retry-ledger key: CPU model, CPU count and SF.  The hostname is
+    left out: it changes between containers on the same hardware."""
+    model = "unknown"
+    try:
+        with open("/proc/cpuinfo") as f:
+            model = next(
+                (ln.split(":", 1)[1].strip() for ln in f if ln.startswith("model name")),
+                model,
+            )
+    except OSError:
+        pass
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count())
+    return f"{model} | {cpus} cpus | sf{sf}"
+
+
+def ledger_baseline(ledger: dict, key: str) -> dict[str, float]:
+    """The best known warm time per query under ``key``; empty for a
+    key never seen before."""
+    return dict(ledger.get(key, {}))
+
+
+def warm_times(baseline: dict[str, float], timings: dict[str, float]) -> dict[str, float]:
+    """Monotone min of this run's timings and the ledger's."""
+    return {n: round(min(baseline.get(n, t), t), 4) for n, t in timings.items()}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -79,35 +106,23 @@ def main() -> None:
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
     )
     prior: dict[str, float] = {}
-    prior_baseline: dict[str, float] = {}
-    # baselines are persisted PER SF ({"0.1": {...}, "0.001": {...}})
-    # so a run at one SF never erases another SF's warm-baseline
-    # history — a single shared dict meant one stray sf0.001 run wiped
-    # the sf0.1 retry reference until rebuilt.  Legacy single-dict
-    # files (float values) are adopted under their own recorded SF.
-    baselines_by_sf: dict[str, dict[str, float]] = {}
-    sf_key = str(sf)
+    # the retry ledger ("baseline": best known warm time per query, a
+    # monotone min across runs) is keyed by host and SF, so a run only
+    # ever compares itself with runs of the same CPU model, CPU count
+    # and SF; the first run under a new key retries nothing.  Entries
+    # under other keys (older SF-only keys included) pass through.
+    ledger: dict = {}
+    key = ledger_key(sf)
     try:
         with open(prior_path) as f:
             _pd = json.load(f)
             prior = _pd.get("queries", {})
-            _bl = _pd.get("baseline", {})
-            if _bl and all(isinstance(v, dict) for v in _bl.values()):
-                baselines_by_sf = _bl
-            elif _bl:  # legacy flat dict: belongs to that file's SF
-                baselines_by_sf = {str(_pd.get("sf")): _bl}
-            # baseline times are SF-specific: a run at another SF must
-            # not consult them.  `prior` still orders cheap-first
-            # (ranks transfer across SFs); retries key off `baseline`.
-            prior_baseline = dict(baselines_by_sf.get(sf_key, {}))
-            if _pd.get("sf") == sf:
-                prior_baseline = {
-                    n: min(v for v in (prior_baseline.get(n), prior.get(n))
-                           if v is not None)
-                    for n in set(prior_baseline) | set(prior)
-                }
+            ledger = _pd.get("baseline", {})
     except Exception:
         pass
+    # `prior` orders cheap-first (ranks transfer across hosts and SFs);
+    # retries key off the ledger only
+    prior_baseline = ledger_baseline(ledger, key)
     asc = sorted(qs, key=lambda n: (n not in prior, prior.get(n, 0.0), n))
     # ...but not PURELY cheap-first: long sessions age (r06: positions
     # 100-125 ran ~1.8x their fresh time from accumulated heap/GC
@@ -239,9 +254,7 @@ def main() -> None:
     # monotone min of this run and the persisted baseline — the number
     # any "X s warm" claim must quote, committed alongside the raw
     # first-pass timings so claims and artifacts can't drift apart
-    warm = {
-        n: round(min(baseline.get(n, t), t), 4) for n, t in timings.items()
-    }
+    warm = warm_times(baseline, timings)
     warm_total = round(sum(warm.values()), 4)
 
     # Full per-query detail goes to a file; the stdout line must stay
@@ -259,8 +272,8 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                # per-query warm numbers for THIS SF (same values as
-                # baseline[sf] — duplicated under an explicit name so
+                # per-query warm numbers for this host and SF (same
+                # values as baseline[key] — duplicated under a name so
                 # readers quoting "warm" cite the committed artifact)
                 "warm": warm,
                 "warm_total": warm_total,
@@ -270,12 +283,9 @@ def main() -> None:
                 # fast/slow bands before reading first-pass deltas
                 "probe": {"query": probe_name, "cells": probe_cells},
                 # best known warm time per query (monotone min across
-                # runs), keyed by SF — the retry reference, not a
-                # timing report; other SFs' entries pass through intact
-                "baseline": {
-                    **baselines_by_sf,
-                    sf_key: warm,
-                },
+                # runs), keyed by ledger_key — the retry reference, not
+                # a timing report; other keys' entries pass through
+                "baseline": {**ledger, key: warm},
                 "sf": sf,
             },
             f,

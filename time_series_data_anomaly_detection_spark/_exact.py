@@ -23,8 +23,10 @@ flip at the last decimal:
    both sides — given bit-identical x (point 1) the result is
    bit-identical, whatever the tie.
 
-Both helpers exist in a Spark (Column) and a SQL-text (DuckDB) form;
-keep the algebra in the two forms textually in lockstep.
+These are the Spark (Column) forms.  The oracles spell the same
+algebra in SQL text: the quantizer through
+``plans.registry.tieproof_round_sql``, the sums as ``CAST(sum(CAST(x AS
+DECIMAL(38,12))) AS DOUBLE)``; keep the two forms in lockstep.
 """
 
 from __future__ import annotations
@@ -47,15 +49,6 @@ def r6(col: Column | str) -> Column:
     return F.when(F.isnan(c), F.lit(None).cast("double")).otherwise(q)
 
 
-def sql_r6(e: str) -> str:
-    """Tie-proof 6-decimal quantizer (DuckDB SQL text) — the exact
-    mirror of :func:`r6`."""
-    return (
-        f"CASE WHEN isnan(CAST(({e}) AS DOUBLE)) THEN NULL "
-        f"ELSE floor(CAST(({e}) AS DOUBLE) * 1000000.0 + 0.5) / 1000000.0 END"
-    )
-
-
 def dsum(col: Column | str) -> Column:
     """Order-independent sum of doubles via exact decimal accumulation
     (Spark side).  Apply ``.over(window)`` on the returned aggregate via
@@ -65,10 +58,3 @@ def dsum(col: Column | str) -> Column:
 
 def dsum_over(col: Column | str, window) -> Column:
     return F.sum(_c(col).cast(DEC)).over(window).cast("double")
-
-
-def sql_dsum(e: str, over: str = "") -> str:
-    """DuckDB mirror of :func:`dsum` / :func:`dsum_over`.  ``over`` is
-    e.g. ``"OVER w"`` for windowed sums."""
-    suffix = f" {over}" if over else ""
-    return f"CAST(sum(CAST(({e}) AS DECIMAL(38,12))){suffix} AS DOUBLE)"

@@ -420,8 +420,9 @@ def minhash_lsh_pairs(
     # cached/pruned shingle frame lands under the broadcast threshold
     # and auto-broadcasts it, which holds at 5k docs and OOMs the
     # driver at the 100x stress corpus (500k docs / ~25M shingle
-    # rows), i.e. it would never survive a real crawl.  Found by
-    # scripts/scale_stress.py SCALE_REPL=100 (r09 verdict item #3);
+    # rows), i.e. it would never survive a real crawl.  Found by the
+    # 100x dup-heavy corpus stress run; the OOM and the 100x timings
+    # are recorded in SCALING.md, "100× stress (r09 verdict item #3)".
     # shuffle_hash keeps the build per-partition and scales with
     # executors.
     #

@@ -200,8 +200,8 @@ def ivf_topk(
     breadth is capped by that super-cell's size and neighbors that
     quantize across the super-cell boundary are unreachable — the
     standard hierarchical-IVF recall trade.  Measured at 2M vectors /
-    1024 cells the two-level recall was 1.000 vs flat (r12_ann2m,
-    SCALING.md); re-measure with :func:`topk_recall` before trusting a
+    1024 cells the two-level recall was 1.000 vs flat (SCALING.md,
+    "ANN at 2M vectors"); re-measure with :func:`topk_recall` before trusting a
     materially different dimension/cell layout, and if boundary loss
     shows up, probe the top-2 super-cells (doubles the assignment join
     fan-in, halves the boundary exposure).
@@ -231,8 +231,8 @@ def ivf_topk(
     # rank their own super-cell's sub-centroids and keep nprobe — a
     # query on a super-cell boundary probes within one super-cell
     # only, which is the standard hierarchical-IVF recall trade;
-    # measure it with topk_recall before trusting a layout (the
-    # r12_ann2m protocol).
+    # measure it with topk_recall before trusting a layout (as in
+    # SCALING.md, "ANN at 2M vectors").
     two_level = n_cells > 64
     if two_level:
         l1_cnt = min(64, max(8, int(n_cells ** 0.5) + 1))

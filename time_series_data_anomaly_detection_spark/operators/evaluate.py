@@ -135,6 +135,59 @@ def _event_counts(pairs: DataFrame, keys: tuple = KEYS) -> DataFrame:
     )
 
 
+def _duration_days(df: DataFrame, keys: tuple) -> DataFrame:
+    """Per-series span from first to last timestamp, in days."""
+    return df.groupBy(*keys).agg(
+        (
+            (F.unix_timestamp(F.max("timestamp")) - F.unix_timestamp(F.min("timestamp")))
+            / F.lit(86400.0)
+        ).alias("duration_days")
+    )
+
+
+def _median_latency(pairs: DataFrame, keys: tuple) -> DataFrame:
+    """Per-series median detection latency in minutes, from the pair frame.
+
+    The run tables carry their start timestamps (aggregated for free in
+    raw_runs' single points pass), so latency is pure event-table
+    algebra: no join back to the points frame (at 100x each join-back
+    was a second full scan + shuffle of the fact table; this was the
+    most expensive query in BENCH_r01 at 16.6s for that reason).
+    min(p_start_ts) is the timestamp of min(p_start): both monotone.
+    """
+    return (
+        pairs.filter(F.col("t_eid").isNotNull() & F.col("p_eid").isNotNull())
+        .groupBy(*keys, "t_eid", "t_start_ts")
+        .agg(F.min("p_start_ts").alias("pred_ts"))
+        .withColumn(
+            "latency_min",
+            (F.unix_timestamp("pred_ts") - F.unix_timestamp("t_start_ts"))
+            / F.lit(60.0),
+        )
+        .groupBy(*keys)
+        .agg(F.percentile(F.col("latency_min"), F.lit(0.5)).alias("median_latency_minutes"))
+    )
+
+
+def _with_event_prf(out: DataFrame) -> DataFrame:
+    """fp, fn and event P/R/F1 columns from the ``_event_counts`` columns."""
+    return (
+        out.withColumn("fp", F.col("n_pred_events") - F.col("tp"))
+        .withColumn("fn", F.col("n_true_events") - F.col("tp_recall"))
+        .withColumn(
+            "precision", F.col("tp") / (F.col("n_pred_events") + F.lit(EPS))
+        )
+        .withColumn(
+            "recall", F.col("tp_recall") / (F.col("n_true_events") + F.lit(EPS))
+        )
+        .withColumn(
+            "f1",
+            2 * F.col("precision") * F.col("recall")
+            / (F.col("precision") + F.col("recall") + F.lit(EPS)),
+        )
+    )
+
+
 def event_level_metrics(
     df: DataFrame,
     truth_col: str = "is_anomaly",
@@ -151,21 +204,7 @@ def event_level_metrics(
     out = base.join(counts, list(keys), "left").fillna(
         0, ["n_true_events", "n_pred_events", "tp", "tp_recall"]
     )
-    out = (
-        out.withColumn("fp", F.col("n_pred_events") - F.col("tp"))
-        .withColumn("fn", F.col("n_true_events") - F.col("tp_recall"))
-        .withColumn(
-            "precision", F.col("tp") / (F.col("n_pred_events") + F.lit(EPS))
-        )
-        .withColumn(
-            "recall", F.col("tp_recall") / (F.col("n_true_events") + F.lit(EPS))
-        )
-    )
-    return out.withColumn(
-        "f1",
-        2 * F.col("precision") * F.col("recall")
-        / (F.col("precision") + F.col("recall") + F.lit(EPS)),
-    ).drop("tp_recall")
+    return _with_event_prf(out).drop("tp_recall")
 
 
 def business_metrics(
@@ -192,31 +231,9 @@ def business_metrics(
     )
     counts = _event_counts(pairs, keys).select(*keys, "n_pred_events", "tp")
     # duration + distinct series in the SAME scan of the points frame
-    base = df.groupBy(*keys).agg(
-        (
-            (F.unix_timestamp(F.max("timestamp")) - F.unix_timestamp(F.min("timestamp")))
-            / F.lit(86400.0)
-        ).alias("duration_days")
-    )
-    # earliest overlapping predicted event per hit true event — the run
-    # tables carry their start timestamps (aggregated for free in
-    # raw_runs' single points pass), so latency is pure event-table
-    # algebra: no join back to the points frame (at 100x each join-back
-    # was a second full scan + shuffle of the fact table; this was the
-    # most expensive query in BENCH_r01 at 16.6s for that reason).
-    # min(p_start_ts) is the timestamp of min(p_start): both monotone.
-    lat = (
-        pairs.filter(F.col("t_eid").isNotNull() & F.col("p_eid").isNotNull())
-        .groupBy(*keys, "t_eid", "t_start_ts")
-        .agg(F.min("p_start_ts").alias("pred_ts"))
-        .withColumn(
-            "latency_min",
-            (F.unix_timestamp("pred_ts") - F.unix_timestamp("t_start_ts"))
-            / F.lit(60.0),
-        )
-        .groupBy(*keys)
-        .agg(F.percentile(F.col("latency_min"), F.lit(0.5)).alias("median_latency_minutes"))
-    )
+    base = _duration_days(df, keys)
+    # earliest overlapping predicted event per hit true event
+    lat = _median_latency(pairs, keys)
     out = (
         base.join(counts, list(keys), "left")
         .join(lat, list(keys), "left")
@@ -260,48 +277,18 @@ def leaderboard_metrics(
                      persist_p=persist_p, carry_ts=True)
     )
     counts = _event_counts(pairs, keys)
-    base = df.groupBy(*keys).agg(
-        (
-            (F.unix_timestamp(F.max("timestamp")) - F.unix_timestamp(F.min("timestamp")))
-            / F.lit(86400.0)
-        ).alias("duration_days")
-    )
-    lat = (
-        pairs.filter(F.col("t_eid").isNotNull() & F.col("p_eid").isNotNull())
-        .groupBy(*keys, "t_eid", "t_start_ts")
-        .agg(F.min("p_start_ts").alias("pred_ts"))
-        .withColumn(
-            "latency_min",
-            (F.unix_timestamp("pred_ts") - F.unix_timestamp("t_start_ts"))
-            / F.lit(60.0),
-        )
-        .groupBy(*keys)
-        .agg(F.percentile(F.col("latency_min"), F.lit(0.5)).alias("median_latency_minutes"))
-    )
-    out = (
+    base = _duration_days(df, keys)
+    lat = _median_latency(pairs, keys)
+    out = _with_event_prf(
         base.join(counts, list(keys), "left")
         .join(lat, list(keys), "left")
         .fillna(0, ["n_true_events", "n_pred_events", "tp", "tp_recall"])
-        .withColumn("fp", F.col("n_pred_events") - F.col("tp"))
-        .withColumn("fn", F.col("n_true_events") - F.col("tp_recall"))
-        .withColumn(
-            "precision", F.col("tp") / (F.col("n_pred_events") + F.lit(EPS))
-        )
-        .withColumn(
-            "recall", F.col("tp_recall") / (F.col("n_true_events") + F.lit(EPS))
-        )
-        .withColumn(
-            "f1",
-            2 * F.col("precision") * F.col("recall")
-            / (F.col("precision") + F.col("recall") + F.lit(EPS)),
-        )
-        .withColumn(
-            "fp_per_day",
-            F.when(
-                F.col("duration_days") > 0,
-                F.col("fp") / F.col("duration_days"),
-            ).otherwise(F.lit(0.0)),
-        )
+    ).withColumn(
+        "fp_per_day",
+        F.when(
+            F.col("duration_days") > 0,
+            F.col("fp") / F.col("duration_days"),
+        ).otherwise(F.lit(0.0)),
     )
     return out.drop("tp_recall", "duration_days")
 

@@ -317,50 +317,6 @@ def _sql_events_keyed(
 """
 
 
-def _sql_events(src: str, out: str, flag: str, gap: int) -> str:
-    """RLE + gap-merge of ``src.flag`` into event table ``out``
-    (series_id, event_id, start_idx, end_idx) — mirrors
-    operators.events.flags_to_events."""
-    return f"""
-{out}_rle AS (
-  SELECT series_id, run_id, min(rn) AS start_idx, max(rn) AS end_idx
-  FROM (
-    SELECT series_id, rn, f,
-           sum(chg) OVER (PARTITION BY series_id ORDER BY rn) AS run_id
-    FROM (
-      SELECT series_id, rn, {flag} AS f,
-             CASE WHEN lag({flag}) OVER w IS NULL
-                   OR {flag} <> lag({flag}) OVER w THEN 1 ELSE 0 END AS chg
-      FROM {src}
-      WINDOW w AS (PARTITION BY series_id ORDER BY rn)
-    ) t0
-  ) t WHERE f = 1
-  GROUP BY series_id, run_id
-),
-{out}_merged AS (
-  SELECT series_id, min(start_idx) AS start_idx, max(end_idx) AS end_idx
-  FROM (
-    SELECT series_id, start_idx, end_idx,
-           sum(brk) OVER (PARTITION BY series_id ORDER BY start_idx) AS evt
-    FROM (
-      SELECT *, CASE WHEN lag(end_idx) OVER we IS NULL
-                      OR start_idx - lag(end_idx) OVER we > {gap} + 1
-                     THEN 1 ELSE 0 END AS brk
-      FROM {out}_rle
-      WINDOW we AS (PARTITION BY series_id ORDER BY start_idx)
-    ) t0
-  ) t
-  GROUP BY series_id, evt
-),
-{out} AS (
-  SELECT series_id,
-         row_number() OVER (PARTITION BY series_id ORDER BY start_idx) AS event_id,
-         start_idx, end_idx
-  FROM {out}_merged
-)
-"""
-
-
 # ---------------------------------------------------------------------------
 # Query implementations (Spark side)
 # ---------------------------------------------------------------------------
@@ -1729,7 +1685,7 @@ flags2 AS (
 """
 
 ORACLES["detect_events"] = f"""
-WITH {SQL_S}, {SQL_ROLL}, {SQL_FLAGS_K2}, {_sql_events("flags2", "ev", "flag", 3)}
+WITH {SQL_S}, {SQL_ROLL}, {SQL_FLAGS_K2}, {_sql_events_keyed("flags2", "ev", "flag", 3)}
 SELECT series_id, event_id, start_idx, end_idx FROM ev
 """
 
@@ -1757,9 +1713,9 @@ FROM c
 """
 
 _EVENT_TABLES = (
-    _sql_events("truth", "tev", "is_anomaly", 3)
+    _sql_events_keyed("truth", "tev", "is_anomaly", 3)
     + ","
-    + _sql_events("flags", "pev", "flag", 3)
+    + _sql_events_keyed("flags", "pev", "flag", 3)
 )
 
 ORACLES["event_metrics"] = f"""
@@ -1906,7 +1862,7 @@ FROM stepped GROUP BY 1
 
 ORACLES["threshold_sweep_event"] = f"""
 WITH {SQL_S}, {SQL_MAD}, {SQL_TRUTH},
-{_sql_events("truth", "tev", "is_anomaly", 3)},
+{_sql_events_keyed("truth", "tev", "is_anomaly", 3)},
 grid AS (SELECT unnest([{_KS}]) AS k),
 fl0 AS (
   SELECT m.series_id, m.rn, g.k,
@@ -4626,13 +4582,14 @@ m{i}d AS (
                    END) AS mad
   FROM m{i}c),
 m{i}e AS (
-  SELECT * EXCLUDE (med, mad), med, mad,
-         list_reduce(
-           list_transform(st, t -> {{'score': abs(t.v - med) / mad,
-                                     'idx': t.idx}}),
-           (a, b) -> CASE WHEN b.score > a.score THEN b ELSE a END)
-           AS best
-  FROM m{i}d),
+  SELECT * EXCLUDE (sc, mx), list_filter(sc, t -> t.score = mx)[1] AS best
+  FROM (
+    SELECT *, list_max(list_transform(sc, t -> t.score)) AS mx
+    FROM (
+      SELECT * EXCLUDE (med, mad), med, mad,
+             list_transform(st, t -> {{'score': abs(t.v - med) / mad,
+                                       'idx': t.idx}}) AS sc
+      FROM m{i}d))),
 s{i} AS (
   SELECT series_id,
          {"lam" + ", lam".join(str(k) for k in range(i + 1, 7)) + "," if i < 6 else ""}
@@ -5566,7 +5523,7 @@ def q_event_impact(spark, sf_dir):
 
 ORACLES["event_impact"] = f"""
 WITH {SQL_S}, {SQL_ROLL}, {SQL_FLAGS_K2},
-{_sql_events("flags2", "ev", "flag", 3)},
+{_sql_events_keyed("flags2", "ev", "flag", 3)},
 jx AS (
   SELECT ev.series_id, ev.event_id, ev.start_idx, ev.end_idx,
          s.rn, s.value,

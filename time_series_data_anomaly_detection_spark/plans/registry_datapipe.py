@@ -2766,7 +2766,7 @@ def q_pq_rerank(spark, sf_dir):
 def q_pq_rerank_prod(spark, sf_dir):
     """The full production retrieval stack under one hash: 64-bit PQ
     codes (numpy-kernel shortlist) + exact-cosine re-rank — the shape
-    that delivered recall 1.000 at 2M vectors (r12_ann2m), now
+    that delivered recall 1.000 at 2M vectors (SCALING.md), now
     driver-gated instead of script-proven."""
     from ..datapipe.similarity import pq_rerank_topk
 
