@@ -26,7 +26,7 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: label → adaptive-threshold detect → persistence →
     event-level metrics, per series, on sf0.001 (SURVEY §3.2 shape)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return _registry.q_event_metrics(spark, "/root/testdata/sf0.001")
+    return _registry.queries()["event_metrics"](spark, "/root/testdata/sf0.001")
 
 
 def load_history(repo: str) -> tuple[dict[str, tuple[int, str]], int]:

@@ -80,19 +80,16 @@ def main() -> None:
     if not os.path.isdir(warm_dir):
         warm_dir = sf_dir
     from time_series_data_anomaly_detection_spark.plans.registry import (
-        q_mad_scores,
-        q_resample_decompose,
-        q_rolling_stats,
+        queries,
     )
 
-    q_rolling_stats(spark, warm_dir).write.format("noop").mode("overwrite").save()
-    q_mad_scores(spark, warm_dir).write.format("noop").mode("overwrite").save()
-    # the resample/grid/decompose codegen family: measured 0.98 s when
-    # its DAG ran late (warm) vs 7.7-8.3 s when it ran first in its
-    # family — the one remaining positional-JIT case after cheap-first
-    q_resample_decompose(spark, warm_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    qs = queries()
+    # rolling and MAD, then the resample/grid/decompose codegen family:
+    # measured 0.98 s when its DAG ran late (warm) vs 7.7-8.3 s when it
+    # ran first in its family — the one remaining positional-JIT case
+    # after cheap-first
+    for name in ("rolling_stats", "mad_scores", "resample_decompose"):
+        qs[name](spark, warm_dir).write.format("noop").mode("overwrite").save()
 
     # Execution order is CHEAP-FIRST by the last committed per-query
     # timings — decoupled from the dict (gate) order, which fronts the

@@ -52,23 +52,22 @@ def build_panels(spark, sf_dir: str) -> dict:
     """Run the six gated panel queries and pull each (small) frame to
     the driver.  Import here so the example works from a clean CWD."""
     from time_series_data_anomaly_detection_spark.plans.registry import (
-        q_histogram_fit,
-        q_m4_downsample,
-        q_pr_curve,
-        q_qq_plot,
-        q_rolling_stats,
-        q_seasonal_heatmap,
+        queries,
     )
 
+    qs = queries()
     panels = {
-        "qq": q_qq_plot,
-        "hist": q_histogram_fit,
-        "rolling": q_rolling_stats,
-        "pr": q_pr_curve,
-        "heatmap": q_seasonal_heatmap,
-        "m4": q_m4_downsample,
+        "qq": "qq_plot",
+        "hist": "histogram_fit",
+        "rolling": "rolling_stats",
+        "pr": "pr_curve",
+        "heatmap": "seasonal_heatmap",
+        "m4": "m4_downsample",
     }
-    return {name: fn(spark, sf_dir).toPandas() for name, fn in panels.items()}
+    return {
+        panel: qs[name](spark, sf_dir).toPandas()
+        for panel, name in panels.items()
+    }
 
 
 def render(panels: dict, out_dir: str) -> list[str]:

@@ -25,21 +25,26 @@ sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
 from pyspark.sql import functions as F  # noqa: E402
 
 from time_series_data_anomaly_detection_spark import get_spark  # noqa: E402
-from time_series_data_anomaly_detection_spark.plans import registry  # noqa: E402
+from time_series_data_anomaly_detection_spark.plans.registry import (  # noqa: E402
+    queries,
+)
+from time_series_data_anomaly_detection_spark.sources import (  # noqa: E402
+    events_as_series,
+    with_row_index,
+)
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="stattests-example")
     spark.sparkContext.setLogLevel("ERROR")
+    qs = queries()
 
     print("== variance ratio (VR~1: random walk; <1: mean-reverting) ==")
-    registry.q_variance_ratio(spark, sf_dir).orderBy(
-        "series_id", "q"
-    ).show(15, False)
+    qs["variance_ratio"](spark, sf_dir).orderBy("series_id", "q").show(15, False)
 
     print("== R/S analysis + driver-side Hurst slope ==")
-    rs = registry.q_rs_hurst(spark, sf_dir).toPandas()
+    rs = qs["rs_hurst"](spark, sf_dir).toPandas()
     for sid, g in rs.groupby("series_id"):
         g = g.sort_values("scale")
         if len(g) == 2 and (g["rs_mean"] > 0).all():
@@ -49,7 +54,7 @@ def main() -> None:
             print(f"  {sid}: H ≈ {h:.3f}")
 
     print("== Ljung-Box: raw series (expect reject) ==")
-    registry.q_ljung_box(spark, sf_dir).show(10, False)
+    qs["ljung_box"](spark, sf_dir).show(10, False)
 
     print("== Ljung-Box on AR(1) residuals (the fit should whiten) ==")
     from time_series_data_anomaly_detection_spark.functions.ar import (
@@ -58,12 +63,9 @@ def main() -> None:
     from time_series_data_anomaly_detection_spark.operators.stattests import (
         ljung_box,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
-        _series,
-    )
 
     resid = (
-        ar1_forecast_native(_series(spark, sf_dir))
+        ar1_forecast_native(with_row_index(events_as_series(spark, sf_dir)))
         .filter(F.col("resid").isNotNull())
         .select(
             "series_id",
@@ -74,12 +76,12 @@ def main() -> None:
     ljung_box(resid).show(10, False)
 
     print("== runs test / KS drift / CUSUM-of-squares ==")
-    registry.q_runs_test(spark, sf_dir).show(10, False)
-    registry.q_ks_drift(spark, sf_dir).show(10, False)
-    registry.q_cusum_squares(spark, sf_dir).show(10, False)
+    qs["runs_test"](spark, sf_dir).show(10, False)
+    qs["ks_drift"](spark, sf_dir).show(10, False)
+    qs["cusum_squares"](spark, sf_dir).show(10, False)
 
     print("== Page-Hinkley drift flags per series ==")
-    registry.q_page_hinkley(spark, sf_dir).groupBy("series_id").agg(
+    qs["page_hinkley"](spark, sf_dir).groupBy("series_id").agg(
         F.sum("flag_up").alias("n_up_alarms"),
         F.sum("flag_dn").alias("n_dn_alarms"),
         F.max("ph_up").alias("max_ph_up"),

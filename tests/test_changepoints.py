@@ -241,7 +241,7 @@ def test_ar2_constant_series_null_preds(spark):
 def test_rank_ensemble_flags_top_outlier(spark, tmp_path):
     """The Borda flag marks at most ~1% of rows and always includes
     the grossest outlier (top rank on all three scores)."""
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.ensembles import (
         q_detector_rank_ensemble,
     )
 
@@ -317,7 +317,7 @@ def test_pelt_fixed_twin_matches_pelt_on_tail(spark):
     import pandas as pd
 
     from time_series_data_anomaly_detection_spark.functions.pelt import pelt_l2
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.changepoints import (
         _LN128,
         q_pelt_changepoints_fixed,
     )
@@ -390,7 +390,7 @@ def test_bocpd_fixed_matches_numpy_replica(spark):
     import pandas as pd
     from math import floor
 
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.changepoints import (
         q_bocpd_changepoints_fixed,
     )
 
@@ -448,7 +448,7 @@ def test_pelt_fixed_full_matches_pelt_on_full_series(spark):
     from math import floor, log
 
     from time_series_data_anomaly_detection_spark.functions.pelt import pelt_l2
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.changepoints import (
         q_pelt_changepoints_fixed_full,
     )
 
@@ -483,7 +483,7 @@ def test_bocpd_fixed_full_matches_numpy_replica(spark):
     import pandas as pd
     from math import floor
 
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.changepoints import (
         q_bocpd_changepoints_fixed_full,
     )
 

@@ -298,7 +298,7 @@ def test_detector_consensus_votes_on_obvious_spike(spark, tmp_path):
     (consensus), and a clean stretch must stay consensus-free."""
     import pyarrow as pa
     import pyarrow.parquet as pq
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.ensembles import (
         q_detector_consensus,
     )
 
@@ -558,7 +558,7 @@ def test_dft_twiddle_table_symmetry():
     half spectrum and adding interior terms twice reproduces the full
     1024-point sums exactly.  If a future table edit broke symmetry
     the hash gate would drift; this pins the premise by itself."""
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.spectral import (
         ACF_FFT_FIXED_CONFIGS,
         _dft_twiddles,
     )
@@ -583,7 +583,7 @@ def test_acf_fft_fixed_twin_matches_operator(spark):
     from time_series_data_anomaly_detection_spark.operators.acf import (
         acf_fft,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.spectral import (
         q_acf_fft_fixed,
     )
 
@@ -629,7 +629,7 @@ def test_acf_fft_fixed_512_twin_matches_operator(spark):
     from time_series_data_anomaly_detection_spark.operators.acf import (
         acf_fft,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.spectral import (
         q_acf_fft_fixed_512,
     )
 

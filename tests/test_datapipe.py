@@ -1584,7 +1584,7 @@ def test_corpus_to_batches_bpe_token_sum_parity(spark):
     """Batch parity: the packed chunks' n_tokens must sum to the kept
     corpus's total BPE token count (no token lost or double-counted
     across chunk boundaries) and every non-tail chunk is exactly full."""
-    from time_series_data_anomaly_detection_spark.plans.registry_datapipe import (
+    from time_series_data_anomaly_detection_spark.plans.queries.corpus import (
         PACK_CTX,
         q_corpus_to_batches_bpe,
     )

@@ -528,7 +528,7 @@ def test_harmonic_forecast_recovers_planted_seasonality(spark):
 
 def test_detector_ap_leaderboard_shape_and_sanity(spark):
     # gate-level correctness is hash-oracled; here: shape + semantics
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.ensembles import (
         q_detector_ap_leaderboard,
     )
 
@@ -726,7 +726,7 @@ def test_rolling_quantile_flags_matches_pandas(spark):
 def test_max_drawdown_matches_numpy(spark):
     rng = _rng(24)
     vals = np.cumsum(rng.normal(0, 1, 400)) + 100
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.stattests import (
         q_max_drawdown,
     )
     import tempfile, os
@@ -825,7 +825,7 @@ def test_harmonic_fixed_recovers_planted_seasonality(spark):
     import os
     import tempfile
 
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.forecasting import (
         q_harmonic_forecast_fixed,
     )
 
@@ -987,7 +987,7 @@ def test_conformal_intervals_coverage_guarantee(spark):
     import os
     import tempfile
 
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.forecasting import (
         q_conformal_intervals,
     )
 
@@ -1023,7 +1023,7 @@ def test_demand_classification_quadrants(spark):
     import os
     import tempfile
 
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.forecasting import (
         q_demand_classification,
     )
 
@@ -1111,7 +1111,7 @@ def test_granger_screen_directional_and_matches_numpy(spark):
     import os
     import tempfile
 
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.stattests import (
         q_granger_screen,
     )
 
@@ -1170,7 +1170,7 @@ def test_dtw_distance_fixed_matches_banded_dp(spark):
     from time_series_data_anomaly_detection_spark.functions.dtw import (
         dtw_banded,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.motifs import (
         q_dtw_distance_fixed,
     )
 
@@ -1202,7 +1202,7 @@ def test_dtw_distance_fixed_64_matches_banded_dp(spark):
     from time_series_data_anomaly_detection_spark.functions.dtw import (
         dtw_banded,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.motifs import (
         q_dtw_distance_fixed_64,
     )
 

@@ -128,7 +128,7 @@ def test_rolling_corr_matches_pandas(spark):
 
 
 def test_detector_agreement_invariants(spark):
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.ensembles import (
         q_detector_agreement,
     )
 
@@ -138,7 +138,7 @@ def test_detector_agreement_invariants(spark):
     ok = out.jaccard.dropna()
     assert ((ok >= 0) & (ok <= 1)).all()
     # pairs follow registry detector order (positional, not lexical)
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.ensembles import (
         _AGREE_DETS,
     )
 
@@ -148,7 +148,7 @@ def test_detector_agreement_invariants(spark):
 
 
 def test_seasonal_heatmap_matches_pandas(spark):
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.decomposition import (
         q_seasonal_heatmap,
     )
 
@@ -177,7 +177,7 @@ def test_seasonal_heatmap_matches_pandas(spark):
 def test_changepoint_segments_partition_series(spark):
     """Segments must tile each series exactly: contiguous, ordered,
     covering every row."""
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.changepoints import (
         q_changepoint_segments,
     )
 

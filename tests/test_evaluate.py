@@ -122,7 +122,7 @@ def test_forecast_mase_scaling_semantics(spark):
     import numpy as np
     import pandas as pd
 
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.forecasting import (
         q_forecast_mase,
     )
 

@@ -95,42 +95,27 @@ def test_no_query_failing_its_latest_driver_check():
     assert not fails, f"queries failing their latest driver check: {fails}"
 
 
-def test_status_gate_names_exist_in_registry():
-    """Docs-rot guard: every `hash X` / `rows X` gate name cited in
-    STATUS.md's operator tables must be a real queries() entry (a
-    renamed or deleted query must not leave a stale STATUS claim)."""
+def test_status_md_is_generated():
+    """STATUS.md is the query index's status table, regenerated when a
+    query, its family or its gate changes."""
     import os
-    import re
 
-    import __spark_entry__ as entrymod
+    from time_series_data_anomaly_detection_spark.plans.registry import (
+        status_table,
+    )
 
-    qs = set(entrymod.queries())
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    text = open(os.path.join(repo, "STATUS.md")).read()
-    cited = set()
-    # gate cells look like: "hash `name`", "rows `name`", possibly
-    # bolded (**hash `name`**) and with several names per cell; only
-    # table lines count (prose mentions "hash-oracled" etc.)
-    for line in text.splitlines():
-        if not line.startswith("|"):
-            continue
-        for name in re.findall(r"(?:hash|rows) \*{0,2}`([a-z0-9_]+)`", line):
-            cited.add(name)
-    missing = sorted(cited - qs)
-    assert not missing, f"STATUS.md cites unknown gate queries: {missing}"
-    assert len(cited) > 100  # the tables really were parsed
+    with open(os.path.join(repo, "STATUS.md")) as f:
+        assert f.read() == status_table()
 
 
 def test_materialize_ctes_transform():
     """_materialize_ctes must mark exactly the non-self-referencing
     CTEs of recursive oracles, leave recursive members and WINDOW
     clauses untouched, and pass non-recursive SQL through unchanged."""
-    from time_series_data_anomaly_detection_spark.plans import (
-        registry_datapipe,
-    )
     from time_series_data_anomaly_detection_spark.plans.registry import (
-        ORACLES,
         _materialize_ctes,
+        _members,
         oracle_sql,
     )
 
@@ -158,7 +143,7 @@ SELECT * FROM dp
     # every shipped recursive oracle got the treatment; every
     # non-recursive oracle keeps exactly the MATERIALIZED marks written
     # in its raw SQL (some materialize a CTE by hand)
-    raw = {**ORACLES, **registry_datapipe.ORACLES}
+    raw = _members("o_")
     for name, osql in oracle_sql().items():
         if "WITH RECURSIVE" in osql:
             assert "AS MATERIALIZED (" in osql, name
@@ -170,17 +155,21 @@ SELECT * FROM dp
 
 def test_queries_are_collected_by_q_prefix(monkeypatch):
     """Registration is by convention: a module-level ``q_<name>``
-    function of the registry is a query named ``<name>``, with no
+    function of a family module is a query named ``<name>``, with no
     other edit, and every key unwraps to its ``q_`` function."""
     import inspect
 
     import __spark_entry__ as entrymod
     from time_series_data_anomaly_detection_spark.plans import registry
+    from time_series_data_anomaly_detection_spark.plans.queries import (
+        scoring,
+    )
 
     def q_probe_tmp(spark, sf_dir):
         return spark.range(1)
 
-    monkeypatch.setattr(registry, "q_probe_tmp", q_probe_tmp, raising=False)
+    q_probe_tmp.__module__ = scoring.__name__
+    monkeypatch.setattr(scoring, "q_probe_tmp", q_probe_tmp, raising=False)
     qs = registry.queries()
     assert inspect.unwrap(qs["probe_tmp"]) is q_probe_tmp
     assert "probe_tmp" in entrymod.queries()
@@ -222,7 +211,8 @@ def test_gate_order_without_history(monkeypatch, tmp_path):
 
 def test_pipelines_import_does_not_load_registry():
     """The production path (``score_model``, ``run_benchmark``) must
-    not pay for building the gate registry's oracle strings."""
+    not pay for building the gate registry's oracle strings: neither
+    the index nor any family module is imported."""
     import os
     import subprocess
     import sys
@@ -232,10 +222,60 @@ def test_pipelines_import_does_not_load_registry():
         "import sys\n"
         "import time_series_data_anomaly_detection_spark.plans.pipelines\n"
         "pkg = 'time_series_data_anomaly_detection_spark.plans.'\n"
-        "print(sorted(m for m in sys.modules if m.startswith(pkg + 'registry')))\n"
+        "print(sorted(m for m in sys.modules\n"
+        "             if m.startswith((pkg + 'registry', pkg + 'queries'))))\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code],
         cwd=repo, capture_output=True, text=True, check=True,
     )
     assert out.stdout.strip() == "[]", out.stdout
+
+
+def _family_modules():
+    """(module, parsed source) for every family module of plans/queries."""
+    import ast
+
+    from time_series_data_anomaly_detection_spark.plans import registry
+
+    out = []
+    for mod in registry._family_modules():
+        with open(mod.__file__) as f:
+            out.append((mod, ast.parse(f.read())))
+    return out
+
+
+def test_each_oracle_follows_its_query():
+    """In a family module, ``o_<name>`` is assigned after ``def
+    q_<name>`` with no other query defined between them."""
+    import ast
+
+    for mod, tree in _family_modules():
+        last_q = None
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef) and node.name.startswith("q_"):
+                last_q = node.name
+            elif isinstance(node, ast.Assign):
+                for t in node.targets:
+                    if isinstance(t, ast.Name) and t.id.startswith("o_"):
+                        assert last_q == "q_" + t.id[2:], (mod.__name__, t.id)
+
+
+def test_family_modules_define_what_they_hold():
+    """No family module holds a ``q_``/``o_`` it did not define: the
+    index would count an imported query or oracle twice."""
+    import ast
+
+    for mod, tree in _family_modules():
+        defined = set()
+        for node in tree.body:
+            if isinstance(node, ast.FunctionDef):
+                defined.add(node.name)
+            elif isinstance(node, ast.Assign):
+                defined |= {t.id for t in node.targets if isinstance(t, ast.Name)}
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                for a in node.names:
+                    bound = a.asname or a.name.split(".")[0]
+                    assert not bound.startswith(("q_", "o_")), (mod.__name__, bound)
+        held = {a for a in vars(mod) if a.startswith(("q_", "o_"))}
+        assert held == {d for d in defined if d.startswith(("q_", "o_"))}, mod.__name__

@@ -524,8 +524,10 @@ def test_gp_fixed_twin_matches_production_gp(spark):
     kernel value at 1e-8 before the solve, so agreement is at solve-
     amplified tolerance, not bit-exact."""
     from time_series_data_anomaly_detection_spark.functions import gp_forecast
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries._shared import (
         _series,
+    )
+    from time_series_data_anomaly_detection_spark.plans.queries.models import (
         q_gp_forecast_fixed,
     )
 
@@ -565,8 +567,10 @@ def test_gp_fixed_std_twin_matches_production_gp(spark):
     ``var = k** − diag(Ks·K⁻¹·Ksᵀ)`` (functions/gp.py:259-268),
     independently of the DuckDB oracle."""
     from time_series_data_anomaly_detection_spark.functions import gp_forecast
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries._shared import (
         _series,
+    )
+    from time_series_data_anomaly_detection_spark.plans.queries.models import (
         q_gp_forecast_fixed_std,
     )
 
@@ -613,7 +617,7 @@ def test_lstm_fixed_twin_matches_numpy_replica(spark):
     import pandas as pd
     from math import exp, floor
 
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.models import (
         _LSTM_B,
         _LSTM_BY,
         _LSTM_WH,

@@ -237,7 +237,7 @@ def test_matrix_profile_fixed_matches_operator_tail(spark):
     from time_series_data_anomaly_detection_spark.functions.matrix_profile import (
         matrix_profile_one,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.motifs import (
         q_matrix_profile_fixed,
     )
 
@@ -271,7 +271,7 @@ def test_shesd_fixed_full_matches_esd_core(spark):
     from time_series_data_anomaly_detection_spark.functions.shesd import (
         esd_test,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.scoring import (
         q_shesd_fixed_full,
     )
 
@@ -312,7 +312,7 @@ def test_matrix_profile_fixed_full_matches_operator(spark):
     from time_series_data_anomaly_detection_spark.functions.matrix_profile import (
         matrix_profile_one,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.motifs import (
         q_matrix_profile_fixed_full,
     )
 
@@ -347,7 +347,7 @@ def test_shesd_fixed_matches_esd_core(spark):
     from time_series_data_anomaly_detection_spark.functions.shesd import (
         esd_test,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.scoring import (
         q_shesd_fixed,
     )
 

@@ -457,7 +457,7 @@ def test_score_calibration_single_series_exchange(spark):
 
 
 def test_percentile_summary_broadcasts_quantiles(spark):
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.stattests import (
         q_percentile_summary,
     )
 
@@ -467,7 +467,7 @@ def test_percentile_summary_broadcasts_quantiles(spark):
 
 
 def test_baseline_forecasts_broadcast_anchors(spark):
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.forecasting import (
         q_baseline_forecasts,
     )
 
@@ -497,7 +497,7 @@ def test_event_impact_broadcasts_event_table(spark):
     """The detected-event table is tiny: the context join must be a
     broadcast on series_id with the rn range as a filter — never a
     cartesian or a fact-fact sort-merge."""
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.evaluation import (
         q_event_impact,
     )
     import os
@@ -623,7 +623,7 @@ def test_conformal_intervals_broadcasts_per_series_frames(spark):
     """Every per-series frame (splits, fit, k, q-hat) is
     dimension-sized and must broadcast; no sort-merge of the scan
     against itself."""
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.forecasting import (
         q_conformal_intervals,
     )
 
@@ -636,7 +636,7 @@ def test_conformal_intervals_broadcasts_per_series_frames(spark):
 def test_harmonic_fixed_broadcasts_design_table(spark):
     """The 48-row design table and the per-series count/coefficient
     frames must broadcast onto the scan."""
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.forecasting import (
         q_harmonic_forecast_fixed,
     )
 
@@ -649,7 +649,7 @@ def test_harmonic_fixed_broadcasts_design_table(spark):
 def test_forecast_mase_broadcasts_scale_denominator(spark):
     """The per-series MASE scale frame is dimension-sized and must
     broadcast; no sort-merge against the scan."""
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.forecasting import (
         q_forecast_mase,
     )
 
@@ -662,7 +662,7 @@ def test_forecast_mase_broadcasts_scale_denominator(spark):
 def test_demand_classification_broadcasts_threshold(spark):
     """The per-series q90 threshold frame must broadcast onto the
     scan (one aggregate + one broadcast join + one aggregate)."""
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.forecasting import (
         q_demand_classification,
     )
 

@@ -1,6 +1,7 @@
-"""The measurement scripts, without Spark: no script imports a fixed
-checkout, `scripts/ab.py` alternates and summarises its runs as it
-says, and `bench.py`'s retry ledger is looked up per host key."""
+"""The measurement and gate scripts: no script imports a fixed
+checkout, the gate scripts work from outside their checkout,
+`scripts/ab.py` alternates and summarises its runs as it says, and
+`bench.py`'s retry ledger is looked up per host key."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import ast
 import importlib.util
 import json
 import os
+import subprocess
 import sys
 import textwrap
 
@@ -43,6 +45,20 @@ def test_no_script_puts_a_literal_path_on_sys_path():
             ):
                 offenders.append(f"{fname}:{node.lineno}")
     assert offenders == []
+
+
+def test_check_oracles_runs_from_outside_the_checkout(tmp_path):
+    """``kalman_forecast_fixed`` runs a Python UDF: its Spark workers
+    must import the package of the script's own checkout even when
+    the script is started from another directory."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, os.path.join(SCRIPTS, "check_oracles.py"),
+         "/root/testdata/sf0.001", "kalman_forecast_fixed"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=900,
+    )
+    assert out.returncode == 0, out.stdout[-3000:] + out.stderr[-3000:]
+    assert "OK" in out.stdout
 
 
 # Each run appends "<side> <first PYTHONPATH entry is cwd>" to LOG and

@@ -194,10 +194,12 @@ def test_bpe_encode_fixed_matches_arrow_encoder(spark):
     from time_series_data_anomaly_detection_spark.datapipe.tokenize_bpe import (
         bpe_encode_stats,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry_datapipe import (
+    from time_series_data_anomaly_detection_spark.plans.queries.corpus import (
         _BPE_FIXED_MERGES,
-        _docs,
         q_bpe_encode_fixed,
+    )
+    from time_series_data_anomaly_detection_spark.plans.queries._shared import (
+        _docs,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -253,7 +255,7 @@ def test_bpe_encode_unrolled_catalyst_matches_production(spark):
     the same unrolling the DuckDB oracle runs) stays integer-exact
     against the production twin on the adversarial toy corpus AND the
     sf0.001 corpus."""
-    import time_series_data_anomaly_detection_spark.plans.registry_datapipe as rd
+    import time_series_data_anomaly_detection_spark.plans.queries.corpus as rd
 
     toy = spark.createDataFrame(
         [
@@ -289,7 +291,7 @@ def test_bpe_encode_unrolled_catalyst_matches_production(spark):
 def _encode_fixed_on(docs_df, spark, fn=None):
     """Run a fixed-encode plan on an arbitrary docs frame by
     monkey-patching its _docs loader."""
-    import time_series_data_anomaly_detection_spark.plans.registry_datapipe as rd
+    import time_series_data_anomaly_detection_spark.plans.queries.corpus as rd
 
     orig = rd._docs
     rd._docs = lambda s, d: docs_df
@@ -311,7 +313,7 @@ def test_bpe_merges_fixed_oracle_matches_merge_loop():
     from time_series_data_anomaly_detection_spark.datapipe.tokenize_bpe import (
         _merge_loop,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry_datapipe import (
+    from time_series_data_anomaly_detection_spark.plans.queries.corpus import (
         _BPE_TRAIN_ROUNDS,
         _bpe_merges_fixed_sql,
     )
@@ -369,12 +371,14 @@ def test_corpus_to_batches_bpe_fixed_matches_production_path(spark):
     from time_series_data_anomaly_detection_spark.datapipe.tokenize_bpe import (
         bpe_encode_stats,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry_datapipe import (
+    from time_series_data_anomaly_detection_spark.plans.queries.corpus import (
         _BPE_FIXED_MERGES,
-        JACCARD_T,
         PACK_CTX,
-        _docs,
         q_corpus_to_batches_bpe_fixed,
+    )
+    from time_series_data_anomaly_detection_spark.plans.queries._shared import (
+        JACCARD_T,
+        _docs,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -593,7 +597,7 @@ def test_spectral_residual_fixed_matches_numpy_tail(spark):
     from time_series_data_anomaly_detection_spark.functions.spectral import (
         spectral_residual_saliency,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.spectral import (
         q_spectral_residual_fixed,
     )
 
@@ -628,7 +632,7 @@ def test_spectral_residual_fixed_512_matches_numpy_tail(spark):
     from time_series_data_anomaly_detection_spark.functions.spectral import (
         spectral_residual_saliency,
     )
-    from time_series_data_anomaly_detection_spark.plans.registry import (
+    from time_series_data_anomaly_detection_spark.plans.queries.spectral import (
         q_spectral_residual_fixed_512,
     )
 
@@ -661,7 +665,7 @@ def test_bpe_trainer_gate_learns_the_pinned_encoder_vocab(spark):
     must agree: bpe_merges_fixed's learned merges at the gate SF ARE
     _BPE_FIXED_MERGES, so the trainer gate and the encoder gate cover
     one tokenizer end-to-end (r09 verdict item #4)."""
-    from time_series_data_anomaly_detection_spark.plans.registry_datapipe import (
+    from time_series_data_anomaly_detection_spark.plans.queries.corpus import (
         _BPE_FIXED_MERGES,
         _BPE_TRAIN_ROUNDS,
         q_bpe_merges_fixed,

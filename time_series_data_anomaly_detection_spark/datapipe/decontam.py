@@ -115,7 +115,7 @@ def decontaminate(
     )
     out = corpus.drop("__g").join(hits, id_col, "left")
     n_hit = F.coalesce(F.col("n_hit"), F.lit(0)).cast("long")
-    # floats emitted RAW — gate queries quantize with plans.registry._rnd
+    # floats emitted RAW — gate queries quantize with plans.queries._shared._rnd
     return out.select(
         id_col,
         F.col("n_grams").cast("long").alias("n_grams"),

@@ -7,7 +7,7 @@ and each bit-identical to its Spark operator form:
   ``1.4826`` consistency constant, ``1e-9`` epsilon — ``src/utils.py:
   31-38``, ``src/run_hybrid.py:41-42``);
 - :func:`rolling_sigma_z` — ``|resid| / (rs_std + 1e-6)`` over
-  ``operators.rolling.rolling_stats(resid, 48, 5, bfill=True)``
+  ``operators.rolling.rolling_stats(resid, 48, 5)``
   (``src/run_bsts.py:105-106``).
 
 Fusing the score into the fit pass removes the stages the operator

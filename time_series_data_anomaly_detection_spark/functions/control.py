@@ -17,8 +17,8 @@ Bit-exactness recipe (same as functions/kalman.py):
   (1-λ)² = 0.5625, k = 0.5, h = 5.0, L = 3.0) so literal parsing
   cannot introduce a 1-ulp seed difference;
 - the update expression trees below are textually in lockstep with
-  the oracle SQL in ``plans/registry.py`` — identical IEEE ops on
-  identical inputs are identical.
+  the oracle SQL in ``plans/queries/changepoints.py`` — identical
+  IEEE ops on identical inputs are identical.
 
 Scale shape: one shuffle to the per-series moment aggregate (tiny,
 broadcast back), one grouped-map pass per series.  The recursion is

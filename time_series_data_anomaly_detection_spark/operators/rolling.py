@@ -34,7 +34,6 @@ def rolling_stats(
     value_col: str = "value",
     window: int = 48,
     min_periods: int = 5,
-    bfill: bool = True,
     out_prefix: str = "roll",
 ) -> DataFrame:
     """Trailing rolling mean/std (sample, ddof=1) with min_periods + bfill.
@@ -90,27 +89,25 @@ def rolling_stats(
         .withColumn(f"{out_prefix}_std", std_raw)
         .drop("__c1", "__c2", "__cn")
     )
-    if bfill:
-        # backward fill via a RUNNING frame over descending order: the
-        # last non-null seen while scanning from the series end down to
-        # the current row is the nearest non-null at-or-after it.
-        # Running (unboundedPreceding, currentRow) frames are O(n) in
-        # Spark; the naive first(ignorenulls) over (currentRow,
-        # unboundedFollowing) is a shrinking frame Spark re-evaluates
-        # per row -> O(n^2) per series (65s vs 0.5s at 20k rows/series).
-        wb = (
-            Window.partitionBy("series_id")
-            .orderBy(*[c.desc() for c in order])
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        out = out.withColumn(
-            f"{out_prefix}_mean",
-            F.last(f"{out_prefix}_mean", ignorenulls=True).over(wb),
-        ).withColumn(
-            f"{out_prefix}_std",
-            F.last(f"{out_prefix}_std", ignorenulls=True).over(wb),
-        )
-    return out
+    # backward fill via a RUNNING frame over descending order: the
+    # last non-null seen while scanning from the series end down to
+    # the current row is the nearest non-null at-or-after it.
+    # Running (unboundedPreceding, currentRow) frames are O(n) in
+    # Spark; the naive first(ignorenulls) over (currentRow,
+    # unboundedFollowing) is a shrinking frame Spark re-evaluates
+    # per row -> O(n^2) per series (65s vs 0.5s at 20k rows/series).
+    wb = (
+        Window.partitionBy("series_id")
+        .orderBy(*[c.desc() for c in order])
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return out.withColumn(
+        f"{out_prefix}_mean",
+        F.last(f"{out_prefix}_mean", ignorenulls=True).over(wb),
+    ).withColumn(
+        f"{out_prefix}_std",
+        F.last(f"{out_prefix}_std", ignorenulls=True).over(wb),
+    )
 
 
 def sliding_windows(
@@ -154,7 +151,7 @@ def adaptive_threshold_flags(
 
     Reference: ``rolling_sigma_threshold`` (``src/utils.py:40-72``).
     """
-    out = rolling_stats(df, value_col, window, min_periods, bfill=True)
+    out = rolling_stats(df, value_col, window, min_periods)
     return out.withColumn(
         flag_col,
         (

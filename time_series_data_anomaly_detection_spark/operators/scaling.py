@@ -52,7 +52,6 @@ def mad_scores(
     df: DataFrame,
     value_col: str = "value",
     out_col: str = "z_mad",
-    keep_internals: bool = False,
     keys: tuple = ("series_id",),
     approx_accuracy: int | None = None,
 ) -> DataFrame:
@@ -90,10 +89,6 @@ def mad_scores(
             F.abs(F.col(value_col) - F.col("__med")) / (F.col("__sigma") + F.lit(EPS_Z)),
         )
     )
-    if keep_internals:
-        return out.withColumnRenamed("__med", "series_median").withColumnRenamed(
-            "__sigma", "mad_sigma"
-        ).drop("__mad")
     return out.drop("__med", "__mad", "__sigma")
 
 

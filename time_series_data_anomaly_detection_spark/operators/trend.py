@@ -31,7 +31,7 @@ Execution model — one grouped-map kernel call per series:
 
 Cross-engine determinism (hash gate): S, n, and the tie term are exact
 integers; tau/z/slope use the same literal float algebra as the DuckDB
-oracle (see ``plans/registry.py ORACLES['trend_test']``), and the
+oracle (see ``plans/queries/stattests.py o_trend_test``), and the
 median is the explicit two-order-statistic average, which matches the
 oracle's ``sum(slope)/count(*)`` over ranks ``(m+1)//2, (m+2)//2``
 bit for bit (a+b then one exact scale by 2).
