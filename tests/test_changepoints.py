@@ -657,3 +657,182 @@ def test_bocpd_run_rejects_state_from_another_prior():
         bocpd_run(y, st, mu0=0.5, max_run=50)
     with pytest.raises(ValueError, match="beta0"):
         bocpd_run(y, initial_state(), beta0=2.0, max_run=50)
+
+
+def _bocpd_run_r14(y, state, hazard_lam=100.0, mu0=0.0, kappa0=1.0,
+                   alpha0=1.0, beta0=1.0, max_run=500, eps=1e-9, short_run=5):
+    """Inline replica of the one-series ``bocpd_run`` loop as it was
+    before series were stepped together: one run-length set, plain
+    ``np.sum`` for every sum."""
+    from math import lgamma, pi
+
+    n = len(y)
+    h = 1.0 / hazard_lam
+    r, mu, beta, run_len = (state[k] for k in ("r", "mu", "beta", "run_len"))
+    cp = np.empty(n)
+    short = np.empty(n)
+    ar = np.arange(int(run_len.max()) + n + 2)
+    grid = alpha0 + ar / 2.0
+    kap_tab = kappa0 + ar.astype(float)
+    df_tab = 2 * grid
+    const_tab = (np.array([lgamma(a + 0.5) for a in grid])
+                 - np.array([lgamma(a) for a in grid])
+                 - 0.5 * np.log(df_tab * pi))
+    dfp_tab = (df_tab + 1) / 2
+    kap1_tab = kap_tab + 1
+    ak_tab = grid * kap_tab
+    for t in range(n):
+        kap1 = kap1_tab[run_len]
+        scale = np.sqrt(beta * kap1 / ak_tab[run_len])
+        d = y[t] - mu
+        z = d / scale
+        pred = np.exp(const_tab[run_len] - np.log(scale)
+                      - dfp_tab[run_len] * np.log1p(z * z / df_tab[run_len]))
+        rp = r * pred
+        r_new = np.r_[float(np.sum(rp * h)), rp * (1 - h)]
+        total = r_new.sum()
+        r_new = r_new / total if total > 0 else np.r_[1.0, np.zeros(len(r))]
+        cp[t] = r_new[0]
+        rl_new = np.r_[0, run_len + 1].astype(run_len.dtype)
+        short[t] = float(
+            r_new[: np.searchsorted(rl_new, short_run, side="right")].sum()
+        )
+        kap = kap_tab[run_len]
+        mu_new = np.r_[mu0, (kap * mu + y[t]) / kap1]
+        beta_new = np.r_[beta0, beta + kap * d**2 / (2 * kap1)]
+        keep = r_new > eps
+        keep[0] = True
+        if keep.sum() > max_run:
+            idx = np.argsort(r_new)[::-1][:max_run]
+            keep = np.zeros_like(keep)
+            keep[idx] = True
+            keep[0] = True
+        r = r_new[keep]
+        r = r / r.sum()
+        mu, beta, run_len = mu_new[keep], beta_new[keep], rl_new[keep]
+    return cp, short, {"r": r, "mu": mu, "beta": beta, "run_len": run_len}
+
+
+def _bocpd_changepoints_r14(y, **kw):
+    """The per-series ``bocpd_changepoints`` kernel over the replica."""
+    from time_series_data_anomaly_detection_spark.functions.bocpd import (
+        initial_state,
+    )
+
+    sd = y.std() or 1.0
+    return _bocpd_run_r14((y - y.mean()) / sd, initial_state(), **kw)
+
+
+def _bits(a):
+    return np.asarray(a, dtype=float).view(np.int64)
+
+
+def _bocpd_edge_series():
+    """Ragged series covering the batch kernel's edges: 1 and 2 points,
+    a NaN, a constant series, a level shift, and long smooth series
+    whose run-length sets grow past 128 hypotheses."""
+    rng = np.random.default_rng(21)
+    y_nan = rng.normal(0.0, 1.0, 40)
+    y_nan[17] = np.nan
+    return [
+        rng.normal(0.0, 1.0, 400),
+        np.r_[rng.normal(0.0, 1.0, 150), rng.normal(5.0, 1.0, 150)],
+        np.array([3.0]),
+        np.array([1.0, 2.0]),
+        y_nan,
+        np.full(60, 7.5),
+        rng.normal(2.0, 0.5, 37),
+        rng.normal(0.0, 1.0, 400),
+    ]
+
+
+@pytest.mark.parametrize("max_run", [500, 150])
+def test_bocpd_batch_kernel_matches_per_series_replica(max_run):
+    """``bocpd_changepoints_batch`` steps every series of a batch in one
+    ``bocpd_run``: on ragged series with NaN, constant, 1- and 2-point
+    members, run-length sets above 128 and (``max_run=150``) the
+    per-series cap, each series' output equals the per-series replica
+    bit for bit."""
+    from time_series_data_anomaly_detection_spark.functions.bocpd import (
+        bocpd_changepoints_batch,
+    )
+
+    ys = _bocpd_edge_series()
+    offsets = np.r_[0, np.cumsum([len(y) for y in ys])]
+    got = bocpd_changepoints_batch(
+        {"value": np.concatenate(ys)}, offsets, max_run=max_run
+    )
+    sizes = []
+    for i, y in enumerate(ys):
+        cp, short, st = _bocpd_changepoints_r14(y, max_run=max_run)
+        a, b = offsets[i], offsets[i + 1]
+        assert np.array_equal(_bits(got["cp_prob"][a:b]), _bits(cp)), i
+        assert np.array_equal(_bits(got["cp_score"][a:b]), _bits(short)), i
+        sizes.append(len(st["r"]))
+    assert max(sizes) > 128
+    if max_run < 500:
+        assert max(sizes) >= max_run
+
+
+@pytest.mark.parametrize("resumed", [False, True])
+def test_bocpd_run_batched_equals_one_series_calls_at_non_dyadic_priors(resumed):
+    """At priors whose κ/α steps do not accumulate exactly
+    (kappa0=0.7, alpha0=0.3), one ``bocpd_run`` over S ragged series
+    equals S one-series calls bit for bit — outputs and states, from a
+    fresh and from a resumed state."""
+    from time_series_data_anomaly_detection_spark.functions.bocpd import (
+        bocpd_run,
+        initial_state,
+    )
+
+    prior = dict(mu0=0.5, kappa0=0.7, alpha0=0.3, beta0=2.0, max_run=120)
+    ys = _bocpd_edge_series()
+    st0 = initial_state(prior["mu0"], prior["beta0"])
+    if resumed:
+        states = [bocpd_run(y[: len(y) // 2], st0, **prior)[2] for y in ys]
+        ys = [y[len(y) // 2:] for y in ys]
+    else:
+        states = [st0] * len(ys)
+    offsets = np.r_[0, np.cumsum([len(y) for y in ys])]
+    cp, short, got = bocpd_run(np.concatenate(ys), states, offsets=offsets, **prior)
+    for i, (y, st) in enumerate(zip(ys, states)):
+        want_cp, want_short, want = bocpd_run(y, st, **prior)
+        a, b = offsets[i], offsets[i + 1]
+        assert np.array_equal(_bits(cp[a:b]), _bits(want_cp)), i
+        assert np.array_equal(_bits(short[a:b]), _bits(want_short)), i
+        for k in ("r", "mu", "beta", "run_len"):
+            assert got[i][k].dtype == want[k].dtype, (i, k)
+            assert np.array_equal(_bits(got[i][k]), _bits(want[k])), (i, k)
+
+
+def test_bocpd_changepoints_across_arrow_batches_bitwise(spark):
+    """On Spark, with Arrow batches of 64 rows so that series straddle
+    batches and several complete series share one, every series'
+    ``bocpd_changepoints`` output equals the per-series replica bit
+    for bit."""
+    from time_series_data_anomaly_detection_spark.functions.bocpd import (
+        bocpd_changepoints,
+    )
+
+    ys = _bocpd_edge_series()
+    pdf = pd.concat(
+        pd.DataFrame({
+            "series_id": f"s{i}",
+            "timestamp": pd.date_range("2024-01-01", periods=len(y), freq="30min"),
+            "value": y,
+            "rn": np.arange(1, len(y) + 1),
+        })
+        for i, y in enumerate(ys)
+    ).sample(frac=1, random_state=5)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "64")
+    try:
+        got = bocpd_changepoints(spark.createDataFrame(pdf)).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    for i, y in enumerate(ys):
+        cp, short, _ = _bocpd_changepoints_r14(y)
+        g = got[got.series_id == f"s{i}"].sort_values("rn")
+        assert np.array_equal(_bits(g.cp_prob), _bits(cp)), i
+        assert np.array_equal(_bits(g.cp_score), _bits(short)), i

@@ -926,6 +926,7 @@ def test_shell_edges_equal_kernel_bitwise(spark, case, batch_rows):
     import pandas as pd
 
     from time_series_data_anomaly_detection_spark.functions._partition import (
+        each_series,
         per_series,
     )
 
@@ -937,7 +938,9 @@ def test_shell_edges_equal_kernel_bitwise(spark, case, batch_rows):
     if batch_rows:
         spark.conf.set(conf, str(batch_rows))
     try:
-        got = per_series(spark.createDataFrame(pdf), ddl, kernel, keys).toPandas()
+        got = per_series(
+            spark.createDataFrame(pdf), ddl, each_series(kernel), keys
+        ).toPandas()
     finally:
         spark.conf.set(conf, old)
     # grouped by Python equality: pandas' hash grouping truncates
@@ -956,3 +959,192 @@ def test_shell_edges_equal_kernel_bitwise(spark, case, batch_rows):
         got.sort_values(order).reset_index(drop=True),
         want.sort_values(order).reset_index(drop=True),
     )
+
+
+def _bits(a):
+    return np.asarray(a, dtype=float).view(np.int64)
+
+
+def _kalman_em_r14(y, n_iter=30):
+    """Inline replica of ``_kalman_em_local_level`` as it was before
+    series were fitted in lockstep: one series, every filter and
+    smoother step taken in full, 1-D means in the M-step."""
+    n = len(y)
+    var_y = float(np.var(y)) or 1.0
+    q, r = var_y * 0.1, var_y * 0.9
+    level0, p0 = float(y[0]), var_y
+    ys = y.tolist()
+    for _ in range(n_iter):
+        mu, p, mu_pred, p_pred = [], [], [], []
+        m, pp = level0, p0
+        for yt in ys:
+            mp, ppp = m, pp + q
+            mu_pred.append(mp)
+            p_pred.append(ppp)
+            k_gain = ppp / (ppp + r)
+            m = mp + k_gain * (yt - mp)
+            pp = (1 - k_gain) * ppp
+            mu.append(m)
+            p.append(pp)
+        if n < 2:
+            break
+        mu_s, p_s = mu.copy(), p.copy()
+        ms, ps = mu[-1], p[-1]
+        for t in range(n - 2, -1, -1):
+            mt, pt = mu[t], p[t]
+            c = pt / (pt + q)
+            ms = mt + c * (ms - mt)
+            ps = pt + c * c * (ps - (pt + q))
+            mu_s[t], p_s[t] = ms, ps
+        mu_s, p_s = np.array(mu_s), np.array(p_s)
+        r = float(np.mean((y - mu_s) ** 2 + p_s))
+        dm = np.diff(mu_s)
+        q = float(np.mean(dm**2) + np.mean(p_s[1:] + p_s[:-1]) * 0.5)
+        q, r = max(q, 1e-12), max(r, 1e-12)
+        level0 = mu_s[0]
+    return np.array(mu_pred), np.array(p_pred) + r, q, r
+
+
+def _kalman_local_level_r14(y, train_frac=1.0, alpha=0.05, dynamic=True,
+                            score_col=None):
+    """Inline replica of the per-series ``kalman_local_level`` kernel
+    over :func:`_kalman_em_r14`."""
+    from time_series_data_anomaly_detection_spark.functions._score import (
+        rolling_sigma_z,
+    )
+    from time_series_data_anomaly_detection_spark.functions.shesd import _norm_ppf
+
+    n = len(y)
+    n_train = max(int(n * train_frac), 2)
+    mu_pred, var_pred, q, r = _kalman_em_r14(y[:n_train])
+    if n_train < n:
+        ppp = var_pred[-1] - r
+        k_last = ppp / var_pred[-1]
+        last_mu = mu_pred[-1] + k_last * (y[n_train - 1] - mu_pred[-1])
+        if dynamic:
+            h = np.arange(1, n - n_train + 1, dtype=float)
+            fc_mean = np.full(n - n_train, last_mu)
+            fc_var = (1 - k_last) * ppp + h * q + r
+        else:
+            m, pp = last_mu, (1 - k_last) * ppp
+            fc_mean, fc_var = np.empty(n - n_train), np.empty(n - n_train)
+            for t in range(n_train, n):
+                pv = pp + q
+                fc_mean[t - n_train] = m
+                fc_var[t - n_train] = pv + r
+                kg = pv / (pv + r)
+                m = m + kg * (y[t] - m)
+                pp = (1 - kg) * pv
+        mu_pred = np.concatenate([mu_pred, fc_mean])
+        var_pred = np.concatenate([var_pred, fc_var])
+    zq = _norm_ppf(1 - alpha / 2)
+    sd = np.sqrt(var_pred)
+    out = {"pred_mean": mu_pred, "pred_lower": mu_pred - zq * sd,
+           "pred_upper": mu_pred + zq * sd, "resid": y - mu_pred}
+    if score_col:
+        out[score_col] = rolling_sigma_z(out["resid"])
+    return out
+
+
+def _kalman_edge_series():
+    """Ragged series for the lockstep fit: three of 300 points (one with
+    a NaN, one constant), a random walk of 512, 1- and 2-point series,
+    and 12-point series whose filter variance never reaches its fixed
+    point."""
+    rng = np.random.default_rng(31)
+    y_nan = np.round(100 + np.cumsum(rng.normal(size=300)), 2)
+    y_nan[123] = np.nan
+    return [
+        np.round(100 + np.cumsum(rng.normal(size=300)) + rng.standard_t(3, 300), 2),
+        y_nan,
+        np.full(300, 42.0),
+        np.round(np.cumsum(rng.normal(size=512)), 2),
+        np.array([3.0]),
+        np.array([1.0, 4.0]),
+        rng.normal(size=12),
+        rng.normal(size=12),
+    ]
+
+
+_KALMAN_EDGE_KW = [
+    pytest.param({}, id="defaults"),
+    pytest.param(dict(train_frac=0.6, dynamic=False, score_col="z"), id="filtered_tail"),
+    pytest.param(dict(train_frac=0.6, dynamic=True), id="dynamic_tail"),
+]
+
+
+@pytest.mark.parametrize("kw", _KALMAN_EDGE_KW)
+def test_kalman_batch_kernel_matches_per_series_replica(kw, monkeypatch):
+    """``kalman_local_level_batch`` fits equal-length training heads in
+    lockstep and skips variance steps past their fixed point: on ragged
+    series with NaN, constant, 1- and 2-point members, each series'
+    output equals the per-series replica bit for bit.  The 12-point
+    series never reach the fixed point; the others do."""
+    from time_series_data_anomaly_detection_spark.functions import kalman as K
+
+    fixed_from = {}
+    steps = K._filter_variances
+
+    def spy(n, *a):
+        out = steps(n, *a)
+        fixed_from.setdefault(n, set()).add(out[3])
+        return out
+
+    monkeypatch.setattr(K, "_filter_variances", spy)
+    ys = _kalman_edge_series()
+    offsets = np.r_[0, np.cumsum([len(y) for y in ys])]
+    got = K.kalman_local_level_batch({"value": np.concatenate(ys)}, offsets, **kw)
+    for i, y in enumerate(ys):
+        want = _kalman_local_level_r14(y, **kw)
+        a, b = offsets[i], offsets[i + 1]
+        assert set(got) == set(want)
+        for c in want:
+            assert np.array_equal(_bits(got[c][a:b]), _bits(want[c])), (i, c)
+    short, long = (max(int(n * kw.get("train_frac", 1.0)), 2) for n in (12, 512))
+    assert fixed_from[short] == {short - 1}
+    assert min(fixed_from[long]) < 100
+
+
+def test_kalman_em_stack_equals_rows():
+    """A ``(series × n)`` stack fitted in lockstep returns, row by row,
+    exactly what each series fitted alone returns."""
+    ys = [y for y in _kalman_edge_series() if len(y) == 300]
+    mu, var, q, r = kalman._kalman_em_local_level(np.stack(ys))
+    for i, y in enumerate(ys):
+        want = kalman._kalman_em_local_level(y)
+        assert np.array_equal(_bits(mu[i]), _bits(want[0])), i
+        assert np.array_equal(_bits(var[i]), _bits(want[1])), i
+        assert np.array_equal(_bits([q[i], r[i]]), _bits(want[2:])), i
+
+
+def test_kalman_local_level_across_arrow_batches_bitwise(spark):
+    """On Spark, with Arrow batches of 64 rows so that series straddle
+    batches and several complete series share one, every series'
+    ``kalman_local_level`` output equals the per-series replica bit for
+    bit."""
+    import pandas as pd
+
+    ys = _kalman_edge_series()
+    kw = dict(train_frac=0.6, dynamic=False, score_col="z")
+    pdf = pd.concat(
+        pd.DataFrame({
+            "series_id": f"s{i}",
+            "timestamp": pd.date_range("2024-01-01", periods=len(y), freq="30min"),
+            "value": y,
+            "rn": np.arange(1, len(y) + 1),
+        })
+        for i, y in enumerate(ys)
+    ).sample(frac=1, random_state=6)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "64")
+    try:
+        got = kalman_local_level(spark.createDataFrame(pdf), **kw).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    for i, y in enumerate(ys):
+        want = _kalman_local_level_r14(y, **kw)
+        g = got[got.series_id == f"s{i}"].sort_values("rn")
+        for c in want:
+            assert np.array_equal(_bits(g[c]), _bits(want[c])), (i, c)
+

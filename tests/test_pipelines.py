@@ -138,6 +138,35 @@ def test_run_benchmark_isolates_model_failure(spark, seasonal_series, monkeypatc
         ).collect()
 
 
+def test_eager_cache_materializes_every_partition(spark):
+    """``eager_cache`` returns with every partition of its frame in
+    executor storage: the ``noop`` write that materializes it computes
+    them all, as the ``count()`` it replaced did."""
+    from time_series_data_anomaly_detection_spark.session import (
+        eager_cache,
+        release_caches,
+    )
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def storage():
+        return {
+            i.id(): (i.numCachedPartitions(), i.numPartitions())
+            for i in sc.getRDDStorageInfo()
+        }
+
+    df = spark.range(600).selectExpr(
+        "cast(id % 6 as string) as series_id", "cast(id as double) as value"
+    )
+    before = storage()
+    try:
+        eager_cache(df.repartition(6, "series_id"))
+        new = [v for k, v in storage().items() if k not in before]
+    finally:
+        release_caches()
+    assert new == [(6, 6)]
+
+
 def test_release_caches_empties_storage(spark):
     """Cache hygiene (round-2 verdict): every cache a registry query
     creates — including the datapipe dedup caches — is ledgered, so

@@ -873,3 +873,34 @@ def test_rolling_sigma_score_rides_the_model_pass(spark, model):
     assert tree.count(" MapInPandas (") == 1
     for node in ("Exchange", "Sort", "Window"):
         assert f" {node} (" not in above, node
+
+
+@pytest.mark.parametrize("model", ["kalman_local_level", "bocpd"])
+def test_model_pass_over_cached_row_index_has_no_exchange(spark, model):
+    """Over a cached ``with_row_index`` frame whose shuffle-partition
+    count is the task-slot count (what ``get_spark`` sets), a model's
+    per-series pass reuses the frame's hash partitioning by
+    ``series_id``: its plan sorts but adds no Exchange, so each model
+    job is one stage."""
+    from time_series_data_anomaly_detection_spark.session import (
+        release_caches,
+        tracked_cache,
+    )
+
+    fn = SHELL_CALLERS[model][0]
+    slots = spark.sparkContext.defaultParallelism
+    y = np.sin(np.arange(200) / 4.0)
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(slots))
+    try:
+        series = tracked_cache(
+            series_df(spark, y).unionByName(series_df(spark, y, series_id="s2"))
+        )
+        series.count()
+        tree = _plan(fn(series)).split("\n\n")[0]
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
+        release_caches()
+    own = tree.split(" InMemoryTableScan (")[0]
+    assert " MapInPandas (" in own and " Sort (" in own
+    assert " Exchange (" not in own

@@ -1,20 +1,26 @@
 """The per-partition shell every batch per-series model runs in.
 
 Each model is a Spark-side prelude (a ``select``, sometimes an exact
-aggregate joined back) plus a module-level kernel ``kernel(g) ->
-columns`` over ONE group ``g``, its rows in ``rn`` order.
-:func:`per_series` is the package's only batch per-series Python call:
-it owns the partitioning decision, the sort and the output projection,
-so a kernel is plain pandas/numpy that can be called in process.
+aggregate joined back) plus a module-level kernel.  :func:`per_series`
+is the package's only batch per-series Python call: it owns the
+partitioning decision, the sort and the output projection, so a kernel
+is plain numpy/pandas that can be called in process.
 
 One Python pass per task: the rows are hash-partitioned by the group
 keys and sorted by ``(keys, rn)`` on the JVM side, then ONE
-``mapInPandas`` walks each partition's Arrow batches, cuts them at key
-changes, hands each complete group to the kernel and yields one output
-frame per input batch.  A group that straddles two batches is carried
-into the next one.  So each batch crosses the Arrow boundary once (a
-grouped-map converts every group separately), no pandas sort runs, and
-a task holds at most one Arrow batch plus one series.
+``mapInPandas`` walks each partition's Arrow batches and cuts them
+where the keys change.  A group that straddles two batches is carried
+into the next one.  Every group that ends in a batch goes to the kernel
+in ONE call, ``kernel(cols, offsets)``: ``cols`` maps each column to an
+array of those rows, back to back in ``(keys, rn)`` order, and
+``offsets`` holds the CSR group starts followed by the row count.  So
+each batch crosses the Arrow boundary once, no pandas sort runs, a task
+holds at most one Arrow batch plus one series, and a kernel whose
+recursion can step several series at once (``bocpd_changepoints``,
+``kalman_local_level``) pays its per-step cost once per batch instead
+of once per series.  A kernel written for one pandas group,
+``kernel(g)``, runs under :func:`each_series`, which hands it each
+group as a frame re-indexed from 0, as a grouped map would.
 
 Partitioning: AQE's shuffle coalescing is byte-based
 (``parallelismFirst`` targets ~1 MB partitions): a multi-series frame
@@ -57,26 +63,50 @@ def _group_starts(k: pd.DataFrame) -> np.ndarray:
     return np.flatnonzero(cut) + 1
 
 
+def each_series(kernel: Callable[[pd.DataFrame], Mapping | pd.DataFrame]) -> Callable:
+    """Adapt a one-series pandas kernel ``kernel(g)`` to the batch
+    contract of :func:`per_series`: it runs once per group, on a frame
+    of the group's rows re-indexed from 0, exactly as a grouped map
+    would hand it.  A returned mapping of new columns is attached to
+    the group's rows; a returned frame is taken as is."""
+
+    def run(cols: dict[str, np.ndarray], offsets: np.ndarray) -> pd.DataFrame:
+        outs = []
+        for lo, hi in zip(offsets[:-1].tolist(), offsets[1:].tolist()):
+            g = pd.DataFrame({c: v[lo:hi] for c, v in cols.items()})
+            out = kernel(g)
+            outs.append(out if isinstance(out, pd.DataFrame) else g.assign(**out))
+        outs = [o for o in outs if len(o)] or outs[:1]
+        return outs[0] if len(outs) == 1 else pd.concat(outs, ignore_index=True)
+
+    return run
+
+
 def per_series(
     src: DataFrame,
     out_ddl: str,
-    kernel: Callable[[pd.DataFrame], Mapping | pd.DataFrame],
+    kernel: Callable[[dict[str, np.ndarray], np.ndarray], Mapping | pd.DataFrame],
     keys: tuple[str, ...] = ("series_id",),
 ) -> DataFrame:
-    """Run ``kernel`` once per ``keys`` group of ``src`` (which must
-    carry ``rn``), the group's rows sorted by ``rn`` and re-indexed.
+    """Run ``kernel`` over the ``keys`` groups of ``src`` (which must
+    carry ``rn``), several groups per call.
 
-    ``kernel`` returns either a mapping of NEW columns, attached to the
-    group's own rows, or — when its output rows are not the input rows
+    ``kernel(cols, offsets)`` gets every complete group of one Arrow
+    batch: ``cols`` maps each column of ``src`` to an array of the
+    batch's rows in ``(keys, rn)`` order, and group ``i`` is rows
+    ``offsets[i]:offsets[i + 1]`` (CSR starts, ending with the row
+    count).  It returns either a mapping of NEW columns, one value per
+    input row, or — when its output rows are not the input rows
     (segments, alarms, one summary row) — a whole frame.  Either way
-    the result is projected to the columns of ``out_ddl``."""
+    the result is projected to the columns of ``out_ddl``.  A kernel
+    written for one pandas group runs through :func:`each_series`."""
     names = StructType.fromDDL(out_ddl).names
     keys = list(keys)
 
-    def run(pieces: list[pd.DataFrame]) -> pd.DataFrame:
+    def run(pieces: list[pd.DataFrame], starts: list[int]) -> pd.DataFrame:
         g = pd.concat(pieces) if len(pieces) > 1 else pieces[0]
-        g = g.reset_index(drop=True)
-        out = kernel(g)
+        cols = {c: g[c].to_numpy() for c in g.columns}
+        out = kernel(cols, np.array([*starts, len(g)]))
         if not isinstance(out, pd.DataFrame):
             out = g.assign(**out)
         return out[names]
@@ -93,21 +123,22 @@ def per_series(
                 cuts = _group_starts(k) - 1
             else:
                 cuts = _group_starts(pdf[keys])
-            outs = []
             lo = 0
-            for cut in cuts:
-                if cut > lo:
-                    open_.append(pdf.iloc[lo:cut])
-                out = run(open_)
+            if len(cuts):
+                # every group that ends in this batch, in one call
+                carried = sum(map(len, open_))
+                starts = [0, *(carried + int(c) for c in cuts[:-1])]
+                lo = int(cuts[-1])
+                if lo > 0:
+                    open_.append(pdf.iloc[:lo])
+                out = run(open_, starts)
                 if len(out):
-                    outs.append(out)
-                open_, lo = [], cut
+                    yield out
+                open_ = []
             # a copy, so the carried rows do not pin the whole batch
             open_.append(pdf.iloc[lo:].copy())
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
         if open_:
-            yield run(open_)
+            yield run(open_, [0])
 
     return (
         udf_repartition(src, *keys)

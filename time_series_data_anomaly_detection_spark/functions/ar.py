@@ -25,7 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 from ._score import mad_z
 
 
@@ -125,8 +125,8 @@ def ar_forecast(
     return per_series(
         df.select("series_id", "timestamp", "value", "rn", *keys[1:]),
         schema,
-        partial(ar_forecast_kernel, p=p, train_frac=train_frac,
-                frac_col=frac_col, score_col=score_col),
+        each_series(partial(ar_forecast_kernel, p=p, train_frac=train_frac,
+                            frac_col=frac_col, score_col=score_col)),
         keys,
     )
 

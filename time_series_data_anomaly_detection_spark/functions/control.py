@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .._exact import DEC
-from ._partition import per_series
+from ._partition import each_series, per_series
 
 EPS_SD = 1e-9
 
@@ -153,7 +153,7 @@ def ewma_chart(
     """
     return per_series(
         _with_moments(df, value_col), EWMA_SCHEMA,
-        partial(ewma_chart_kernel, lam=lam, nsig=nsig),
+        each_series(partial(ewma_chart_kernel, lam=lam, nsig=nsig)),
     )
 
 
@@ -188,7 +188,7 @@ def cusum_chart(
     """
     return per_series(
         _with_moments(df, value_col), CUSUM_SCHEMA,
-        partial(cusum_chart_kernel, k=k, h=h),
+        each_series(partial(cusum_chart_kernel, k=k, h=h)),
     )
 
 
@@ -239,5 +239,5 @@ def cusum_alarms(
     """
     return per_series(
         _with_moments(df, value_col), CUSUM_ALARM_SCHEMA,
-        partial(cusum_alarms_kernel, k=k, h=h),
+        each_series(partial(cusum_alarms_kernel, k=k, h=h)),
     )

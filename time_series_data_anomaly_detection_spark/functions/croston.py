@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 
 CROSTON_SCHEMA = (
     "series_id string, rn long, demand double, z double, p double, "
@@ -83,7 +83,7 @@ def croston_forecast(
     pts = base.filter(F.col("demand") > 0).select(
         "series_id", "rn", "demand"
     )
-    fitted = per_series(pts, CROSTON_SCHEMA, partial(croston_kernel, alpha=alpha))
+    fitted = per_series(pts, CROSTON_SCHEMA, each_series(partial(croston_kernel, alpha=alpha)))
     w = (
         Window.partitionBy("series_id")
         .orderBy("rn")

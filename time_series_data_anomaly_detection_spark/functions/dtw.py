@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 
 
 def dtw_banded(x: np.ndarray, y: np.ndarray, band: int) -> float:
@@ -156,6 +156,6 @@ def dtw_distance(
         F.broadcast(pt), "series_id"
     )
     return per_series(
-        tagged, DTW_SCHEMA, partial(dtw_pair_kernel, band=band, seg_len=seg_len),
+        tagged, DTW_SCHEMA, each_series(partial(dtw_pair_kernel, band=band, seg_len=seg_len)),
         ("pair",),
     )

@@ -34,7 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 
 GP_SCHEMA = (
     "series_id string, timestamp timestamp, value double, rn long, "
@@ -269,15 +269,15 @@ def gp_forecast(
         hp = per_series(
             tr_only,
             "series_id string, __ls double, __n2 double",
-            partial(gp_select_hp_kernel, period=period, period2=period2,
-                    length_scale=length_scale, noise=noise),
+            each_series(partial(gp_select_hp_kernel, period=period, period2=period2,
+                                length_scale=length_scale, noise=noise)),
         )
         both = both.join(F.broadcast(hp), "series_id")
 
     return per_series(
         both,
         GP_SCHEMA,
-        partial(gp_forecast_kernel, period=period, length_scale=length_scale,
-                noise=noise, period2=period2, optimize=optimize),
+        each_series(partial(gp_forecast_kernel, period=period, length_scale=length_scale,
+                            noise=noise, period2=period2, optimize=optimize)),
         ("series_id", "__bucket"),
     )

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 
 HARMONIC_SCHEMA = (
     "series_id string, rn long, split string, pred double, resid double"
@@ -77,6 +77,6 @@ def harmonic_forecast(
     return per_series(
         src,
         HARMONIC_SCHEMA,
-        partial(harmonic_forecast_kernel, period=period,
-                n_harmonics=n_harmonics, train_frac=train_frac),
+        each_series(partial(harmonic_forecast_kernel, period=period,
+                            n_harmonics=n_harmonics, train_frac=train_frac)),
     )

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .._exact import DEC
-from ._partition import per_series
+from ._partition import each_series, per_series
 
 HW_SCHEMA = "series_id string, rn long, pred double, resid double"
 
@@ -117,8 +117,8 @@ def holt_winters_fixed(
 
     return per_series(
         src, HW_SCHEMA,
-        partial(holt_winters_fixed_kernel, period=p, alpha=alpha, beta=beta,
-                gamma=gamma),
+        each_series(partial(holt_winters_fixed_kernel, period=p, alpha=alpha, beta=beta,
+                            gamma=gamma)),
     )
 
 
@@ -179,5 +179,5 @@ def holt_linear_fixed(
     """
     src = df.select("series_id", "rn", F.col(value_col).alias("value"))
     return per_series(
-        src, HW_SCHEMA, partial(holt_linear_fixed_kernel, alpha=alpha, beta=beta)
+        src, HW_SCHEMA, each_series(partial(holt_linear_fixed_kernel, alpha=alpha, beta=beta))
     )

@@ -13,9 +13,14 @@ for the variance hyperparameters.  Numerics therefore differ from the
 reference's L-BFGS MLE — parity is at the metric level, not row level
 (SURVEY §5 determinism note).
 
-Spark shape: each model is a module-level kernel over one series, run
-by the package's one per-series shell (``_partition.per_series``),
-fanned out across executors.  State per group is O(state_dim²) — tiny.
+Spark shape: each model is a module-level kernel run by the package's
+one per-series shell (``_partition.per_series``), fanned out across
+executors.  The local level takes every series of an Arrow batch in one
+call (``kalman_local_level_batch``): series with equal-length training
+heads run EM in lockstep, one M-step per iteration over their stack,
+while each series' filter and smoother stay scalar recursions.  The
+fixed-variance and BSTS kernels take one series at a time
+(``_partition.each_series``).  State per group is O(state_dim²) — tiny.
 At 100 TB the constraint is rows-per-series, not series count; the
 filter is O(T) per series.
 """
@@ -28,60 +33,126 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 from ._score import rolling_sigma_z
 from .shesd import _norm_ppf
+
+
+def _filter_variances(n: int, p0: float, q: float, r: float):
+    """The filter's ``(p_pred, gain, p)`` sequences over ``n`` steps.
+    They never read ``y``: once ``p`` repeats exactly, every later step
+    repeats the last, so the rest is filled instead of stepped.
+    Returns the three lists and the first index from which ``p`` is
+    constant."""
+    p_pred, gain, p = [], [], []
+    pp = p0
+    for t in range(n):
+        ppp = pp + q
+        k_gain = ppp / (ppp + r)
+        pn = (1 - k_gain) * ppp
+        p_pred.append(ppp)
+        gain.append(k_gain)
+        p.append(pn)
+        if pn == pp:
+            rest = n - t - 1
+            p_pred += [ppp] * rest
+            gain += [k_gain] * rest
+            p += [pn] * rest
+            return p_pred, gain, p, max(t - 1, 0)
+        pp = pn
+    return p_pred, gain, p, n - 1
+
+
+def _smoother_variances(p: list, q: float, fixed_from: int):
+    """The RTS smoother's ``(c, p_s)`` sequences from the filtered
+    variances ``p``, constant from index ``fixed_from`` on.  Like the
+    filter's they never read ``y``; once ``p_s`` repeats exactly inside
+    that constant stretch, the rest of the stretch is filled."""
+    n = len(p)
+    c_s = [0.0] * n
+    p_s = p.copy()
+    ps = p[-1]
+    t = n - 2
+    while t >= 0:
+        pt = p[t]
+        c = pt / (pt + q)
+        nps = pt + c * c * (ps - (pt + q))
+        c_s[t], p_s[t] = c, nps
+        if nps == ps and t > fixed_from:
+            c_s[fixed_from:t] = [c] * (t - fixed_from)
+            p_s[fixed_from:t] = [nps] * (t - fixed_from)
+            t = fixed_from
+        ps = nps
+        t -= 1
+    return c_s, p_s
 
 
 def _kalman_em_local_level(y: np.ndarray, n_iter: int = 30):
     """EM estimation of (q, r) for the local-level model, then a final
     filter pass.  Returns one-step-ahead predicted mean and variance.
 
-    The filter and smoother recursions run on Python floats: the same
-    IEEE double operations in the same order as numpy scalars, without
-    the per-element numpy dispatch.  A training slice of fewer than 2
-    points has nothing to estimate (q) from, so it keeps the initial
-    (q, r) and returns one filter pass."""
-    n = len(y)
-    var_y = float(np.var(y)) or 1.0
-    q, r = var_y * 0.1, var_y * 0.9
-    level0, p0 = float(y[0]), var_y
-    ys = y.tolist()
+    ``y`` is one series, or a ``(series × n)`` stack of equal-length
+    series fitted in lockstep: then every output gains the leading
+    series axis and each EM iteration's M-step runs once over the
+    stack (row-wise means equal 1-D means bit for bit).
+
+    The filter and smoother recursions run on Python floats, one series
+    at a time: the same IEEE double operations in the same order as
+    numpy scalars, without the per-element numpy dispatch.  Their
+    variance halves never read ``y`` and are stepped only until they
+    repeat (:func:`_filter_variances`, :func:`_smoother_variances`);
+    only the means are stepped over the whole series.  A training
+    slice of fewer than 2 points has nothing to estimate (q) from, so
+    it keeps the initial (q, r) and returns one filter pass."""
+    ys = np.atleast_2d(y)
+    n = ys.shape[1]
+    rows = ys.tolist()
+    var_y = [float(np.var(v)) or 1.0 for v in ys]
+    q = [v * 0.1 for v in var_y]
+    r = [v * 0.9 for v in var_y]
+    level0 = [v[0] for v in rows]
     for _ in range(n_iter):
-        # forward filter
-        mu, p, mu_pred, p_pred = [], [], [], []
-        m, pp = level0, p0
-        for yt in ys:
-            mp, ppp = m, pp + q
-            mu_pred.append(mp)
-            p_pred.append(ppp)
-            k_gain = ppp / (ppp + r)
-            m = mp + k_gain * (yt - mp)
-            pp = (1 - k_gain) * ppp
-            mu.append(m)
-            p.append(pp)
+        mu_pred, p_pred, mu_s, p_s = [], [], [], []
+        for i, yi in enumerate(rows):
+            # forward filter
+            pp_s, gain, p, fixed_from = _filter_variances(n, var_y[i], q[i], r[i])
+            mu = []
+            step = mu.append
+            m = level0[i]
+            for yt, k_gain in zip(yi, gain):
+                m = m + k_gain * (yt - m)
+                step(m)
+            # each step predicts the level the step before it filtered
+            mu_pred.append([level0[i], *mu[:-1]])
+            p_pred.append(pp_s)
+            if n < 2:
+                continue
+            # RTS smoother
+            c_s, ps_i = _smoother_variances(p, q[i], fixed_from)
+            ms_i = mu.copy()
+            ms = mu[-1]
+            for t in range(n - 2, -1, -1):
+                mt = mu[t]
+                ms = mt + c_s[t] * (ms - mt)
+                ms_i[t] = ms
+            mu_s.append(ms_i)
+            p_s.append(ps_i)
         if n < 2:
             break
-        # RTS smoother
-        mu_s = mu.copy()
-        p_s = p.copy()
-        ms, ps = mu[-1], p[-1]
-        for t in range(n - 2, -1, -1):
-            mt, pt = mu[t], p[t]
-            c = pt / (pt + q)
-            ms = mt + c * (ms - mt)
-            ps = pt + c * c * (ps - (pt + q))
-            mu_s[t], p_s[t] = ms, ps
-        # M-step
+        # M-step, every series at once
         mu_s = np.array(mu_s)
         p_s = np.array(p_s)
-        r = float(np.mean((y - mu_s) ** 2 + p_s))
-        dm = np.diff(mu_s)
-        q = float(np.mean(dm**2) + np.mean(p_s[1:] + p_s[:-1]) * 0.5)
-        q = max(q, 1e-12)
-        r = max(r, 1e-12)
-        level0 = mu_s[0]
-    return np.array(mu_pred), np.array(p_pred) + r, q, r
+        r_new = np.mean((ys - mu_s) ** 2 + p_s, axis=1)
+        dm = np.diff(mu_s, axis=1)
+        q_new = np.mean(dm**2, axis=1) + np.mean(p_s[:, 1:] + p_s[:, :-1], axis=1) * 0.5
+        q = np.maximum(q_new, 1e-12).tolist()
+        r = np.maximum(r_new, 1e-12).tolist()
+        level0 = mu_s[:, 0].tolist()
+    mu_pred = np.array(mu_pred)
+    var_pred = np.array(p_pred) + np.array(r)[:, None]
+    if np.ndim(y) == 1:
+        return mu_pred[0], var_pred[0], q[0], r[0]
+    return mu_pred, var_pred, np.array(q), np.array(r)
 
 
 KALMAN_SCHEMA = (
@@ -104,41 +175,80 @@ def _band(y: np.ndarray, mean: np.ndarray, var: np.ndarray,
     }
 
 
+def _forecast_tail(y: np.ndarray, n_train: int, mu_pred: np.ndarray,
+                   var_pred: np.ndarray, q: float, r: float,
+                   dynamic: bool) -> tuple[np.ndarray, np.ndarray]:
+    """Extend one series' in-sample predictions over its ``y[n_train:]``
+    tail (see :func:`kalman_local_level`)."""
+    n = len(y)
+    if n_train >= n:
+        return mu_pred, var_pred
+    # reconstruct the filtered state at the last train row from
+    # the one-step-predicted outputs (p_pred = var_pred - r)
+    ppp = var_pred[-1] - r
+    k_last = ppp / var_pred[-1]
+    last_mu = mu_pred[-1] + k_last * (y[n_train - 1] - mu_pred[-1])
+    if dynamic:
+        h = np.arange(1, n - n_train + 1, dtype=float)
+        fc_mean = np.full(n - n_train, last_mu)
+        fc_var = (1 - k_last) * ppp + h * q + r
+    else:
+        m, pp = last_mu, (1 - k_last) * ppp
+        fc_mean = np.empty(n - n_train)
+        fc_var = np.empty(n - n_train)
+        for t in range(n_train, n):
+            pv = pp + q
+            fc_mean[t - n_train] = m
+            fc_var[t - n_train] = pv + r
+            kg = pv / (pv + r)
+            m = m + kg * (y[t] - m)
+            pp = (1 - kg) * pv
+    return (np.concatenate([mu_pred, fc_mean]),
+            np.concatenate([var_pred, fc_var]))
+
+
+def kalman_local_level_batch(cols: dict, offsets: np.ndarray,
+                             train_frac: float = 1.0, alpha: float = 0.05,
+                             dynamic: bool = True,
+                             score_col: str | None = None) -> dict:
+    """:func:`kalman_local_level` on the series of ``cols``, back to
+    back in ``rn`` order at CSR ``offsets``.  Series whose training
+    heads have the same length are fitted in lockstep by one
+    :func:`_kalman_em_local_level` call."""
+    y = np.asarray(cols["value"], dtype=float)
+    spans = list(zip(offsets[:-1].tolist(), offsets[1:].tolist()))
+    n_train = [max(int((b - a) * train_frac), 2) for a, b in spans]
+    heads = [y[a:b][:k] for (a, b), k in zip(spans, n_train)]
+    fits: list = [None] * len(spans)
+    by_len: dict[int, list[int]] = {}
+    for i, h in enumerate(heads):
+        by_len.setdefault(len(h), []).append(i)
+    for idx in by_len.values():
+        mu_pred, var_pred, q, r = _kalman_em_local_level(
+            np.stack([heads[i] for i in idx]))
+        for j, i in enumerate(idx):
+            fits[i] = mu_pred[j], var_pred[j], q[j], r[j]
+    mean = np.empty(len(y))
+    var = np.empty(len(y))
+    for (a, b), k, (mu_pred, var_pred, q, r) in zip(spans, n_train, fits):
+        mean[a:b], var[a:b] = _forecast_tail(y[a:b], k, mu_pred, var_pred,
+                                             q, r, dynamic)
+    out = _band(y, mean, var, alpha)
+    if score_col:
+        out[score_col] = np.concatenate(
+            [rolling_sigma_z(out["resid"][a:b]) for a, b in spans])
+    return out
+
+
 def kalman_local_level_kernel(g: pd.DataFrame, train_frac: float = 1.0,
                               alpha: float = 0.05, dynamic: bool = True,
                               score_col: str | None = None) -> dict:
     """:func:`kalman_local_level` on one series ``g`` in ``rn`` order."""
-    y = g["value"].to_numpy(float)
-    n = len(y)
-    n_train = max(int(n * train_frac), 2)
-    mu_pred, var_pred, q, r = _kalman_em_local_level(y[:n_train])
-    if n_train < n:
-        # reconstruct the filtered state at the last train row from
-        # the one-step-predicted outputs (p_pred = var_pred - r)
-        ppp = var_pred[-1] - r
-        k_last = ppp / var_pred[-1]
-        last_mu = mu_pred[-1] + k_last * (y[n_train - 1] - mu_pred[-1])
-        if dynamic:
-            h = np.arange(1, n - n_train + 1, dtype=float)
-            fc_mean = np.full(n - n_train, last_mu)
-            fc_var = (1 - k_last) * ppp + h * q + r
-        else:
-            m, pp = last_mu, (1 - k_last) * ppp
-            fc_mean = np.empty(n - n_train)
-            fc_var = np.empty(n - n_train)
-            for t in range(n_train, n):
-                pv = pp + q
-                fc_mean[t - n_train] = m
-                fc_var[t - n_train] = pv + r
-                kg = pv / (pv + r)
-                m = m + kg * (y[t] - m)
-                pp = (1 - kg) * pv
-        mu_pred = np.concatenate([mu_pred, fc_mean])
-        var_pred = np.concatenate([var_pred, fc_var])
-    out = _band(y, mu_pred, var_pred, alpha)
-    if score_col:
-        out[score_col] = rolling_sigma_z(out["resid"])
-    return out
+    return kalman_local_level_batch(
+        {"value": g["value"].to_numpy(float)}, np.array([0, len(g)]),
+        train_frac=train_frac, alpha=alpha, dynamic=dynamic,
+        score_col=score_col,
+    )
 
 
 def kalman_local_level(
@@ -171,7 +281,7 @@ def kalman_local_level(
     return per_series(
         df.select("series_id", "timestamp", "value", "rn"),
         KALMAN_SCHEMA + (f", {score_col} double" if score_col else ""),
-        partial(kalman_local_level_kernel, train_frac=train_frac,
+        partial(kalman_local_level_batch, train_frac=train_frac,
                 alpha=alpha, dynamic=dynamic, score_col=score_col),
     )
 
@@ -226,7 +336,7 @@ def kalman_fixed(
     return per_series(
         df.select("series_id", "value", "rn"),
         KALMAN_FIXED_SCHEMA,
-        partial(kalman_fixed_kernel, q=q, r=r, p0=p0, alpha=alpha),
+        each_series(partial(kalman_fixed_kernel, q=q, r=r, p0=p0, alpha=alpha)),
     )
 
 
@@ -298,7 +408,7 @@ def bsts_fixed(
     return per_series(
         df.select("series_id", "value", "rn"),
         KALMAN_FIXED_SCHEMA,
-        partial(bsts_fixed_kernel, ql=ql, qb=qb, r=r, p0=p0, alpha=alpha),
+        each_series(partial(bsts_fixed_kernel, ql=ql, qb=qb, r=r, p0=p0, alpha=alpha)),
     )
 
 
@@ -410,7 +520,7 @@ def bsts_forecast(
     return per_series(
         df.select("series_id", "timestamp", "value", "rn"),
         BSTS_SCHEMA + (f", {score_col} double" if score_col else ""),
-        partial(bsts_forecast_kernel, period=period, train_frac=train_frac,
-                alpha=alpha, seasonal_periods=seasonal_periods,
-                score_col=score_col),
+        each_series(partial(bsts_forecast_kernel, period=period, train_frac=train_frac,
+                            alpha=alpha, seasonal_periods=seasonal_periods,
+                            score_col=score_col)),
     )

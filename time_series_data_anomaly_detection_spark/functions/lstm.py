@@ -24,7 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ._lstm_numpy import NumpyLSTM
-from ._partition import per_series
+from ._partition import each_series, per_series
 from ._score import rolling_sigma_z
 
 LSTM_SCHEMA = (
@@ -99,8 +99,8 @@ def lstm_forecast(
     return per_series(
         df.select("series_id", "timestamp", "value", "rn"),
         LSTM_SCHEMA + (f", {score_col} double" if score_col else ""),
-        partial(lstm_forecast_kernel, seq_len=seq_len, hidden=hidden,
-                epochs=epochs, train_frac=train_frac, seed=seed,
-                max_train_windows=max_train_windows, batch=batch,
-                lr=lr, score_col=score_col),
+        each_series(partial(lstm_forecast_kernel, seq_len=seq_len, hidden=hidden,
+                            epochs=epochs, train_frac=train_frac, seed=seed,
+                            max_train_windows=max_train_windows, batch=batch,
+                            lr=lr, score_col=score_col)),
     )

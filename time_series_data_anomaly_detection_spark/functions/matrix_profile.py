@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 
 MP_SCHEMA = (
     "series_id string, rn long, mp double, nn_idx long, is_discord int"
@@ -157,7 +157,7 @@ def matrix_profile_scores(
     return per_series(
         df.select("series_id", "rn", "value"),
         MP_SCHEMA,
-        partial(matrix_profile_kernel, m=m, top_discords=top_discords),
+        each_series(partial(matrix_profile_kernel, m=m, top_discords=top_discords)),
     )
 
 
@@ -406,7 +406,7 @@ def matrix_profile_tiled(
     parts = per_series(
         tagged,
         "series_id string, rn long, mp_part double, nn_part long",
-        partial(mp_tile_pair_kernel, m=m_),
+        each_series(partial(mp_tile_pair_kernel, m=m_)),
         ("series_id", "pair_id"),
     )
     merged = parts.groupBy("series_id", "rn").agg(
@@ -414,5 +414,5 @@ def matrix_profile_tiled(
         F.min_by("nn_part", F.struct("mp_part", "nn_part")).alias("__nn"),
     )
     return per_series(
-        merged, MP_SCHEMA, partial(mp_merge_kernel, m=m_, top_discords=td_)
+        merged, MP_SCHEMA, each_series(partial(mp_merge_kernel, m=m_, top_discords=td_))
     )

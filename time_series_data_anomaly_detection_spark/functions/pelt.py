@@ -35,7 +35,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 
 
 def _l2_cost_arrays(x: np.ndarray):
@@ -146,5 +146,5 @@ def pelt_segments(
     return per_series(
         df.select("series_id", "rn", F.col(value_col).alias("value")),
         PELT_SCHEMA,
-        partial(pelt_segments_kernel, beta=beta),
+        each_series(partial(pelt_segments_kernel, beta=beta)),
     )

@@ -40,7 +40,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 from .stl import stl_series
 
 SHESD_SCHEMA = "series_id string, rn long, value double, resid double, anomaly int"
@@ -149,6 +149,6 @@ def shesd_flags(
     return per_series(
         df.select("series_id", "rn", "value"),
         SHESD_SCHEMA,
-        partial(shesd_kernel, period=period, max_anoms_frac=max_anoms_frac,
-                alpha=alpha),
+        each_series(partial(shesd_kernel, period=period, max_anoms_frac=max_anoms_frac,
+                            alpha=alpha)),
     )

@@ -36,7 +36,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 
 SR_SCHEMA = (
     "series_id string, rn long, value double, saliency double, "
@@ -105,6 +105,6 @@ def spectral_residual_scores(
     return per_series(
         df.select("series_id", "rn", "value"),
         SR_SCHEMA,
-        partial(spectral_residual_kernel, q=q, score_window=score_window,
-                tau=tau),
+        each_series(partial(spectral_residual_kernel, q=q, score_window=score_window,
+                            tau=tau)),
     )

@@ -32,7 +32,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ._partition import per_series
+from ._partition import each_series, per_series
 from ._score import mad_z
 
 STL_SCHEMA = (
@@ -133,6 +133,6 @@ def stl_decompose(
     return per_series(
         df.select(*cols),
         schema,
-        partial(stl_decompose_kernel, period=period, n_outer=n_outer,
-                phase_col=phase_col, score_col=score_col),
+        each_series(partial(stl_decompose_kernel, period=period, n_outer=n_outer,
+                            phase_col=phase_col, score_col=score_col)),
     )

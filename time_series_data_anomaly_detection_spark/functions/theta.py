@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._exact import DEC
-from ._partition import per_series
+from ._partition import each_series, per_series
 
 ALPHA = 0.25  # dyadic — exact in binary AND decimal
 
@@ -86,7 +86,7 @@ def theta_forecast(
     ses = per_series(
         lined.select("series_id", "rn", "__l"),
         "series_id string, s_T double",
-        theta_ses_kernel,
+        each_series(theta_ses_kernel),
     )
 
     test = base.where(F.col("rn") > F.col("__T"))

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .._exact import DEC
-from ..functions._partition import per_series
+from ..functions._partition import each_series, per_series
 
 
 def acf(df: DataFrame, max_lag: int = 10, value_col: str = "value") -> DataFrame:
@@ -243,7 +243,7 @@ def acf_fft(
     return per_series(
         df.select("series_id", "rn", F.col(value_col).alias("value")),
         "series_id string, lag int, acf double",
-        partial(acf_fft_kernel, max_lag=max_lag),
+        each_series(partial(acf_fft_kernel, max_lag=max_lag)),
     )
 
 

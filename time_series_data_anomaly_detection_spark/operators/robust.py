@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions._partition import per_series
+from ..functions._partition import each_series, per_series
 
 MAD_K = 1.4826  # src/utils.py:38 — shared with operators.scaling
 EPS_SCALE = 1e-9
@@ -351,6 +351,6 @@ def rolling_quantile_flags_grouped(
     return per_series(
         df.select("series_id", "rn", F.col(value_col).alias("value")),
         ROLLING_Q_SCHEMA,
-        partial(rolling_quantile_kernel, window=window, lo_q=lo_q, hi_q=hi_q,
-                min_periods=min_periods),
+        each_series(partial(rolling_quantile_kernel, window=window, lo_q=lo_q, hi_q=hi_q,
+                            min_periods=min_periods)),
     )

@@ -45,7 +45,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..functions._partition import per_series
+from ..functions._partition import each_series, per_series
 
 MK_SCHEMA = (
     "series_id string, n long, s_stat long, tau double, "
@@ -158,7 +158,7 @@ def mann_kendall_frame(df: DataFrame) -> DataFrame:
     Input: ``(series_id, rn, value)``; output one row per series.
     """
     return per_series(
-        df.select("series_id", "rn", "value"), MK_SCHEMA, _mann_kendall_one
+        df.select("series_id", "rn", "value"), MK_SCHEMA, each_series(_mann_kendall_one)
     )
 
 
@@ -278,5 +278,5 @@ def seasonal_mann_kendall_frame(
     return per_series(
         df.select("series_id", "rn", "value"),
         SMK_SCHEMA,
-        partial(_seasonal_mk_one, period=int(period), max_pairs=int(max_pairs)),
+        each_series(partial(_seasonal_mk_one, period=int(period), max_pairs=int(max_pairs))),
     )

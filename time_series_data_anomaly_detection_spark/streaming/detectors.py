@@ -48,7 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..functions.bocpd import bocpd_run, initial_state
+from ..functions.bocpd import STATE_KEYS, bocpd_run, initial_state
 from ..functions.control import cusum_run, ewma_run
 from ..functions.holt_winters import holt_winters_run
 
@@ -164,9 +164,6 @@ def streaming_rolling_flags(
     )
 
 
-_BOCPD_KEYS = ("r", "mu", "beta", "run_len")
-
-
 def streaming_bocpd(
     stream: DataFrame,
     hazard_lam: float = 100.0,
@@ -182,10 +179,10 @@ def streaming_bocpd(
     uses global series moments; supply train-time moments here)."""
 
     def encode(st):
-        return tuple(np.asarray(st[k], float).tolist() for k in _BOCPD_KEYS)
+        return tuple(np.asarray(st[k], float).tolist() for k in STATE_KEYS)
 
     def step(y, st):
-        st = {k: np.asarray(v, float) for k, v in zip(_BOCPD_KEYS, st)}
+        st = {k: np.asarray(v, float) for k, v in zip(STATE_KEYS, st)}
         st["run_len"] = st["run_len"].astype(int)
         cp, short, st = bocpd_run(
             (y - norm_mu) / (norm_sd or 1.0), st,
@@ -196,7 +193,7 @@ def streaming_bocpd(
     return _per_series_state(
         stream,
         "cp_prob double, cp_score double",
-        ", ".join(f"{k} array<double>" for k in _BOCPD_KEYS),
+        ", ".join(f"{k} array<double>" for k in STATE_KEYS),
         lambda: encode(initial_state()),
         step,
     )
