@@ -8,6 +8,10 @@ the noop sink, and reports per-detector
     rows/s          — total input rows / wall seconds
     batch p50/p95   — per-micro-batch triggerExecution duration (ms)
                       from the query's own progress telemetry
+    state commit    — median state-operator commitTimeMs (summed over
+                      the state partitions) per micro-batch
+    log commit      — median walCommit + commitOffsets (ms), the
+                      offset and commit log writes per micro-batch
 
 Writes STREAM_BENCH.json at the repo root and prints ONE JSON line.
 
@@ -71,10 +75,13 @@ def main() -> None:
     kw = dict(
         index=False, coerce_timestamps="us", allow_truncated_timestamps=True
     )
+    # the file source orders files by modification time, and files
+    # written within one millisecond tie: give each a later mtime
+    t_file = time.time() - N_BATCHES
     for i, chunk in enumerate(np.array_split(np.arange(n_rows), N_BATCHES)):
-        pdf.iloc[chunk].to_parquet(
-            os.path.join(root, f"part{i:03d}.parquet"), **kw
-        )
+        path = os.path.join(root, f"part{i:03d}.parquet")
+        pdf.iloc[chunk].to_parquet(path, **kw)
+        os.utime(path, (t_file + i, t_file + i))
 
     schema = "series_id string, timestamp timestamp, value double, event_id long"
 
@@ -138,11 +145,17 @@ def main() -> None:
             else json.loads(p.json())
             for p in q.recentProgress
         ]
-        durs = sorted(
-            p["durationMs"].get("triggerExecution", 0)
+        prog = [p for p in prog if p.get("numInputRows", 0) > 0]
+        durs = sorted(p["durationMs"].get("triggerExecution", 0) for p in prog)
+        state_commit = [
+            (p.get("stateOperators") or [{}])[0].get("commitTimeMs", 0)
             for p in prog
-            if p.get("numInputRows", 0) > 0
-        )
+        ]
+        log_commit = [
+            p["durationMs"].get("walCommit", 0)
+            + p["durationMs"].get("commitOffsets", 0)
+            for p in prog
+        ]
         rows_in = sum(p.get("numInputRows", 0) for p in prog)
         p50 = durs[len(durs) // 2] if durs else None
         p95 = durs[min(len(durs) - 1, int(0.95 * len(durs)))] if durs else None
@@ -153,6 +166,8 @@ def main() -> None:
             "n_batches": len(durs),
             "batch_p50_ms": p50,
             "batch_p95_ms": p95,
+            "state_commit_p50_ms": float(np.median(state_commit)) if prog else None,
+            "log_commit_p50_ms": float(np.median(log_commit)) if prog else None,
         }
         print(f"# {name}: {results[name]}", file=sys.stderr)
 

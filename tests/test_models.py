@@ -961,6 +961,41 @@ def test_shell_edges_equal_kernel_bitwise(spark, case, batch_rows):
     )
 
 
+def test_shell_calls_kernel_once_per_single_batch_partition(spark):
+    """A partition that fits in one Arrow batch costs ONE kernel call:
+    the shell reads a batch ahead, so the group the partition ends in
+    joins that call instead of getting a one-series call of its own."""
+    import pandas as pd
+    from pyspark import TaskContext
+
+    from time_series_data_anomaly_detection_spark.functions._partition import (
+        per_series,
+    )
+
+    n_series, n_points = 24, 10
+    pdf = pd.DataFrame({
+        "series_id": np.repeat([f"s{i:02d}" for i in range(n_series)], n_points),
+        "rn": np.tile(np.arange(1, n_points + 1), n_series),
+        "value": np.arange(n_series * n_points, dtype=float),
+    })
+
+    def counting(cols, offsets):
+        # one row per call: the task's partition and the groups it got
+        return pd.DataFrame({
+            "part": [TaskContext.get().partitionId()],
+            "groups": [len(offsets) - 1],
+            "rows": [int(offsets[-1])],
+        })
+
+    calls = per_series(
+        spark.createDataFrame(pdf), "part int, groups int, rows int", counting
+    ).toPandas()
+    assert calls["part"].nunique() > 1
+    assert calls["part"].is_unique, calls
+    assert calls["groups"].sum() == n_series
+    assert calls["rows"].sum() == n_series * n_points
+
+
 def _bits(a):
     return np.asarray(a, dtype=float).view(np.int64)
 

@@ -148,7 +148,10 @@ def test_dec12_equals_spark_decimal_cast(spark):
     """``dec12`` is Spark's ``CAST(x AS DECIMAL(38,12))``: HALF_UP on
     the shortest decimal digits of the double, on 120k seeded doubles
     from 1e-15 to 1e11 including exact and near 13-decimal ties."""
-    from time_series_data_anomaly_detection_spark.functions._score import dec12
+    from time_series_data_anomaly_detection_spark.functions._score import (
+        dec12,
+        dec12_array,
+    )
 
     rng = np.random.default_rng(23)
     x = np.concatenate(
@@ -168,3 +171,83 @@ def test_dec12_equals_spark_decimal_cast(spark):
     )
     want = [dec12(float(v)) for v in x]
     assert [int(d.scaleb(12)) for d in got] == want
+    assert dec12_array(x).tolist() == want
+
+
+def _rolling_sigma_z_decimal(resid):
+    """Inline replica of ``rolling_sigma_z`` as it was before it was
+    vectorized: ``Decimal`` per value, Python-int prefix sums and one
+    ``decimal(38,11)`` rounding per frame in Python."""
+    from decimal import ROUND_HALF_UP, Context, Decimal
+    from itertools import accumulate
+
+    ctx, q12 = Context(prec=60), Decimal("1e-12")
+
+    def dec12(x):
+        return int(Decimal(repr(x)).quantize(q12, ROUND_HALF_UP, ctx).scaleb(12, ctx))
+
+    def dec11_double(d):
+        q = (abs(d) + 5) // 10
+        return (q if d >= 0 else -q) / 10**11
+
+    r = np.asarray(resid, dtype=np.float64)
+    ok = ~np.isnan(r)
+    xs = [float(v) for v in r[ok]]
+    c1 = [0, *accumulate(dec12(v) for v in xs)]
+    c2 = [0, *accumulate(dec12(v * v) for v in xs)]
+    hi = np.cumsum(ok)
+    lo = np.concatenate([np.zeros(min(48, len(r)), np.int64), hi[:-48]])
+    cnt = hi - lo
+    s1 = np.array([dec11_double(c1[h] - c1[l]) for h, l in zip(hi, lo)])
+    s2 = np.array([dec11_double(c2[h] - c2[l]) for h, l in zip(hi, lo)])
+    n = cnt.astype(np.float64)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        var = (s2 - s1 * s1 / n) / (n - 1)
+    std = np.where((cnt >= 5) & (cnt >= 2), np.sqrt(np.maximum(var, 0.0)), np.nan)
+    idx = np.where(~np.isnan(std), np.arange(len(std)), len(std))
+    nxt = np.minimum.accumulate(idx[::-1])[::-1]
+    std = np.append(std, np.nan)[nxt]
+    return np.abs(r) / (std + 1e-6)
+
+
+def test_rolling_sigma_z_equals_decimal_replica_bitwise():
+    """The vectorized ``rolling_sigma_z`` equals the per-value
+    ``Decimal`` form it replaced, bit for bit: on random ragged series
+    with NaN runs; on exact and near .5e-12 ties, where the float
+    product of a value's fraction and 1e12 cannot decide the rounding;
+    on 2**-41 (its fraction times 1e12 is not exact in float); on
+    magnitudes whose counts or squares pass int64 or 2**53; on
+    all-NaN, empty and shorter-than-5 series."""
+    from time_series_data_anomaly_detection_spark.functions._score import (
+        dec12,
+        dec12_array,
+        rolling_sigma_z,
+    )
+
+    rng = np.random.default_rng(29)
+    cases = dict(_sigma_z_cases())
+    for i in range(120):
+        n = int(rng.integers(1, 260))
+        x = rng.standard_t(3, n) * 10.0 ** rng.integers(-9, 8)
+        if rng.random() < 0.4:
+            a = int(rng.integers(0, n))
+            x[a : a + int(rng.integers(1, 70))] = np.nan
+        cases[f"ragged{i}"] = x
+    odd = 2 * rng.integers(-10**7, 10**7, 200) + 1
+    cases["ties"] = odd * 5e-13
+    cases["near_ties"] = np.nextafter(odd * 5e-13, rng.choice([-1.0, 1.0], 200) * np.inf)
+    cases["ties_plus_int"] = rng.integers(-1000, 1000, 200) + odd * 5e-13
+    cases["two_pow_m41"] = np.full(60, 2.0**-41)
+    cases["large"] = rng.choice([-1.0, 1.0], 200) * 10.0 ** rng.uniform(6, 11, 200)
+    cases["mixed_scale"] = np.tile([1e7, -3e9, 5e-13, 1.5e-12, 8.99e6, -9e6], 20)
+    cases["all_nan"] = np.full(30, np.nan)
+    cases["empty"] = np.array([])
+    cases["n2"] = np.array([1.0, 2.0])
+    cases["nan_run_short"] = np.array([np.nan, 1.0, np.nan, np.nan, 3.0, 4.5])
+    for k, r in cases.items():
+        a = _rolling_sigma_z_decimal(r)
+        b = rolling_sigma_z(r)
+        assert np.array_equal(a.view(np.int64), b.view(np.int64)), k
+        v = r[~np.isnan(r)]
+        v = np.concatenate([v, v * v])
+        assert dec12_array(v).tolist() == [dec12(float(t)) for t in v], k

@@ -1304,3 +1304,92 @@ def test_streaming_conformal_matches_reference_loop(spark, stream_data):
         settled = got[got["q_hat"].notna()]
         assert len(settled) == len(vals) - n_cal - 1
         assert settled["covered"].astype(float).mean() > 0.8
+
+
+CKPT_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+CKPT_PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
+
+
+def _checkpoint_manager_class(spark, path):
+    """The class Spark's own factory picks for a checkpoint at ``path``
+    under the session's current configuration."""
+    jvm = spark._jvm
+    pkg = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    factory = getattr(getattr(pkg, "CheckpointFileManager$"), "MODULE$")
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    return factory.create(jvm.org.apache.hadoop.fs.Path(path), conf).getClass().getName()
+
+
+def test_session_checkpoint_manager_is_filesystem_based(spark, tmp_path):
+    """The package session writes streaming checkpoints through the
+    Hadoop FileSystem API (no forked ``readlink`` per path on local
+    disk), for ``file:`` paths and plain local ones."""
+    want = CKPT_PKG + "FileSystemBasedCheckpointFileManager"
+    assert spark.conf.get(CKPT_KEY) == want
+    assert _checkpoint_manager_class(spark, (tmp_path / "ck").as_uri()) == want
+    assert _checkpoint_manager_class(spark, str(tmp_path / "ck2")) == want
+
+
+def test_streaming_bocpd_resumes_filecontext_checkpoint(spark, tmp_path_factory):
+    """The upgrade path: a ``streaming_bocpd`` checkpoint written under
+    Spark's default FileContext manager resumes under the session's
+    FileSystem manager, and the rows equal one uninterrupted run that
+    saw the files in the same micro-batch order, bit for bit."""
+    base = tmp_path_factory.mktemp("ckpt_upgrade")
+    src = base / "src"
+    src.mkdir()
+    rng = np.random.default_rng(17)
+    pdf = pd.concat(
+        pd.DataFrame({
+            "series_id": sid,
+            "timestamp": pd.date_range("2024-01-01", periods=200, freq="30min"),
+            "value": rng.normal(10, 1, 200) + 6.0 * (np.arange(200) >= 150),
+            "event_id": np.arange(200, dtype="int64"),
+        })
+        for sid in ("a", "b")
+    ).reset_index(drop=True)
+    kw = dict(index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
+    mu, sd = 10.0, 1.0
+
+    def run(tag, **opts):
+        stream = spark.readStream.schema(SCHEMA).options(**opts).parquet(str(src))
+        q = (
+            streaming_bocpd(stream, norm_mu=mu, norm_sd=sd)
+            .writeStream.format("parquet")
+            .option("path", str(base / f"out_{tag}"))
+            .option("checkpointLocation", str(base / f"ck_{tag}"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        assert q.exception() is None, q.exception()
+        return (
+            spark.read.parquet(str(base / f"out_{tag}"))
+            .toPandas()
+            .sort_values(["series_id", "timestamp"])
+            .reset_index(drop=True)
+        )
+
+    pdf.groupby("series_id").head(120).to_parquet(src / "part1.parquet", **kw)
+    session_cls = spark.conf.get(CKPT_KEY)
+    spark.conf.set(CKPT_KEY, CKPT_PKG + "FileContextBasedCheckpointFileManager")
+    try:
+        ck = str(base / "ck_resumed")
+        assert _checkpoint_manager_class(spark, ck).endswith(
+            "FileContextBasedCheckpointFileManager"
+        )
+        assert len(run("resumed")) == 240
+    finally:
+        spark.conf.set(CKPT_KEY, session_cls)
+    pdf.groupby("series_id").tail(80).to_parquet(src / "part2.parquet", **kw)
+    got = run("resumed")
+    ref = run("ref", maxFilesPerTrigger=1)
+    assert len(got) == len(ref) == len(pdf)
+    assert got[["series_id", "timestamp"]].equals(ref[["series_id", "timestamp"]])
+    for c in ("value", "cp_prob", "cp_score"):
+        np.testing.assert_array_equal(
+            got[c].to_numpy(float).view(np.int64), ref[c].to_numpy(float).view(np.int64), c
+        )
+    # the level shift after the restart collapses the posterior: state is live
+    assert got.loc[got.series_id == "a", "cp_score"].iloc[150:153].max() > 0.5

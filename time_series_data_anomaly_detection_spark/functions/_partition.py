@@ -10,12 +10,14 @@ One Python pass per task: the rows are hash-partitioned by the group
 keys and sorted by ``(keys, rn)`` on the JVM side, then ONE
 ``mapInPandas`` walks each partition's Arrow batches and cuts them
 where the keys change.  A group that straddles two batches is carried
-into the next one.  Every group that ends in a batch goes to the kernel
-in ONE call, ``kernel(cols, offsets)``: ``cols`` maps each column to an
-array of those rows, back to back in ``(keys, rn)`` order, and
-``offsets`` holds the CSR group starts followed by the row count.  So
+into the next one; the shell reads one batch ahead, so the group a
+partition ends in joins its last batch's call.  Every group that ends
+in a batch goes to the kernel in ONE call, ``kernel(cols, offsets)``:
+``cols`` maps each column to an array of those rows, back to back in
+``(keys, rn)`` order, and ``offsets`` holds the CSR group starts
+followed by the row count.  So
 each batch crosses the Arrow boundary once, no pandas sort runs, a task
-holds at most one Arrow batch plus one series, and a kernel whose
+holds at most two Arrow batches plus one series, and a kernel whose
 recursion can step several series at once (``bocpd_changepoints``,
 ``kalman_local_level``) pays its per-step cost once per batch instead
 of once per series.  A kernel written for one pandas group,
@@ -113,32 +115,37 @@ def per_series(
 
     def run_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         open_: list[pd.DataFrame] = []  # the group the last batch ended in
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
+        batches = (b for b in batches if len(b))
+        pdf = next(batches, None)
+        while pdf is not None:
+            # one batch ahead: after the last batch the group it ends in
+            # is complete, so it joins that batch's call
+            nxt = next(batches, None)
             if open_:
                 # the open group's last row leads the key frame, so a
                 # key change at the batch's first row shows up as cut 0
                 k = pd.concat([open_[-1][keys].iloc[-1:], pdf[keys]])
-                cuts = _group_starts(k) - 1
+                cuts = (_group_starts(k) - 1).tolist()
             else:
-                cuts = _group_starts(pdf[keys])
+                cuts = _group_starts(pdf[keys]).tolist()
+            if nxt is None:
+                cuts.append(len(pdf))
             lo = 0
-            if len(cuts):
+            if cuts:
                 # every group that ends in this batch, in one call
                 carried = sum(map(len, open_))
-                starts = [0, *(carried + int(c) for c in cuts[:-1])]
-                lo = int(cuts[-1])
+                starts = [0, *(carried + c for c in cuts[:-1])]
+                lo = cuts[-1]
                 if lo > 0:
                     open_.append(pdf.iloc[:lo])
                 out = run(open_, starts)
                 if len(out):
                     yield out
                 open_ = []
-            # a copy, so the carried rows do not pin the whole batch
-            open_.append(pdf.iloc[lo:].copy())
-        if open_:
-            yield run(open_, [0])
+            if lo < len(pdf):
+                # a copy, so the carried rows do not pin the whole batch
+                open_.append(pdf.iloc[lo:].copy())
+            pdf = nxt
 
     return (
         udf_repartition(src, *keys)

@@ -109,6 +109,30 @@ def get_spark(
         # still an eighth of the target box
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Streaming checkpoints (offset, commit and source logs, every
+        # state-store file) go through the Hadoop FileSystem API, not
+        # Spark's default FileContext manager.  On local disk FileContext
+        # resolves each path with getFileLinkStatus, which forks a
+        # `readlink` process per call; FileSystem renames with one
+        # atomic POSIX rename that replaces the target, and forks
+        # nothing.  Measured on streaming_bocpd over 100 series (4 state
+        # partitions, 4 vCPU Xeon, JFR): JVM process starts 119 → 26 per
+        # micro-batch; medians of state commitTimeMs 270 → 13.5 ms and
+        # of triggerExecution 482 → 373 ms.  The starts left are
+        # Hadoop's `chmod` of each new file and of its `.crc` (no native
+        # Hadoop library).  Those local `.crc` files and Spark's
+        # state-file checksums stay, so every read is still verified.
+        # Trade-off: on HDFS FileSystem.rename does not replace an
+        # existing file, so a re-executed batch keeps the complete state
+        # file its earlier attempt wrote — what Spark itself does when
+        # FileContext is unavailable.  The checkpoint layout is the same
+        # under either manager, so a checkpoint written with the default
+        # resumes under this one.
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
         # Long multi-query sessions (the 139-query gate/bench) bloat
         # the driver heap with retained status state (UI AppStatusStore
         # keeps 1000 jobs/stages/executions by default) and with

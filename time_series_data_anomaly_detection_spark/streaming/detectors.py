@@ -20,6 +20,10 @@ state DDL:
   slice of a series (``y`` = its values in timestamp order) and return
   the output columns that follow ``series_id, timestamp, value``.
 
+Only those three input columns enter the shell: any other (an
+``event_id``, say) is projected away before the shuffle, so it never
+crosses the Arrow stream or a per-group pandas frame.
+
 Where a batch operator has the same recursion, ``step`` calls that
 operator's resumable kernel, so the stream equals the batch output
 row-for-row on any prefix by construction:
@@ -113,7 +117,8 @@ def _per_series_state(
             )
         state.update(st)
 
-    return stream.groupBy("series_id").applyInPandasWithState(
+    rows = stream.select("series_id", "timestamp", "value")
+    return rows.groupBy("series_id").applyInPandasWithState(
         update,
         f"series_id string, timestamp timestamp, value double, {out_ddl}",
         state_ddl,
