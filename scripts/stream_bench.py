@@ -12,6 +12,9 @@ the noop sink, and reports per-detector
                       the state partitions) per micro-batch
     log commit      — median walCommit + commitOffsets (ms), the
                       offset and commit log writes per micro-batch
+    state update    — median state-operator allUpdatesTimeMs: the
+                      update loop, Python round trip included
+    state memory    — median state-operator memoryUsedBytes
 
 Writes STREAM_BENCH.json at the repo root and prints ONE JSON line.
 
@@ -147,10 +150,10 @@ def main() -> None:
         ]
         prog = [p for p in prog if p.get("numInputRows", 0) > 0]
         durs = sorted(p["durationMs"].get("triggerExecution", 0) for p in prog)
-        state_commit = [
-            (p.get("stateOperators") or [{}])[0].get("commitTimeMs", 0)
-            for p in prog
-        ]
+        state_ops = [(p.get("stateOperators") or [{}])[0] for p in prog]
+        state_commit = [st.get("commitTimeMs", 0) for st in state_ops]
+        state_update = [st.get("allUpdatesTimeMs", 0) for st in state_ops]
+        state_mem = [st.get("memoryUsedBytes", 0) for st in state_ops]
         log_commit = [
             p["durationMs"].get("walCommit", 0)
             + p["durationMs"].get("commitOffsets", 0)
@@ -168,6 +171,8 @@ def main() -> None:
             "batch_p95_ms": p95,
             "state_commit_p50_ms": float(np.median(state_commit)) if prog else None,
             "log_commit_p50_ms": float(np.median(log_commit)) if prog else None,
+            "state_update_p50_ms": float(np.median(state_update)) if prog else None,
+            "state_mem_p50_bytes": float(np.median(state_mem)) if prog else None,
         }
         print(f"# {name}: {results[name]}", file=sys.stderr)
 

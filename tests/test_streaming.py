@@ -12,6 +12,7 @@ from time_series_data_anomaly_detection_spark.operators.rolling import (
 )
 from time_series_data_anomaly_detection_spark.sources import with_row_index
 from time_series_data_anomaly_detection_spark.streaming import (
+    detectors,
     streaming_bocpd,
     streaming_rolling_flags,
     streaming_window_stats,
@@ -1163,7 +1164,7 @@ def test_streaming_checkpoint_restart_continuity(spark, tmp_path_factory):
             return streaming_conformal(stream, icept=25.0, slope=0.5,
                                        n_cal=100)
         if detector == "bocpd":
-            # the run-length posterior: four array fields of state
+            # the run-length posterior, packed into one binary state field
             return streaming_bocpd(stream, norm_mu=mu, norm_sd=sd)
         if detector == "hw":
             return streaming_holt_winters(stream, period=48)
@@ -1393,3 +1394,318 @@ def test_streaming_bocpd_resumes_filecontext_checkpoint(spark, tmp_path_factory)
         )
     # the level shift after the restart collapses the posterior: state is live
     assert got.loc[got.series_id == "a", "cp_score"].iloc[150:153].max() > 0.5
+
+
+# ---------------------------------------------------------------------------
+# The stateful shell's Arrow boundary: ``series_id``, ``ts_us`` (epoch
+# microseconds) and ``value`` cross it, and ``streaming_bocpd`` keeps its
+# run-length posterior as one packed ``binary`` field.  The replicas below
+# are the shell and BOCPD state as they were before: the timestamp column
+# crossed as a timestamp, each group was ordered by ``sort_values``, and
+# the posterior was four ``array<double>`` fields.
+# ---------------------------------------------------------------------------
+
+
+def _timestamp_shell(stream, out_ddl, state_ddl, init, step):
+    """Replica of ``_per_series_state`` with a timestamp column in and out."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    def update(key, pdfs, state):
+        (series_id,) = key
+        st = state.get if state.exists else init()
+        for pdf in pdfs:
+            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
+            y = pdf["value"].to_numpy(float)
+            cols, st = step(y, st)
+            yield pd.DataFrame(
+                {"series_id": series_id, "timestamp": pdf["timestamp"], "value": y, **cols}
+            )
+        state.update(st)
+
+    return stream.select("series_id", "timestamp", "value").groupBy(
+        "series_id"
+    ).applyInPandasWithState(
+        update,
+        f"series_id string, timestamp timestamp, value double, {out_ddl}",
+        state_ddl,
+        "append",
+        GroupStateTimeout.NoTimeout,
+    )
+
+
+def _array_state_bocpd(stream, norm_mu, norm_sd):
+    """Replica of ``streaming_bocpd`` with its state as four
+    ``array<double>`` fields, run by the timestamp shell."""
+    from time_series_data_anomaly_detection_spark.functions.bocpd import (
+        STATE_KEYS,
+        bocpd_run,
+        initial_state,
+    )
+
+    def encode(st):
+        return tuple(np.asarray(st[k], float).tolist() for k in STATE_KEYS)
+
+    def step(y, st):
+        st = {k: np.asarray(v, float) for k, v in zip(STATE_KEYS, st)}
+        st["run_len"] = st["run_len"].astype(int)
+        cp, short, st = bocpd_run((y - norm_mu) / norm_sd, st)
+        return {"cp_prob": cp, "cp_score": short}, encode(st)
+
+    return _timestamp_shell(
+        stream,
+        "cp_prob double, cp_score double",
+        ", ".join(f"{k} array<double>" for k in STATE_KEYS),
+        lambda: encode(initial_state()),
+        step,
+    )
+
+
+def _bit_columns(pdf):
+    """Each column as int64 bit patterns (strings as they are), rows in
+    ``(series_id, timestamp)`` order."""
+    pdf = pdf.sort_values(["series_id", "timestamp"]).reset_index(drop=True)
+    out = {"series_id": pdf["series_id"].to_numpy()}
+    for c in pdf.columns.drop("series_id"):
+        col = pdf[c]
+        if c == "timestamp":
+            out[c] = col.to_numpy("datetime64[us]").view(np.int64)
+        elif col.dtype.kind == "f":
+            out[c] = col.to_numpy().view(np.int64)
+        else:
+            out[c] = col.to_numpy(np.int64)
+    return out
+
+
+def test_shell_matches_timestamp_shell_bitwise(spark, tmp_path, monkeypatch):
+    """``streaming_bocpd`` and ``streaming_control_flags`` equal the
+    timestamp shell with array-field BOCPD state, every column as int64
+    bits, over a replay of ragged series where one file delivers a
+    series in reverse time order, one series skips a micro-batch and
+    one value is NaN."""
+    rng = np.random.default_rng(23)
+    t0 = pd.Timestamp("2024-01-01")
+    lens = {"a": 160, "b": 97, "c": 41}
+    full = {
+        sid: pd.DataFrame({
+            "series_id": sid,
+            "timestamp": t0 + pd.to_timedelta(np.arange(n) * 30, "min"),
+            "value": rng.normal(10, 1, n) + 5.0 * (np.arange(n) >= n // 2),
+            "event_id": np.arange(n, dtype="int64"),
+        })
+        for sid, n in lens.items()
+    }
+    full["b"].loc[70, "value"] = np.nan
+    files = []
+    for i in range(4):
+        parts = []
+        for sid, g in full.items():
+            if sid == "c" and i == 2:
+                continue  # c is absent from the third micro-batch
+            part = g[g.index % 4 == i] if sid == "c" else g.iloc[len(g) * i // 4 : len(g) * (i + 1) // 4]
+            parts.append(part.iloc[::-1] if (sid, i) == ("a", 1) else part)
+        files.append(pd.concat(parts))
+    files[3] = pd.concat([files[3], full["c"][full["c"].index % 4 == 2]])
+    _write_batches(tmp_path, files)
+    assert sum(map(len, files)) == sum(lens.values())
+    mu, sd = 12.5, 2.5
+
+    def run(build, name):
+        stream = (
+            spark.readStream.schema(SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(tmp_path))
+        )
+        return _bit_columns(_run_stream(spark, build(stream), name).toPandas())
+
+    got = {
+        "bocpd": run(lambda s: streaming_bocpd(s, norm_mu=mu, norm_sd=sd), "pin_bocpd"),
+        "ctrl": run(
+            lambda s: detectors.streaming_control_flags(s, norm_mu=mu, norm_sd=sd),
+            "pin_ctrl",
+        ),
+    }
+    monkeypatch.setattr(detectors, "_per_series_state", _timestamp_shell)
+    want = {
+        "bocpd": run(lambda s: _array_state_bocpd(s, mu, sd), "pin_bocpd_ref"),
+        "ctrl": run(
+            lambda s: detectors.streaming_control_flags(s, norm_mu=mu, norm_sd=sd),
+            "pin_ctrl_ref",
+        ),
+    }
+    for name in got:
+        assert list(got[name]) == list(want[name]), name
+        assert len(got[name]["series_id"]) == sum(lens.values()), name
+        for c in want[name]:
+            np.testing.assert_array_equal(got[name][c], want[name][c], f"{name}.{c}")
+    assert np.isnan(want["bocpd"]["value"].view(float)).sum() == 1
+
+
+_SHELL_DETECTORS = {
+    "rolling": lambda s: streaming_rolling_flags(s, window=5),
+    "bocpd": lambda s: streaming_bocpd(s, norm_mu=20.0, norm_sd=10.0),
+    "control": lambda s: detectors.streaming_control_flags(s, norm_mu=20.0, norm_sd=10.0),
+    "page_hinkley": lambda s: detectors.streaming_page_hinkley(s),
+    "holt_winters": lambda s: detectors.streaming_holt_winters(s, period=4),
+    "spectral_residual": lambda s: detectors.streaming_spectral_residual(
+        s, history=16, min_history=8
+    ),
+    "pot": lambda s: detectors.streaming_pot(s, n_init=10),
+    "conformal": lambda s: detectors.streaming_conformal(s, icept=0.0, slope=1.0, n_cal=5),
+}
+
+
+@pytest.mark.parametrize("detector", sorted(_SHELL_DETECTORS))
+def test_shell_timestamp_edges(spark, tmp_path, detector):
+    """NULL timestamps come out NULL and sort last; 1900-01-01 and
+    2200-01-01 round-trip exactly, also in a group whose microseconds
+    become float64 because of a NULL; rows with equal timestamps keep
+    their delivery order (series ``b`` is delivered newest first in
+    blocks of ten equal timestamps, so the shell must reorder it)."""
+    t = pd.Timestamp("2024-01-01")
+    a_ts = [pd.Timestamp("2200-01-01"), pd.NaT, pd.Timestamp("1900-01-01"), t, t, pd.NaT]
+    a_ts += [t - pd.Timedelta(minutes=m) for m in (30, 30, 60, 0, 90)]
+    b_ts = [t + pd.Timedelta(hours=h) for h in (3, 1, 2, 0) for _ in range(10)]
+    src = pd.concat(
+        pd.DataFrame({
+            "series_id": sid,
+            "timestamp": pd.to_datetime(ts),
+            "value": np.arange(len(ts), dtype=float),
+            "event_id": np.arange(len(ts), dtype="int64"),
+        })
+        for sid, ts in (("a", a_ts), ("b", b_ts))
+    )
+    _write_batches(tmp_path, [src])
+    stream = spark.readStream.schema(SCHEMA).parquet(str(tmp_path))
+    out = _run_stream(spark, _SHELL_DETECTORS[detector](stream), f"edges_{detector}")
+    assert out.columns[:3] == ["series_id", "timestamp", "value"]
+    assert dict(out.dtypes)["timestamp"] == "timestamp"
+    got = out.select(
+        "series_id", F.unix_micros("timestamp").alias("us"), "value"
+    ).collect()
+    sent = (
+        spark.read.schema(SCHEMA).parquet(str(tmp_path))
+        .select("series_id", F.unix_micros("timestamp").alias("us"), "value")
+        .collect()
+    )
+    for sid in ("a", "b"):
+        rows = [(r.us, r.value) for r in got if r.series_id == sid]
+        delivered = [(r.us, r.value) for r in sent if r.series_id == sid]
+        # a stable sort on the microseconds, NULLs last
+        want = sorted(delivered, key=lambda r: (r[0] is None, r[0] or 0))
+        assert rows == want, sid
+    a_us = [r.us for r in got if r.series_id == "a"]
+    assert a_us[0] == -2208988800 * 10**6 and a_us[-3] == 7258118400 * 10**6
+    assert a_us[-2:] == [None, None]
+
+
+def test_streaming_bocpd_refuses_array_state_checkpoint(spark, tmp_path):
+    """A ``streaming_bocpd`` checkpoint written with the four
+    ``array<double>`` state fields is refused on resume with Spark's
+    value-schema error, never decoded as a packed state.  A
+    ``streaming_control_flags`` checkpoint of the timestamp shell, whose
+    state schema did not change, resumes and continues bit for bit."""
+    from pyspark.errors import StreamingQueryException
+
+    rng = np.random.default_rng(29)
+    pdf = pd.DataFrame({
+        "series_id": np.repeat(["a", "b"], 60),
+        "timestamp": np.tile(pd.date_range("2024-01-01", periods=60, freq="30min"), 2),
+        "value": rng.normal(10, 1, 120),
+        "event_id": np.arange(120, dtype="int64"),
+    })
+    first = pdf.groupby("series_id").head(40)
+    src = tmp_path / "src"
+    src.mkdir()
+
+    def run(build, tag, **opts):
+        stream = spark.readStream.schema(SCHEMA).options(**opts).parquet(str(src))
+        q = (
+            build(stream)
+            .writeStream.format("parquet")
+            .option("path", str(tmp_path / f"out_{tag}"))
+            .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        if q.exception() is not None:
+            raise q.exception()
+        return spark.read.parquet(str(tmp_path / f"out_{tag}")).toPandas()
+
+    def ctrl(stream):
+        return detectors.streaming_control_flags(stream, norm_mu=10.0, norm_sd=1.0)
+
+    kw = dict(index=False, coerce_timestamps="us", allow_truncated_timestamps=True)
+    first.to_parquet(src / "part1.parquet", **kw)
+    assert len(run(lambda s: _array_state_bocpd(s, 10.0, 1.0), "bocpd")) == 80
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(detectors, "_per_series_state", _timestamp_shell)
+        assert len(run(ctrl, "ctrl")) == 80
+    pdf.groupby("series_id").tail(20).to_parquet(src / "part2.parquet", **kw)
+
+    with pytest.raises(StreamingQueryException, match="STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE"):
+        run(lambda s: streaming_bocpd(s, norm_mu=10.0, norm_sd=1.0), "bocpd")
+
+    got = _bit_columns(run(ctrl, "ctrl"))
+    want = _bit_columns(run(ctrl, "ctrl_ref", maxFilesPerTrigger=1))
+    assert len(got["series_id"]) == 120
+    for c in want:
+        np.testing.assert_array_equal(got[c], want[c], c)
+
+
+
+def test_streaming_rolling_flags_state_keeps_window_minus_one(spark, tmp_path):
+    """The carried tail holds ``window - 1`` values after every
+    micro-batch, also for ``window=1`` (none), and at ``window=48`` the
+    stream equals a replay of the trailing window over the whole
+    arrival sequence, bit for bit."""
+    rng = np.random.default_rng(31)
+    n = 150
+    pdf = pd.DataFrame({
+        "series_id": "a",
+        "timestamp": pd.date_range("2024-01-01", periods=n, freq="30min"),
+        "value": rng.normal(10, 1, n),
+        "event_id": np.arange(n, dtype="int64"),
+    })
+    src = tmp_path / "src"
+    src.mkdir()
+    _write_batches(src, [pdf.iloc[:50], pdf.iloc[50:100], pdf.iloc[100:]])
+
+    def run(window):
+        ck = str(tmp_path / f"ck{window}")
+        q = (
+            streaming_rolling_flags(
+                spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(src)),
+                window=window,
+            )
+            .writeStream.format("memory")
+            .queryName(f"roll_tail_{window}")
+            .option("checkpointLocation", ck)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        tails = [
+            spark.read.format("statestore").option("batchId", b).load(ck)
+            .select(F.size("value.groupState.tail").alias("n")).first().n
+            for b in range(3)
+        ]
+        out = spark.table(f"roll_tail_{window}").toPandas().sort_values("timestamp")
+        return tails, out.reset_index(drop=True)
+
+    tails, out = run(1)
+    assert tails == [0, 0, 0]
+    assert out["roll_mean"].isna().all() and len(out) == n
+
+    tails, out = run(48)
+    assert tails == [47, 47, 47]
+    y = pdf["value"].to_numpy()
+    mean = np.full(n, np.nan)
+    std = np.full(n, np.nan)
+    for i in range(4, n):
+        w = y[max(0, i - 47): i + 1]
+        mean[i], std[i] = w.mean(), w.std(ddof=1)
+    np.testing.assert_array_equal(out["roll_mean"].to_numpy().view(np.int64), mean.view(np.int64))
+    np.testing.assert_array_equal(out["roll_std"].to_numpy().view(np.int64), std.view(np.int64))

@@ -20,7 +20,11 @@ which steps their run-length sets together: each elementwise operation
 of a time step is one numpy call for all of them.  The outputs are
 bit-identical to stepping each series alone.  The streaming variant
 (streaming.detectors.streaming_bocpd) calls the same function with one
-series per key.
+series per key and micro-batch; between micro-batches it keeps the
+state as one ``binary`` group-state field, the ``(4 × m)`` float64
+block of ``STATE_KEYS`` (``np.stack(...).tobytes()``, read back with
+``np.frombuffer``), so the state crosses the Arrow boundary as one
+value.
 """
 
 from __future__ import annotations

@@ -20,9 +20,30 @@ state DDL:
   slice of a series (``y`` = its values in timestamp order) and return
   the output columns that follow ``series_id, timestamp, value``.
 
-Only those three input columns enter the shell: any other (an
-``event_id``, say) is projected away before the shuffle, so it never
-crosses the Arrow stream or a per-group pandas frame.
+Only plain numbers cross the Arrow boundary into Python: ``series_id``,
+``ts_us = unix_micros(timestamp)`` and ``value`` (any other input
+column, an ``event_id`` say, is projected away before the shuffle),
+and the state tuple.  ``update`` takes ``ts_us`` and ``value`` as numpy
+arrays and reorders them by a stable ``np.argsort`` only when ``ts_us``
+is not already non-decreasing; the output frame is built from those
+arrays, and ``timestamp_micros(ts_us)`` restores ``timestamp`` in the
+same column position after ``applyInPandasWithState``.  So:
+
+- a row with a NULL timestamp sorts after every other row of its
+  micro-batch and comes out with a NULL timestamp;
+- rows with equal timestamps in one micro-batch keep the order they
+  were delivered in, because the sort is stable;
+- a group holding a NULL timestamp reaches pandas as float64, which
+  carries every timestamp exactly while ``|ts_us| < 2**53``
+  (1684-07-28 to 2255-06-05).
+
+``streaming_bocpd`` keeps its run-length posterior as one ``binary``
+field: the ``(4 × m)`` float64 block of ``bocpd.STATE_KEYS`` (``r``,
+``mu``, ``beta``, ``run_len``, one row each, ``m`` hypotheses), written
+by ``tobytes()`` and read back by ``np.frombuffer``, ``run_len`` cast
+back to int.  A checkpoint written with the former four
+``array<double>`` fields is refused on resume
+(``STATE_STORE_VALUE_SCHEMA_NOT_COMPATIBLE``) and must be restarted.
 
 Where a batch operator has the same recursion, ``step`` calls that
 operator's resumable kernel, so the stream equals the batch output
@@ -104,26 +125,33 @@ def _per_series_state(
         (series_id,) = key
         st = state.get if state.exists else init()
         for pdf in pdfs:
-            pdf = pdf.sort_values("timestamp").reset_index(drop=True)
+            ts = pdf["ts_us"].to_numpy()
             y = pdf["value"].to_numpy(float)
+            # NaN (a NULL timestamp) fails the test and sorts last
+            if not (ts[1:] >= ts[:-1]).all():
+                order = np.argsort(ts, kind="stable")
+                ts, y = ts[order], y[order]
             cols, st = step(y, st)
             yield pd.DataFrame(
-                {
-                    "series_id": series_id,
-                    "timestamp": pdf["timestamp"],
-                    "value": y,
-                    **cols,
-                }
+                {"series_id": series_id, "ts_us": ts, "value": y, **cols}
             )
         state.update(st)
 
-    rows = stream.select("series_id", "timestamp", "value")
-    return rows.groupBy("series_id").applyInPandasWithState(
+    rows = stream.select(
+        "series_id", F.unix_micros("timestamp").alias("ts_us"), "value"
+    )
+    out = rows.groupBy("series_id").applyInPandasWithState(
         update,
-        f"series_id string, timestamp timestamp, value double, {out_ddl}",
+        f"series_id string, ts_us bigint, value double, {out_ddl}",
         state_ddl,
         "append",
         GroupStateTimeout.NoTimeout,
+    )
+    return out.select(
+        *(
+            F.timestamp_micros(c).alias("timestamp") if c == "ts_us" else c
+            for c in out.columns
+        )
     )
 
 
@@ -158,7 +186,7 @@ def streaming_rolling_flags(
             "roll_mean": means,
             "roll_std": stds,
             "flag": pd.array(flags, dtype="Int32"),
-        }, (full[-(window - 1):].tolist(), seen + len(y))
+        }, (full[max(0, len(full) - (window - 1)):].tolist(), seen + len(y))
 
     return _per_series_state(
         stream,
@@ -177,17 +205,19 @@ def streaming_bocpd(
     norm_sd: float = 1.0,
 ) -> DataFrame:
     """M6 BOCPD as a stateful stream — the batch operator's resumable
-    core with the run-length posterior carried in GroupState (O(max_run)
-    arrays per series).
+    core with the run-length posterior carried in GroupState as one
+    packed ``binary`` field per series (``4 × m`` float64, ``m <=
+    max_run``; see the module docstring).
 
     ``(norm_mu, norm_sd)`` standardize incoming values (the batch op
     uses global series moments; supply train-time moments here)."""
 
     def encode(st):
-        return tuple(np.asarray(st[k], float).tolist() for k in STATE_KEYS)
+        return (np.stack([np.asarray(st[k], float) for k in STATE_KEYS]).tobytes(),)
 
     def step(y, st):
-        st = {k: np.asarray(v, float) for k, v in zip(STATE_KEYS, st)}
+        packed = np.frombuffer(st[0], float).reshape(len(STATE_KEYS), -1)
+        st = dict(zip(STATE_KEYS, packed))
         st["run_len"] = st["run_len"].astype(int)
         cp, short, st = bocpd_run(
             (y - norm_mu) / (norm_sd or 1.0), st,
@@ -198,7 +228,7 @@ def streaming_bocpd(
     return _per_series_state(
         stream,
         "cp_prob double, cp_score double",
-        ", ".join(f"{k} array<double>" for k in STATE_KEYS),
+        "state binary",
         lambda: encode(initial_state()),
         step,
     )
